@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev fixture builder for scale-stress runs — not part of the library
@@ -27,12 +27,7 @@ object Amplify {
     val Array(src, out, factMultS, docMultS) = args
     val factMult = factMultS.toInt
     val docMult = docMultS.toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def table(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at the target
   * scale factor and prints one JSON line.
   *
@@ -23,18 +21,17 @@ import org.apache.spark.sql.SparkSession
   * `Staging.drainBuildLog` and reported as that query's `stage_s` —
   * the budget caps compare the query's NON-staging seconds, so the
   * gate grades plan quality, not whether the builder pre-warmed /tmp.
+  *
+  * Every timed query runs under a [[QueryTrace]]: the record file
+  * carries a `trace` section with each query's construct/execute
+  * split, jobs, stages, tasks, executor time, shuffle bytes, spill,
+  * GC, task skew, planning phases, top stages and streaming trigger
+  * phases — where the time went, without a rerun.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     // force FULL plan execution, not `count()`: under a count, Catalyst
     // prunes every column the aggregate doesn't need, so pure-projection
@@ -82,6 +79,7 @@ object Bench {
     spark.catalog.clearCache()
     System.gc()
 
+    val trace = QueryTrace.register(spark)
     val results = bench.toSeq.sortBy(_._1).map { case (name, fn) =>
       graft.ops.Staging.drainBuildLog(): Unit
       // guide §1.5: label each query's jobs so an event-log / UI trace
@@ -89,7 +87,7 @@ object Bench {
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
       // a failing query must surface as err, not masquerade as a fast time
-      val err = try { run(fn(spark, sfDir)); None }
+      val err = try { trace.run(name)(fn(spark, sfDir))(run); None }
                 catch { case e: Throwable => Some(e.toString.replaceAll("[\"\\\\\n\r\t]", " ").take(200)) }
       // timing stops HERE: cache clearing and the GC nudge are
       // inter-query hygiene, not part of the measured query
@@ -124,13 +122,15 @@ object Bench {
     // alone overflows it — rounds 7/8 lost the leading "value" field to
     // that truncation ("parsed": null in BENCH_r07/r08). Any tail that
     // carries the line's end now carries the total too.
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","wall_s":$wallTotal,"queries":$qs$stageQJson$stagedJson$errJson,"sf":"$sfDir","n_queries":${results.size},"errors_n":${errs.size},"total_s":$total}"""
+    val head = s"""{"metric":"total","value":$total,"unit":"sec","wall_s":$wallTotal,"queries":$qs$stageQJson$stagedJson$errJson"""
+    val tail = s""","sf":"$sfDir","n_queries":${results.size},"errors_n":${errs.size},"total_s":$total}"""
+    val json = head + tail
     // Three-line stdout contract (the driver may keep only a head or a
     // tail window of stdout, and the full record alone overflows both):
     //   1. a SHORT summary line FIRST — survives tail-of-line loss and
     //      is the first parseable {"metric":"total"} a head-scanner hits;
-    //   2. the FULL record (per-query map) — the durable copy also lands
-    //      in SPARK_GRAFT_BENCH_FILE;
+    //   2. the FULL record (per-query map) — the durable copy, plus the
+    //      per-query `trace` section, lands in the record file;
     //   3. a short "total_tail" line LAST — small enough that no tail
     //      window can cut it; the distinct metric name keeps a
     //      first-match parser from confusing it with the full record.
@@ -140,11 +140,18 @@ object Bench {
     println(s"""{"metric":"total_tail",$shortJson}""")
     // the stdout line is one long JSON record and the driver's tail
     // capture has truncated it mid-line before (BENCH_r03 lost its
-    // total) — persist the same record to a file as the durable copy
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "BENCH_LOCAL.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (json + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] could not write $outFile: $e") }
+    // total) — persist the same record, with the trace, to a file as
+    // the durable copy. The default path is build output (ignored), so
+    // a run never overwrites committed evidence.
+    trace.flush()
+    val traceJson = trace.summaries.map(t => "\"" + t.name + "\":" + QueryTrace.json(t))
+      .mkString(""","trace":{""", ",", "}")
+    val outFile = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "target/BENCH_LOCAL.json"))
+    try {
+      Option(outFile.toAbsolutePath.getParent).foreach(java.nio.file.Files.createDirectories(_))
+      java.nio.file.Files.write(outFile, (head + traceJson + tail + "\n").getBytes("UTF-8"))
+    } catch { case e: Throwable => System.err.println(s"[bench] could not write $outFile: $e") }
     spark.stop()
 
     // committed per-query budget at the gate SF (q16's round-4 creep to

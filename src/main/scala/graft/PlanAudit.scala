@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: physical-plan audit over every SparkEntry query → a
   * markdown table (PLANS.md) of the scale-relevant plan facts —
   * exchange count, join strategies, scan pushdown, codegen span
@@ -13,13 +11,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
 
     val joinOps = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
       "BroadcastNestedLoopJoin", "CartesianProduct")
@@ -59,8 +51,8 @@ object PlanAudit {
          |bounded results checkpointed to cut multi-reference lineage or
          |pre-sort re-execution) report the materialized leaf — their
          |upstream plan shapes are asserted per stage in their specs
-         |(SketchAndLmSpec, CorpusEvalSpec) and profiled via Scratch
-         |stage timers (`d74stages`).
+         |(SketchAndLmSpec, CorpusEvalSpec), and their per-stage times
+         |are in the Bench record's `trace` section (`top_stages`).
          |
          || query | exchanges | joins | pushed filters | codegen spans |
          ||---|---|---|---|---|""".stripMargin

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write each declared query's `.explain("formatted")` output
   * to `<outDir>/<query>_<suffix>.txt` — the per-round optimization
   * evidence (plans/r10/<query>_before.txt / _after.txt).
@@ -14,6 +12,13 @@ import org.apache.spark.sql.SparkSession
   * construction alone is enough, queries are not executed (streaming /
   * localCheckpoint queries still drain eagerly during construction by
   * their own design).
+  *
+  * The suffix `executed` dumps the EXECUTED plan instead: each query
+  * runs (`toRdd.count` on its own QueryExecution, so that execution is
+  * the one finalized) and the AQE-final `executedPlan` is written —
+  * where runtime exchange/stage reuse (ReusedExchange, table-cache
+  * hits) is visible, unlike the pre-execution formatted plan. E.g.
+  * `runMain graft.PlanDump <sfDir> plans/r11 executed q58`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,20 +31,17 @@ object PlanDump {
         name => ps.exists(name.startsWith)
       case None => _ => true
     }
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
     SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => only(kv._1)).foreach { case (name, fn) =>
       try {
         val df = fn(spark, dir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt =
+          if (suffix == "executed") {
+            df.queryExecution.toRdd.count(): Unit
+            df.queryExecution.executedPlan.toString
+          } else df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           txt.getBytes("UTF-8"))

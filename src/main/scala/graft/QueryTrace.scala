@@ -1,0 +1,259 @@
+package graft
+
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+/** Per-query execution trace on Spark's listener bus.
+  *
+  * [[run]] executes one declared query in two phases — `construct`
+  * (the query function builds the DataFrame, which may already run
+  * jobs: staged-index builds, eager checkpoints, drained streaming
+  * legs) and `execute` (the caller's action on the result). Each phase
+  * tags its thread's jobs with a unique `SparkContext.addJobTag` tag,
+  * and the listener attributes every job, stage and task to its query
+  * from the tag in the job's properties, never from wall-clock
+  * windows: two queries on two threads are attributed only their own
+  * jobs. Threads started inside a phase inherit the tag, so a
+  * streaming leg's micro-batch jobs in a `newSession()` child are the
+  * query's too; those jobs also carry `sql.streaming.queryId`, which
+  * links the stream's progress events (posted on the shared bus by
+  * every session) to the query.
+  *
+  * Stages and jobs are named by call site: the engine frame that ran
+  * the SQL action (`Dataset.localCheckpoint`, a write, a collect) when
+  * the job belongs to one — AQE runs query stages on a pool thread
+  * whose own Spark call site names no engine code — else Spark's
+  * stage name.
+  *
+  * Listener delivery is asynchronous: call [[flush]] before reading
+  * [[summaries]].
+  */
+final class QueryTrace private (sc: SparkContext) extends SparkListener {
+  import QueryTrace._
+
+  private val nextId = new AtomicLong()
+  private val recs = new ConcurrentLinkedQueue[Rec]()
+  // job tag -> (query, phase); stage id -> owner; running SQL
+  // execution id -> call site; streaming query id -> query;
+  // fence tag -> latch
+  private val byTag = new ConcurrentHashMap[String, (Rec, String)]()
+  private val byStage = new ConcurrentHashMap[Int, Owner]()
+  private val sqlSites = new ConcurrentHashMap[String, String]()
+  private val byStream = new ConcurrentHashMap[String, Rec]()
+  private val fences = new ConcurrentHashMap[String, CountDownLatch]()
+
+  /** Run one query: `build` constructs its DataFrame, `exec` executes
+    * it. Exceptions propagate; the phases that ran stay traced.
+    */
+  def run(name: String)(build: => DataFrame)(exec: DataFrame => Unit): Unit = {
+    val rec = new Rec(name)
+    recs.add(rec)
+    val df = phase(rec, Construct)(build)
+    try phase(rec, Execute)(exec(df))
+    finally rec.synchronized {
+      rec.planningMs = df.queryExecution.tracker.phases.map { case (k, v) => k -> v.durationMs }
+    }
+  }
+
+  private def phase[T](rec: Rec, ph: String)(f: => T): T = {
+    val tag = s"graft-trace-${nextId.incrementAndGet()}"
+    byTag.put(tag, (rec, ph))
+    sc.addJobTag(tag)
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      sc.removeJobTag(tag)
+      rec.synchronized(rec.secs(ph) = (System.nanoTime() - t0) / 1e9)
+    }
+  }
+
+  /** Wait until the listener has seen every event posted so far: run
+    * one tiny fenced job and wait for its start event, which the bus
+    * delivers after everything the finished queries posted.
+    */
+  def flush(): Unit = {
+    val tag = s"graft-trace-fence-${nextId.incrementAndGet()}"
+    val latch = new CountDownLatch(1)
+    fences.put(tag, latch)
+    sc.addJobTag(tag)
+    try sc.parallelize(Seq(0), 1).foreach(_ => ())
+    finally sc.removeJobTag(tag)
+    latch.await(60, TimeUnit.SECONDS): Unit
+    fences.remove(tag): Unit
+  }
+
+  /** One summary per traced query, in run order. */
+  def summaries: Seq[Summary] = recs.asScala.toSeq.map(_.summary)
+
+  /** Detach from the listener bus. */
+  def close(): Unit = sc.removeSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val ts = Option(e.properties).flatMap(p => Option(p.getProperty(JobTagsKey)))
+      .map(_.split(",").toSeq).getOrElse(Nil)
+    ts.flatMap(t => Option(fences.get(t))).foreach(_.countDown())
+    ts.iterator.map(byTag.get).find(_ != null).foreach { case (rec, ph) =>
+      val sqlSite = Option(e.properties.getProperty(SqlExecutionIdKey)).flatMap(id => Option(sqlSites.get(id)))
+      e.stageInfos.foreach(s => byStage.putIfAbsent(s.stageId, Owner(rec, ph, sqlSite.getOrElse(s.name))))
+      Option(e.properties.getProperty(StreamQueryIdKey)).foreach(byStream.put(_, rec))
+      val site = sqlSite.getOrElse(if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
+      rec.synchronized {
+        rec.jobs(ph) += 1
+        rec.siteJobs(site) += 1
+      }
+    }
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    Option(byStage.get(e.stageId)).foreach { case Owner(rec, _, _) =>
+      rec.synchronized {
+        rec.totals("tasks") += 1
+        rec.taskMs.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty) += e.taskInfo.duration
+        val m = e.taskMetrics
+        if (m != null) {
+          Seq("executor_run_s" -> m.executorRunTime / 1e3, "executor_cpu_s" -> m.executorCpuTime / 1e9,
+            "gc_s" -> m.jvmGCTime / 1e3, "shuffle_read_bytes" -> m.shuffleReadMetrics.totalBytesRead.toDouble,
+            "shuffle_write_bytes" -> m.shuffleWriteMetrics.bytesWritten.toDouble,
+            "spill_bytes" -> (m.memoryBytesSpilled + m.diskBytesSpilled).toDouble
+          ).foreach { case (k, v) => rec.totals(k) += v }
+          rec.stageRunMs(e.stageId) += m.executorRunTime
+        }
+      }
+    }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    val s = e.stageInfo
+    Option(byStage.get(s.stageId)).foreach { case Owner(rec, ph, site) =>
+      rec.synchronized {
+        val d = rec.taskMs.remove(s.stageId).map(_.sorted).getOrElse(mutable.ArrayBuffer.empty[Long])
+        if (d.nonEmpty) {
+          rec.stages += StageRow(s.stageId, site, ph, d.size,
+            rec.stageRunMs.remove(s.stageId).getOrElse(0L) / 1e3)
+          val med = d(d.size / 2)
+          if (med > 0) rec.totals("task_skew") = math.max(rec.totals("task_skew"), d.last.toDouble / med)
+        }
+      }
+    }
+  }
+
+  // streaming progress reaches the shared bus from every session,
+  // including the per-query child sessions the streaming legs create
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart =>
+      // the call site's long form: the last Spark frame, then the caller's
+      x.details.linesIterator.find(l => !PlatformFrame.matches(l))
+        .foreach(sqlSites.put(x.executionId.toString, _))
+    case x: SparkListenerSQLExecutionEnd => sqlSites.remove(x.executionId.toString): Unit
+    case p: StreamingQueryListener.QueryProgressEvent =>
+      Option(byStream.get(p.progress.id.toString)).foreach { rec =>
+        val d = p.progress.durationMs.asScala
+        rec.synchronized {
+          rec.triggerMs += d.get("triggerExecution").map(_.longValue).getOrElse(0L)
+          d.foreach { case (k, v) => rec.streamPhaseMs(k) += v.longValue }
+        }
+      }
+    case _ => ()
+  }
+}
+
+object QueryTrace {
+  val Construct = "construct"
+  val Execute = "execute"
+  // the job properties Spark sets from `addJobTag` (comma-separated),
+  // from a running stream (its query id) and from a SQL action
+  private val JobTagsKey = "spark.job.tags"
+  private val StreamQueryIdKey = "sql.streaming.queryId"
+  private val SqlExecutionIdKey = "spark.sql.execution.id"
+  private val PlatformFrame = """<unknown>|(org\.apache\.spark|scala|java|jdk)\..*""".r
+  private val TopN = 5
+  private val TotalKeys = Seq("tasks", "executor_run_s", "executor_cpu_s", "gc_s",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "task_skew")
+
+  /** A trace registered on `spark`'s listener bus. */
+  def register(spark: org.apache.spark.sql.SparkSession): QueryTrace = {
+    val t = new QueryTrace(spark.sparkContext)
+    spark.sparkContext.addSparkListener(t)
+    t
+  }
+
+  private final case class Owner(rec: Rec, phase: String, site: String)
+
+  final case class StageRow(stage: Int, name: String, phase: String, tasks: Int, runS: Double)
+
+  final case class Stream(triggers: Int, p95Ms: Long, maxMs: Long, phaseSumsMs: Map[String, Long])
+
+  /** `totals` sums the task metrics over the query's stages (keys as
+    * in the record: `tasks`, `executor_run_s`, `executor_cpu_s`, `gc_s`,
+    * `shuffle_read_bytes`, `shuffle_write_bytes`, `spill_bytes`) and
+    * holds `task_skew`, the largest max/median task time of a stage.
+    */
+  final case class Summary(
+      name: String,
+      secs: Map[String, Double],
+      jobs: Map[String, Int],
+      stages: Int,
+      totals: Map[String, Double],
+      planningMs: Map[String, Long],
+      topStages: Seq[StageRow],
+      jobSites: Seq[(String, Int)],
+      stream: Option[Stream])
+
+  private final class Rec(val name: String) {
+    val secs = mutable.Map.empty[String, Double]
+    val jobs = mutable.Map(Construct -> 0, Execute -> 0)
+    val siteJobs = mutable.Map.empty[String, Int].withDefaultValue(0)
+    val taskMs = mutable.Map.empty[Int, mutable.ArrayBuffer[Long]]
+    val stageRunMs = mutable.Map.empty[Int, Long].withDefaultValue(0L)
+    val stages = mutable.ArrayBuffer.empty[StageRow]
+    val triggerMs = mutable.ArrayBuffer.empty[Long]
+    val streamPhaseMs = mutable.Map.empty[String, Long].withDefaultValue(0L)
+    val totals = mutable.Map(TotalKeys.map(_ -> 0.0): _*)
+    var planningMs = Map.empty[String, Long]
+
+    def summary: Summary = synchronized {
+      val stream = if (triggerMs.isEmpty) None else {
+        val t = triggerMs.sorted
+        Some(Stream(t.size, t(math.ceil(t.size * 0.95).toInt - 1), t.last, streamPhaseMs.toMap))
+      }
+      Summary(name, secs.toMap, jobs.toMap, stages.size, totals.toMap, planningMs,
+        stages.sortBy(-_.runS).take(TopN).toSeq, siteJobs.toSeq.sortBy(-_._2).take(TopN), stream)
+    }
+  }
+
+  private def str(s: String): String =
+    "\"" + s.replaceAll("[\"\\\\\n\r\t]", " ") + "\""
+
+  private def num(v: Double): String =
+    if (v.isWhole) v.toLong.toString else (math.rint(v * 1e4) / 1e4).toString
+
+  private def obj(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** One query's trace as a JSON object. */
+  def json(s: Summary): String = obj(Seq(
+    "construct_s" -> num(s.secs.getOrElse(Construct, 0.0)),
+    "execute_s" -> num(s.secs.getOrElse(Execute, 0.0)),
+    "construct_jobs" -> s.jobs(Construct).toString,
+    "execute_jobs" -> s.jobs(Execute).toString,
+    "stages" -> s.stages.toString
+  ) ++ TotalKeys.map(k => k -> num(s.totals(k))) ++ Seq(
+    "planning_ms" -> obj(s.planningMs.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString }),
+    "top_stages" -> s.topStages.map(r => obj(Seq(
+      "stage" -> r.stage.toString, "name" -> str(r.name), "phase" -> str(r.phase),
+      "tasks" -> r.tasks.toString, "run_s" -> num(r.runS)))).mkString("[", ",", "]"),
+    "job_sites" -> obj(s.jobSites.map { case (k, v) => k -> v.toString })
+  ) ++ s.stream.map(t => "stream" -> obj(Seq(
+    "triggers" -> t.triggers.toString,
+    "trigger_p95_ms" -> t.p95Ms.toString,
+    "trigger_max_ms" -> t.maxMs.toString,
+    "phase_sums_ms" -> obj(t.phaseSumsMs.toSeq.sortBy(-_._2).map { case (k, v) => k -> v.toString })))))
+}

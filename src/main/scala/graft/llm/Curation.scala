@@ -661,7 +661,9 @@ object Curation {
     * second pass never repays. On a corpus whose duplicated fraction
     * is small and whose string shuffle dominates, that two-phase
     * variant is the production shape; at fixture scale the simple
-    * plan wins and is what the oracle replays.
+    * plan wins and is what the oracle replays. The variant's round-11
+    * re-pricing (a wash at sf0.1, 1.7× slower at 100×) is in
+    * OPTIMIZATION_r11.md.
     */
   def exactCharSpansOn(documents: DataFrame, l: Int): DataFrame = {
     val docs = documents
@@ -700,61 +702,6 @@ object Curation {
       // presentation sort: Exchange rangepartitioning samples its
       // child, which would otherwise run the whole explode+join chain
       // a second time (the d37 lesson)
-      .localCheckpoint()
-    win.unpersist()
-    spans.orderBy("doc_id", "span_start")
-  }
-
-  /** PRICING ALTERNATIVE for t17 (round-11 re-measurement of the
-    * round-6 "hash-prefilter measured slower" note, on the current
-    * tree): shuffle 8-byte window hashes instead of L-char strings
-    * (guide §2.3 — keys as lightweight proxies), then exact-confirm the
-    * surviving positions by re-extracting their window text against the
-    * docs relation (lossless: equal strings always share a hash, so the
-    * hash pass has no false negatives and the verify drops collisions).
-    * Result-identical to [[exactCharSpansOn]] by construction. NOT
-    * wired to the declared query — kept as the priced alternative;
-    * see OPTIMIZATION_r11.md for the measured comparison.
-    */
-  private[graft] def exactCharSpansHashedOn(documents: DataFrame, l: Int): DataFrame = {
-    val docs = documents
-      .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-      .where(col("len") >= l)
-    // window HASHES only — the string is materialized transiently
-    // inside the projection and never shuffled
-    val win = docs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), col("len") - lit(l - 1)),
-          i => xxhash64(col("text").substr(i, lit(l))))))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"), col("col").as("h"))
-      .persist()
-    val dupH = win.groupBy("h")
-      .agg(min("doc_id").as("mn"), max("doc_id").as("mx"))
-      .where(col("mn") =!= col("mx"))
-      .select("h")
-    // survivors: candidate duplicated positions (hash-level)
-    val cand = win.join(dupH, Seq("h")).select("doc_id", "pos", "h")
-    // exact confirm: re-extract the window text for survivors only and
-    // re-test string-level min!=max (drops hash collisions)
-    val candG = cand.join(docs.select("doc_id", "text"), Seq("doc_id"))
-      .select(col("doc_id"), col("pos"),
-        col("text").substr(col("pos").cast("int"), lit(l)).as("g"))
-    val dupG = candG.groupBy("g")
-      .agg(min("doc_id").as("mn"), max("doc_id").as("mx"))
-      .where(col("mn") =!= col("mx"))
-      .select("g")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("doc_id").orderBy("pos")
-    val isl = candG.join(dupG, Seq("g"))
-      .select("doc_id", "pos")
-      .withColumn("brk",
-        when(col("pos") - lag("pos", 1).over(w) > lit(l - 1), 1L).otherwise(0L))
-      .withColumn("grp", sum("brk").over(w.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
-    val spans = isl.groupBy("doc_id", "grp")
-      .agg(min("pos").as("span_start"),
-        (max("pos") + lit(l - 1)).as("span_end"))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_chars"))
       .localCheckpoint()
     win.unpersist()
     spans.orderBy("doc_id", "span_start")

@@ -579,9 +579,7 @@ object Dedup {
       .localCheckpoint()
     var changed = 1L
     var iter = 0
-    val dbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     while (changed > 0 && iter < 25) {
-      val r0 = System.nanoTime()
       // every vertex has ≥1 edge by construction, so the inner join
       // keeps the whole vertex set and nbr is never null
       val nbrMin = edges
@@ -600,8 +598,6 @@ object Dedup {
       changed = next.agg(coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L))).first().getLong(0)
       labels = next.drop("chg")
       iter += 1
-      if (dbg) System.err.println(
-        f"[cc] round $iter: ${(System.nanoTime() - r0) / 1e9}%.2f s, changed=$changed")
     }
     require(changed == 0, s"label propagation did not converge in $iter rounds")
     // labels is lineage-truncated by localCheckpoint, so the edge cache
@@ -685,125 +681,6 @@ object Dedup {
        |       1.0::DOUBLE / count(*) OVER (PARTITION BY cluster_id) AS weight
        |FROM labeled
        |ORDER BY doc_id""".stripMargin
-
-  /** Dev-only stage timer for d03 (used by [[graft.Scratch]]). */
-  def d03Profile(spark: SparkSession, dir: String): Seq[(String, Double, Long)] = {
-    val out = scala.collection.mutable.Buffer[(String, Double, Long)]()
-    def t(stage: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      out += ((stage, (System.nanoTime() - t0) / 1e9, rows))
-    }
-    val docs = docShingles(spark, dir).persist()
-    t("shingles")(docs.count())
-    val bands = bandsFrom(docs).persist()
-    t("bands")(bands.count())
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct().persist()
-    t("candidates")(cand.count())
-    t("verify") {
-      cand
-        .join(docs.select(col("doc_id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-        .join(docs.select(col("doc_id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          size(array_intersect(col("hs_a"), col("hs_b"))).as("inter"),
-          size(col("hs_a")).as("sza"), size(col("hs_b")).as("szb"))
-        .select(col("id_a"), col("id_b"),
-          (col("inter").cast("double") / (col("sza") + col("szb") - col("inter"))).as("jaccard"))
-        .filter(col("jaccard") >= JaccardThreshold)
-        .count()
-    }
-    docs.unpersist(); bands.unpersist(); cand.unpersist()
-    out.toSeq
-  }
-
-  /** Dev stage timer for d35 (see [[graft.Scratch]]). */
-  def d35Profile(spark: SparkSession, dir: String): Seq[(String, Double, Long)] = {
-    val out = scala.collection.mutable.Buffer[(String, Double, Long)]()
-    def t(stage: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      out += ((stage, (System.nanoTime() - t0) / 1e9, rows))
-    }
-    val (_, bands) = ccIndex(spark, dir)
-    t("bands")(bands.count())
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct().persist()
-    t("cand")(cand.count())
-    val txt = corpus(spark, dir)
-    t("txtCount")(txt.count())
-    val gated = cand
-      .join(txt.select(col("doc_id").as("id_a"), col("text").as("ta")), Seq("id_a"))
-      .join(txt.select(col("doc_id").as("id_b"), col("text").as("tb")), Seq("id_b"))
-      .withColumn("la", length(col("ta")))
-      .withColumn("lb", length(col("tb")))
-      .filter(abs(col("la") - col("lb")) <= EditMax)
-      .persist()
-    t("gated")(gated.count())
-    t("lev") {
-      gated.withColumn("dist", levenshtein(col("ta"), col("tb"), EditMax + 1))
-        .filter(col("dist").between(0, EditMax)).count()
-    }
-    Seq(cand, gated).foreach(_.unpersist())
-    out.toSeq
-  }
-
-  /** Dev stage timer for d37 (see [[graft.Scratch]]). */
-  def d37Profile(spark: SparkSession, dir: String): Seq[(String, Double, Long)] = {
-    val out = scala.collection.mutable.Buffer[(String, Double, Long)]()
-    def t(stage: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      out += ((stage, (System.nanoTime() - t0) / 1e9, rows))
-    }
-    val (docs, _) = ccIndex(spark, dir)
-    val sized = docs.select(col("doc_id"), col("hs"), size(col("hs")).as("sz")).persist()
-    t("sized")(sized.count())
-    t("prefixIndexBuild")(prefixIndex(spark, dir).count())
-    val prefix = prefixIndex(spark, dir)
-    val joined = prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
-          col("b.sz") * 5 >= col("a.sz") * 4 && col("a.sz") * 5 >= col("b.sz") * 4 &&
-          (least(col("a.sz") - col("a.rnk"), col("b.sz") - col("b.rnk")) + 1) >=
-            (col("a.sz") + col("b.sz")) * 4 / 9)
-    t("joinRaw")(joined.count())
-    val cand = joined
-      .groupBy(
-        col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.sz").as("sza0"), col("b.sz").as("szb0"))
-      .agg(count(lit(1)).as("m"), max(col("a.rnk")).as("pa"), max(col("b.rnk")).as("pb"))
-      .where(col("m") + least(col("sza0") - col("pa"), col("szb0") - col("pb")) >=
-        expr("(4 * (sza0 + szb0) + 8) div 9"))
-      .select("id_a", "id_b")
-      .persist()
-    t("candidates")(cand.count())
-    t("verify") {
-      cand
-        .join(sized.select(col("doc_id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-        .join(sized.select(col("doc_id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          size(array_intersect(col("hs_a"), col("hs_b"))).as("inter"),
-          size(col("hs_a")).as("sza"), size(col("hs_b")).as("szb"))
-        .select(col("id_a"), col("id_b"),
-          (col("inter").cast("double") / (col("sza") + col("szb") - col("inter"))).as("jaccard"))
-        .filter(col("jaccard") >= AllPairsThreshold)
-        .count()
-    }
-    Seq(sized, cand).foreach(_.unpersist())
-    spark.catalog.clearCache()
-    // the in-suite shape: staged index warm, no intermediate persists
-    t("fullQueryWarmIndex")(allPairsJoin(spark, dir).count())
-    out.toSeq
-  }
 
   val SimhashBits = 56
 
@@ -1819,48 +1696,6 @@ object Dedup {
        |$perCfg
        |$selects
        |ORDER BY bands""".stripMargin
-  }
-
-  /** Dev-only stage timer for d32 (Scratch `d32stages`). */
-  def d32Profile(spark: SparkSession, dir: String): Seq[(String, Double, Long)] = {
-    val out = scala.collection.mutable.Buffer[(String, Double, Long)]()
-    def t(stage: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      out += ((stage, (System.nanoTime() - t0) / 1e9, rows))
-    }
-    t("prior")(clusterLabels(spark, dir).count())
-    t("ccIndex")(ccIndex(spark, dir)._2.count())
-    val (ccSh, ccBands) = ccIndex(spark, dir)
-    val batch = gen2Batch(spark, dir)
-    var bSh: DataFrame = null
-    t("batchShingles") {
-      bSh = batch.repartition(col("doc_id"))
-        .select(col("doc_id"), TextHash.hashedShingles(col("text"), 0).as("hs"))
-        .localCheckpoint()
-      bSh.count()
-    }
-    val edges = batchEdges(bSh, bandsOf(bSh), ccSh, ccBands).persist()
-    t("edges")(edges.count())
-    var cc: DataFrame = null
-    t("contractedCc") {
-      val p = clusterLabels(spark, dir).toDF("vertex", "label")
-      val endpoints = edges.select(col("id_a").as("vertex"))
-        .unionByName(edges.select(col("id_b").as("vertex"))).distinct()
-      val touched = p.join(broadcast(endpoints), Seq("vertex"), "leftsemi")
-      val lu = broadcast(touched).select(col("vertex").as("id_a"), col("label").as("lu"))
-      val lv = broadcast(touched).select(col("vertex").as("id_b"), col("label").as("lv"))
-      val contracted = edges.join(lu, Seq("id_a"), "left").join(lv, Seq("id_b"), "left")
-        .select(coalesce(col("lu"), col("id_a")).as("cu"),
-          coalesce(col("lv"), col("id_b")).as("cv"))
-        .filter(col("cu") =!= col("cv"))
-      cc = connectedComponents(contracted)
-      cc.count()
-    }
-    t("assemble") {
-      incrementalCc(spark, dir).queryExecution.toRdd.count()
-    }
-    out.toSeq
   }
 
   /** d32 oracle — batch-oblivious from-scratch components over the

@@ -579,62 +579,6 @@ object Sketch {
     out
   }
 
-  /** Dev stage timer for d74 (Scratch `d74stages`) — not library surface. */
-  def d74Profile(spark: SparkSession, dir: String): Seq[(String, Double, Long)] = {
-    import org.apache.spark.sql.expressions.Window
-    val out = scala.collection.mutable.Buffer[(String, Double, Long)]()
-    def t(stage: String)(body: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = body
-      out += ((stage, (System.nanoTime() - t0) / 1e9, rows))
-    }
-    val sh = Tables.documents(spark, dir)
-      .select(col("source"), explode(TextHash.hashedShingles(col("text"), 0)).as("h"))
-      .distinct()
-      .persist()
-    t("sh")(sh.count())
-    val wk = Window.partitionBy("source").orderBy("h")
-    val sk = sh.withColumn("rn", row_number().over(wk)).filter(col("rn") <= KmvK)
-      .select("source", "h").localCheckpoint(false)
-    t("sk")(sk.count())
-    val thetas = sk.groupBy("source")
-      .agg(count(lit(1)).as("k_eff"), max("h").as("vk"))
-      .withColumn("theta",
-        when(col("k_eff") < KmvK, lit(ThetaSpace)).otherwise(col("vk") + lit(1L)))
-      .select("source", "theta")
-    val srcs = sk.select("source").distinct()
-    val pairs = srcs.toDF("sa").crossJoin(srcs.toDF("sb")).filter(col("sa") < col("sb"))
-      .join(thetas.toDF("sa", "theta_a"), Seq("sa"))
-      .join(thetas.toDF("sb", "theta_b"), Seq("sb"))
-      .withColumn("theta", least(col("theta_a"), col("theta_b")))
-      .select("sa", "sb", "theta").localCheckpoint(false)
-    t("pairs")(pairs.count())
-    val pa = pairs.select(col("sa"), col("sb"), col("theta"), col("sa").as("source"))
-    val pb = pairs.select(col("sa"), col("sb"), col("theta"), col("sb").as("source"))
-    val memb = sk.join(pa, Seq("source"))
-        .select(col("sa"), col("sb"), col("theta"), col("h"), lit(1L).as("in_a"), lit(0L).as("in_b"))
-      .unionByName(sk.join(pb, Seq("source"))
-        .select(col("sa"), col("sb"), col("theta"), col("h"), lit(0L).as("in_a"), lit(1L).as("in_b")))
-      .groupBy("sa", "sb", "theta", "h")
-      .agg(max("in_a").as("in_a"), max("in_b").as("in_b"))
-      .localCheckpoint(false)
-    t("memb")(memb.count())
-    val wu = Window.partitionBy("sa", "sb").orderBy("h")
-    t("uni")(memb.withColumn("rn", row_number().over(wu)).filter(col("rn") <= KmvK)
-      .groupBy("sa", "sb").agg(count(lit(1)).as("k_union"), max("h").as("vk_u")).count())
-    t("below")(memb.filter(col("h") < col("theta"))
-      .groupBy("sa", "sb", "theta")
-      .agg(sum(when(col("in_a") === 1 && col("in_b") === 1, 1L).otherwise(0L)).as("n_common")).count())
-    val counts = sh.groupBy("source").agg(count(lit(1)).as("n"))
-    t("counts")(counts.count())
-    val inter = sh.toDF("sa", "h").join(sh.toDF("sb", "h2"),
-        col("h") === col("h2") && col("sa") < col("sb"))
-      .groupBy("sa", "sb").agg(count(lit(1)).as("n_inter"))
-    t("inter")(inter.count())
-    sh.unpersist()
-    out.toSeq
-  }
-
   lazy val oracleThetaSetOps: String =
     s"""WITH sh AS (
        |  SELECT DISTINCT source, unnest(${TextHash.hashedShinglesSql("text", 0)}) AS h

@@ -87,13 +87,6 @@ object StreamCompact {
     val base = graft.ops.Staging.stagePath("stream_compact", dir)
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
     fs.delete(new Path(base), true)
-    val dbg = sys.env.contains("SPARK_GRAFT_S24_DEBUG")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[s24] $phase: ${(now - tLast) / 1e9}%.2f s")
-      tLast = now
-    }
 
     // feed files: one per event_id residue class -> one per trigger.
     // FeedStage (the shared one-pass stager) instead of an inline copy
@@ -107,7 +100,6 @@ object StreamCompact {
         .select("event_id", "ts", "user_id", "event_type", "value"),
       pmod(col("event_id"), lit(NumBatches)), NumBatches, Seq(col("event_id")))
 
-    mark("feed")
     // phase 1: micro-batch ingest, one file per (batch, day)
     val q = ss.readStream.schema(feedSchema)
       .option("maxFilesPerTrigger", "1")
@@ -139,7 +131,6 @@ object StreamCompact {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    mark("stream")
 
     def listByDay(root: String): Seq[(java.sql.Date, Long)] =
       Option(fs.globStatus(new Path(s"$root/day=*/[a-z]*")))
@@ -160,7 +151,6 @@ object StreamCompact {
       .parquet(s"$base/compact_tmp")
     fs.delete(new Path(s"$base/compact"), true)
     fs.rename(new Path(s"$base/compact_tmp"), new Path(s"$base/compact"))
-    mark("compact")
     val after = listByDay(s"$base/compact")
 
     // phase 3: audit — content parity from the COMPACTED data, layout

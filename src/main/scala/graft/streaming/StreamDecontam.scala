@@ -49,20 +49,12 @@ object StreamDecontam {
 
   def decontamIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.llm.{Curation, Dedup, Sampling}
-    val debug = sys.env.contains("SPARK_GRAFT_S16_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (debug) {
-      val t1 = System.nanoTime()
-      Console.err.println(f"[s16] $tag: ${(t1 - t0) / 1e9}%.2f s")
-      t0 = t1
-    }
     val ss = StreamEnv.streamSession(spark)
 
     // the shared era-staged posting index (built by whichever of
     // d18/s16 touches this era first)
     val (hotPath, evalPath, _) = Curation.decontamIndex(spark, dir)
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    lap("index")
 
     // ---- the train feed as NumBatches ordered files (s12 convention) ----
     val base = graft.ops.Staging.stagePath("stream_decontam", dir)
@@ -75,7 +67,6 @@ object StreamDecontam {
     val denseW = StreamEnv.denseBatchWidth(spark,
       ss.read.schema(docSchema).parquet(feedIn).count() / NumBatches)
 
-    lap("feed")
     val verdictsDir = s"$base/verdicts"
     val q = ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
@@ -109,7 +100,6 @@ object StreamDecontam {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    lap("stream")
     ss.read.parquet(s"$verdictsDir/batch_*").orderBy("train_id", "eval_id")
   }
 

@@ -19,9 +19,6 @@ object StreamEnv {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // opt-in per-trigger cost recording (see TriggerLog): listeners are
-    // per-session, so the hook lives where the sessions are minted
-    if (TriggerLog.enabled) ss.streams.addListener(TriggerLog.listener)
     ss
   }
 

@@ -1,0 +1,105 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+class QueryTraceSpec extends AnyFunSuite {
+  import SparkTestBase.{spark, Sf}
+
+  private def exec(df: DataFrame): Unit = df.queryExecution.toRdd.count(): Unit
+
+  /** Counts every job started while it is registered, and the jobs per
+    * job description — an attribution independent of the trace's tags.
+    */
+  private final class JobCounter extends SparkListener {
+    val all = new AtomicInteger
+    val byDescription = TrieMap.empty[String, Int]
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      all.incrementAndGet()
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        .foreach(d => byDescription(d) = byDescription.getOrElse(d, 0) + 1)
+    }
+  }
+
+  /** Trace the named queries (all at once, one thread each, when
+    * `parallel`); each thread labels its jobs with the query name as
+    * the job description. Returns the summaries by name and the
+    * counter, which has seen every job the window started plus the
+    * trace's one fence job.
+    */
+  private def traced(names: Seq[String], parallel: Boolean = false)
+      : (Map[String, QueryTrace.Summary], JobCounter) = {
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    val trace = QueryTrace.register(spark)
+    def one(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try trace.run(name)(SparkEntry.queries(name)(spark, Sf))(exec)
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    try {
+      if (parallel) {
+        val threads = names.map(n => new Thread(() => one(n)))
+        threads.foreach(_.start())
+        threads.foreach(_.join())
+      } else names.foreach(one)
+      trace.flush()
+      (trace.summaries.map(s => s.name -> s).toMap, counter)
+    } finally {
+      trace.close()
+      spark.sparkContext.removeSparkListener(counter)
+    }
+  }
+
+  private def jobs(s: QueryTrace.Summary): Int =
+    s.jobs(QueryTrace.Construct) + s.jobs(QueryTrace.Execute)
+
+  test("a batch query and a map-only pre-sort query each get their own jobs, stages and tasks") {
+    val (sums, counter) = traced(Seq("q13_price", "d04_simhash"))
+    for (name <- Seq("q13_price", "d04_simhash")) {
+      val s = sums(name)
+      assert(s.jobs(QueryTrace.Execute) > 0, name)
+      assert(jobs(s) == counter.byDescription(name), name)
+      assert(s.stages > 0 && s.totals("tasks") >= s.stages, name)
+      assert(s.topStages.nonEmpty && s.topStages.forall(_.name.nonEmpty), name)
+      assert(s.totals("executor_run_s") >= 0 && s.totals("task_skew") >= 1.0, name)
+      assert(s.planningMs.keySet == Set("analysis", "optimization", "planning"), name)
+      assert(s.secs.keySet == Set(QueryTrace.Construct, QueryTrace.Execute), name)
+      assert(s.stream.isEmpty, name)
+    }
+    // construct + execute jobs are all the window's jobs (but the fence)
+    assert(sums.values.map(jobs).sum == counter.all.get - 1)
+  }
+
+  test("a streaming leg in a child session gets its trigger count and phase sums") {
+    val (sums, counter) = traced(Seq("s01_stream_daily"))
+    val s = sums("s01_stream_daily")
+    val t = s.stream.getOrElse(fail("no streaming progress attributed"))
+    assert(t.triggers > 0 && t.p95Ms <= t.maxMs)
+    assert(t.phaseSumsMs.keySet.contains("addBatch"))
+    assert(t.phaseSumsMs("triggerExecution") >= t.phaseSumsMs("addBatch"))
+    assert(s.jobs(QueryTrace.Construct) > 0) // the micro-batches drain while the DataFrame is built
+    assert(jobs(s) == counter.all.get - 1)
+    val js = QueryTrace.json(s)
+    for (k <- Seq("construct_s", "execute_s", "construct_jobs", "execute_jobs", "stages", "tasks",
+        "executor_run_s", "executor_cpu_s", "gc_s", "shuffle_read_bytes", "shuffle_write_bytes",
+        "spill_bytes", "task_skew", "planning_ms", "top_stages", "job_sites", "stream",
+        "triggers", "trigger_p95_ms", "trigger_max_ms", "phase_sums_ms"))
+      assert(js.contains("\"" + k + "\":"), k)
+  }
+
+  test("two queries run at the same time on two threads are each attributed only their own jobs") {
+    val names = Seq("q13_price", "d04_simhash")
+    val (sums, counter) = traced(names, parallel = true)
+    for (name <- names) {
+      assert(jobs(sums(name)) == counter.byDescription(name), name)
+      assert(sums(name).totals("tasks") > 0, name)
+    }
+    assert(names.map(n => jobs(sums(n))).sum == counter.all.get - 1)
+  }
+}
