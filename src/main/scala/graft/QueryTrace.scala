@@ -123,7 +123,8 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
           Seq("executor_run_s" -> m.executorRunTime / 1e3, "executor_cpu_s" -> m.executorCpuTime / 1e9,
             "gc_s" -> m.jvmGCTime / 1e3, "shuffle_read_bytes" -> m.shuffleReadMetrics.totalBytesRead.toDouble,
             "shuffle_write_bytes" -> m.shuffleWriteMetrics.bytesWritten.toDouble,
-            "spill_bytes" -> (m.memoryBytesSpilled + m.diskBytesSpilled).toDouble
+            "spill_bytes" -> (m.memoryBytesSpilled + m.diskBytesSpilled).toDouble,
+            "input_bytes" -> m.inputMetrics.bytesRead.toDouble
           ).foreach { case (k, v) => rec.totals(k) += v }
           rec.stageRunMs(e.stageId) += m.executorRunTime
         }
@@ -176,7 +177,7 @@ object QueryTrace {
   private val PlatformFrame = """<unknown>|(org\.apache\.spark|scala|java|jdk)\..*""".r
   private val TopN = 5
   private val TotalKeys = Seq("tasks", "executor_run_s", "executor_cpu_s", "gc_s",
-    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "task_skew")
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes", "input_bytes", "task_skew")
 
   /** A trace registered on `spark`'s listener bus. */
   def register(spark: org.apache.spark.sql.SparkSession): QueryTrace = {
@@ -193,8 +194,9 @@ object QueryTrace {
 
   /** `totals` sums the task metrics over the query's stages (keys as
     * in the record: `tasks`, `executor_run_s`, `executor_cpu_s`, `gc_s`,
-    * `shuffle_read_bytes`, `shuffle_write_bytes`, `spill_bytes`) and
-    * holds `task_skew`, the largest max/median task time of a stage.
+    * `shuffle_read_bytes`, `shuffle_write_bytes`, `spill_bytes`,
+    * `input_bytes`) and holds `task_skew`, the largest max/median task
+    * time of a stage.
     */
   final case class Summary(
       name: String,

@@ -30,7 +30,25 @@ object CoreOps {
     * value is snapped to the cent grid before dividing, collapsing
     * engine-specific float-summation order noise. See class doc.
     */
-  def stableAvg(c: Column): Column = round(sum(c), 2) / count(c)
+  def stableAvg(c: Column): Column = round(sum(c), StableScale) / count(c)
+
+  /** Decimal places of the grid [[stableAvg]] snaps its sum to. */
+  private val StableScale = 2
+  private val GridUnits = math.pow(10, StableScale)
+
+  /** One grid value as an exact integer count of grid units (cents):
+    * sums of these re-aggregate associatively, so per-file partials
+    * merge exactly (`ZOrder.statsIndex`, `PricingService`'s M).
+    */
+  def gridUnits(c: Column): Column = floor(c * lit(GridUnits) + lit(0.5)).cast("long")
+
+  /** [[stableAvg]] folded in plain Scala from exact partials: `units`
+    * grid units over `n` values. On a ≤2-decimal column `units / 100`
+    * is the correctly rounded double of the exact sum, which is what
+    * `round(sum, 2)` yields, so the result is bit-equal to the Column
+    * form.
+    */
+  def stableAvg(units: Long, n: Long): Double = units.toDouble / GridUnits / n.toDouble
 
   /** q01 — pruned scan + disjunctive predicate (S1/P1/P4).
     * Mirrors the reference's source pushdown (`select` 4 cols, OR-of-

@@ -76,12 +76,13 @@ object Ingest {
   /** Idempotent daily load (fixes the reference's non-idempotent
     * WRITE_APPEND, SURVEY.md §2.10 D4): each run overwrites exactly the
     * date partitions present in `batch` — a retry or backfill replaces
-    * rather than duplicates.
+    * rather than duplicates. Dynamic overwrite is a writer option, so
+    * the caller's session conf is left as it was.
     */
   def loadDailyPartitioned(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batch.write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("date")
       .parquet(path)
   }

@@ -39,11 +39,25 @@ object Pricing {
   def clamp(x: Column, lo: Double, hi: Double): Column =
     least(lit(hi), greatest(lit(lo), x))
 
+  /** M's constants: M = min(0.05, 0.01·conso/4000) over the trailing
+    * 30 days of events — reference `api.py:121`.
+    */
+  private val ModulationCap = 0.05
+  private val ModulationRate = 0.01
+  private val ModulationRefKwh = 4000.0
+  val WindowDays = 30
+
   /** Regional modulation M = min(0.05, 0.01·conso/4000) — reference
     * `api.py:121`.
     */
   def modulation(conso30dMean: Column): Column =
-    least(lit(0.05), lit(0.01) * conso30dMean / lit(4000.0))
+    least(lit(ModulationCap), lit(ModulationRate) * conso30dMean / lit(ModulationRefKwh))
+
+  /** [[modulation]] in plain Scala: the same double operations in the
+    * same order, so a folded M is bit-equal to the Column form.
+    */
+  def modulation(conso30dMean: Double): Double =
+    math.min(ModulationCap, ModulationRate * conso30dMean / ModulationRefKwh)
 
   /** Monthly price = bround((tariff + α·M)·x/12 + C, 2) — reference
     * `api.py:127` with the notice's /12 monthlyization; HALF_EVEN
@@ -127,8 +141,8 @@ object Pricing {
     * fact-side aggregates shuffle once each on their own keys.
     */
   /** The M dimension of q13 standalone: global trailing-30-day events
-    * mean → modulation, one row. Shared by [[priceBatch]] and
-    * [[PricingService]] so batch and serving price from the SAME plan.
+    * mean → modulation, one row. [[priceBatch]] runs this plan;
+    * [[PricingService]] folds the bit-equal M from per-file partials.
     */
   def modulationScalar(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
@@ -136,7 +150,7 @@ object Pricing {
     // 6 so downstream arithmetic is bit-deterministic vs the oracle)
     val anchored = ev.crossJoin(broadcast(ev.agg(max(col("ts")).as("mx"))))
     anchored
-      .filter(col("ts") >= col("mx") - expr("INTERVAL 30 DAYS"))
+      .filter(col("ts") >= col("mx") - expr(s"INTERVAL $WindowDays DAYS"))
       .agg(CoreOps.stableAvg(col("value")).as("avg30"))
       .select(modulation(col("avg30")).as("m"))
   }

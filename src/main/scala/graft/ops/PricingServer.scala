@@ -1,11 +1,10 @@
 package graft.ops
 
-import java.net.{InetAddress, InetSocketAddress}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 /** The HTTP serving loop around [[PricingService]] — the end-to-end
   * analog of the reference's Flask `/price` endpoint (reference
@@ -27,26 +26,28 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * Unknown paths get Flask's 404.
   *
   * Serving shape: the heavy lifting (two distributed aggregates over
-  * the events fact) happened ONCE in `PricingService.build`; each
-  * request here is pure driver-side arithmetic over the O(regions)
-  * collected state, so the per-request cost is parsing + a map lookup
-  * + a dozen double ops — microseconds against a 6-second SLO, and
-  * INDEPENDENT of fact-table size. At 100 TB the build-time aggregates
-  * get slower; the serving loop does not. Refreshing state after a
-  * daily ingest is `PricingServer(PricingService.build(...))` again —
-  * state swap, not server restart, if the handle is made volatile.
+  * the events fact) happened in `PricingService.build`; each request
+  * here is plain JVM arithmetic over the O(regions) collected
+  * state, so the per-request cost is parsing + a map lookup + a dozen
+  * double ops — microseconds against a 6-second SLO, and INDEPENDENT
+  * of fact-table size. The server holds one state for its lifetime:
+  * refreshing after a daily ingest is `PricingService.build` again
+  * (incremental, O(new day)) and a new `PricingServer` on the result.
+  *
+  * Transport: the server comes from [[LoopbackHttp]], which turns
+  * Nagle off; a reply costs tens of microseconds, not the ~44 ms a
+  * delayed ACK adds with it on.
   *
   * Concurrency: the JDK's `HttpServer` dispatches each exchange onto a
   * fixed thread pool. [[PricingService.price]] is pure (immutable Map
-  * + arithmetic), so requests need no synchronization.
+  * + arithmetic) and the shared `ObjectMapper` is thread-safe once
+  * configured, so requests need no synchronization.
   */
 final class PricingServer(svc: PricingService, poolSize: Int = 8) {
+  import PricingServer.Json
 
   private val pool: ExecutorService = Executors.newFixedThreadPool(poolSize)
-  // loopback-only bind on an ephemeral port: this is a test/serving
-  // fixture, never an externally reachable listener
-  private val server = HttpServer.create(
-    new InetSocketAddress(InetAddress.getLoopbackAddress, 0), 0)
+  private val server = LoopbackHttp.create()
   server.setExecutor(pool)
   server.createContext("/price", (ex: HttpExchange) => handle(ex))
   server.createContext("/", (ex: HttpExchange) =>
@@ -72,10 +73,9 @@ final class PricingServer(svc: PricingService, poolSize: Int = 8) {
     * codes (200 / 400 / 500, `api.py:107-132`).
     */
   private def handle(ex: HttpExchange): Unit = {
-    val mapper = new ObjectMapper() // per-request: ObjectMapper config is not thread-free
     try {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val node = mapper.readTree(body)
+      val node = Json.readTree(body)
       val ok = node != null && node.has("libelle_region") &&
         node.has("nb_personne") && node.has("nb_m2")
       if (!ok) reply(ex, 400, """{"error":"Missing fields."}""")
@@ -87,7 +87,7 @@ final class PricingServer(svc: PricingService, poolSize: Int = 8) {
     } catch {
       case e: Exception =>
         reply(ex, 500,
-          s"""{"error":${new ObjectMapper().writeValueAsString(String.valueOf(e.getMessage))}}""")
+          s"""{"error":${Json.writeValueAsString(String.valueOf(e.getMessage))}}""")
     }
   }
 
@@ -96,4 +96,8 @@ final class PricingServer(svc: PricingService, poolSize: Int = 8) {
     pool.shutdown()
     pool.awaitTermination(5, TimeUnit.SECONDS): Unit
   }
+}
+
+object PricingServer {
+  private val Json = new ObjectMapper()
 }

@@ -146,7 +146,7 @@ object ZOrder {
           .agg(count(lit(1)).as("n_rows"),
             min("o_totalprice").as("min_price"),
             max("o_totalprice").as("max_price"),
-            sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")).as("cents"))
+            sum(CoreOps.gridUnits(col("o_totalprice"))).as("cents"))
           .write.mode("overwrite").parquet(p))
     }
     spark.read.parquet(loc)

@@ -146,12 +146,22 @@ object DailyIngest {
     * as a batch over a closed date range. Kappa: same `dailyAgg` code
     * as the stream; pair with Ingest.loadDailyPartitioned so re-running
     * a range replaces those partitions idempotently.
+    *
+    * The scan reads only the range: a `ts` bound before the aggregate
+    * covers every row of the kept windows (a kept window starts at or
+    * after `from`'s midnight and ends before `to`'s next midnight plus
+    * 24 hours, in the session zone), and the exact filter on `d` after
+    * it keeps the result unchanged. Spark pushes the bound into the
+    * parquet scan, through `normalizeTs`'s NTZ cast too.
     */
   def backfill(spark: SparkSession, dir: String,
-               from: java.sql.Date, to: java.sql.Date): DataFrame =
-    dailyAgg(graft.tables.Tables.events(spark, dir))
+               from: java.sql.Date, to: java.sql.Date): DataFrame = {
+    val lo = lit(from).cast("timestamp")
+    val hi = date_add(lit(to), 1).cast("timestamp") + expr("INTERVAL 24 HOURS")
+    dailyAgg(graft.tables.Tables.events(spark, dir).filter(col("ts") >= lo && col("ts") < hi))
       .filter(col("d").between(lit(from), lit(to)))
       .orderBy("event_type", "d")
+  }
 
   /** s17 — D3 backfill as a GATED query: replay a closed 10-day range
     * (derived from the data so it exists at every SF: days +3..+12

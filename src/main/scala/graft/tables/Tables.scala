@@ -42,9 +42,22 @@ object Tables {
     * the wall-clock instant and DuckDB oracles see the same value at
     * ≥ microsecond granularity (all our uses are ≥ second).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(eventsRaw(spark, dir))
+
+  /** The events table as the reader sees it, before [[normalizeTs]]. */
+  private[graft] def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(read(spark, dir, "events"))
+    read(spark, dir, "events")
+  }
+
+  /** Some of the events table's data files, read with a raw schema
+    * already taken from [[eventsRaw]]: a given schema skips the footer
+    * job that schema inference runs.
+    */
+  private[graft] def eventsFiles(spark: SparkSession, raw: StructType, files: Seq[String]): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.schema(raw).parquet(files: _*)
   }
 
   /** Canonicalize a raw events relation's `ts` to microsecond

@@ -54,12 +54,21 @@ class DomainApiSpec extends AnyFunSuite {
   }
 
   test("idempotent daily load: re-running a day replaces, not duplicates") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_load").toString
-    val batch = Seq(("84", "ARA", d("2024-01-15"), 100.0))
-      .toDF("code_insee_region", "libelle_region", "date", "conso_mwh")
-    Ingest.loadDailyPartitioned(spark, batch, tmp)
-    Ingest.loadDailyPartitioned(spark, batch, tmp) // the retry
-    assert(spark.read.parquet(tmp).count() == 1) // reference would have 2
+    SparkTestBase.withTempDir("graft_load") { dir =>
+      val tmp = dir.toString
+      val mode = "spark.sql.sources.partitionOverwriteMode"
+      val before = spark.conf.get(mode)
+      def day(date: String, v: Double) = Seq(("84", "ARA", d(date), v))
+        .toDF("code_insee_region", "libelle_region", "date", "conso_mwh")
+      Ingest.loadDailyPartitioned(spark, day("2024-01-14", 90.0), tmp)
+      Ingest.loadDailyPartitioned(spark, day("2024-01-15", 100.0), tmp)
+      Ingest.loadDailyPartitioned(spark, day("2024-01-15", 101.0), tmp) // the retry
+      // the retry replaced only its own day; the session is untouched
+      val rows = spark.read.parquet(tmp).select("date", "conso_mwh").orderBy("date").collect()
+        .map(r => r.getDate(0).toString -> r.getDouble(1)).toSeq
+      assert(rows == Seq("2024-01-14" -> 90.0, "2024-01-15" -> 101.0)) // reference would have 3 rows
+      assert(spark.conf.get(mode) == before)
+    }
   }
 
   test("priceRequests: golden path, clamps, and missing-dimension defaults") {

@@ -832,13 +832,20 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("backfill over a range is idempotent through the partitioned load") {
     val d = java.sql.Date.valueOf(_: String)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_backfill").toString
-    val slice = graft.streaming.DailyIngest.backfill(spark, Sf, d("2024-01-10"), d("2024-01-15"))
-      .withColumnRenamed("d", "date")
-    graft.ops.Ingest.loadDailyPartitioned(spark, slice, tmp)
-    graft.ops.Ingest.loadDailyPartitioned(spark, slice, tmp) // the re-run
-    val n = spark.read.parquet(tmp).count()
-    assert(n == slice.count()) // duplicates would double this
+    SparkTestBase.withTempDir("graft_backfill") { dir =>
+      val tmp = dir.toString
+      val slice = graft.streaming.DailyIngest.backfill(spark, Sf, d("2024-01-10"), d("2024-01-15"))
+        .withColumnRenamed("d", "date")
+      // the ts bound before the aggregate changes no row: the slice is
+      // the whole-table daily aggregate cut to the range
+      val whole = graft.streaming.DailyIngest.batchDaily(spark, Sf)
+        .filter(col("d").between(lit("2024-01-10"), lit("2024-01-15")))
+      assert(slice.collect().toSeq == whole.collect().toSeq && slice.count() > 0)
+      graft.ops.Ingest.loadDailyPartitioned(spark, slice, tmp)
+      graft.ops.Ingest.loadDailyPartitioned(spark, slice, tmp) // the re-run
+      val n = spark.read.parquet(tmp).count()
+      assert(n == slice.count()) // duplicates would double this
+    }
   }
 
   test("s09 stream-static enrichment equals the batch join over closed windows") {

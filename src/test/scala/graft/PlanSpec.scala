@@ -104,6 +104,24 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("backfill: the date range reaches the events scan as a pushed ts bound") {
+    // the events table with `ts` as the fixture stores it (timestamp
+    // without time zone, which `normalizeTs` casts) and as a plain
+    // timestamp; the bound must reach the scan through the cast too
+    import org.apache.spark.sql.functions.col
+    val d = java.sql.Date.valueOf(_: String)
+    for (ntz <- Seq(true, false)) SparkTestBase.withTempDir("graft_backfill_plan") { dir =>
+      val ev = graft.tables.Tables.events(spark, Sf)
+      (if (ntz) ev.withColumn("ts", col("ts").cast("timestamp_ntz")) else ev)
+        .write.parquet(dir.resolve("events.parquet").toString)
+      val p = graft.streaming.DailyIngest.backfill(spark, dir.toString, d("2024-01-10"), d("2024-01-15"))
+        .queryExecution.executedPlan.toString
+      val pushed = p.linesIterator.find(_.contains("PushedFilters")).getOrElse(fail(s"no scan in:\n$p"))
+      assert(pushed.contains("GreaterThanOrEqual(ts,") && pushed.contains("LessThan(ts,"),
+        s"ntz=$ntz: the ts bound did not reach the scan:\n$p")
+    }
+  }
+
   test("d05: pigeonhole candidate generation is an equi-join, never all-pairs") {
     val p = planOf("d05_simhash_pairs")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
