@@ -1,10 +1,9 @@
 package graft.ops
 
 import java.net.URI
-import java.util.concurrent.{ExecutionException, FutureTask}
 
-import graft.tables.Tables
-import org.apache.hadoop.fs.{FileStatus, Path}
+import graft.tables.{DataFile, Tables}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -70,30 +69,20 @@ object PricingService {
     *    or a new file straddles it). A daily append therefore costs one
     *    or two small jobs however long the history is; a rebuild with
     *    no file changed runs none.
-    *  - A build that misses both (a new directory) runs their jobs side
-    *    by side.
     *
-    * Files are known by qualified path, length and modification time,
-    * the identity Spark's own file index uses; a Spark `cache()` would
-    * keep answering after the files change.
+    * Files are known by qualified path, length and modification time
+    * ([[Tables.dataFiles]]), the identity Spark's own file index uses;
+    * a Spark `cache()` would keep answering after the files change.
     */
   def build(spark: SparkSession, dir: String,
             params: PricingParams = PricingParams(Pricing.Tariff, Pricing.MonthlyFee, 1.0, 1.3)): PricingService = {
-    // a new thread inherits the caller's Spark local properties (job
-    // group, tags), so M's jobs stay attributed to this build
-    val m = new FutureTask(() => modulation(spark, dir))
-    new Thread(m, "pricing-modulation").start()
     val a = alpha(spark, dir, params.alphaLo, params.alphaHi)
-    try new PricingService(a, m.get(), params)
-    catch { case e: ExecutionException => throw e.getCause }
+    new PricingService(a, modulation(spark, dir), params)
   }
 
   /** Directories each memo keeps; the least recently built goes first. */
   private val MemoDirs = 16
   private val MicrosPerDay = 86400L * 1000000L
-
-  /** A data file as Spark's file index identifies it. */
-  private final case class FileId(path: String, length: Long, mtime: Long)
 
   /** A file's share of M over its rows with a `ts`: count and exact
     * grid-unit sum of `value`, and min/max `ts` in microseconds.
@@ -104,14 +93,14 @@ object PricingService {
   }
   private val NoRows = Partial(0L, 0L, Long.MaxValue, Long.MinValue)
 
-  private final case class AlphaMemo(inputs: Seq[Seq[FileId]], alpha: Map[String, Double])
+  private final case class AlphaMemo(inputs: Seq[Seq[DataFile]], alpha: Map[String, Double])
 
   /** One events directory: its raw `ts`/`value` schema, the partial of
     * every file in its latest listing, and the filtered partials of the
     * files that straddled the latest window start.
     */
-  private final case class EventsMemo(schema: StructType, files: Map[FileId, Partial],
-                                      windowStart: Long, straddling: Map[FileId, Partial])
+  private final case class EventsMemo(schema: StructType, files: Map[DataFile, Partial],
+                                      windowStart: Long, straddling: Map[DataFile, Partial])
 
   private def lru[K, V]: java.util.LinkedHashMap[K, V] =
     new java.util.LinkedHashMap[K, V](MemoDirs, 0.75f, true) {
@@ -136,24 +125,12 @@ object PricingService {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
   }
 
-  /** The data files under `path` in the order Spark lists them: the
-    * path itself if it is a file, else every leaf below it that is not
-    * hidden (`_` or `.` prefix, except `k=v` partition directories).
-    */
-  private def listing(spark: SparkSession, path: Path): Seq[FileId] = {
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hidden(name: String) =
-      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
-    def leaves(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
-        .sortBy(_.getPath.toString).flatMap(leaves)
-    leaves(fs.getFileStatus(path)).map(s => FileId(s.getPath.toString, s.getLen, s.getModificationTime))
-  }
+  private def listing(spark: SparkSession, path: String): Seq[DataFile] =
+    Tables.dataFiles(spark.sparkContext.hadoopConfiguration, path)
 
   private def alpha(spark: SparkSession, dir: String, lo: Double, hi: Double): Map[String, Double] = {
     val inputs = Seq("customer", "nation", "region", "orders")
-      .map(t => listing(spark, qualified(spark, s"$dir/$t.parquet")))
+      .map(t => listing(spark, s"$dir/$t.parquet"))
     val key = (qualified(spark, dir).toString, zone(spark), lo, hi)
     memoGet(alphaMemo, key).filter(_.inputs == inputs).map(_.alpha).getOrElse {
       val alpha = Pricing.regionAlpha(spark, dir, lo, hi).collect()
@@ -165,7 +142,7 @@ object PricingService {
 
   private def modulation(spark: SparkSession, dir: String): Double = {
     val root = qualified(spark, s"$dir/events.parquet")
-    val files = listing(spark, root)
+    val files = listing(spark, root.toString)
     val listed = files.toSet
     val key = (root.toString, zone(spark))
     // a memo none of whose files is left (the table was replaced) may
@@ -175,14 +152,14 @@ object PricingService {
       val raw = Tables.eventsRaw(spark, dir).schema
       StructType(Seq(raw("ts"), raw("value")))
     }
-    val seen = prior.map(_.files).getOrElse(Map.empty[FileId, Partial])
+    val seen = prior.map(_.files).getOrElse(Map.empty[DataFile, Partial])
     val scanned = seen.filter { case (f, _) => listed(f) } ++
       partialsOf(spark, schema, files.filterNot(seen.contains), None)
     val maxTs = scanned.values.foldLeft(NoRows)(_ + _).maxTs
     if (maxTs == Long.MinValue) throw new IllegalStateException(s"no events with a ts under $root")
     val start = maxTs - Pricing.WindowDays * MicrosPerDay
     val straddlers = files.filter(f => scanned(f).minTs < start && scanned(f).maxTs >= start)
-    val kept = prior.filter(_.windowStart == start).map(_.straddling).getOrElse(Map.empty[FileId, Partial])
+    val kept = prior.filter(_.windowStart == start).map(_.straddling).getOrElse(Map.empty[DataFile, Partial])
       .filter { case (f, _) => straddlers.contains(f) }
     val straddling = kept ++ partialsOf(spark, schema, straddlers.filterNot(kept.contains), Some(start))
     memoPut(eventsMemo, key, EventsMemo(schema, scanned, start, straddling))
@@ -198,8 +175,8 @@ object PricingService {
     * per file; the collected task partials are merged per file (a file
     * may be split across tasks). Files without such rows get [[NoRows]].
     */
-  private def partialsOf(spark: SparkSession, schema: StructType, files: Seq[FileId],
-                         from: Option[Long]): Map[FileId, Partial] =
+  private def partialsOf(spark: SparkSession, schema: StructType, files: Seq[DataFile],
+                         from: Option[Long]): Map[DataFile, Partial] =
     if (files.isEmpty) Map.empty
     else {
       import spark.implicits._

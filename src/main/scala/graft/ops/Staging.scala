@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.tables.Tables
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -79,8 +80,8 @@ object Staging {
   }
 
   /** Cross-process staged-INDEX location: keyed by the input dir's
-    * content ERA — a digest of its recursive file listing (name,
-    * length, mtime) — instead of the JVM pid. Corpus-index artifacts
+    * content ERA — a digest of its data files ([[Tables.dataFiles]]:
+    * path, length, mtime) — instead of the JVM pid. Corpus-index artifacts
     * (shingle/band tables, cluster labels, family/prefix indexes,
     * dedup generations, z-order layouts) are deterministic functions
     * of the input data, so any process over the same era derives the
@@ -159,14 +160,9 @@ object Staging {
     eraCache.computeIfAbsent(dir, d => {
       val md = java.security.MessageDigest.getInstance("MD5")
       md.update(d.getBytes("UTF-8"))
-      def walk(f: java.io.File): Unit = {
-        md.update(s"${f.getName}:${f.length}:${f.lastModified};".getBytes("UTF-8"))
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName).foreach(walk)
+      Tables.dataFiles(new Configuration(), d).foreach { f =>
+        md.update(s"${f.path}:${f.length}:${f.mtime};".getBytes("UTF-8"))
       }
-      val root = new java.io.File(d)
-      if (root.isDirectory)
-        Option(root.listFiles()).getOrElse(Array.empty).sortBy(_.getName).foreach(walk)
       md.digest().take(8).map("%02x".format(_)).mkString
     })
 

@@ -1,8 +1,15 @@
 package graft.tables
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+/** A data file as Spark's file index identifies it: qualified path,
+  * length and modification time.
+  */
+final case class DataFile(path: String, length: Long, mtime: Long)
 
 /** Explicit schemas + loaders for the driver testdata tables
   * (TESTDATA.md / FIXTURES.md §B) and the reference's domain tables
@@ -16,6 +23,27 @@ import org.apache.spark.sql.types._
   * be asserted in one place.
   */
 object Tables {
+
+  /** The data files under `path` in the order Spark lists them: the
+    * path itself if it is a file, else every leaf below it whose name
+    * Spark's file index does not skip (a `_` or `.` prefix, except
+    * `k=v` partition directories, or a `._COPYING_` suffix). Empty if
+    * `path` does not exist. Two equal listings mean the same data, so
+    * a driver can tell whether a table changed without a Spark job.
+    */
+  def dataFiles(conf: Configuration, path: String): Seq[DataFile] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val root = fs.makeQualified(p)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
+        .sortBy(_.getPath.toString).flatMap(leaves)
+    if (!fs.exists(root)) Seq.empty
+    else leaves(fs.getFileStatus(root)).map(s => DataFile(s.getPath.toString, s.getLen, s.getModificationTime))
+  }
 
   // -- driver testdata (TPC-H-ish star schema) ------------------------------
 
