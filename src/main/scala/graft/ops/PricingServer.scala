@@ -1,10 +1,11 @@
 package graft.ops
 
+import java.net.{InetAddress, InetSocketAddress}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.HttpExchange
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** The HTTP serving loop around [[PricingService]] — the end-to-end
   * analog of the reference's Flask `/price` endpoint (reference
@@ -34,9 +35,9 @@ import com.sun.net.httpserver.HttpExchange
   * refreshing after a daily ingest is `PricingService.build` again
   * (incremental, O(new day)) and a new `PricingServer` on the result.
   *
-  * Transport: the server comes from [[LoopbackHttp]], which turns
-  * Nagle off; a reply costs tens of microseconds, not the ~44 ms a
-  * delayed ACK adds with it on.
+  * Transport: the JDK server leaves Nagle on, so a keep-alive reply
+  * waits about 44 ms for the client's delayed ACK of its headers; that
+  * floor, not the pricing arithmetic, sets `/price` latency.
   *
   * Concurrency: the JDK's `HttpServer` dispatches each exchange onto a
   * fixed thread pool. [[PricingService.price]] is pure (immutable Map
@@ -47,7 +48,10 @@ final class PricingServer(svc: PricingService, poolSize: Int = 8) {
   import PricingServer.Json
 
   private val pool: ExecutorService = Executors.newFixedThreadPool(poolSize)
-  private val server = LoopbackHttp.create()
+  // loopback-only bind on an ephemeral port: this is a test/serving
+  // fixture, never an externally reachable listener
+  private val server = HttpServer.create(
+    new InetSocketAddress(InetAddress.getLoopbackAddress, 0), 0)
   server.setExecutor(pool)
   server.createContext("/price", (ex: HttpExchange) => handle(ex))
   server.createContext("/", (ex: HttpExchange) =>

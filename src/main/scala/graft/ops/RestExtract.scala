@@ -1,8 +1,10 @@
 package graft.ops
 
-import java.net.{URI, URLDecoder, URLEncoder}
+import java.net.{InetSocketAddress, URI, URLDecoder, URLEncoder}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
+
+import com.sun.net.httpserver.HttpServer
 
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -99,7 +101,7 @@ object RestExtract {
     * request URI so specs can assert what was actually pushed.
     */
   class FixtureServer(rows: Seq[Map[String, Any]]) {
-    private val server = LoopbackHttp.create()
+    private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     val requests = scala.collection.mutable.Buffer[String]()
 
     def start(): Int = {
