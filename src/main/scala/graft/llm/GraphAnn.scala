@@ -198,7 +198,7 @@ object GraphAnn {
         edgesFor(b).write.mode("overwrite").parquet(p))
       b.unpersist()
     }
-    def rd(t: String) = spark.read.parquet(Staging.indexPath(t, dir))
+    def rd(t: String) = Tables.parquet(spark, Staging.indexPath(t, dir))
     (rd("g71_e0"), rd("g71_e1"), rd("g71_e2"), rd("g71_top"))
   }
 

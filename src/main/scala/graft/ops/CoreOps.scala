@@ -799,7 +799,7 @@ object CoreOps {
       legs.reduce(_ unionByName _)
         .write.mode("overwrite").parquet(p)
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   def profile(spark: SparkSession, dir: String): DataFrame =

@@ -6,7 +6,6 @@ import graft.tables.{DataFile, Tables}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** A single-request price quote (the reference's `/price` JSON body,
   * reference `api.py:104-108`, minus the commune fields the testdata
@@ -95,11 +94,11 @@ object PricingService {
 
   private final case class AlphaMemo(inputs: Seq[Seq[DataFile]], alpha: Map[String, Double])
 
-  /** One events directory: its raw `ts`/`value` schema, the partial of
-    * every file in its latest listing, and the filtered partials of the
-    * files that straddled the latest window start.
+  /** One events directory: the partial of every file in its latest
+    * listing, and the filtered partials of the files that straddled the
+    * latest window start.
     */
-  private final case class EventsMemo(schema: StructType, files: Map[DataFile, Partial],
+  private final case class EventsMemo(files: Map[DataFile, Partial],
                                       windowStart: Long, straddling: Map[DataFile, Partial])
 
   private def lru[K, V]: java.util.LinkedHashMap[K, V] =
@@ -145,24 +144,18 @@ object PricingService {
     val files = listing(spark, root.toString)
     val listed = files.toSet
     val key = (root.toString, zone(spark))
-    // a memo none of whose files is left (the table was replaced) may
-    // hold a stale schema: start over
-    val prior = memoGet(eventsMemo, key).filter(_.files.keys.exists(listed))
-    val schema = prior.map(_.schema).getOrElse {
-      val raw = Tables.eventsRaw(spark, dir).schema
-      StructType(Seq(raw("ts"), raw("value")))
-    }
+    val prior = memoGet(eventsMemo, key)
     val seen = prior.map(_.files).getOrElse(Map.empty[DataFile, Partial])
     val scanned = seen.filter { case (f, _) => listed(f) } ++
-      partialsOf(spark, schema, files.filterNot(seen.contains), None)
+      partialsOf(spark, dir, files.filterNot(seen.contains), None)
     val maxTs = scanned.values.foldLeft(NoRows)(_ + _).maxTs
     if (maxTs == Long.MinValue) throw new IllegalStateException(s"no events with a ts under $root")
     val start = maxTs - Pricing.WindowDays * MicrosPerDay
     val straddlers = files.filter(f => scanned(f).minTs < start && scanned(f).maxTs >= start)
     val kept = prior.filter(_.windowStart == start).map(_.straddling).getOrElse(Map.empty[DataFile, Partial])
       .filter { case (f, _) => straddlers.contains(f) }
-    val straddling = kept ++ partialsOf(spark, schema, straddlers.filterNot(kept.contains), Some(start))
-    memoPut(eventsMemo, key, EventsMemo(schema, scanned, start, straddling))
+    val straddling = kept ++ partialsOf(spark, dir, straddlers.filterNot(kept.contains), Some(start))
+    memoPut(eventsMemo, key, EventsMemo(scanned, start, straddling))
     val window = files.map { f =>
       straddling.getOrElse(f, if (scanned(f).minTs >= start) scanned(f) else NoRows)
     }.foldLeft(NoRows)(_ + _)
@@ -175,12 +168,12 @@ object PricingService {
     * per file; the collected task partials are merged per file (a file
     * may be split across tasks). Files without such rows get [[NoRows]].
     */
-  private def partialsOf(spark: SparkSession, schema: StructType, files: Seq[DataFile],
+  private def partialsOf(spark: SparkSession, dir: String, files: Seq[DataFile],
                          from: Option[Long]): Map[DataFile, Partial] =
     if (files.isEmpty) Map.empty
     else {
       import spark.implicits._
-      val raw = Tables.eventsFiles(spark, schema, files.map(_.path))
+      val raw = Tables.eventsFiles(spark, dir, files.map(_.path))
         .select(col("ts"), col("value"), col("_metadata.file_path").as("file"))
       val keep = from.fold(col("ts").isNotNull)(s => col("ts") >= timestamp_micros(lit(s)))
       val perTask = Tables.normalizeTs(raw).filter(keep)

@@ -426,11 +426,11 @@ object Staging {
     Tables.events(spark, dir)
       .repartition(64) // the small-file problem, manufactured
       .write.mode("overwrite").parquet(splintered)
-    spark.read.parquet(splintered)
+    Tables.parquet(spark, splintered)
       .coalesce(CompactTarget) // narrow: no shuffle, just fewer write tasks
       .sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(compacted)
-    spark.read.parquet(compacted)
+    Tables.parquet(spark, compacted)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
            round(sum("value"), 2).as("total"),
@@ -609,7 +609,7 @@ object Staging {
     val ev = Tables.events(spark, dir)
     ev.withColumn("d", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("d").parquet(loc)
-    val fact = spark.read.parquet(loc)
+    val fact = Tables.parquet(spark, loc)
     // weekday(d)=0 ⇔ Monday in both engines' chosen spellings
     val dim = ev.select(to_date(col("ts")).as("d")).distinct()
       .filter(weekday(col("d")) === 0)

@@ -84,7 +84,7 @@ object ZOrder {
           .sortWithinPartitions("z")
           .write.mode("overwrite").parquet(p))
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   /** Comparison layout for the spec: the SAME rows range-partitioned on
@@ -100,7 +100,7 @@ object ZOrder {
           .sortWithinPartitions("order_day")
           .write.mode("overwrite").parquet(p))
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   /** q54 — a two-dimensional box probe served FROM the z-ordered
@@ -149,7 +149,7 @@ object ZOrder {
             sum(CoreOps.gridUnits(col("o_totalprice"))).as("cents"))
           .write.mode("overwrite").parquet(p))
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   /** q55 — a corpus-wide aggregate answered ENTIRELY from the stats

@@ -77,15 +77,15 @@ object StreamEnv {
     streamSession(spark, sizedParts(spark, dir))
 
   /** The physical schema of `<dir>/events.parquet` as the batch reader
-    * sees it under this session's confs. `readStream` requires a
-    * declared schema; deriving it from the footer (instead of
-    * hard-coding `ts: Long`) keeps the stream sources working across
-    * BOTH driver testdata generations (raw-nanos INT64 vs
-    * timestamp[us] — see graft.tables.Tables.events).
+    * sees it. `readStream` requires a declared schema; taking the
+    * footer's (memoized by `Tables`) instead of hard-coding `ts: Long`
+    * keeps the stream sources working across BOTH driver testdata
+    * generations (raw-nanos INT64 vs timestamp[us] — see
+    * graft.tables.Tables.events).
     */
   def eventsPhysicalSchema(ss: SparkSession,
                            dir: String): org.apache.spark.sql.types.StructType =
-    ss.read.parquet(s"$dir/events.parquet").schema
+    graft.tables.Tables.eventsRaw(ss, dir).schema
 
   /** File-stream source over `<dir>/events.parquet` with `ts`
     * normalized to canonical microsecond TimestampType, accepting BOTH

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -141,7 +142,7 @@ object StreamJoin {
     */
   def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSessionFor(spark, dir)
-    val dim = ss.read.parquet(s"$dir/customer.parquet")
+    val dim = Tables.customer(ss, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val agg = eventStream(ss, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))

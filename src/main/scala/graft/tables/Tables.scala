@@ -2,7 +2,7 @@ package graft.tables
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,16 +11,23 @@ import org.apache.spark.sql.types._
   */
 final case class DataFile(path: String, length: Long, mtime: Long)
 
-/** Explicit schemas + loaders for the driver testdata tables
-  * (TESTDATA.md / FIXTURES.md §B) and the reference's domain tables
+/** Loaders for the driver testdata tables (TESTDATA.md / FIXTURES.md
+  * §B) and declared schemas for the reference's domain tables
   * (FIXTURES.md §A).
   *
-  * Design stance (SURVEY.md §1.2): schema-on-read is always *declared*,
-  * never inferred — mirroring the reference's explicit dtype maps
-  * (reference `0_insert_conso_an_ville_in_bq.py:43-47`). For Parquet the
-  * footer schema is authoritative; we still centralize loaders so every
-  * query reads through one audited path and column pruning/pushdown can
-  * be asserted in one place.
+  * Design stance (SURVEY.md §1.2): every query reads through one
+  * audited path, so column pruning and pushdown can be asserted in one
+  * place. For Parquet the footer schema is authoritative, and it is
+  * read once per table: [[parquet]] memoizes each table's inferred
+  * schema by qualified path and hands it to the reader, which then
+  * skips the footer job that schema inference runs. An entry is valid
+  * while at least one data file it was inferred from is still listed
+  * with the same length and mtime ([[dataFiles]], a driver listing, no
+  * Spark job). An append keeps it, as Spark's own inference reads one
+  * file and assumes the others agree; a rewrite, replacement or
+  * deletion infers again. The reference's CSV extracts, which carry no
+  * footer, get declared schemas below (reference
+  * `0_insert_conso_an_ville_in_bq.py:43-47`).
   */
 object Tables {
 
@@ -47,8 +54,40 @@ object Tables {
 
   // -- driver testdata (TPC-H-ish star schema) ------------------------------
 
+  /** Tables whose schema the memo keeps; the least recently read goes first. */
+  private val MemoTables = 128
+
+  private final case class SchemaMemo(files: Seq[DataFile], schema: StructType)
+
+  private val schemaMemo = new java.util.LinkedHashMap[String, SchemaMemo](MemoTables, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, SchemaMemo]): Boolean = size > MemoTables
+  }
+
+  /** The schema Spark infers for the parquet table at `path`, memoized
+    * by qualified path while one of the files it was inferred from is
+    * still listed unchanged (see the design note above). A miss infers
+    * it as `spark.read.parquet` does, in one job.
+    */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val key = p.getFileSystem(conf).makeQualified(p).toString
+    val listed = dataFiles(conf, key)
+    val live = listed.toSet
+    schemaMemo.synchronized(Option(schemaMemo.get(key))).filter(_.files.exists(live)).map(_.schema)
+      .getOrElse {
+        val schema = spark.read.parquet(path).schema
+        schemaMemo.synchronized(schemaMemo.put(key, SchemaMemo(listed, schema)))
+        schema
+      }
+  }
+
+  /** The parquet table at `path`, read with its memoized schema. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "nation")
@@ -74,18 +113,19 @@ object Tables {
     normalizeTs(eventsRaw(spark, dir))
 
   /** The events table as the reader sees it, before [[normalizeTs]]. */
-  private[graft] def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    read(spark, dir, "events")
-  }
+  private[graft] def eventsRaw(spark: SparkSession, dir: String): DataFrame =
+    eventsReader(spark, dir).parquet(s"$dir/events.parquet")
 
-  /** Some of the events table's data files, read with a raw schema
-    * already taken from [[eventsRaw]]: a given schema skips the footer
-    * job that schema inference runs.
+  /** Some of the events table's data files, read with its raw schema. */
+  private[graft] def eventsFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
+    eventsReader(spark, dir).parquet(files: _*)
+
+  /** A reader with the events table's raw schema. Inferring a NANOS
+    * `ts` as a raw Long needs `nanosAsLong`; this is where it is set.
     */
-  private[graft] def eventsFiles(spark: SparkSession, raw: StructType, files: Seq[String]): DataFrame = {
+  private def eventsReader(spark: SparkSession, dir: String): DataFrameReader = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.schema(raw).parquet(files: _*)
+    spark.read.schema(schemaOf(spark, s"$dir/events.parquet"))
   }
 
   /** Canonicalize a raw events relation's `ts` to microsecond

@@ -33,9 +33,11 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("file round trip") {
-    val f = java.nio.file.Files.createTempFile("graft_cfg", ".cfg")
-    java.nio.file.Files.write(f, String.join("\n", sample: _*).getBytes)
-    assert(AppConfig.load(f).pricingParams.tariff == 0.20)
+    SparkTestBase.withTempDir("graft_cfg") { dir =>
+      val f = dir.resolve("app.cfg")
+      java.nio.file.Files.write(f, String.join("\n", sample: _*).getBytes)
+      assert(AppConfig.load(f).pricingParams.tariff == 0.20)
+    }
   }
 
   test("config-driven pricing params flow into the priced result") {

@@ -963,20 +963,22 @@ class CorpusEvalSpec extends AnyFunSuite {
     import spark.implicits._
     // deterministic synthetic corpus above the breakpoint: n = 3000 ->
     // k = floor(sqrt(375)) = 19
-    val dir = java.nio.file.Files.createTempDirectory("graft_kcells").toString
-    val n = 3000
-    (0 until n).map { id =>
-      val e = (0 until 8).map(d => ((id * 31 + d * 17) % 101 - 50) / 50.0f)
-      (id.toLong, e)
-    }.toDF("vec_id", "embedding")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    assert(Similarity.cellCount(spark, dir) == 19)
-    val cents = Similarity.lloydCentroids(spark, dir)
-    assert(cents.nonEmpty && cents.size <= 19, s"got ${cents.size} centroids")
-    assert(cents.forall { case (c, e) => c >= 0 && c < 19 && e.size == 8 })
-    // the audit covers the full derived cell range and partitions the corpus
-    val bal = Similarity.cellBalance(spark, dir).collect()
-    assert(bal.map(_.getInt(0)).toSet == (0 until 19).toSet)
-    assert(bal.map(_.getLong(1)).sum == n.toLong)
+    SparkTestBase.withTempDir("graft_kcells") { tmp =>
+      val dir = tmp.toString
+      val n = 3000
+      (0 until n).map { id =>
+        val e = (0 until 8).map(d => ((id * 31 + d * 17) % 101 - 50) / 50.0f)
+        (id.toLong, e)
+      }.toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      assert(Similarity.cellCount(spark, dir) == 19)
+      val cents = Similarity.lloydCentroids(spark, dir)
+      assert(cents.nonEmpty && cents.size <= 19, s"got ${cents.size} centroids")
+      assert(cents.forall { case (c, e) => c >= 0 && c < 19 && e.size == 8 })
+      // the audit covers the full derived cell range and partitions the corpus
+      val bal = Similarity.cellBalance(spark, dir).collect()
+      assert(bal.map(_.getInt(0)).toSet == (0 until 19).toSet)
+      assert(bal.map(_.getLong(1)).sum == n.toLong)
+    }
   }
 }

@@ -38,17 +38,19 @@ class SourcesAndScaleSpec extends AnyFunSuite {
     // the reference caches extracts as CSV and re-reads with explicit
     // dtypes (reference `0_insert_conso_an_ville_in_bq.py:29-47`);
     // schema is declared, never inferred (SURVEY §1.2)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/stage"
-    val src = Seq(("Brageac", "15024", 110.5, 2020), ("Paris", "75056", 220.25, 2021))
-      .toDF("nom_commune", "code_commune", "conso_moyenne_mwh", "annee")
-    src.write.option("header", "true").csv(tmp)
-    val schema = graft.tables.Tables.consoAnVilleSchema
-    val back = spark.read.schema(schema).option("header", "true").csv(tmp)
-    assert(back.schema == schema)
-    assert(back.orderBy("code_commune").collect().toSeq ==
-           src.orderBy("code_commune").collect().toSeq)
-    // leading zeros survive because code_commune is declared STRING
-    assert(back.filter($"code_commune" === "15024").count() == 1)
+    SparkTestBase.withTempDir("graft_csv") { dir =>
+      val tmp = dir.resolve("stage").toString
+      val src = Seq(("Brageac", "15024", 110.5, 2020), ("Paris", "75056", 220.25, 2021))
+        .toDF("nom_commune", "code_commune", "conso_moyenne_mwh", "annee")
+      src.write.option("header", "true").csv(tmp)
+      val schema = graft.tables.Tables.consoAnVilleSchema
+      val back = spark.read.schema(schema).option("header", "true").csv(tmp)
+      assert(back.schema == schema)
+      assert(back.orderBy("code_commune").collect().toSeq ==
+             src.orderBy("code_commune").collect().toSeq)
+      // leading zeros survive because code_commune is declared STRING
+      assert(back.filter($"code_commune" === "15024").count() == 1)
+    }
   }
 
   test("q42 JSON-lines staging: real .json files on disk, schema-declared re-read") {
