@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** The one SparkSession factory for the mains and the test suite: a
   * local master on `cores` threads with as many shuffle partitions,
@@ -18,4 +19,24 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The one way the engine scopes a SQL conf: a child of `parent` with
+    * its current SQL conf, temporary functions and views, and `confs` on
+    * top. Setting a conf on the caller's session and restoring it in a
+    * `finally` is racy once two queries share it: A saves `true` and
+    * sets `false`, B saves `false`, A restores `true`, B restores
+    * `false`, and the session keeps `false` for good. Work moves to the
+    * child and its result back with [[SessionBridge.rebind]].
+    */
+  def scoped(parent: SparkSession, confs: (String, String)*): SparkSession = {
+    val child = SessionBridge.cloneSession(parent)
+    confs.foreach { case (k, v) => child.conf.set(k, v) }
+    child
+  }
+
+  /** The one width rule: one partition per `perTask` units of `size`,
+    * rounded up, at least `floor` and at most `cap` (the cap wins).
+    */
+  def width(size: Long, perTask: Long, floor: Int, cap: Int): Int =
+    math.min(cap.toLong, math.max(floor.toLong, (size + perTask - 1) / perTask)).toInt
 }

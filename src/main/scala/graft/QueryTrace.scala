@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * from the tag in the job's properties, never from wall-clock
   * windows: two queries on two threads are attributed only their own
   * jobs. Threads started inside a phase inherit the tag, so a
-  * streaming leg's micro-batch jobs in a `newSession()` child are the
+  * streaming leg's micro-batch jobs in a child session are the
   * query's too; those jobs also carry `sql.streaming.queryId`, which
   * links the stream's progress events (posted on the shared bus by
   * every session) to the query.

@@ -69,8 +69,8 @@ object Curation {
     */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val (_, evalPath, trainPath) = decontamIndex(spark, dir)
-    spark.read.parquet(trainPath)
-      .join(spark.read.parquet(evalPath), Seq("h"))
+    Tables.parquet(spark, trainPath)
+      .join(Tables.parquet(spark, evalPath), Seq("h"))
       .groupBy("train_id", "eval_id")
       .agg(count(lit(1)).as("n_shared"))
       .orderBy("train_id", "eval_id")
@@ -170,11 +170,11 @@ object Curation {
     */
   def contamAttribution(spark: SparkSession, dir: String): DataFrame = {
     val (hotPath, evalPath, trainPath) = decontamIndex(spark, dir)
-    val hot = spark.read.parquet(hotPath)
+    val hot = Tables.parquet(spark, hotPath)
     // dc_eval is staged unfiltered; dc_train is already hot-pruned
-    val ev = spark.read.parquet(evalPath)
+    val ev = Tables.parquet(spark, evalPath)
       .join(broadcast(hot), Seq("h"), "left_anti")
-    val tr = spark.read.parquet(trainPath)
+    val tr = Tables.parquet(spark, trainPath)
     val elig = ev.groupBy("eval_id").agg(count(lit(1)).as("n_eligible"))
     val mt = ev.join(tr.select("h").distinct(), Seq("h"))
       .groupBy("eval_id").agg(count(lit(1)).as("n_matched"))

@@ -1,8 +1,10 @@
 package graft.llm
 
+import graft.LocalSession
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Document deduplication operators for the large-scale training-data
   * pipeline: exact (hash group-by), MinHash+LSH (shingle → minhash →
@@ -159,7 +161,7 @@ object Dedup {
             size(col("hs_a")).as("sza"), size(col("hs_b")).as("szb"))
           .write.mode("overwrite").parquet(p))
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   private def candScoredRaw(spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
@@ -466,7 +468,7 @@ object Dedup {
       // labels live in parquet now — every cache behind them can go
       (pairs +: caches).foreach(_.unpersist())
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   /** Connected components of an undirected edge list — the reusable
@@ -495,52 +497,47 @@ object Dedup {
   def connectedComponents(pairs: DataFrame): DataFrame = {
     val cols = pairs.columns
     require(cols.length == 2, s"expected 2 edge columns, got ${cols.mkString(",")}")
-    // AQE is a net loss inside this loop: every round is 3 tiny keyed
-    // joins whose shuffle stages AQE materializes as SEPARATE jobs to
-    // re-plan between — pure scheduling overhead at label-table sizes,
-    // re-paid every round. Scope it off for the loop, and size the
-    // loop's shuffle width from the MEASURED edge count instead (the
-    // coalescing AQE would have done, without its per-stage jobs) —
-    // ~2.6× faster on the round-dominated queries. Both knobs bind
-    // per-plan at analysis time and rounds are driver-sequenced, so
-    // restoring after the loop cannot race this session's plans.
-    val sess = pairs.sparkSession
-    val aqe0 = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val sp0 = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val e0 = pairs.toDF("u", "v")
-      val edges = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))).persist()
-      // the count fills the edge cache anyway; it also sizes the loop
-      // width — ~500k edge rows per task, clamped to the session's
-      // configured width so a large graph keeps full parallelism
-      val nSym = edges.count()
-      val longTyped = edges.schema.fields
-        .forall(_.dataType == org.apache.spark.sql.types.LongType)
-      if (longTyped && nSym <= 2L * CcDriverMaxEdges) {
-        // tiny-graph fast path: a batch-scale contracted graph (d32's
-        // is ~100 edges) pays ~8 Spark rounds of fixed job overhead in
-        // the loop; a driver union-find over a BOUNDED edge set (≤
-        // CcDriverMaxEdges, a few MB — the d61 threshold discipline)
-        // produces the identical min-label result in microseconds.
-        // Above the bound the distributed loop runs unconditionally.
-        // Null endpoints are dropped to MATCH the loop: its equi-joins
-        // discard null-keyed rows, whereas getLong would silently read
-        // a null as 0L and graft the edge onto component 0.
-        val out = driverComponents(sess, edges.collect()
-          .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-          .map(r => (r.getLong(0), r.getLong(1))))
-        edges.unpersist()
-        out
-      } else {
-        val width = math.max(1L, math.min(sp0.toLong, nSym / 500000L + 1L))
-        sess.conf.set("spark.sql.shuffle.partitions", width.toString)
-        connectedComponentsLoop(edges)
-      }
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqe0)
-      sess.conf.set("spark.sql.shuffle.partitions", sp0)
-    }
+    val loop = loopSession(pairs.sparkSession)
+    val e0 = SessionBridge.rebind(loop, pairs.toDF("u", "v"))
+    val edges = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))).persist()
+    // the count fills the edge cache anyway; it also sizes the loop width
+    val nSym = edges.count()
+    val longTyped = edges.schema.fields
+      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+    val out = if (longTyped && nSym <= 2L * CcDriverMaxEdges) {
+      // tiny-graph fast path: a batch-scale contracted graph (d32's
+      // is ~100 edges) pays ~8 Spark rounds of fixed job overhead in
+      // the loop; a driver union-find over a BOUNDED edge set (≤
+      // CcDriverMaxEdges, a few MB — the d61 threshold discipline)
+      // produces the identical min-label result in microseconds.
+      // Above the bound the distributed loop runs unconditionally.
+      // Null endpoints are dropped to MATCH the loop: its equi-joins
+      // discard null-keyed rows, whereas getLong would silently read
+      // a null as 0L and graft the edge onto component 0.
+      val components = driverComponents(loop, edges.collect()
+        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        .map(r => (r.getLong(0), r.getLong(1))))
+      edges.unpersist()
+      components
+    } else connectedComponentsLoop(SessionBridge.rebind(sizedLoop(loop, nSym), edges))
+    SessionBridge.rebind(pairs.sparkSession, out)
+  }
+
+  /** The session an iterative loop (CC, d36, d39, d41) runs in: a child
+    * of the caller's with AQE off, which would materialize every round's
+    * tiny shuffle stages as separate jobs to re-plan between. The width
+    * AQE would have coalesced to comes from the measured edge count
+    * instead ([[sizedLoop]]) — ~2.6× faster on the round-dominated
+    * queries. Loops hand their result back on the caller's session.
+    */
+  private[graft] def loopSession(caller: SparkSession): SparkSession =
+    LocalSession.scoped(caller, "spark.sql.adaptive.enabled" -> "false")
+
+  /** `loop` with ~500k edge rows per shuffle partition, capped at its width. */
+  private[graft] def sizedLoop(loop: SparkSession, edgeRows: Long): SparkSession = {
+    val cap = loop.conf.get("spark.sql.shuffle.partitions").toInt
+    LocalSession.scoped(loop,
+      "spark.sql.shuffle.partitions" -> LocalSession.width(edgeRows, 500000L, 1, cap).toString)
   }
 
   /** Edge bound for the [[connectedComponents]] driver fast path —
@@ -1048,8 +1045,8 @@ object Dedup {
       val is = new java.io.FileInputStream(pBloom)
       val bloom =
         try org.apache.spark.util.sketch.BloomFilter.readFrom(is) finally is.close()
-      (spark.read.parquet(pExact), spark.read.parquet(pSh),
-        spark.read.parquet(pBands), bloom)
+      (Tables.parquet(spark, pExact), Tables.parquet(spark, pSh),
+        Tables.parquet(spark, pBands), bloom)
     }
 
   /** d23 — INCREMENTAL dedup: classify an incoming batch against an
@@ -1200,7 +1197,7 @@ object Dedup {
     // rebuilt" holds across JVM restarts, not just within one
     val gen1Path = graft.ops.Staging.publishIndex(spark, "ci_exact_gen1", dir)(p =>
       exactIdx.unionByName(accepted).write.mode("overwrite").parquet(p))
-    val gen1 = spark.read.parquet(gen1Path)
+    val gen1 = Tables.parquet(spark, gen1Path)
 
     val d = Tables.documents(spark, dir).select("doc_id", "text")
     val reCopies = d.filter(col("doc_id") % 3 === 0)
@@ -1401,7 +1398,7 @@ object Dedup {
             .write.mode("overwrite").parquet(p))
         sh.unpersist()
       }
-      (spark.read.parquet(pSh), spark.read.parquet(pBands))
+      (Tables.parquet(spark, pSh), Tables.parquet(spark, pBands))
     }
 
   /** Incremental connected components — fold NEW vertices + edges into
@@ -1870,7 +1867,7 @@ object Dedup {
       graft.ops.Staging.publishIndex(spark, "ap_families", dir)(p =>
         fam.join(reps, Seq("ck")).write.mode("overwrite").parquet(p))
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   /** Family-contracted near-dup graph for the d36/d38/d39 graph trio
@@ -1918,7 +1915,7 @@ object Dedup {
           // sweep; graph consumers project it away below
           .write.mode("overwrite").parquet(p))
     }
-    val edges = spark.read.parquet(loc).select("id_a", "id_b")
+    val edges = Tables.parquet(spark, loc).select("id_a", "id_b")
     val famSizes = fams.groupBy("rep").agg(count(lit(1)).as("f"))
     val eIds = edges.select(col("id_a").as("rep"))
       .unionByName(edges.select(col("id_b").as("rep"))).distinct()
@@ -2022,7 +2019,7 @@ object Dedup {
           .select(col("doc_id"), col("sz"), col("h"), col("rnk"))
           .write.mode("overwrite").parquet(p))
     }
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   def allPairsJoin(spark: SparkSession, dir: String): DataFrame = {
@@ -2183,7 +2180,7 @@ object Dedup {
     require(SweepTaus.forall(_ < 1.0),
       s"SweepTaus ${SweepTaus.mkString(",")} must stay < 1.0 (within-family pairs sit at jaccard 1.0)")
     val (_, _, members) = contractedPairGraph(spark, dir)
-    val edgesJ = spark.read.parquet(graft.ops.Staging.indexPath("rep_graph", dir))
+    val edgesJ = Tables.parquet(spark, graft.ops.Staging.indexPath("rep_graph", dir))
     val famSizes = members.groupBy("rep").agg(count(lit(1)).as("f")).localCheckpoint()
     val tot = famSizes.agg(sum("f"), sum(expr("(f * (f - 1)) div 2"))).head
     val (corpusN, withinPairs) = (tot.getLong(0), tot.getLong(1))

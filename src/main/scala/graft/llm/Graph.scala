@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Iterative graph analytics over pair relations — the power-iteration
   * sibling of [[Dedup.connectedComponents]]. The near-dup pair graph
@@ -86,11 +87,17 @@ object Graph {
     * exercises the same weighted loop the contracted path runs).
     */
   def pageRankOnPairs(pairs: DataFrame): DataFrame = {
-    val e0 = pairs.toDF("u", "v")
-    val verts = e0.select(col("u").as("id"))
-      .unionByName(e0.select(col("v").as("id")))
-      .distinct().withColumn("f", lit(1L))
+    val (verts, e0) = unitGraph(pairs)
     pageRankContracted(verts, e0)
+  }
+
+  /** A pair relation as an f = 1 contracted graph: `(id, f)` vertices
+    * (every endpoint) and `(u, v)` edges.
+    */
+  private def unitGraph(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val e0 = pairs.toDF("u", "v")
+    (e0.select(col("u").as("id")).unionByName(e0.select(col("v").as("id")))
+      .distinct().withColumn("f", lit(1L)), e0)
   }
 
   /** The weighted power iteration over a contracted multigraph:
@@ -99,55 +106,52 @@ object Graph {
     * f ≥ 2 or ≥ 1 edge (degree-0 singletons are not in the graph).
     */
   private[graft] def pageRankContracted(verts: DataFrame, edges: DataFrame): DataFrame = {
-    val sess = verts.sparkSession
-    val aqe0 = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val sp0 = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val v = verts.toDF("id", "f").localCheckpoint()
-      val e0 = edges.toDF("u", "v")
-      val sym = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      // weighted incoming edges: cross edges carry the SOURCE family's
-      // size (f_u identical members each send r_u div d_u), and each
-      // family of size ≥ 2 a self-loop of weight f−1 (the within-family
-      // clique). Incoming-weight sum = member-level degree.
-      val wEdges = sym
-        .join(v.select(col("id").as("u"), col("f").as("w")), Seq("u"))
-        .select(col("u"), col("v"), col("w"))
-        .unionByName(v.where(col("f") > 1)
-          .select(col("id").as("u"), col("id").as("v"), (col("f") - 1).as("w")))
+    val (v, wEdges) = weightedLoop(verts, edges)
+    val deg = wEdges.groupBy(col("v").as("id")).agg(sum("w").as("deg")).localCheckpoint()
+    // n = MEMBER count: teleport mass splits over members, not families
+    val n = v.agg(sum("f")).head.getLong(0)
+    require(n > 0, "pageRank needs a non-empty graph")
+    val tele = (PrScale * 15L / 100L) / n
+
+    var ranks = v.select(col("id"), lit(PrScale / n).as("r")).localCheckpoint()
+    for (_ <- 1 to PrIters) {
+      val msgs = wEdges
+        .join(ranks.withColumnRenamed("id", "u"), Seq("u"))
+        .join(deg.toDF("u", "du"), Seq("u"))
+        .select(col("v").as("id"), (col("w") * expr("r div du")).as("c"))
+        .groupBy("id").agg(sum("c").as("s"))
+      ranks = v.select("id")
+        .join(msgs, Seq("id"), "left")
+        .select(col("id"),
+          (lit(tele) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
         .localCheckpoint()
-      val width = math.max(1L, math.min(sp0.toLong, wEdges.count() / 500000L + 1L))
-      sess.conf.set("spark.sql.shuffle.partitions", width.toString)
-
-      val deg = wEdges.groupBy(col("v").as("id")).agg(sum("w").as("deg")).localCheckpoint()
-      // n = MEMBER count: teleport mass splits over members, not families
-      val n = v.agg(sum("f")).head.getLong(0)
-      require(n > 0, "pageRank needs a non-empty graph")
-      val tele = (PrScale * 15L / 100L) / n
-
-      var ranks = v.select(col("id"), lit(PrScale / n).as("r")).localCheckpoint()
-      for (_ <- 1 to PrIters) {
-        val msgs = wEdges
-          .join(ranks.withColumnRenamed("id", "u"), Seq("u"))
-          .join(deg.toDF("u", "du"), Seq("u"))
-          .select(col("v").as("id"), (col("w") * expr("r div du")).as("c"))
-          .groupBy("id").agg(sum("c").as("s"))
-        ranks = v.select("id")
-          .join(msgs, Seq("id"), "left")
-          .select(col("id"),
-            (lit(tele) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
-          .localCheckpoint()
-      }
-      // ranks/deg are eager checkpoints — the output no longer depends
-      // on wEdges' blocks (localCheckpoint RDDs are GC-released when
-      // the returned frame dies; nothing persists past this call)
-      ranks.join(deg, Seq("id"))
-        .select(col("id"), col("deg"), col("r").as("pr"))
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqe0)
-      sess.conf.set("spark.sql.shuffle.partitions", sp0)
     }
+    // ranks/deg are eager checkpoints — the output no longer depends
+    // on wEdges' blocks (localCheckpoint RDDs are GC-released when
+    // the returned frame dies; nothing persists past this call)
+    SessionBridge.rebind(verts.sparkSession,
+      ranks.join(deg, Seq("id")).select(col("id"), col("deg"), col("r").as("pr")))
+  }
+
+  /** The `(id, f)` vertices and weighted incoming edges `(u, v, w)` of
+    * [[pageRankContracted]] and [[lpaContracted]], on a loop session sized
+    * by the edge count. Cross edges carry the SOURCE family's size, and
+    * each family of size ≥ 2 a self-loop of weight f−1 (the within-family
+    * clique), so a vertex's incoming-weight sum is its member degree.
+    */
+  private def weightedLoop(verts: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {
+    val loop = Dedup.loopSession(verts.sparkSession)
+    val v = SessionBridge.rebind(loop, verts.toDF("id", "f")).localCheckpoint()
+    val e0 = SessionBridge.rebind(loop, edges.toDF("u", "v"))
+    val sym = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
+    val wEdges = sym
+      .join(v.select(col("id").as("u"), col("f").as("w")), Seq("u"))
+      .select(col("u"), col("v"), col("w"))
+      .unionByName(v.where(col("f") > 1)
+        .select(col("id").as("u"), col("id").as("v"), (col("f") - 1).as("w")))
+      .localCheckpoint()
+    val sized = Dedup.sizedLoop(loop, wEdges.count())
+    (SessionBridge.rebind(sized, v), SessionBridge.rebind(sized, wEdges))
   }
 
   /** d38 — per-vertex triangle count + local clustering coefficient
@@ -191,10 +195,7 @@ object Graph {
     * degenerate f = 1 instance of [[trianglesContracted]].
     */
   def trianglesOnPairs(pairs: DataFrame): DataFrame = {
-    val e0 = pairs.toDF("u", "v")
-    val verts = e0.select(col("u").as("id"))
-      .unionByName(e0.select(col("v").as("id")))
-      .distinct().withColumn("f", lit(1L))
+    val (verts, e0) = unitGraph(pairs)
     trianglesContracted(verts, e0)
   }
 
@@ -324,10 +325,7 @@ object Graph {
     * belongs to the oracle-gated [[kCore]] path only).
     */
   def kCoreOnPairs(pairs: DataFrame): DataFrame = {
-    val e0 = pairs.toDF("u", "v")
-    val verts = e0.select(col("u").as("id"))
-      .unionByName(e0.select(col("v").as("id")))
-      .distinct().withColumn("f", lit(1L))
+    val (verts, e0) = unitGraph(pairs)
     kCoreContracted(verts, e0)._1.select("id", "core_deg")
   }
 
@@ -337,46 +335,40 @@ object Graph {
     * family or ≥ 1 rep edge).
     */
   private[graft] def kCoreContracted(verts: DataFrame, edges: DataFrame): (DataFrame, Int) = {
-    val sess = verts.sparkSession
-    val aqe0 = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      var alive = verts.toDF("id", "f")
-        .withColumn("core_deg", lit(0L)).localCheckpoint()
-      var es = edges.toDF("u", "v").localCheckpoint()
-      var nV = alive.count()
-      var nE = es.count()
-      var rounds = 0
-      var converged = nV == 0L
-      while (!converged) {
-        val sym = es.unionByName(es.select(col("v").as("u"), col("u").as("v")))
-        val cross = sym
-          .join(alive.select(col("id").as("u"), col("f").as("w")), Seq("u"))
-          .groupBy(col("v").as("id")).agg(sum("w").as("cw"))
-        val keep = alive.select("id", "f")
-          .join(cross, Seq("id"), "left")
-          .select(col("id"), col("f"),
-            (coalesce(col("cw"), lit(0L)) + col("f") - 1).as("core_deg"))
-          .where(col("core_deg") >= KCoreK)
-          .localCheckpoint()
-        val es2 = es
-          .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
-          .select("u", "v")
-          .localCheckpoint()
-        val nV2 = keep.count()
-        val nE2 = es2.count()
-        converged = nV2 == nV && nE2 == nE
-        alive = keep; es = es2; nV = nV2; nE = nE2
-        rounds += 1
-      }
-      // at the fixpoint the converged round's degrees ARE the core
-      // degrees (nothing was removed, so they were computed against
-      // the final graph)
-      (alive.select("id", "f", "core_deg"), rounds)
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqe0)
+    val loop = Dedup.loopSession(verts.sparkSession)
+    var alive = SessionBridge.rebind(loop, verts.toDF("id", "f"))
+      .withColumn("core_deg", lit(0L)).localCheckpoint()
+    var es = SessionBridge.rebind(loop, edges.toDF("u", "v")).localCheckpoint()
+    var nV = alive.count()
+    var nE = es.count()
+    var rounds = 0
+    var converged = nV == 0L
+    while (!converged) {
+      val sym = es.unionByName(es.select(col("v").as("u"), col("u").as("v")))
+      val cross = sym
+        .join(alive.select(col("id").as("u"), col("f").as("w")), Seq("u"))
+        .groupBy(col("v").as("id")).agg(sum("w").as("cw"))
+      val keep = alive.select("id", "f")
+        .join(cross, Seq("id"), "left")
+        .select(col("id"), col("f"),
+          (coalesce(col("cw"), lit(0L)) + col("f") - 1).as("core_deg"))
+        .where(col("core_deg") >= KCoreK)
+        .localCheckpoint()
+      val es2 = es
+        .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
+        .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
+        .select("u", "v")
+        .localCheckpoint()
+      val nV2 = keep.count()
+      val nE2 = es2.count()
+      converged = nV2 == nV && nE2 == nE
+      alive = keep; es = es2; nV = nV2; nE = nE2
+      rounds += 1
     }
+    // at the fixpoint the converged round's degrees ARE the core
+    // degrees (nothing was removed, so they were computed against
+    // the final graph)
+    (SessionBridge.rebind(verts.sparkSession, alive.select("id", "f", "core_deg")), rounds)
   }
 
   /** d39's DuckDB replay: [[KCoreRounds]] peel rounds unrolled
@@ -456,37 +448,18 @@ object Graph {
     */
   private[graft] def lpaContracted(verts: DataFrame, edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sess = verts.sparkSession
-    val aqe0 = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val sp0 = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val v = verts.toDF("id", "f").localCheckpoint()
-      val e0 = edges.toDF("u", "v")
-      val sym = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      val wEdges = sym
-        .join(v.select(col("id").as("u"), col("f").as("w")), Seq("u"))
-        .select(col("u"), col("v"), col("w"))
-        .unionByName(v.where(col("f") > 1)
-          .select(col("id").as("u"), col("id").as("v"), (col("f") - 1).as("w")))
+    val (v, wEdges) = weightedLoop(verts, edges)
+    var labels = v.select(col("id"), col("id").as("lab")).localCheckpoint()
+    for (_ <- 1 to LpaRounds) {
+      val votes = wEdges
+        .join(labels.withColumnRenamed("id", "u"), Seq("u"))
+        .groupBy(col("v").as("id"), col("lab")).agg(sum("w").as("c"))
+      val wv = Window.partitionBy("id").orderBy(col("c").desc, col("lab").asc)
+      labels = votes.withColumn("rn", row_number().over(wv))
+        .filter(col("rn") === 1).select("id", "lab")
         .localCheckpoint()
-      val width = math.max(1L, math.min(sp0.toLong, wEdges.count() / 500000L + 1L))
-      sess.conf.set("spark.sql.shuffle.partitions", width.toString)
-      var labels = v.select(col("id"), col("id").as("lab")).localCheckpoint()
-      for (_ <- 1 to LpaRounds) {
-        val votes = wEdges
-          .join(labels.withColumnRenamed("id", "u"), Seq("u"))
-          .groupBy(col("v").as("id"), col("lab")).agg(sum("w").as("c"))
-        val wv = Window.partitionBy("id").orderBy(col("c").desc, col("lab").asc)
-        labels = votes.withColumn("rn", row_number().over(wv))
-          .filter(col("rn") === 1).select("id", "lab")
-          .localCheckpoint()
-      }
-      labels
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqe0)
-      sess.conf.set("spark.sql.shuffle.partitions", sp0)
     }
+    SessionBridge.rebind(verts.sparkSession, labels)
   }
 
   /** DuckDB replay of d41: member-level synchronous LPA with the
@@ -743,10 +716,7 @@ object Graph {
     * degenerate f = 1 instance (members = vertices themselves).
     */
   def linkPredictOnPairs(pairs: DataFrame): DataFrame = {
-    val e0 = pairs.toDF("u", "v")
-    val verts = e0.select(col("u").as("id"))
-      .unionByName(e0.select(col("v").as("id")))
-      .distinct().withColumn("f", lit(1L))
+    val (verts, e0) = unitGraph(pairs)
     val members = verts.select(col("id").as("rep"), col("id").as("doc_id"))
     linkPredictCore(verts, e0, members)
   }

@@ -261,7 +261,7 @@ object Similarity {
         .filter(col("crank") <= NProbe)
         .select(col("vec_id"), col("embedding"), col("cell"), col("crank"), col("cscore"))
         .write.mode("overwrite").parquet(p))
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   /** The crank = 1 member slice of [[ivfIndex]] (one row per vector). */

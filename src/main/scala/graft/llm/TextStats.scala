@@ -143,7 +143,7 @@ object TextStats {
       Tables.documents(spark, dir)
         .select((col("doc_id") +: col("lang") +: scoreCols): _*)
         .write.mode("overwrite").parquet(p))
-    spark.read.parquet(loc)
+    Tables.parquet(spark, loc)
   }
 
   /** t01 — heuristic language ID: score = marker-token count per

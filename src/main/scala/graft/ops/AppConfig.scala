@@ -41,10 +41,10 @@ final case class AppConfig(sections: Map[String, Map[String, String]]) {
     * file can re-tariff a deployment without a code change.
     */
   def pricingParams: PricingParams = PricingParams(
-    tariff     = getDouble("pricing", "tariff", Pricing.Tariff),
-    monthlyFee = getDouble("pricing", "monthly_fee", Pricing.MonthlyFee),
-    alphaLo    = getDouble("pricing", "alpha_lo", 1.0),
-    alphaHi    = getDouble("pricing", "alpha_hi", 1.3))
+    tariff     = getDouble("pricing", "tariff", Pricing.DefaultParams.tariff),
+    monthlyFee = getDouble("pricing", "monthly_fee", Pricing.DefaultParams.monthlyFee),
+    alphaLo    = getDouble("pricing", "alpha_lo", Pricing.DefaultParams.alphaLo),
+    alphaHi    = getDouble("pricing", "alpha_hi", Pricing.DefaultParams.alphaHi))
 }
 
 final case class PricingParams(tariff: Double, monthlyFee: Double,

@@ -29,11 +29,26 @@ object Pricing {
   val CfgAlphaLo = 1.05
   val CfgAlphaHi = 1.25
 
+  /** The compiled pricing, α clamped to [1, 1.3] — reference `api.py:99,124`. */
+  val DefaultParams = PricingParams(Tariff, MonthlyFee, 1.0, 1.3)
+
+  // consoFoyer's kWh per m², per person (800 + 200) and base load
+  private val KwhPerM2 = 110.0
+  private val KwhPerPerson = 800.0
+  private val KwhPerPersonExtra = 200.0
+  private val KwhBase = 1100.0
+  private val MonthsPerYear = 12.0
+
   /** Household yearly consumption estimate x (kWh):
     * 110·m² + (800+200)·persons + 1100 — reference `api.py:111-115`.
     */
   def consoFoyer(nbM2: Column, nbPersonne: Column): Column =
-    lit(110.0) * nbM2 + lit(800.0) * nbPersonne + lit(200.0) * nbPersonne + lit(1100.0)
+    lit(KwhPerM2) * nbM2 + lit(KwhPerPerson) * nbPersonne +
+      lit(KwhPerPersonExtra) * nbPersonne + lit(KwhBase)
+
+  /** [[consoFoyer]] in plain Scala: the same double operations in the same order. */
+  def consoFoyer(nbM2: Double, nbPersonne: Double): Double =
+    KwhPerM2 * nbM2 + KwhPerPerson * nbPersonne + KwhPerPersonExtra * nbPersonne + KwhBase
 
   /** Clamp x into [lo, hi] — reference `api.py:90,121` min/max chains. */
   def clamp(x: Column, lo: Double, hi: Double): Column =
@@ -64,14 +79,22 @@ object Pricing {
     * `bround` matches numpy.
     */
   def monthlyPrice(alpha: Column, m: Column, consoFoyerKwh: Column): Column =
-    monthlyPrice(PricingParams(Tariff, MonthlyFee, 1.0, 1.3))(alpha, m, consoFoyerKwh)
+    monthlyPrice(DefaultParams)(alpha, m, consoFoyerKwh)
 
   /** Config-driven variant (S9): the tariff and fee come from an
     * [[AppConfig]]'s `[pricing]` section instead of compiled constants —
     * same plan shape, re-tariffable per deployment.
     */
   def monthlyPrice(params: PricingParams)(alpha: Column, m: Column, consoFoyerKwh: Column): Column =
-    bround((lit(params.tariff) + alpha * m) * consoFoyerKwh / lit(12.0) + lit(params.monthlyFee), 2)
+    bround((lit(params.tariff) + alpha * m) * consoFoyerKwh / lit(MonthsPerYear) + lit(params.monthlyFee), 2)
+
+  /** [[monthlyPrice]] in plain Scala: the same double operations in the
+    * same order, then the decimal HALF_EVEN round `bround` applies to a double.
+    */
+  def monthlyPrice(params: PricingParams, alpha: Double, m: Double, consoFoyerKwh: Double): Double =
+    java.math.BigDecimal.valueOf(
+      (params.tariff + alpha * m) * consoFoyerKwh / MonthsPerYear + params.monthlyFee)
+      .setScale(2, java.math.RoundingMode.HALF_EVEN).doubleValue()
 
   /** The reference-shaped serving API (reference `api.py:95-132`
     * rewritten set-oriented, SURVEY.md §2.3/§3.1): price a DataFrame of
@@ -82,23 +105,16 @@ object Pricing {
     * ratio of the request's commune clamped to [1, 1.3] (reference
     * `api.py:64-92`; missing years → 1.0), price from the notice
     * formula. The `asOf` date replaces the reference's import-time
-    * `datetime.today()` (wart F4).
+    * `datetime.today()` (wart F4). `params` may come from an
+    * [[AppConfig]] `[pricing]` section (S9).
     *
     * Join shape at scale: requests ⋈ two *aggregated* dimensions —
     * the aggregates shuffle on their own keys once; the request side
     * broadcast-joins the small results.
     */
   def priceRequests(requests: DataFrame, consoAnVille: DataFrame,
-                    consoJourRegion: DataFrame, asOf: java.sql.Date): DataFrame =
-    priceRequests(requests, consoAnVille, consoJourRegion, asOf,
-      PricingParams(Tariff, MonthlyFee, 1.0, 1.3))
-
-  /** Config-parameterized serving API — tariff/fee/clamp bounds from an
-    * [[AppConfig]] `[pricing]` section (S9).
-    */
-  def priceRequests(requests: DataFrame, consoAnVille: DataFrame,
                     consoJourRegion: DataFrame, asOf: java.sql.Date,
-                    params: PricingParams): DataFrame = {
+                    params: PricingParams = DefaultParams): DataFrame = {
     val m = consoJourRegion
       .filter(col("date").between(date_sub(lit(asOf), 30), lit(asOf)))
       .groupBy("libelle_region")
@@ -158,10 +174,8 @@ object Pricing {
   /** The α dimension of q13 standalone: per-region YoY order-total
     * ratio at the penultimate year, clamped — one row per region.
     */
-  def regionAlpha(spark: SparkSession, dir: String): DataFrame =
-    regionAlpha(spark, dir, 1.0, 1.3)
-
-  def regionAlpha(spark: SparkSession, dir: String, lo: Double, hi: Double): DataFrame = {
+  def regionAlpha(spark: SparkSession, dir: String, lo: Double = DefaultParams.alphaLo,
+                  hi: Double = DefaultParams.alphaHi): DataFrame = {
     val cust = Tables.customer(spark, dir)
     val nat  = Tables.nation(spark, dir)
     val reg  = Tables.region(spark, dir)
@@ -182,10 +196,7 @@ object Pricing {
               round(coalesce(clamp(col("ratio"), lo, hi), lit(1.0)), 6).as("alpha"))
   }
 
-  def priceBatch(spark: SparkSession, dir: String): DataFrame =
-    priceBatch(spark, dir, PricingParams(Tariff, MonthlyFee, 1.0, 1.3))
-
-  def priceBatch(spark: SparkSession, dir: String, params: PricingParams): DataFrame = {
+  def priceBatch(spark: SparkSession, dir: String, params: PricingParams = DefaultParams): DataFrame = {
     val cust = Tables.customer(spark, dir)
     val nat  = Tables.nation(spark, dir)
     val reg  = Tables.region(spark, dir)

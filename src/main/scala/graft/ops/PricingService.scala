@@ -28,25 +28,20 @@ final case class PriceRequest(region: String, nbPersonne: Int, nbM2: Int)
   * O(new day): `PricingService.build` again reuses what it computed
   * from files it has already seen (see [[PricingService.build]]).
   *
-  * Arithmetic parity: the formula repeats [[Pricing.monthlyPrice]]'s
-  * double operations in the same order, and the final rounding uses
-  * `java.math.BigDecimal.valueOf(_).setScale(2, HALF_EVEN)` — the same
-  * shortest-representation decimal round Spark's `bround` applies to
-  * doubles — so a served price equals the q13 batch price bit-for-bit
-  * (asserted for every customer in PricingServiceSpec).
+  * Arithmetic parity: a quote runs the plain-Scala forms of
+  * [[Pricing.consoFoyer]] and [[Pricing.monthlyPrice]], which repeat
+  * the Column forms' double operations in the same order, so a served
+  * price equals the q13 batch price bit-for-bit (asserted for every
+  * customer in PricingServiceSpec).
   */
 final class PricingService private[ops] (
     val alphaByRegion: Map[String, Double],
     val m: Double,
     params: PricingParams) extends Serializable {
 
-  def price(req: PriceRequest): Double = {
-    val alpha = alphaByRegion.getOrElse(req.region, 1.0)
-    val x = 110.0 * req.nbM2 + 800.0 * req.nbPersonne + 200.0 * req.nbPersonne + 1100.0
-    val raw = (params.tariff + alpha * m) * x / 12.0 + params.monthlyFee
-    java.math.BigDecimal.valueOf(raw)
-      .setScale(2, java.math.RoundingMode.HALF_EVEN).doubleValue()
-  }
+  def price(req: PriceRequest): Double =
+    Pricing.monthlyPrice(params, alphaByRegion.getOrElse(req.region, 1.0), m,
+      Pricing.consoFoyer(req.nbM2, req.nbPersonne))
 }
 
 object PricingService {
@@ -74,7 +69,7 @@ object PricingService {
     * a Spark `cache()` would keep answering after the files change.
     */
   def build(spark: SparkSession, dir: String,
-            params: PricingParams = PricingParams(Pricing.Tariff, Pricing.MonthlyFee, 1.0, 1.3)): PricingService = {
+            params: PricingParams = Pricing.DefaultParams): PricingService = {
     val a = alpha(spark, dir, params.alphaLo, params.alphaHi)
     new PricingService(a, modulation(spark, dir), params)
   }

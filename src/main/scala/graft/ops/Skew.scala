@@ -80,15 +80,15 @@ object Skew {
     */
   def aqeSkewJoin(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import graft.tables.Tables
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.adaptive.enabled", "true")
-    ss.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    ss.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
-    ss.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB")
-    ss.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512b")
-    // no broadcast: skew splitting only exists on the shuffle-join path
-    ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val ss = graft.LocalSession.scoped(spark,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512b",
+      // no broadcast: skew splitting only exists on the shuffle-join path
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     // 90 % of rows on key 0, the rest spread over ten cold keys
     // (9,19,…,99) so the cold mass occupies OTHER reduce partitions —
     // the detector compares the hot partition against the factor ×
@@ -101,16 +101,16 @@ object Skew {
     // AQE splits a skewed reduce partition along MAPPER boundaries —
     // the single-file gate fixture is one input split = one mapper,
     // leaving nothing to split along, so mappers are manufactured with
-    // a spread shuffle. Width sized from the fact's bytes (the
-    // StreamEnv.sizedParts rule: ~4 MiB per mapper, floor 8 = the
-    // gate-SF value, cap cores) instead of the round-10 constant 8:
+    // a spread shuffle. Width sized from the fact's bytes (the one
+    // width rule: ~4 MiB per mapper, floor 8 = the gate-SF value, cap
+    // cores) instead of the round-10 constant 8:
     // more mappers give the skewed reduce partition finer split
     // boundaries AND more map-side parallelism at stress scale, while
     // the gate plan is unchanged by construction.
     val loc = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
     val fs = loc.getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val width = math.min(ss.sparkContext.defaultParallelism,
-      math.max(8, (fs.getContentSummary(loc).getLength / (4L << 20)).toInt))
+    val width = graft.LocalSession.width(fs.getContentSummary(loc).getLength, 4L << 20, 8,
+      ss.sparkContext.defaultParallelism)
     val li = base.select(hotKey, col("l_extendedprice")).repartition(width)
     // the dim is materialized (localCheckpoint) so the join sees a
     // plain leaf on that side: OptimizeSkewedJoin only rewrites an SMJ

@@ -644,10 +644,8 @@ object Staging {
     * and one the size of the customer dim.
     */
   def cboStarJoin(spark: SparkSession, dir: String): DataFrame = {
-    // isolated SQLConf; catalog + cache are shared with the parent
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.cbo.enabled", "true")
-    ss.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    val ss = graft.LocalSession.scoped(spark,
+      "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true")
     val stage = stagePath("cbo", dir)
     ss.sql("DROP TABLE IF EXISTS graft_orders_cbo")
     ss.sql("DROP TABLE IF EXISTS graft_customer_cbo")

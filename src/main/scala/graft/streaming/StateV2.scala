@@ -69,10 +69,8 @@ object StateV2 {
     * (event_type, week).
     */
   def runningWeekly(spark: SparkSession, dir: String): DataFrame = {
-    val ss = StreamEnv.streamSessionFor(spark, dir)
+    val ss = StreamEnv.rocksDbSessionFor(spark, dir)
     import ss.implicits._
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = stageWeekly(spark, dir, "tws")
     val stream = ss.readStream
       .schema(Tables.events(spark, dir).select("event_type", "ts", "value").schema)

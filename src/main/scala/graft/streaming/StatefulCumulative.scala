@@ -57,14 +57,9 @@ object StatefulCumulative {
     * row per (event_type, week).
     */
   def cumulativeWeekly(spark: SparkSession, dir: String): DataFrame = {
-    val ss = StreamEnv.streamSessionFor(spark, dir)
+    // same store as s07: RocksDB for BOTH arbitrary-state legs
+    val ss = StreamEnv.rocksDbSessionFor(spark, dir)
     import ss.implicits._
-    // same store as s07: RocksDB for BOTH arbitrary-state legs — the
-    // provider you'd run at scale (bounded heap: state lives off-heap /
-    // on-disk with incremental checkpoints, where the default HDFS-
-    // backed provider holds every key in executor memory)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = stageWeekly(spark, dir, "state")
 
     val stream = ss.readStream

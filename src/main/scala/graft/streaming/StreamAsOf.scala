@@ -59,10 +59,8 @@ object StreamAsOf {
   }
 
   def asOfEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val ss = StreamEnv.streamSessionFor(spark, dir)
+    val ss = StreamEnv.rocksDbSessionFor(spark, dir)
     import ss.implicits._
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val in = stageFeed(spark, dir)
 
     val stream = ss.readStream

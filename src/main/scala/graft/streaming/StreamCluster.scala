@@ -1,9 +1,12 @@
 package graft.streaming
 
+import graft.LocalSession
 import graft.llm.{Dedup, TextHash}
+import graft.tables.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -102,14 +105,17 @@ object StreamCluster {
     val feedRows = ss.read.parquet(feedIdx).count()
     val denseW = StreamEnv.denseBatchWidth(spark, feedRows / NumBatches)
 
+    // every micro-batch folds here, AQE off at a fixed width: 8 measured
+    // best among {2, 8, 32} (wider is task-launch overhead on the
+    // batch-scale joins; the shingle-array verify legs want some width)
+    val fold = LocalSession.scoped(ss,
+      "spark.sql.shuffle.partitions" -> "8", "spark.sql.adaptive.enabled" -> "false")
+
     def foldBatch(s2: SparkSession, batch: DataFrame, id: Long): Unit = {
       // lazy persist, not an eager checkpoint: the lineage is shallow
       // (one scan + md5 projection) and the cache fills on the fold's
-      // first action instead of paying a dedicated materialization job
-      // explicit width (the d61/s26 rule): the session's shuffle width
-      // is the state-partition knob (4 at gate SF), far too narrow for
-      // the fold's dense shingle work on a 32-core host — sized by
-      // batch rows, floored above the state knob, capped at cores
+      // first action instead of paying a dedicated materialization job;
+      // explicit dense width (the d61/s26 rule), see denseW above
       val bSh = batch.repartition(denseW, col("doc_id"))
         // sorted to match the staged corpus arrays — batchEdges runs
         // the native sorted-intersect verify on every leg
@@ -120,13 +126,13 @@ object StreamCluster {
       // retry it may already exist, but self-rows only add (x, x)
       // candidate pairs, which the contraction drops)
       val appendices = (0L until id).map(k => s2.read.parquet(s"$base/app/batch_$k"))
-      val exSh = (Seq(s2.read.parquet(ccShPath)) ++
+      val exSh = (Seq(Tables.parquet(s2, ccShPath)) ++
         appendices.map(_.select("doc_id", "hs"))).reduce(_ unionByName _)
-      val exBands = (Seq(s2.read.parquet(ccBandsPath)) ++
+      val exBands = (Seq(Tables.parquet(s2, ccBandsPath)) ++
         appendices.map(Dedup.explodeBands)).reduce(_ unionByName _)
       val edges = Dedup.batchEdges(bSh, Dedup.bandsOf(bSh), exSh, exBands)
       val prev =
-        if (id == 0) s2.read.parquet(seedPath)
+        if (id == 0) Tables.parquet(s2, seedPath)
         else s2.read.parquet(s"$base/labels/v${id - 1}")
       val folded = Dedup.incrementalComponents(prev, batch.select("doc_id"), edges)
       folded.toDF("doc_id", "label")
@@ -140,25 +146,7 @@ object StreamCluster {
       .parquet(s"$base/in")
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s2 = batch.sparkSession
-        // micro-batch shuffle width: session width on the fold's
-        // batch-scale joins is task-launch overhead, but the verify
-        // legs still want real parallelism (the shingle arrays are the
-        // heavy payload) — 8 measured best among {2, 8, 32}; AQE stays
-        // on for the fold's one-shot joins (only the CC loop inside
-        // scopes it off, where per-round re-planning repays nothing).
-        // foreachBatch bodies run sequentially per query, so scoping
-        // the session conf here cannot race another trigger.
-        val sp0 = s2.conf.get("spark.sql.shuffle.partitions")
-        val aqe0 = s2.conf.get("spark.sql.adaptive.enabled", "true")
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
-        s2.conf.set("spark.sql.adaptive.enabled", "false")
-        try foldBatch(s2, batch, id)
-        finally {
-          s2.conf.set("spark.sql.shuffle.partitions", sp0)
-          s2.conf.set("spark.sql.adaptive.enabled", aqe0)
-        }
-        ()
+        foldBatch(fold, SessionBridge.rebind(fold, batch), id)
       }
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())

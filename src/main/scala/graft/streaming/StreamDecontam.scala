@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.tables.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -89,8 +90,8 @@ object StreamDecontam {
           .repartition(denseW, col("doc_id"))
           .select(col("doc_id").as("train_id"),
             explode(Curation.ngramHashes(col("text"))).as("h"))
-          .join(broadcast(s2.read.parquet(hotPath)), Seq("h"), "left_anti")
-          .join(broadcast(s2.read.parquet(evalPath)), Seq("h"))
+          .join(broadcast(Tables.parquet(s2, hotPath)), Seq("h"), "left_anti")
+          .join(broadcast(Tables.parquet(s2, evalPath)), Seq("h"))
           .groupBy("train_id", "eval_id")
           .agg(count(lit(1)).as("n_shared"))
           .write.mode("overwrite").parquet(s"$verdictsDir/batch_$id")

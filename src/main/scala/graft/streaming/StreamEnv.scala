@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.LocalSession
 import org.apache.spark.sql.SparkSession
 
 /** Per-query session derivation for the streaming legs.
@@ -7,32 +8,30 @@ import org.apache.spark.sql.SparkSession
   * Streaming queries here want a handful of shuffle partitions (each
   * stateful partition carries a state store — at fixture scale 32
   * stores are pure overhead) and the nanos-as-long parquet read for
-  * the raw `events` schema. Setting those on the CALLER's session and
-  * restoring in a `finally` is racy the moment two queries share one
-  * session; a child session (`newSession` — same SparkContext and
-  * cached data, own SQLConf and catalog temp views) scopes both knobs
-  * to the one query with nothing to restore.
+  * the raw `events` schema. Both are scoped to the one query by a child
+  * session ([[graft.LocalSession.scoped]]).
   */
 object StreamEnv {
 
-  def streamSession(spark: SparkSession, parts: Int = 4): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ss
-  }
+  def streamSession(spark: SparkSession): SparkSession = session(spark, 4)
+
+  private def session(spark: SparkSession, parts: Int, confs: (String, String)*): SparkSession =
+    LocalSession.scoped(spark, Seq(
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++ confs: _*)
 
   /** Scale-adaptive shuffle/state partition count for a stream fed by
     * `<dir>/events.parquet`: one partition per ~4 MiB of compressed
     * source parquet (≈ 16-32 MiB of in-memory rows — a sane stateful-
     * shuffle slice), floored at 4 (the fixture-scale value, so gate-SF
     * plans and state layouts are unchanged) and capped at the session's
-    * core count. A FIXED 4 was the round-9 shape: correct at sf0.1
-    * (2 MiB source) but it serialized the 100× fixture's 90 MiB of
-    * events into 4 state stores — s14's session merge measured 20 s per
-    * trigger there. Stateful results are partitioning-independent (all
-    * folds here are per-key and commutative or explicitly sorted), so
-    * only wall time changes; the oracle gate checks that per SF.
+    * core count ([[graft.LocalSession.width]]). A FIXED 4 was the
+    * round-9 shape: correct at sf0.1 (2 MiB source) but it serialized
+    * the 100× fixture's 90 MiB of events into 4 state stores — s14's
+    * session merge measured 20 s per trigger there. Stateful results
+    * are partitioning-independent (all folds here are per-key and
+    * commutative or explicitly sorted), so only wall time changes; the
+    * oracle gate checks that per SF.
     */
   private val sizedBytesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -46,8 +45,7 @@ object StreamEnv {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
     })
-    val target = (bytes / (4L << 20)).toInt
-    math.max(4, math.min(spark.sparkContext.defaultParallelism, target))
+    LocalSession.width(bytes, 4L << 20, 4, spark.sparkContext.defaultParallelism)
   }
 
   /** Width for a DENSE in-batch repartition (s13's shingle fold, s16's
@@ -66,15 +64,21 @@ object StreamEnv {
     * core) without the fixed core-count fan-out at small batches.
     */
   def denseBatchWidth(spark: SparkSession, batchRows: Long): Int =
-    math.min(spark.sparkContext.defaultParallelism,
-      math.max(8, (batchRows / 256L).toInt))
+    LocalSession.width(batchRows, 256L, 8, spark.sparkContext.defaultParallelism)
 
   /** [[streamSession]] with the partition count derived from the data
     * era's events table ([[sizedParts]]) — the events-fed stateful legs
     * use this so state parallelism follows input size.
     */
   def streamSessionFor(spark: SparkSession, dir: String): SparkSession =
-    streamSession(spark, sizedParts(spark, dir))
+    session(spark, sizedParts(spark, dir))
+
+  /** [[streamSessionFor]] with the RocksDB state store (s05, s07, s20):
+    * off-heap state, where the default provider holds every key on-heap.
+    */
+  def rocksDbSessionFor(spark: SparkSession, dir: String): SparkSession =
+    session(spark, sizedParts(spark, dir), "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** The physical schema of `<dir>/events.parquet` as the batch reader
     * sees it. `readStream` requires a declared schema; taking the

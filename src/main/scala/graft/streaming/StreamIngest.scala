@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.tables.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,7 +66,7 @@ object StreamIngest {
           BloomExpressions.mightContain(bloom, TextHash.phash(col("text"), 0)))
         val keys = probed.filter(col("might"))
           .select(col("doc_id"), md5(col("text")).as("h"))
-        val matches = s2.read.parquet(exactPath)
+        val matches = Tables.parquet(s2, exactPath)
           .join(broadcast(keys.select("h").distinct()), Seq("h"))
         keys.join(broadcast(matches), Seq("h"), "left")
           .select(col("doc_id"), col("dup_of"))

@@ -66,7 +66,10 @@ object Tables {
   /** The schema Spark infers for the parquet table at `path`, memoized
     * by qualified path while one of the files it was inferred from is
     * still listed unchanged (see the design note above). A miss infers
-    * it as `spark.read.parquet` does, in one job.
+    * it as `spark.read.parquet` does, in one job, but in a child session
+    * with `nanosAsLong`: inferring an INT64 TIMESTAMP(NANOS) column (see
+    * [[events]]) needs it, a scan given the inferred schema does not, so
+    * the caller's session is left as it is.
     */
   private def schemaOf(spark: SparkSession, path: String): StructType = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -76,7 +79,8 @@ object Tables {
     val live = listed.toSet
     schemaMemo.synchronized(Option(schemaMemo.get(key))).filter(_.files.exists(live)).map(_.schema)
       .getOrElse {
-        val schema = spark.read.parquet(path).schema
+        val schema = graft.LocalSession.scoped(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+          .read.parquet(path).schema
         schemaMemo.synchronized(schemaMemo.put(key, SchemaMemo(listed, schema)))
         schema
       }
@@ -120,13 +124,9 @@ object Tables {
   private[graft] def eventsFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
     eventsReader(spark, dir).parquet(files: _*)
 
-  /** A reader with the events table's raw schema. Inferring a NANOS
-    * `ts` as a raw Long needs `nanosAsLong`; this is where it is set.
-    */
-  private def eventsReader(spark: SparkSession, dir: String): DataFrameReader = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** A reader with the events table's raw schema. */
+  private def eventsReader(spark: SparkSession, dir: String): DataFrameReader =
     spark.read.schema(schemaOf(spark, s"$dir/events.parquet"))
-  }
 
   /** Canonicalize a raw events relation's `ts` to microsecond
     * TimestampType, dispatching on the physical type the reader saw:

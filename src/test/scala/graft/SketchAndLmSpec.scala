@@ -26,11 +26,13 @@ class SketchAndLmSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("t12spec").toString
-    shorts.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = LangModel.bigramFamiliarity(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rows == Map(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 2L))
+    SparkTestBase.withTempDir("t12spec") { tmp =>
+      val dir = tmp.toString
+      shorts.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val rows = LangModel.bigramFamiliarity(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(rows == Map(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 2L))
+    }
   }
 
   test("t12: familiarity ratio matches a hand-computed micro corpus") {
@@ -41,10 +43,12 @@ class SketchAndLmSpec extends AnyFunSuite {
     val docs = Seq((1L, "a b a b"), (2L, "a b"), (3L, "c a")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("t12micro").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = LangModel.bigramFamiliarity(spark, dir).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(3), r.getLong(4)))).toMap
+    val out = SparkTestBase.withTempDir("t12micro") { tmp =>
+      val dir = tmp.toString
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      LangModel.bigramFamiliarity(spark, dir).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(3), r.getLong(4)))).toMap
+    }
     // doc1: bigrams (a,b),(b,a),(a,b): sum_bc = 3+1+3 = 7, sum_cc = 3+1+3 = 7
     assert(out(1L) == ((3L, 7L, 7L)))
     // doc2: (a,b): sum_bc = 3, sum_cc = 3
@@ -182,10 +186,12 @@ class SketchAndLmSpec extends AnyFunSuite {
     val docs = Seq((1L, "a b a b"), (2L, "a b"), (3L, "c a")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("t18micro").toString
-    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val micro = LangModel.perplexityBuckets(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    val micro = SparkTestBase.withTempDir("t18micro") { tmp =>
+      val dir = tmp.toString
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      LangModel.perplexityBuckets(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    }
     assert(micro == Set((1L, 1L, 333L, 2L), (2L, 0L, 0L, 1L), (3L, 1L, 1000L, 3L)),
       s"hand-computed micro corpus mismatch: $micro")
   }

@@ -103,13 +103,14 @@ class TablesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a customer read after an events read still hits the memo") {
-    // a new session starts without nanosAsLong; the events read sets it
+    // a new session starts without nanosAsLong, and the events read
+    // (which infers with it in a child session) leaves it so
     val ss = spark.newSession()
     val dir = copyOf("customer", "events").toString
     val (_, first) = jobs(Tables.customer(ss, dir))
     assert(first == 1, s"the first read ran $first jobs")
     Tables.events(ss, dir)
-    assert(ss.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(ss.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
     val (_, third) = jobs(Tables.customer(ss, dir))
     assert(third == 0, s"the customer read after events ran $third jobs")
   }
@@ -162,6 +163,8 @@ class TablesSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (again, n) = jobs(Tables.events(spark, dir.toString))
       assert(n == 0, s"$layout: the second read ran $n jobs")
       assert(sorted(again) == expected, s"$layout, second read")
+      val rowReader = LocalSession.scoped(spark, "spark.sql.parquet.enableVectorizedReader" -> "false")
+      assert(sorted(Tables.events(rowReader, dir.toString)) == expected, s"$layout, row-based reader")
     }
   }
 
