@@ -103,10 +103,10 @@ object Skew {
     // leaving nothing to split along, so mappers are manufactured with
     // a spread shuffle. Width sized from the fact's bytes (the one
     // width rule: ~4 MiB per mapper, floor 8 = the gate-SF value, cap
-    // cores) instead of the round-10 constant 8:
-    // more mappers give the skewed reduce partition finer split
-    // boundaries AND more map-side parallelism at stress scale, while
-    // the gate plan is unchanged by construction.
+    // cores) instead of the round-10 constant 8: more mappers give the
+    // skewed reduce partition finer split boundaries AND more map-side
+    // parallelism at stress scale, while the gate plan is unchanged by
+    // construction.
     val loc = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
     val fs = loc.getFileSystem(ss.sparkContext.hadoopConfiguration)
     val width = graft.LocalSession.width(fs.getContentSummary(loc).getLength, 4L << 20, 8,
