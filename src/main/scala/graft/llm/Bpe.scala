@@ -73,26 +73,15 @@ object Bpe {
     * bench cost of the whole query. The checkpoint is a vocab-sized
     * materialization — microscopic next to a codegen compile.)
     */
-  /** Merges are deterministic per corpus dir; with two consumers now
+  /** Merges are deterministic per documents table; with two consumers now
     * (t11 encode, t28 fertility) the 16-round driver-sequenced learn
     * loop is cached like [[Similarity.lloydCentroids]] — train once,
     * encode many.
     */
-  private val MergeCacheCap = 8
-  private val mergeCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Seq[Merge]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[Merge]]): Boolean =
-        size() > MergeCacheCap
-    })
+  private val merges = new graft.tables.TablesMemo[Seq[Merge]](8, "documents")
 
-  def learnMerges(spark: SparkSession, dir: String): Seq[Merge] = {
-    val cached = mergeCache.get(dir)
-    if (cached != null) return cached
-    val computed = learnMergesUncached(spark, dir)
-    mergeCache.put(dir, computed)
-    computed
-  }
+  def learnMerges(spark: SparkSession, dir: String): Seq[Merge] =
+    merges(spark, dir)(learnMergesUncached(spark, dir))
 
   private def learnMergesUncached(spark: SparkSession, dir: String): Seq[Merge] = {
     var vocab = Tables.documents(spark, dir)

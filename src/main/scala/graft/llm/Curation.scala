@@ -83,20 +83,15 @@ object Curation {
     * tiny by construction); `dc_eval` — (h, eval_id) postings of the
     * test split; `dc_train` — (h, train_id) postings of the train
     * split with the hot set already removed. Built in ONE
-    * explode+aggregate pass per (data era, build), atomically
-    * published ([[graft.ops.Staging.publishIndex]], `dc_train` last so
-    * its `_SUCCESS` implies the trio). At 100 TB this is the
+    * explode+aggregate pass per corpus and build, staged with
+    * [[graft.ops.Staging.indexes]]. At 100 TB this is the
     * production shape: the n-gram posting index is corpus-era state
     * paid once, reused by every batch scan, every new benchmark, and
     * the streaming admission check.
     */
   private[graft] def decontamIndex(spark: SparkSession, dir: String)
-      : (String, String, String) = synchronized {
-    val hotPath = graft.ops.Staging.indexPath("dc_hot", dir)
-    val evalPath = graft.ops.Staging.indexPath("dc_eval", dir)
-    val trainPath = graft.ops.Staging.indexPath("dc_train", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(trainPath, "_SUCCESS"))) {
+      : (String, String, String) = {
+    val staged = graft.ops.Staging.indexes(dir, "dc_hot", "dc_eval", "dc_train") { put =>
       // persisted: the explode+md5 n-gram leg is the dominant CPU cost
       // and feeds all three artifacts — uncached it would run thrice
       val ex = Dedup.corpus(spark, dir)
@@ -107,20 +102,20 @@ object Curation {
         .filter(col("df") > MaxNgramDf)
         .select("h")
         .localCheckpoint() // tiny; reused by the dc_train anti-join
-      graft.ops.Staging.publishIndex(spark, "dc_hot", dir)(p =>
+      put("dc_hot", p =>
         hot.write.mode("overwrite").parquet(p))
-      graft.ops.Staging.publishIndex(spark, "dc_eval", dir)(p =>
+      put("dc_eval", p =>
         ex.filter(col("split") === "test")
           .select(col("h"), col("doc_id").as("eval_id"))
           .write.mode("overwrite").parquet(p))
-      graft.ops.Staging.publishIndex(spark, "dc_train", dir)(p =>
+      put("dc_train", p =>
         ex.filter(col("split") === "train")
           .select(col("h"), col("doc_id").as("train_id"))
           .join(broadcast(hot), Seq("h"), "left_anti")
           .write.mode("overwrite").parquet(p))
       ex.unpersist()
     }
-    (hotPath, evalPath, trainPath)
+    (staged(0), staged(1), staged(2))
   }
 
   private def ngramHashesSql(wsExpr: String): String =

@@ -137,10 +137,8 @@ object Dedup {
     * member candidates, each moving two hash arrays) while this leg is
     * copy-factor-invariant.
     */
-  private[graft] def repScored(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val loc = graft.ops.Staging.indexPath("rep_scored", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
+  private[graft] def repScored(spark: SparkSession, dir: String): DataFrame = {
+    val Seq(loc) = graft.ops.Staging.indexes(dir, "rep_scored") { put =>
       val repIds = contentFamilies(spark, dir)
         .where(col("doc_id") === col("rep")).select("doc_id")
       val (docs, bands) = ccIndex(spark, dir)
@@ -152,7 +150,7 @@ object Dedup {
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .distinct()
       val rdocs = docs.join(repIds, Seq("doc_id"), "left_semi")
-      graft.ops.Staging.publishIndex(spark, "rep_scored", dir)(p =>
+      put("rep_scored", p =>
         cand
           .join(rdocs.select(col("doc_id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
           .join(rdocs.select(col("doc_id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
@@ -433,12 +431,11 @@ object Dedup {
        |ORDER BY m.doc_id""".stripMargin
 
   /** The converged (doc_id, label=component-min) relation behind d11,
-    * d12 and d14 — MATERIALIZED ONCE per (data era, build) to a
-    * parquet staging table and re-read by every consumer. Label once,
-    * consume many times: d11, d12 and d14 all need the same cluster
-    * labels, and at 100 TB you'd never re-run the pair pipeline + the
-    * propagation loop three times (in round 3 that recompute was ~19 s
-    * of the 76 s bench). The staged file also truncates lineage, so
+    * d12 and d14 — staged ONCE as a parquet index and re-read by
+    * every consumer. Label once, consume many times: d11, d12 and d14
+    * all need the same cluster labels, and at 100 TB you'd never re-run
+    * the pair pipeline + the propagation loop three times (in round 3
+    * that recompute was ~19 s of the 76 s bench). The staged file also truncates lineage, so
     * after the write every intermediate cache is released.
     *
     * The propagation loop runs over the EDGE-TOUCHED vertex set only
@@ -448,10 +445,12 @@ object Dedup {
     * is a `sum(changed)` aggregate folded into the round's single
     * action — no extra per-round comparison join.
     */
-  private[graft] def clusterLabels(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val loc = graft.ops.Staging.indexPath("cc_labels", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
+  private[graft] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    Tables.parquet(spark, clusterLabelsPath(spark, dir))
+
+  /** The location of the staged [[clusterLabels]]. */
+  private[graft] def clusterLabelsPath(spark: SparkSession, dir: String): String = {
+    val Seq(loc) = graft.ops.Staging.indexes(dir, "cc_labels") { put =>
       val (pairsRaw, caches) = jaccardPairsRaw(spark, dir)
       val pairs = pairsRaw.select("id_a", "id_b").persist()
       val labels = connectedComponents(pairs).withColumnRenamed("vertex", "doc_id")
@@ -459,7 +458,7 @@ object Dedup {
       // no broadcast hint: the planner broadcasts the checkpointed label
       // relation when it fits and falls back to a doc_id-keyed shuffle
       // join when the near-dup vertex set is large
-      graft.ops.Staging.publishIndex(spark, "cc_labels", dir)(p =>
+      put("cc_labels", p =>
         corpus(spark, dir)
           .select(col("doc_id"))
           .join(labels, Seq("doc_id"), "left")
@@ -468,7 +467,7 @@ object Dedup {
       // labels live in parquet now — every cache behind them can go
       (pairs +: caches).foreach(_.unpersist())
     }
-    Tables.parquet(spark, loc)
+    loc
   }
 
   /** Connected components of an undirected edge list — the reusable
@@ -986,12 +985,11 @@ object Dedup {
         .select((col("doc_id") + lit(IncCopyIdOffset)).as("doc_id"), col("text")))
   }
 
-  /** The staged per-(process, corpus dir) incremental-dedup index —
-    * the cc_labels pattern applied to the nightly-ingest shape the d23
-    * doc comment promises: the corpus-side artifacts every incremental
-    * run needs are materialized ONCE per corpus era and re-read by
-    * every subsequent batch, so a nightly run pays batch-sized work
-    * only, never a corpus pass.
+  /** The staged incremental-dedup index — the cc_labels pattern
+    * applied to the nightly-ingest shape the d23 doc comment promises:
+    * the corpus-side artifacts every incremental run needs are staged
+    * and re-read by every subsequent batch, so a nightly run pays
+    * batch-sized work only, never a corpus pass.
     *
     * Artifacts:
     *  - `ci_shingles` — (doc_id, hs): each doc's sorted shingle-hash
@@ -1004,49 +1002,46 @@ object Dedup {
     *  - `ci_bloom` — the serialized Bloom sketch over the corpus'
     *    content keys (~1.7 GB at 1e9 keys / 1 ppm) for d29's map-side
     *    gate.
-    *
-    * In production the index lives in the warehouse and is maintained
-    * incrementally (append the accepted batch's rows after each
-    * ingest); here it is staged per process the same way cc_labels is.
     */
   private[graft] def corpusIndex(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, org.apache.spark.util.sketch.BloomFilter) =
-    synchronized {
-      val pExact = graft.ops.Staging.indexPath("ci_exact", dir)
-      val pSh = graft.ops.Staging.indexPath("ci_shingles", dir)
-      val pBands = graft.ops.Staging.indexPath("ci_bands", dir)
-      val pBloom = new java.io.File(graft.ops.Staging.indexPath("ci_bloom", dir))
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      // ci_exact is published LAST, so its _SUCCESS implies the whole set
-      if (!fs.exists(new org.apache.hadoop.fs.Path(pExact, "_SUCCESS"))) {
-        val existing = Tables.documents(spark, dir).select("doc_id", "text")
-        // shingle compute (md5 per shingle) is the expensive leg — run
-        // it once into cache, feed both the shingle and band writes
-        val sh = existing.repartition(col("doc_id"))
-          .select(col("doc_id"), sort_array(TextHash.hashedShingles(col("text"), 0)).as("hs"))
-          .persist()
-        graft.ops.Staging.publishIndex(spark, "ci_shingles", dir)(p =>
-          sh.write.mode("overwrite").parquet(p))
-        graft.ops.Staging.publishIndex(spark, "ci_bands", dir)(p =>
-          bandsFrom(sh).write.mode("overwrite").parquet(p))
-        sh.unpersist()
-        // sizing count is parquet-metadata-only; the key scan is 1 pass
-        val bloom = existing
-          .select(TextHash.phash(col("text"), 0).as("k"))
-          .stat.bloomFilter("k", existing.count(), 0.001)
-        graft.ops.Staging.publishIndexFile("ci_bloom", dir) { f =>
-          val os = new java.io.FileOutputStream(f)
-          try bloom.writeTo(os) finally os.close()
-        }
-        graft.ops.Staging.publishIndex(spark, "ci_exact", dir)(p =>
-          existing.groupBy(md5(col("text")).as("h")).agg(min("doc_id").as("dup_of"))
-            .write.mode("overwrite").parquet(p))
-      }
-      val is = new java.io.FileInputStream(pBloom)
-      val bloom =
-        try org.apache.spark.util.sketch.BloomFilter.readFrom(is) finally is.close()
-      (Tables.parquet(spark, pExact), Tables.parquet(spark, pSh),
-        Tables.parquet(spark, pBands), bloom)
+      : (DataFrame, DataFrame, DataFrame, org.apache.spark.util.sketch.BloomFilter) = {
+    val Seq(pExact, pSh, pBands, pBloom) = corpusIndexPaths(spark, dir)
+    val is = new java.io.FileInputStream(new java.io.File(pBloom, BloomFile))
+    val bloom =
+      try org.apache.spark.util.sketch.BloomFilter.readFrom(is) finally is.close()
+    (Tables.parquet(spark, pExact), Tables.parquet(spark, pSh),
+      Tables.parquet(spark, pBands), bloom)
+  }
+
+  /** The serialized Bloom sketch's file inside the `ci_bloom` index. */
+  private val BloomFile = "bloom"
+
+  /** The locations of the staged [[corpusIndex]]: ci_exact,
+    * ci_shingles, ci_bands and ci_bloom.
+    */
+  private[graft] def corpusIndexPaths(spark: SparkSession, dir: String): Seq[String] =
+    graft.ops.Staging.indexes(dir, "ci_exact", "ci_shingles", "ci_bands", "ci_bloom") { put =>
+      val existing = Tables.documents(spark, dir).select("doc_id", "text")
+      // shingle compute (md5 per shingle) is the expensive leg — run
+      // it once into cache, feed both the shingle and band writes
+      val sh = existing.repartition(col("doc_id"))
+        .select(col("doc_id"), sort_array(TextHash.hashedShingles(col("text"), 0)).as("hs"))
+        .persist()
+      put("ci_shingles", p => sh.write.mode("overwrite").parquet(p))
+      put("ci_bands", p => bandsFrom(sh).write.mode("overwrite").parquet(p))
+      sh.unpersist()
+      // sizing count is parquet-metadata-only; the key scan is 1 pass
+      val bloom = existing
+        .select(TextHash.phash(col("text"), 0).as("k"))
+        .stat.bloomFilter("k", existing.count(), 0.001)
+      put("ci_bloom", { p =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
+        val os = new java.io.FileOutputStream(new java.io.File(p, BloomFile))
+        try bloom.writeTo(os) finally os.close()
+      })
+      put("ci_exact", p =>
+        existing.groupBy(md5(col("text")).as("h")).agg(min("doc_id").as("dup_of"))
+          .write.mode("overwrite").parquet(p))
     }
 
   /** d23 — INCREMENTAL dedup: classify an incoming batch against an
@@ -1159,6 +1154,27 @@ object Dedup {
   val ReTwinIdOffset = 5 * TwinIdOffset
   val NovelIdOffset = 6 * TwinIdOffset
 
+  /** d30's generation-1 exact index: batch 1 is classified exact-only
+    * against gen-0, and the content hashes it introduces (accepted =
+    * unseen in gen-0) are unioned with gen-0 into an immutable new
+    * generation. Hash spaces are disjoint by construction of
+    * `accepted`, so a plain union is the whole merge. Generations are
+    * staged like gen-0: published once, reused by any later process
+    * over the same corpus — "maintained, not rebuilt" holds across JVM
+    * restarts, not just within one.
+    */
+  private[graft] def gen1Index(spark: SparkSession, dir: String): DataFrame = {
+    val Seq(loc) = graft.ops.Staging.indexes(dir, "ci_exact_gen1") { put =>
+      val (exactIdx, _, _, _) = corpusIndex(spark, dir)
+      val b1k = incomingBatch(spark, dir).select(col("doc_id"), md5(col("text")).as("h"))
+      val matches1 = exactIdx.join(broadcast(b1k.select("h").distinct()), Seq("h"))
+      val accepted = b1k.join(broadcast(matches1.select("h")), Seq("h"), "left_anti")
+        .groupBy("h").agg(min("doc_id").as("dup_of"))
+      put("ci_exact_gen1", p => exactIdx.unionByName(accepted).write.mode("overwrite").parquet(p))
+    }
+    Tables.parquet(spark, loc)
+  }
+
   /** d30 — incremental INDEX MAINTENANCE across ingests: the staged
     * corpus index is not a one-off artifact but a sequence of
     * immutable GENERATIONS, each era appending the previous batch's
@@ -1182,22 +1198,8 @@ object Dedup {
     * pre-filter shape — the index side never shuffles.
     */
   def indexIngest(spark: SparkSession, dir: String): DataFrame = {
-    val (exactIdx, _, _, _) = corpusIndex(spark, dir)
     val b1 = incomingBatch(spark, dir)
-    val b1k = b1.select(col("doc_id"), md5(col("text")).as("h"))
-    // classify batch 1; accepted = content hashes unseen in gen-0
-    val matches1 = exactIdx.join(broadcast(b1k.select("h").distinct()), Seq("h"))
-    val accepted = b1k.join(broadcast(matches1.select("h")), Seq("h"), "left_anti")
-      .groupBy("h").agg(min("doc_id").as("dup_of"))
-    // generation 1: immutable era = gen-0 ∪ accepted (hash spaces are
-    // disjoint by construction of `accepted`, so a plain union is the
-    // whole merge)
-    // generations are era artifacts like gen-0: published once, reused
-    // by any later process over the same corpus era — "maintained, not
-    // rebuilt" holds across JVM restarts, not just within one
-    val gen1Path = graft.ops.Staging.publishIndex(spark, "ci_exact_gen1", dir)(p =>
-      exactIdx.unionByName(accepted).write.mode("overwrite").parquet(p))
-    val gen1 = Tables.parquet(spark, gen1Path)
+    val gen1 = gen1Index(spark, dir)
 
     val d = Tables.documents(spark, dir).select("doc_id", "text")
     val reCopies = d.filter(col("doc_id") % 3 === 0)
@@ -1371,34 +1373,31 @@ object Dedup {
 
   /** Staged union-corpus shingle + band index — the ci_* pattern
     * applied to the [[corpus]] relation: the corpus is shingled and
-    * banded ONCE per (data era, build) and shared by every consumer (and process)
-    * of the near-dup graph (d02 bands, d03/d25 candidate scoring, the
-    * d11 labels build, d32's incremental batch probe); the md5
-    * shingle loop — the expensive leg — never runs twice. `cc_sh` is
-    * written LAST so its _SUCCESS gates the pair.
+    * banded once and shared by every consumer of the near-dup graph
+    * (d02 bands, d03/d25 candidate scoring, the d11 labels build,
+    * d32's incremental batch probe); the md5 shingle loop — the
+    * expensive leg — never runs twice.
     */
-  private[graft] def ccIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    synchronized {
-      val pSh = graft.ops.Staging.indexPath("cc_sh", dir)
-      val pBands = graft.ops.Staging.indexPath("cc_bands", dir)
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(pSh, "_SUCCESS")) ||
-          !fs.exists(new org.apache.hadoop.fs.Path(pBands, "_SUCCESS"))) {
-        val sh = docShingles(spark, dir).persist()
-        graft.ops.Staging.publishIndex(spark, "cc_bands", dir)(p =>
-          bandsFrom(sh).write.mode("overwrite").parquet(p))
-        // stage the hash arrays SORTED: every downstream exact verify
-        // (d03/d25/d32/d37/s13) then runs the native two-pointer
-        // [[graft.expr.SortedIntersectCount]] with zero per-row sort —
-        // the one O(n log n) pass is paid once per corpus era here.
-        // No consumer is order-sensitive (minhash/array_intersect/
-        // explode are all set-shaped; asserted by the d02 band oracle).
-        graft.ops.Staging.publishIndex(spark, "cc_sh", dir)(p =>
-          sh.select(col("doc_id"), sort_array(col("hs")).as("hs"))
-            .write.mode("overwrite").parquet(p))
-        sh.unpersist()
-      }
-      (Tables.parquet(spark, pSh), Tables.parquet(spark, pBands))
+  private[graft] def ccIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val Seq(pSh, pBands) = ccIndexPaths(spark, dir)
+    (Tables.parquet(spark, pSh), Tables.parquet(spark, pBands))
+  }
+
+  /** The locations of the staged [[ccIndex]]: cc_sh and cc_bands. */
+  private[graft] def ccIndexPaths(spark: SparkSession, dir: String): Seq[String] =
+    graft.ops.Staging.indexes(dir, "cc_sh", "cc_bands") { put =>
+      val sh = docShingles(spark, dir).persist()
+      put("cc_bands", p => bandsFrom(sh).write.mode("overwrite").parquet(p))
+      // stage the hash arrays SORTED: every downstream exact verify
+      // (d03/d25/d32/d37/s13) then runs the native two-pointer
+      // [[graft.expr.SortedIntersectCount]] with zero per-row sort —
+      // the one O(n log n) pass is paid once per corpus era here.
+      // No consumer is order-sensitive (minhash/array_intersect/
+      // explode are all set-shaped; asserted by the d02 band oracle).
+      put("cc_sh", p =>
+        sh.select(col("doc_id"), sort_array(col("hs")).as("hs"))
+          .write.mode("overwrite").parquet(p))
+      sh.unpersist()
     }
 
   /** Incremental connected components — fold NEW vertices + edges into
@@ -1856,19 +1855,14 @@ object Dedup {
     * copy-factor-INVARIANT and only the output expansion scales with
     * f², because that's the answer's own size).
     */
-  private[graft] def contentFamilies(spark: SparkSession, dir: String): DataFrame = synchronized {
-    // staged per (data era, build) like the shingle/band tables — family
-    // membership is a corpus-index artifact, maintained per era
-    val loc = graft.ops.Staging.indexPath("ap_families", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
+  private[graft] def contentFamilies(spark: SparkSession, dir: String): DataFrame =
+    // staged like the shingle/band tables — family membership is a
+    // corpus-index artifact
+    Tables.parquet(spark, graft.ops.Staging.index(dir, "ap_families") { p =>
       val fam = corpus(spark, dir).select(col("doc_id"), md5(col("text")).as("ck"))
       val reps = fam.groupBy("ck").agg(min("doc_id").as("rep"))
-      graft.ops.Staging.publishIndex(spark, "ap_families", dir)(p =>
-        fam.join(reps, Seq("ck")).write.mode("overwrite").parquet(p))
-    }
-    Tables.parquet(spark, loc)
-  }
+      fam.join(reps, Seq("ck")).write.mode("overwrite").parquet(p)
+    })
 
   /** Family-contracted near-dup graph for the d36/d38/d39 graph trio
     * — the [[contentFamilies]] contraction applied UPSTREAM of graph
@@ -1894,28 +1888,11 @@ object Dedup {
     * duplication factor f the member edge mass grows f², and the graph
     * trio was the only superlinear stress row before this (93–135 s at
     * 100×/16×); the rep graph is copy-factor-INVARIANT.
-    *
-    * The rep edge set is staged per (data era, build) like the other
-    * corpus-index artifacts.
     */
   private[graft] def contractedPairGraph(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = synchronized {
-    val loc = graft.ops.Staging.indexPath("rep_graph", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      : (DataFrame, DataFrame, DataFrame) = {
     val fams = contentFamilies(spark, dir)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
-      // derived from the SHARED staged rep-level verify (one band join
-      // + sorted-intersect pass per era serves d03/d25/this graph)
-      graft.ops.Staging.publishIndex(spark, "rep_graph", dir)(p =>
-        repScored(spark, dir)
-          .select(col("id_a"), col("id_b"),
-            (col("inter").cast("double") / (col("sza") + col("szb") - col("inter"))).as("jaccard"))
-          .filter(col("jaccard") >= JaccardThreshold)
-          // jaccard is retained in the artifact for d51's threshold
-          // sweep; graph consumers project it away below
-          .write.mode("overwrite").parquet(p))
-    }
-    val edges = Tables.parquet(spark, loc).select("id_a", "id_b")
+    val edges = repGraph(spark, dir).select("id_a", "id_b")
     val famSizes = fams.groupBy("rep").agg(count(lit(1)).as("f"))
     val eIds = edges.select(col("id_a").as("rep"))
       .unionByName(edges.select(col("id_b").as("rep"))).distinct()
@@ -1924,6 +1901,24 @@ object Dedup {
       .where(col("f") >= 2 || col("e").isNotNull)
       .select(col("rep").as("id"), col("f"))
     (verts, edges, fams.select("doc_id", "rep"))
+  }
+
+  /** The staged rep edge set `(id_a, id_b, jaccard)` behind
+    * [[contractedPairGraph]]; jaccard is retained for d51's threshold
+    * sweep.
+    */
+  private def repGraph(spark: SparkSession, dir: String): DataFrame = {
+    val Seq(loc) = graft.ops.Staging.indexes(dir, "rep_graph") { put =>
+      // derived from the SHARED staged rep-level verify (one band join
+      // + sorted-intersect pass per era serves d03/d25/this graph)
+      val rs = repScored(spark, dir)
+      put("rep_graph", p =>
+        rs.select(col("id_a"), col("id_b"),
+            (col("inter").cast("double") / (col("sza") + col("szb") - col("inter"))).as("jaccard"))
+          .filter(col("jaccard") >= JaccardThreshold)
+          .write.mode("overwrite").parquet(p))
+    }
+    Tables.parquet(spark, loc)
   }
 
   /** Fan a representative-level scored pair relation out to member
@@ -1997,21 +1992,19 @@ object Dedup {
   /** d37's staged prefix index: `(doc_id, sz, h, rnk)` for each doc's
     * prefix tokens, rnk = position in global ascending-df order —
     * corpus-index work (one df agg + one per-doc rank window), staged
-    * once per (data era, build) exactly like the shingle/band tables it
-    * derives from ([[ccIndex]]): at 100 TB this is a maintained
-    * artifact of the corpus, not per-query work.
+    * like the shingle/band tables it derives from ([[ccIndex]]): at
+    * 100 TB this is a maintained artifact of the corpus, not per-query
+    * work.
     */
-  private[graft] def prefixIndex(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val loc = graft.ops.Staging.indexPath("ap_prefix", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
+  private[graft] def prefixIndex(spark: SparkSession, dir: String): DataFrame = {
+    val Seq(loc) = graft.ops.Staging.indexes(dir, "ap_prefix") { put =>
       val (docs, _) = ccIndex(spark, dir)
       val sized = docs.select(col("doc_id"), col("hs"), size(col("hs")).as("sz"))
       val tok = sized.select(col("doc_id"), col("sz"), explode(col("hs")).as("h"))
       val dfreq = tok.groupBy("h").agg(count(lit(1)).as("df"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy("df", "h")
-      graft.ops.Staging.publishIndex(spark, "ap_prefix", dir)(p =>
+      put("ap_prefix", p =>
         tok.join(dfreq, Seq("h"))
           .withColumn("rnk", row_number().over(w))
           // prefix length |d| − ⌈4|d|/5⌉ + 1, integer-exact at t = 4/5
@@ -2180,7 +2173,7 @@ object Dedup {
     require(SweepTaus.forall(_ < 1.0),
       s"SweepTaus ${SweepTaus.mkString(",")} must stay < 1.0 (within-family pairs sit at jaccard 1.0)")
     val (_, _, members) = contractedPairGraph(spark, dir)
-    val edgesJ = Tables.parquet(spark, graft.ops.Staging.indexPath("rep_graph", dir))
+    val edgesJ = repGraph(spark, dir)
     val famSizes = members.groupBy("rep").agg(count(lit(1)).as("f")).localCheckpoint()
     val tot = famSizes.agg(sum("f"), sum(expr("(f * (f - 1)) div 2"))).head
     val (corpusN, withinPairs) = (tot.getLong(0), tot.getLong(1))

@@ -166,17 +166,11 @@ object GraphAnn {
     * ONCE per (data era, build) and shared by every search (d71 alone
     * and the d40 leg re-run): the production shape is exactly this —
     * the index build is the batch job, searches ride the artifact (the
-    * cc/ci index discipline). `g71_e0` is written LAST so its _SUCCESS
-    * gates the quartet.
+    * cc/ci index discipline).
     */
   private[graft] def graphIndex(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = synchronized {
-    import graft.ops.Staging
-    val tags = Seq("g71_e1", "g71_e2", "g71_top", "g71_e0")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val missing = tags.exists(t => !fs.exists(
-      new org.apache.hadoop.fs.Path(Staging.indexPath(t, dir), "_SUCCESS")))
-    if (missing) {
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val locs = graft.ops.Staging.indexes(dir, "g71_e0", "g71_e1", "g71_e2", "g71_top") { put =>
       val b = withKeys(spark, dir).persist()
       val lvl = when(pmod(col("lh"), lit(16L)) === 0, 2)
         .when(pmod(col("lh"), lit(4L)) === 0, 1).otherwise(0)
@@ -185,21 +179,21 @@ object GraphAnn {
       val maxRow = b.agg(max(lvl)).head()
       require(!maxRow.isNullAt(0), s"graphIndex: no embeddings under $dir")
       val maxLevel = maxRow.getInt(0)
-      Staging.publishIndex(spark, "g71_e1", dir)(p =>
+      put("g71_e1", p =>
         edgesFor(b.filter(pmod(col("lh"), lit(4L)) === 0))
           .write.mode("overwrite").parquet(p))
-      Staging.publishIndex(spark, "g71_e2", dir)(p =>
+      put("g71_e2", p =>
         edgesFor(b.filter(pmod(col("lh"), lit(16L)) === 0))
           .write.mode("overwrite").parquet(p))
-      Staging.publishIndex(spark, "g71_top", dir)(p =>
+      put("g71_top", p =>
         b.filter(lvl === maxLevel).select(col("vec_id"), col("embedding"))
           .distinct().write.mode("overwrite").parquet(p))
-      Staging.publishIndex(spark, "g71_e0", dir)(p =>
+      put("g71_e0", p =>
         edgesFor(b).write.mode("overwrite").parquet(p))
       b.unpersist()
     }
-    def rd(t: String) = Tables.parquet(spark, Staging.indexPath(t, dir))
-    (rd("g71_e0"), rd("g71_e1"), rd("g71_e2"), rd("g71_top"))
+    val Seq(e0, e1, e2, top) = locs.map(Tables.parquet(spark, _))
+    (e0, e1, e2, top)
   }
 
   /** d71 — layered graph-ANN top-K per query (the d06/d07 output

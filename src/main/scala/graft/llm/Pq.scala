@@ -97,31 +97,18 @@ object Pq {
   /** Per-subspace Lloyd codebooks (m, code, centroid), seeded from the
     * first [[PqK]] vectors' slices; assignment = min ordered-fold L2
     * (ties → lowest code), update = exact quantized mean. Cached per
-    * (process, dir) through the same bounded LRU discipline as
+    * (process, data) through the same bounded memo as
     * [[Similarity.lloydCentroids]].
     */
-  private val codebookCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Seq[(Int, Int, Seq[Double])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[(Int, Int, Seq[Double])]]): Boolean =
-        size() > Similarity.CentroidCacheCap
-    })
+  private val codebooks =
+    new graft.tables.TablesMemo[Seq[(Int, Int, Seq[Double])]](Similarity.CentroidCacheCap, "embeddings")
 
-  /** d33/d46's residual codebooks, same LRU discipline. */
-  private val residCbCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Seq[(Int, Int, Seq[Double])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[(Int, Int, Seq[Double])]]): Boolean =
-        size() > Similarity.CentroidCacheCap
-    })
+  /** d33/d46's residual codebooks, same memo discipline. */
+  private val residCodebooks =
+    new graft.tables.TablesMemo[Seq[(Int, Int, Seq[Double])]](Similarity.CentroidCacheCap, "embeddings")
 
-  private[graft] def pqCodebooks(spark: SparkSession, dir: String): Seq[(Int, Int, Seq[Double])] = {
-    val cached = codebookCache.get(dir)
-    if (cached != null) return cached
-    val computed = pqCodebooksUncached(spark, dir)
-    codebookCache.put(dir, computed)
-    computed
-  }
+  private[graft] def pqCodebooks(spark: SparkSession, dir: String): Seq[(Int, Int, Seq[Double])] =
+    codebooks(spark, dir)(pqCodebooksUncached(spark, dir))
 
   private def pqCodebooksUncached(
       spark: SparkSession, dir: String): Seq[(Int, Int, Seq[Double])] =
@@ -246,19 +233,11 @@ object Pq {
         slice(col("r"), col("m") * PqSub + 1, lit(PqSub)).as("e"))
       .localCheckpoint() // scanned by training rounds, encode, and the query side
 
-    // residual codebooks are deterministic per dir — memoize through
-    // the same bounded LRU as the raw-slice codebooks, so d33, d46 and
+    // residual codebooks are deterministic per embeddings table — memoize through
+    // the same bounded memo as the raw-slice codebooks, so d33, d46 and
     // d40's two IVFADC legs train ONCE per (process, corpus) instead
     // of re-running the Lloyd rounds per query
-    val cb = {
-      val hit = residCbCache.get(dir)
-      if (hit != null) hit
-      else {
-        val computed = trainCodebooks(spark, rsv)
-        residCbCache.put(dir, computed)
-        computed
-      }
-    }
+    val cb = residCodebooks(spark, dir)(trainCodebooks(spark, rsv))
     val cbDf = cb.toDF("m", "code", "ce")
     val codes = rsv.select(col("vec_id"), col("cell"), col("m"),
       nearestByM(cb).as("code"))

@@ -131,15 +131,11 @@ object Similarity {
   private[graft] val numCellsSql: String =
     s"greatest($MinCells, CAST(floor(sqrt(count(*) / 8.0)) AS INT))"
 
-  /** Per-dir memo of the derived cell count (one metadata-only parquet
-    * count; entries are a handful of bytes so no eviction needed).
+  /** The quantizer cell count for `dir`'s embeddings corpus (one
+    * metadata-only parquet count, memoized like the centroids).
     */
-  private val cellCountCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** The quantizer cell count for `dir`'s embeddings corpus. */
   private[graft] def cellCount(spark: SparkSession, dir: String): Int =
-    cellCountCache.computeIfAbsent(dir,
-      d => Int.box(numCells(Tables.embeddings(spark, d).count()))).intValue()
+    cellCounts(spark, dir)(Int.box(numCells(Tables.embeddings(spark, dir).count()))).intValue()
 
   /** 2^20 — centroid components accumulate as `floor(x·2^20 + 0.5)`
     * integers, so the per-cell sums are EXACT (and order-independent)
@@ -156,34 +152,22 @@ object Similarity {
     * rows come back to the driver each round (the CC-loop scalar
     * pattern — rounds are driver-sequenced, never per-row driver work).
     */
-  /** Centroids are deterministic per input dir, and BOTH d08 (IVF
-    * probe) and d24 (SemDeDup) assign against them — train once per
-    * (process, dir), assign many times (the clusterLabels staging
+  /** Centroids are deterministic per embeddings table, and BOTH d08
+    * (IVF probe) and d24 (SemDeDup) assign against them — train once
+    * per (process, data), assign many times (the clusterLabels staging
     * pattern, driver-side because k×dim doubles are tiny). BOUNDED:
-    * an access-order LRU capped at [[CentroidCacheCap]] dirs, so a
-    * long-lived multi-tenant session cycling through many inputs
-    * re-trains rather than accumulating entries forever.
+    * an LRU capped at [[CentroidCacheCap]] entries, so a long-lived
+    * multi-tenant session cycling through many inputs re-trains rather
+    * than accumulating entries forever.
     */
   private[graft] val CentroidCacheCap = 8
-  private val centroidCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Seq[(Int, Seq[Double])]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[(Int, Seq[Double])]]): Boolean =
-        size() > CentroidCacheCap
-    })
+  private val centroidMemo = new graft.tables.TablesMemo[Seq[(Int, Seq[Double])]](CentroidCacheCap, "embeddings")
+  private val cellCounts = new graft.tables.TablesMemo[Integer](CentroidCacheCap, "embeddings")
 
-  private[graft] def cachedCentroidDirs: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    centroidCache.synchronized(centroidCache.keySet().asScala.toSet)
-  }
+  private[graft] def cachedCentroidDirs: Set[String] = centroidMemo.dirs
 
-  private[graft] def lloydCentroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] = {
-    val cached = centroidCache.get(dir)
-    if (cached != null) return cached
-    val computed = lloydCentroidsUncached(spark, dir)
-    centroidCache.put(dir, computed)
-    computed
-  }
+  private[graft] def lloydCentroids(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] =
+    centroidMemo(spark, dir)(lloydCentroidsUncached(spark, dir))
 
   private def lloydCentroidsUncached(spark: SparkSession, dir: String): Seq[(Int, Seq[Double])] = {
     import spark.implicits._
@@ -250,13 +234,13 @@ object Similarity {
     * cost: with the corpus-derived k (∝ √n, round 9) the scoring pass
     * is n^1.5 work, and re-deriving it inside every ANN-family query
     * made d40 the top ANN row at 100× (25.7 s) until assignment moved
-    * behind [[graft.ops.Staging.publishIndex]] like every other
+    * behind [[graft.ops.Staging.index]] like every other
     * corpus-index artifact. Consumers that sweep DEEPER than NProbe
     * (d50's probe sweep) re-rank only their query panel —
     * NumQueries·k work, corpus-free.
     */
   private[graft] def ivfIndex(spark: SparkSession, dir: String): DataFrame = {
-    val loc = graft.ops.Staging.publishIndex(spark, "ivf_assign", dir)(p =>
+    val loc = graft.ops.Staging.index(dir, "ivf_assign")(p =>
       cellRanked(spark, dir, Seq("embedding"))
         .filter(col("crank") <= NProbe)
         .select(col("vec_id"), col("embedding"), col("cell"), col("crank"), col("cscore"))

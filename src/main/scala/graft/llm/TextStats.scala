@@ -129,8 +129,8 @@ object TextStats {
     * t25 and t37 each re-derived the identical counts per run. The
     * counts are a deterministic pure function of the corpus, so they
     * are an INDEX artifact (the dc_* / ci_* discipline): built once per
-    * (data era, build fingerprint), published atomically via
-    * [[graft.ops.Staging.publishIndex]], and every consumer reads the
+    * corpus and build, staged with [[graft.ops.Staging.index]], and
+    * every consumer reads the
     * staged parquet — integer columns, codegen all the way after the
     * one amortized build.
     */
@@ -139,7 +139,7 @@ object TextStats {
     val scoreCols = LangMarkers.map { case (lang, ms) =>
       markerCount(toks, ms).as(s"score_$lang")
     }
-    val loc = graft.ops.Staging.publishIndex(spark, "lang_scores", dir)(p =>
+    val loc = graft.ops.Staging.index(dir, "lang_scores")(p =>
       Tables.documents(spark, dir)
         .select((col("doc_id") +: col("lang") +: scoreCols): _*)
         .write.mode("overwrite").parquet(p))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** Builds every per-(data era, build) staged index for a dataset dir
+/** Builds every staged index ([[Staging.IndexTags]]) for a dataset dir
   * OUTSIDE any timed query window — the bench-time analog of a
   * production deployment's "run the corpus-index job once per data
   * era, then serve queries warm". The round-6 driver bench ran on a
@@ -12,14 +12,14 @@ import org.apache.spark.sql.SparkSession
   * breached caps calibrated on warm references (BENCH_r06 rc=1).
   *
   * Each entry forces one index family through its owning builder; the
-  * builders are the same `Staging.publishIndex`-guarded functions the
+  * builders are the same [[Staging.indexes]]-staged functions the
   * queries call, so a prestaged index is byte-identical to a
   * query-built one and a second call is a metadata-only cache hit.
   * Per-tag build seconds land in [[Staging.drainBuildLog]] for the
-  * bench's `staging` report. The list does not need to be exhaustive
-  * to keep the gate honest — Bench also drains the build log around
-  * every timed query and caps the query's NON-staging seconds — but a
-  * complete list keeps the reported per-query numbers warm.
+  * bench's `staging` report. Bench also drains the build log around
+  * every timed query and caps the query's NON-staging seconds; the
+  * list covers every declared tag (spec-checked) so the reported
+  * per-query numbers stay warm.
   */
 object Prestage {
 
@@ -38,6 +38,8 @@ object Prestage {
     "cc_labels" -> (() => { graft.llm.Dedup.clusterLabels(spark, dir); () }),
     // incremental-dedup corpus index (ci_exact/ci_shingles/ci_bands/ci_bloom)
     "ci_index" -> (() => { graft.llm.Dedup.corpusIndex(spark, dir); () }),
+    // d30's generation-1 exact index (ci_exact_gen1), derived from ci_exact
+    "ci_gen1" -> (() => { graft.llm.Dedup.gen1Index(spark, dir); () }),
     // PPJoin prefix posting index (ap_prefix): d43 all-pairs
     "ap_prefix" -> (() => { graft.llm.Dedup.prefixIndex(spark, dir); () }),
     // decontamination n-gram posting trio (dc_hot/dc_eval/dc_train): d18/t22/s21

@@ -27,8 +27,8 @@ object Staging {
     * is semantically safe; a production deployment points checkpoints
     * at durable storage via its own config, not this dev-harness path.
     * Override with SPARK_GRAFT_SCRATCH_BASE. Staged cross-process
-    * INDEXES stay on /tmp ([[indexPath]]) — they are the artifacts
-    * meant to outlive a run and can be large.
+    * INDEXES stay on [[IndexRoot]] — they are the artifacts meant to
+    * outlive a run and can be large.
     */
   private[graft] lazy val scratchBase: String = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SCRATCH_BASE", {
@@ -41,30 +41,33 @@ object Staging {
       val minBytes = 4L << 30
       if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= minBytes)
         "/dev/shm/graft_scratch"
-      else "/tmp/graft_stage"
+      else IndexRoot
     })
     // tmpfs is RAM: reap dead runs' scratch once per JVM, or repeated
-    // runs accumulate until the machine swaps. Only dirs matching the
-    // exact [[stagePath]] shape (tag_<16-hex-digest>_p<pid>) whose
-    // process is gone — a live concurrent run is never touched, and a
-    // shared SPARK_GRAFT_SCRATCH_BASE dir's unrelated files (which a
-    // looser `.*_p<digits>` matched) are never destroyed.
-    val deadRun = """^[A-Za-z0-9][A-Za-z0-9_]*_[0-9a-f]{16}_p(\d+)$""".r
-    Option(new java.io.File(base).listFiles()).foreach(_.foreach { f =>
-      f.getName match {
-        case deadRun(pid)
-            if pid.toLong != ProcessHandle.current().pid() &&
-              !ProcessHandle.of(pid.toLong).isPresent =>
-          try {
-            def rm(x: java.io.File): Unit = {
-              Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
-            }
-            rm(f)
-          } catch { case _: Throwable => () }
-        case _ => ()
-      }
-    })
+    // runs accumulate until the machine swaps. The same pass reaps the
+    // half-written index copies of killed index builds. Only entries of
+    // the exact [[stagePath]] shape (tag_<16-hex-digest>_p<pid>) or the
+    // index build's tmp shape (<index dir>.tmp_p<pid>) whose process is
+    // gone — a live concurrent run is never touched, and a shared
+    // SPARK_GRAFT_SCRATCH_BASE dir's unrelated files (which a looser
+    // `.*_p<digits>` matched) are never destroyed.
+    val deadRun = """^[A-Za-z0-9][A-Za-z0-9_]*_(?:[0-9a-f]{16}|e[0-9a-f]{16}_b[0-9a-f]{12}\.tmp)_p(\d+)$""".r
+    Seq(base, IndexRoot).distinct.foreach { root =>
+      Option(new java.io.File(root).listFiles()).foreach(_.foreach { f =>
+        f.getName match {
+          case deadRun(pid)
+              if pid.toLong != ProcessHandle.current().pid() &&
+                !ProcessHandle.of(pid.toLong).isPresent =>
+            try deleteTree(f) catch { case _: Throwable => () }
+          case _ => ()
+        }
+      })
+    }
     base
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree)); f.delete(): Unit
   }
 
   /** Collision-resistant staging location under [[scratchBase]]: keyed
@@ -79,26 +82,45 @@ object Staging {
     s"$scratchBase/${tag}_${digest}_p${ProcessHandle.current().pid()}"
   }
 
-  /** Cross-process staged-INDEX location: keyed by the input dir's
-    * content ERA — a digest of its data files ([[Tables.dataFiles]]:
-    * path, length, mtime) — instead of the JVM pid. Corpus-index artifacts
-    * (shingle/band tables, cluster labels, family/prefix indexes,
-    * dedup generations, z-order layouts) are deterministic functions
-    * of the input data, so any process over the same era derives the
-    * same path and REUSES the winner's build: the nightly-ingest story
-    * pays the corpus pass once per data era, not once per JVM restart.
-    * A regenerated fixture changes the listing ⇒ new era key ⇒ stale
-    * indexes are never read (the exact safety the pid key bought,
-    * without its restart cost). Writers must go through
-    * [[publishIndex]]; per-run scratch (CSV/JSON round trips,
-    * streaming checkpoints) stays on the pid-keyed [[stagePath]].
+  /** Root of the staged indexes. Local by construction, so publishing
+    * an index is one `rename(2)`.
     */
-  private[graft] def indexPath(tag: String, dir: String): String =
-    s"/tmp/graft_stage/${tag}_e${eraKey(dir)}_b$buildKey"
+  private val IndexRoot = "/tmp/graft_stage"
+
+  /** Staged-index tags that one builder writes together, and the
+    * dataset tables they derive from, directly or through the indexes
+    * they read.
+    */
+  private final case class Family(tags: Seq[String], reads: Seq[String])
+
+  private val Families: Seq[Family] = {
+    val docs = Seq("documents")
+    Seq(
+      Family(Seq("ap_families"), docs),
+      Family(Seq("cc_sh", "cc_bands"), docs),
+      Family(Seq("rep_scored"), docs),
+      Family(Seq("rep_graph"), docs),
+      Family(Seq("cc_labels"), docs),
+      Family(Seq("ci_exact", "ci_shingles", "ci_bands", "ci_bloom"), docs),
+      Family(Seq("ci_exact_gen1"), docs),
+      Family(Seq("ap_prefix"), docs),
+      Family(Seq("dc_hot", "dc_eval", "dc_train"), docs),
+      Family(Seq("lang_scores"), docs),
+      Family(Seq("s13_feed"), docs),
+      Family(Seq("ivf_assign"), Seq("embeddings")),
+      Family(Seq("g71_e0", "g71_e1", "g71_e2", "g71_top"), Seq("embeddings")),
+      Family(Seq("orders_zorder"), Seq("orders")),
+      Family(Seq("orders_bydate"), Seq("orders")),
+      Family(Seq("orders_stats_index"), Seq("orders")),
+      Family(Seq("profile"), Seq("lineitem")))
+  }
+
+  /** Every declared staged-index tag. */
+  private[graft] val IndexTags: Set[String] = Families.flatMap(_.tags).toSet
 
   /** Build fingerprint mixed into every index path: a digest of the
     * engine's own class files (or jar). Index artifacts are versioned
-    * by (data era, INDEX FORMAT) — reusing an artifact staged by an
+    * by (input data, INDEX FORMAT) — reusing an artifact staged by an
     * older build whose staging logic differed would silently serve
     * stale semantics. Same build ⇒ same key ⇒ cross-process reuse;
     * recompile ⇒ new key ⇒ rebuild. (Production analog: the format
@@ -131,40 +153,26 @@ object Staging {
     md.digest().take(6).map("%02x".format(_)).mkString
   }
 
-  /** Delete every staged index of `dir`'s current data era (any build)
-    * — the bench's SPARK_GRAFT_COLD_STAGE mode, which proves the cold
-    * staging path by making the prestage phase actually pay each
-    * build. Only era-keyed index dirs are touched; per-run scratch and
-    * other eras' artifacts stay.
-    */
-  private[graft] def clearEraIndexes(dir: String): Int = {
-    val era = s"_e${eraKey(dir)}_b"
-    val root = new java.io.File("/tmp/graft_stage")
-    def rm(x: java.io.File): Unit = {
-      Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
-    }
-    val hits = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.contains(era))
-    hits.foreach(rm)
-    hits.length
+  private lazy val hadoopConf = new Configuration()
+
+  /** The `<tag>_e<key>_b<build>` names of `dir`'s current indexes. */
+  private def indexNames(f: Family, dir: String): Seq[String] = {
+    val key = Tables.listingKey(hadoopConf, dir, f.reads)
+    f.tags.map(t => s"${t}_e${key}_b$buildKey")
   }
 
-  /** Test hook: drop the memoized era keys so a spec can prove the
-    * path derivation is a pure function of (data, build) — what a
-    * fresh JVM would compute.
+  /** Delete every staged index that `dir`'s current data keys (any
+    * build) — the bench's cold-stage mode, which proves the cold
+    * staging path by making the prestage phase actually pay each
+    * build. Per-run scratch and indexes of other data stay.
     */
-  private[graft] def resetEraCacheForTest(): Unit = eraCache.clear()
-
-  private val eraCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def eraKey(dir: String): String =
-    eraCache.computeIfAbsent(dir, d => {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.update(d.getBytes("UTF-8"))
-      Tables.dataFiles(new Configuration(), d).foreach { f =>
-        md.update(s"${f.path}:${f.length}:${f.mtime};".getBytes("UTF-8"))
-      }
-      md.digest().take(8).map("%02x".format(_)).mkString
-    })
+  private[graft] def clearEraIndexes(dir: String): Int = {
+    val current = Families.flatMap(indexNames(_, dir).map(_.stripSuffix(buildKey)))
+    val hits = Option(new java.io.File(IndexRoot).listFiles()).getOrElse(Array.empty)
+      .filter(f => current.exists(f.getName.startsWith))
+    hits.foreach(deleteTree)
+    hits.length
+  }
 
   /** Per-tag seconds spent ACTUALLY BUILDING staged indexes in this
     * JVM (cache hits record nothing). Bench drains this around each
@@ -193,51 +201,76 @@ object Staging {
     b.result()
   }
 
-  /** Atomic cross-process publish of a staged index: the build writes
-    * into a pid-suffixed temp location, then renames into the era
-    * path. Readers only ever see a complete, `_SUCCESS`-bearing
-    * directory; the loser of a concurrent-publish race discards its
-    * temp copy and adopts the winner's (both are byte-identical by
-    * determinism). A `_SUCCESS`-less corpse from a killed writer is
-    * cleared before the rename.
+  /** Writes one tag of a family: `put(tag, write)` runs `write(tmpDir)`. */
+  private[graft] type Put = (String, String => Unit) => Unit
+
+  private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** The staged indexes `tags` of `dir`, built by `build` unless all are
+    * already published; returns their locations in the order of `tags`,
+    * for the caller to read through [[Tables.parquet]].
+    *
+    * Staged indexes are deterministic functions of their input tables,
+    * so any process of the same build over the same data reuses one
+    * build: the nightly pipeline pays the corpus pass once per change
+    * to the tables an index reads, not once per JVM. The rules:
+    *  - Key. `tags` must be exactly one declared [[Family]]. Its
+    *    location is `<tag>_e<key>_b<build>`: the key is
+    *    [[Tables.listingKey]] of the tables the family reads,
+    *    recomputed on every call (there is no memo, so an append inside
+    *    a running JVM is seen at once), and the build is [[buildKey]].
+    *  - Family. The family counts as present only when every tag is
+    *    published. Otherwise `build` runs and calls `put(tag, write)`
+    *    once per tag; `put` skips a tag already published (by a killed
+    *    build's earlier step or another process) and times the others
+    *    into [[drainBuildLog]]. Work shared by several tags goes in
+    *    `build` before the `put`s; other builders it calls (the indexes
+    *    this one reads) also go there, so their build time is not
+    *    counted twice.
+    *  - Lock. Builds of one key are serialized in this JVM by a lock of
+    *    that key; a builder that reads another index takes that
+    *    index's lock inside its own, in the acyclic order of the
+    *    declared dependencies. Reads of a complete family take no lock.
+    *  - Publish. `write` fills a `<location>.tmp_p<pid>` directory that
+    *    is then renamed to the location with a no-replace atomic move,
+    *    so a location only ever appears complete. The loser of a race
+    *    with another process deletes its copy and adopts the winner's,
+    *    which is byte-identical. A killed build's tmp directory is
+    *    removed by the dead-run reaper in [[scratchBase]].
     */
-  private[graft] def publishIndex(spark: SparkSession, tag: String, dir: String)(
-      write: String => Unit): String = {
-    val loc = indexPath(tag, dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(loc)
-    val done = new org.apache.hadoop.fs.Path(loc, "_SUCCESS")
-    if (!fs.exists(done)) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        loc + s".tmp_p${ProcessHandle.current().pid()}")
-      fs.delete(tmp, true)
-      val t0 = System.nanoTime()
-      write(tmp.toString)
-      recordBuild(tag, (System.nanoTime() - t0) / 1e9)
-      if (fs.exists(done)) fs.delete(tmp, true) // lost the race — adopt the winner
-      else {
-        fs.delete(dst, true)
-        if (!fs.rename(tmp, dst)) fs.delete(tmp, true)
+  private[graft] def indexes(dir: String, tags: String*)(build: Put => Unit): Seq[String] = {
+    val family = Families.find(_.tags.toSet == tags.toSet).getOrElse(
+      throw new IllegalArgumentException(s"undeclared staged-index family: ${tags.mkString(", ")}"))
+    val locs = family.tags.zip(indexNames(family, dir).map(n => s"$IndexRoot/$n")).toMap
+    def published(tag: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(locs(tag)))
+    if (!family.tags.forall(published))
+      buildLocks.computeIfAbsent(locs(family.tags.head), _ => new Object).synchronized {
+        if (!family.tags.forall(published)) {
+          scratchBase: Unit // reap dead runs' tmp copies first
+          build((tag, write) => if (!published(tag)) publish(tag, locs(tag), write))
+          val missing = family.tags.filterNot(published)
+          require(missing.isEmpty, s"staged-index build left ${missing.mkString(", ")} unpublished")
+        }
       }
-    }
-    loc
+    tags.map(locs)
   }
 
-  /** [[publishIndex]] for a single local FILE artifact (the serialized
-    * Bloom sketch): same tmp-write + atomic-rename publish.
-    */
-  private[graft] def publishIndexFile(tag: String, dir: String)(
-      write: java.io.File => Unit): java.io.File = {
-    val loc = new java.io.File(indexPath(tag, dir))
-    if (!loc.exists()) {
-      val tmp = new java.io.File(loc.getPath + s".tmp_p${ProcessHandle.current().pid()}")
-      tmp.getParentFile.mkdirs()
-      val t0 = System.nanoTime()
-      write(tmp)
-      recordBuild(tag, (System.nanoTime() - t0) / 1e9)
-      if (loc.exists() || !tmp.renameTo(loc)) tmp.delete(): Unit
-    }
-    loc
+  /** [[indexes]] for a one-tag family. */
+  private[graft] def index(dir: String, tag: String)(write: String => Unit): String =
+    indexes(dir, tag)(_(tag, write)).head
+
+  private def publish(tag: String, loc: String, write: String => Unit): Unit = {
+    import java.nio.file.{Files, FileSystemException, Paths, StandardCopyOption}
+    val dst = Paths.get(loc)
+    val tmp = Paths.get(s"$loc.tmp_p${ProcessHandle.current().pid()}")
+    deleteTree(tmp.toFile)
+    val t0 = System.nanoTime()
+    write(tmp.toString)
+    recordBuild(tag, (System.nanoTime() - t0) / 1e9)
+    // rename(2) never replaces a non-empty directory: a published
+    // index is never deleted under its readers
+    try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE): Unit
+    catch { case _: FileSystemException if Files.exists(dst) => deleteTree(tmp.toFile) }
   }
 
   /** Explicit staging schema — the analog of the reference's dtype map:
@@ -524,13 +557,15 @@ object Staging {
     * path entirely).
     */
   /** The bucketed catalog tables behind q26/q59, written ONCE per
-    * (process, dir) — the whole point of bucketing is that the write
+    * process and (dir, [[Tables.listingKey]] of orders and customer),
+    * so an append to either table rewrites them — the whole point of bucketing is that the write
     * amortizes the shuffle across every later consumer, so the join
     * and the aggregation share one layout.
     */
-  private val bucketedFor = new java.util.concurrent.atomic.AtomicReference[String]("")
-  private def ensureBucketed(spark: SparkSession, dir: String): Unit = synchronized {
-    if (bucketedFor.get != dir) {
+  private val bucketedFor = new java.util.concurrent.atomic.AtomicReference[(String, String)](("", ""))
+  private def ensureBucketed(spark: SparkSession, dir: String): Unit = bucketedFor.synchronized {
+    val data = (dir, Tables.listingKey(spark.sparkContext.hadoopConfiguration, dir, Seq("orders", "customer")))
+    if (bucketedFor.get != data) {
       val stage = stagePath("bkt", dir)
       spark.sql("DROP TABLE IF EXISTS graft_orders_bkt")
       spark.sql("DROP TABLE IF EXISTS graft_customer_bkt")
@@ -544,7 +579,7 @@ object Staging {
         .write.mode("overwrite").option("path", s"$stage/customer")
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
         .saveAsTable("graft_customer_bkt")
-      bucketedFor.set(dir)
+      bucketedFor.set(data)
     }
   }
 

@@ -62,46 +62,36 @@ object ZOrder {
       .withColumn("day_nr",
         datediff(col("order_day"), lit(java.sql.Date.valueOf(DayEpoch))))
 
-  /** Stage orders z-ordered on (o_custkey, order_day) — once per
-    * (data era, build), `_SUCCESS`-guarded and shared across processes
-    * like the other staged indexes — and return the staged relation.
+  /** Stage orders z-ordered on (o_custkey, order_day) — a staged
+    * index shared across processes like the others — and return the
+    * staged relation.
     */
-  private[graft] def stageZOrdered(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val loc = Staging.indexPath("orders_zorder", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
+  private[graft] def stageZOrdered(spark: SparkSession, dir: String): DataFrame =
+    Tables.parquet(spark, Staging.index(dir, "orders_zorder") { p =>
       val base = dims(spark, dir)
       val bounds = base.agg(
         min("o_custkey").as("ck_lo"), max("o_custkey").as("ck_hi"),
         min("day_nr").as("d_lo"), max("day_nr").as("d_hi"))
-      Staging.publishIndex(spark, "orders_zorder", dir)(p =>
-        base.crossJoin(broadcast(bounds))
-          .withColumn("z", morton(
-            scale16(col("o_custkey"), col("ck_lo"), col("ck_hi")),
-            scale16(col("day_nr"), col("d_lo"), col("d_hi"))))
-          .select("o_orderkey", "o_custkey", "order_day", "o_totalprice", "z")
-          .repartitionByRange(ZFiles, col("z"))
-          .sortWithinPartitions("z")
-          .write.mode("overwrite").parquet(p))
-    }
-    Tables.parquet(spark, loc)
-  }
+      base.crossJoin(broadcast(bounds))
+        .withColumn("z", morton(
+          scale16(col("o_custkey"), col("ck_lo"), col("ck_hi")),
+          scale16(col("day_nr"), col("d_lo"), col("d_hi"))))
+        .select("o_orderkey", "o_custkey", "order_day", "o_totalprice", "z")
+        .repartitionByRange(ZFiles, col("z"))
+        .sortWithinPartitions("z")
+        .write.mode("overwrite").parquet(p)
+    })
 
   /** Comparison layout for the spec: the SAME rows range-partitioned on
     * the date alone — the single-dimension sort a naive pipeline ships.
     */
-  private[graft] def stageDateSorted(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val loc = Staging.indexPath("orders_bydate", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
-      Staging.publishIndex(spark, "orders_bydate", dir)(p =>
-        dims(spark, dir).drop("day_nr")
-          .repartitionByRange(ZFiles, col("order_day"))
-          .sortWithinPartitions("order_day")
-          .write.mode("overwrite").parquet(p))
-    }
-    Tables.parquet(spark, loc)
-  }
+  private[graft] def stageDateSorted(spark: SparkSession, dir: String): DataFrame =
+    Tables.parquet(spark, Staging.index(dir, "orders_bydate") { p =>
+      dims(spark, dir).drop("day_nr")
+        .repartitionByRange(ZFiles, col("order_day"))
+        .sortWithinPartitions("order_day")
+        .write.mode("overwrite").parquet(p)
+    })
 
   /** q54 — a two-dimensional box probe served FROM the z-ordered
     * staging table (both predicates prune files via parquet min/max
@@ -129,20 +119,18 @@ object ZOrder {
   /** Per-file statistics index over the z-ordered staging table: one
     * row per data file with count / min / max / exact cents sum —
     * what parquet footers and a Delta/Iceberg stats manifest already
-    * hold per file. Built ONCE per (data era, build) with a single scan
-    * (at 100 TB you would not even scan: the footers are written with
-    * the data; this build stands in for reading them) and staged as
-    * its own tiny table. The price sum is folded in integer CENTS so
+    * hold per file. Built with a single scan (at 100 TB you would not
+    * even scan: the footers are written with the data; this build
+    * stands in for reading them) and staged as its own tiny table. The
+    * price sum is folded in integer CENTS so
     * the per-file partials re-aggregate associatively — a double sum
     * would depend on file order.
     */
-  private[graft] def statsIndex(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val loc = Staging.indexPath("orders_stats_index", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS"))) {
-      Staging.publishIndex(spark, "orders_stats_index", dir)(p =>
-        stageZOrdered(spark, dir)
-          .groupBy(input_file_name().as("file"))
+  private[graft] def statsIndex(spark: SparkSession, dir: String): DataFrame = {
+    val Seq(loc) = Staging.indexes(dir, "orders_stats_index") { put =>
+      val z = stageZOrdered(spark, dir)
+      put("orders_stats_index", p =>
+        z.groupBy(input_file_name().as("file"))
           .agg(count(lit(1)).as("n_rows"),
             min("o_totalprice").as("min_price"),
             max("o_totalprice").as("max_price"),

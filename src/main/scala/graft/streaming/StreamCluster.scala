@@ -52,33 +52,25 @@ object StreamCluster {
     */
   val NumBatches = 2
 
-  /** Publish the bucketed gen-2 feed once per (data era, build) —
-    * shared by [[clusterMaintain]] and the bench prestage phase.
+  /** Stage the bucketed gen-2 feed as an index — shared by
+    * [[clusterMaintain]] and the bench prestage phase — and return its
+    * location.
     */
-  private[graft] def stageFeed(spark: SparkSession, dir: String): String = synchronized {
-    val feedIdx = graft.ops.Staging.indexPath("s13_feed", dir)
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(feedIdx, "_SUCCESS"))) {
-      graft.ops.Staging.publishIndex(spark, "s13_feed", dir) { p =>
-        Dedup.gen2Batch(spark, dir)
-          .withColumn("bucket", pmod(col("doc_id"), lit(NumBatches)))
-          .repartition(col("bucket"))
-          .write.partitionBy("bucket").parquet(p)
-      }
+  private[graft] def stageFeed(spark: SparkSession, dir: String): String =
+    graft.ops.Staging.index(dir, "s13_feed") { p =>
+      Dedup.gen2Batch(spark, dir)
+        .withColumn("bucket", pmod(col("doc_id"), lit(NumBatches)))
+        .repartition(col("bucket"))
+        .write.partitionBy("bucket").parquet(p)
     }
-    feedIdx
-  }
 
   def clusterMaintain(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSession(spark)
-    // seed state + static corpus index, staged once per (data era, build), shared across processes
-    val prior0 = Dedup.clusterLabels(spark, dir)
-    Dedup.ccIndex(spark, dir)
-    val ccShPath = graft.ops.Staging.indexPath("cc_sh", dir)
-    val ccBandsPath = graft.ops.Staging.indexPath("cc_bands", dir)
+    // seed state + static corpus index: staged indexes, shared across processes
+    val seedPath = Dedup.clusterLabelsPath(spark, dir)
+    val Seq(ccShPath, ccBandsPath) = Dedup.ccIndexPaths(spark, dir)
 
     val base = graft.ops.Staging.stagePath("stream_cluster", dir)
-    val seedPath = graft.ops.Staging.indexPath("cc_labels", dir) // prior0's parquet
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
     fs.delete(new Path(base), true)
 

@@ -32,8 +32,8 @@ import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType,
   *     dynamic-partition writer sorts by day within the task and rolls
   *     a new file every [[RowsPerFile]] records), write to a temp dir,
   *     atomic-rename to publish — readers see the old layout or the
-  *     new one, never a half-written mix (the Staging.publishIndex
-  *     discipline).
+  *     new one, never a half-written mix (the staged-index publish
+  *     discipline, [[graft.ops.Staging.indexes]]).
   *  3. AUDIT — the gated frame: per day, `n_rows` + `id_sum` (BIGINT
   *     content parity: compaction must move EVERY row, exactly once)
   *     joined with the FILESYSTEM-listed file counts before and after.

@@ -44,7 +44,7 @@ object StreamIngest {
     import graft.llm.{Dedup, TextHash}
     val ss = StreamEnv.streamSession(spark)
     val (_, _, _, bloom) = Dedup.corpusIndex(spark, dir)
-    val exactPath = graft.ops.Staging.indexPath("ci_exact", dir)
+    val exactPath = Dedup.corpusIndexPaths(spark, dir).head
 
     // stage the feed as NumBatches files with mod-times in batch order
     // (the stageWeekly convention: maxFilesPerTrigger=1 → one file per

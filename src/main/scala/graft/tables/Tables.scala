@@ -52,6 +52,21 @@ object Tables {
     else leaves(fs.getFileStatus(root)).map(s => DataFile(s.getPath.toString, s.getLen, s.getModificationTime))
   }
 
+  /** Digest of the listings ([[dataFiles]]) of `dir`'s `tables`: a
+    * driver listing, no Spark job. Equal keys mean the same data, so an
+    * append to one of the tables changes the key and an append to any
+    * other table does not.
+    */
+  def listingKey(conf: Configuration, dir: String, tables: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    tables.foreach { t =>
+      val path = s"$dir/$t.parquet"
+      md.update(s"$path|".getBytes("UTF-8"))
+      dataFiles(conf, path).foreach(f => md.update(s"${f.path}:${f.length}:${f.mtime};".getBytes("UTF-8")))
+    }
+    md.digest().take(8).map("%02x".format(_)).mkString
+  }
+
   // -- driver testdata (TPC-H-ish star schema) ------------------------------
 
   /** Tables whose schema the memo keeps; the least recently read goes first. */
@@ -174,3 +189,31 @@ case class ConsoJourRegion(code_insee_region: String, libelle_region: String,
                            date: java.sql.Date, conso_mwh: Double)
 case class PriceRequest(libelle_region: String, nom_commune: String,
                         code_commune: String, nb_personne: Int, nb_m2: Int)
+
+/** A driver-side memo of values derived from a dataset's `tables`
+  * (centroids, codebooks, merges), keyed by the dataset dir and the
+  * [[Tables.listingKey]] of those tables: an append to one of them
+  * computes the value afresh, as a new JVM would. Holds the `cap` most
+  * recently used entries.
+  */
+final class TablesMemo[V <: AnyRef](cap: Int, tables: String*) {
+  private val entries = new java.util.LinkedHashMap[(String, String), V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, String), V]): Boolean = size > cap
+  }
+
+  /** The value for `dir`'s current data; `compute` runs on a miss. */
+  def apply(spark: SparkSession, dir: String)(compute: => V): V = {
+    val key = (dir, Tables.listingKey(spark.sparkContext.hadoopConfiguration, dir, tables))
+    entries.synchronized(Option(entries.get(key))).getOrElse {
+      val v = compute
+      entries.synchronized(entries.put(key, v))
+      v
+    }
+  }
+
+  /** The dataset dirs with an entry. */
+  def dirs: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    entries.synchronized(entries.keySet.asScala.map(_._1).toSet)
+  }
+}

@@ -204,14 +204,12 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("d30 index ingest: gen-0 immutable, gen-1 = gen-0 + accepted, re-offers resolve to batch-1 ids") {
-    val gen0Path = graft.ops.Staging.indexPath("ci_exact", Sf)
-    Dedup.corpusIndex(spark, Sf) // ensure gen-0 staged
-    val gen0Before = spark.read.parquet(gen0Path).count()
+    val gen0Before = Dedup.corpusIndex(spark, Sf)._1.count()
     val rows = Dedup.indexIngest(spark, Sf).collect()
     // gen-0 is an immutable era — the ingest writes a NEW generation
-    assert(spark.read.parquet(gen0Path).count() == gen0Before,
+    assert(Dedup.corpusIndex(spark, Sf)._1.count() == gen0Before,
       "d30 must never mutate the gen-0 index d23/d29 read")
-    val gen1 = spark.read.parquet(graft.ops.Staging.indexPath("ci_exact_gen1", Sf))
+    val gen1 = Dedup.gen1Index(spark, Sf)
     assert(gen1.count() > gen0Before, "gen-1 must contain the accepted batch-1 rows")
     rows.foreach { r =>
       val (id, status) = (r.getLong(0), r.getString(1))

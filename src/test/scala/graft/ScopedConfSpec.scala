@@ -71,20 +71,31 @@ class ScopedConfSpec extends AnyFunSuite {
   }
 
   test("conf-scoping queries on threads sharing one session match their serial runs") {
+    // the conf-scoping loops, and readers of staged indexes across the
+    // query families; the threads run on a copy of the fixture with no
+    // staged index, so they also build those indexes at the same time
     val names = Seq("d36_pagerank", "d39_kcore", "d41_lpa_communities",
-      "d32_incremental_cc", "q58_aqe_skew_join", "q13_price")
-    def digest(name: String): String = {
-      val rows = SparkEntry.queries(name)(spark, Sf).collect().map(_.toString)
+      "d32_incremental_cc", "q58_aqe_skew_join", "q13_price",
+      "t01_lang_id", "t25_langid_eval", "q46_profile", "d08_ann_ivf",
+      "d11_dedup_clusters", "q54_zorder_probe")
+    def digest(name: String, dir: String): String = {
+      val rows = SparkEntry.queries(name)(spark, dir).collect().map(_.toString)
       val md = java.security.MessageDigest.getInstance("MD5")
       md.digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
     val confBefore = spark.conf.getAll
-    val serial = names.map(n => n -> digest(n)).toMap
-    val pool = Executors.newFixedThreadPool(names.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val parallel =
-      try Await.result(Future.sequence(names.map(n => Future(n -> digest(n)))), 10.minutes).toMap
-      finally pool.shutdown()
+    val serial = names.map(n => n -> digest(n, Sf)).toMap
+    val parallel = SparkTestBase.withTempDir("graft_parallel") { root =>
+      val cold = SparkTestBase.fixtureCopy(root)
+      val pool = Executors.newFixedThreadPool(names.size)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      try Await.result(Future.sequence(names.map(n => Future(n -> digest(n, cold)))), 10.minutes).toMap
+      finally {
+        pool.shutdown()
+        pool.awaitTermination(10, TimeUnit.MINUTES)
+        graft.ops.Staging.clearEraIndexes(cold)
+      }
+    }
     names.foreach(n => assert(parallel(n) == serial(n), n))
     val after = spark.conf.getAll
     val moved = (confBefore.keySet ++ after.keySet).filter(k => confBefore.get(k) != after.get(k))

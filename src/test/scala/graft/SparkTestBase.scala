@@ -17,6 +17,22 @@ object SparkTestBase {
     finally deleteTree(dir)
   }
 
+  /** Copy the fixture's tables into `root` and return it as a dataset
+    * dir. The tables named in `asDirs` become directories holding the
+    * fixture file as their one part, so a test can append a part.
+    */
+  def fixtureCopy(root: Path, asDirs: Set[String] = Set.empty): String = {
+    val files = Files.list(Path.of(Sf))
+    try files.forEach { f =>
+      val name = f.getFileName.toString
+      if (asDirs(name.stripSuffix(".parquet"))) {
+        Files.createDirectories(root.resolve(name))
+        Files.copy(f, root.resolve(name).resolve("part-00000.parquet"))
+      } else Files.copy(f, root.resolve(name))
+    } finally files.close()
+    root.toString
+  }
+
   def deleteTree(root: Path): Unit =
     if (Files.exists(root)) {
       val paths = Files.walk(root)
