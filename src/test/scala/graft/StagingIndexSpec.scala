@@ -158,8 +158,12 @@ class StagingIndexSpec extends AnyFunSuite {
   test("the prestage builds every declared index") {
     SparkTestBase.withTempDir("graft_prestage") { root =>
       val dir = SparkTestBase.fixtureCopy(root)
-      try assert(Prestage.run(spark, dir).keySet == Staging.IndexTags)
-      finally Staging.clearEraIndexes(dir)
+      try {
+        assert(Prestage.run(spark, dir).keySet == Staging.IndexTags)
+        // only whole declared families stage
+        intercept[IllegalArgumentException](Staging.index(dir, "undeclared")(_ => ()))
+        intercept[IllegalArgumentException](Staging.index(dir, "cc_sh")(_ => ()))
+      } finally Staging.clearEraIndexes(dir)
     }
   }
 }
