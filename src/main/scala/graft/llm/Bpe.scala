@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.CoreOps.sortedOnce
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -131,13 +132,7 @@ object Bpe {
         aggregate(transform(col("es"), symLen), lit(0L), (acc, x) => acc + x)
           .as("n_bpe_tokens"),
         md5(concat_ws(" ", col("es"))).as("enc_md5"))
-      // materialize BEFORE the presentation sort: the range exchange
-      // SAMPLES its child to pick bounds, and with no shuffle below,
-      // the sampling job re-runs the whole 2·NumMerges-deep encode over
-      // every row — the corpus is encoded TWICE (the d37/t23 lesson,
-      // map-only flavor). The checkpoint stores only output-sized rows.
-      .localCheckpoint()
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
   }
 
   /** The oracle learns the SAME merges in SQL: K chained materialized

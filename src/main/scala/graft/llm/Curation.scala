@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.CoreOps.sortedOnce
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -481,11 +482,7 @@ object Curation {
         (max("pos") + lit(k - 1)).as("span_end"))
       .select(col("doc_id"), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start") + 1).as("span_words"))
-      // checkpoint before the sort (the t10 pre-sort rule): the range
-      // exchange's sampling pass would re-run BOTH island windows over
-      // the shuffled duplicated-k-gram relation a second time
-      .localCheckpoint()
-      .orderBy("doc_id", "span_start")
+      .transform(sortedOnce(_, "doc_id", "span_start"))
   }
 
   /** t16b — the ORACLE-CHECKED approximation bound for t16 (the

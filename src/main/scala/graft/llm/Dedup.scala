@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.LocalSession
+import graft.ops.CoreOps.sortedOnce
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -692,10 +693,7 @@ object Dedup {
       .select(col("doc_id"),
         graft.expr.HashFunctions.simHash56(col("text"), 99).as("simhash"))
       .filter(col("simhash").isNotNull)
-      // checkpoint before the sort: the range exchange's sampling pass
-      // would re-run the tokenize+hash+bit-vote loop corpus-wide
-      .localCheckpoint()
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
 
   /** The composed explode + 56-conditional-sums spelling of SimHash —
     * kept as the parity oracle for the native expression

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.expr.VectorFunctions.cosineSimilarity
+import graft.ops.CoreOps.sortedOnce
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -395,8 +396,7 @@ object Similarity {
       .select(col("vec_id"), col("scale"),
         aggregate(transform(col("embedding"), qi), lit(0L), (a, x) => a + x).as("sum_q"),
         md5(concat_ws(",", transform(col("embedding"), x => qi(x).cast("int").cast("string")))).as("q_md5"))
-      .localCheckpoint() // the t10 pre-sort rule (quantize folds ×2 otherwise)
-      .orderBy("vec_id")
+      .transform(sortedOnce(_, "vec_id"))
   }
 
   val oracleEmbedQuantize: String =
@@ -631,8 +631,7 @@ object Similarity {
     }
     Tables.embeddings(spark, dir)
       .select(col("vec_id") +: comps.toIndexedSeq: _*)
-      .localCheckpoint() // the t10 pre-sort rule (K dot products ×2 otherwise)
-      .orderBy("vec_id")
+      .transform(sortedOnce(_, "vec_id"))
   }
 
   private def projSqlLiteral(p: Int): String =

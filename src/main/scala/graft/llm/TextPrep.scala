@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.CoreOps.sortedOnce
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,11 +52,7 @@ object TextPrep {
         size(call_function("regexp_extract_all", seeded, lit(PhoneRe), lit(0))).as("n_phones"),
         length(scrubbed).as("scrubbed_len"),
         md5(scrubbed).as("scrubbed_md5"))
-      // checkpoint before the sort: with no shuffle below it, the range
-      // exchange's sampling pass would run all four regex passes over
-      // the whole corpus a second time (the t10 rule)
-      .localCheckpoint()
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
   }
 
   private val piiSeededSql: String =
@@ -96,8 +93,7 @@ object TextPrep {
         col("start"),
         length(col("text").substr(col("start"), lit(ChunkLen))).as("chunk_len"),
         md5(col("text").substr(col("start"), lit(ChunkLen))).as("chunk_md5"))
-      .localCheckpoint() // the t10 pre-sort rule (md5 per chunk ×2 otherwise)
-      .orderBy("doc_id", "chunk_idx")
+      .transform(sortedOnce(_, "doc_id", "chunk_idx"))
   }
 
   val oracleChunk: String =
@@ -224,8 +220,7 @@ object TextPrep {
         when(col("n_tokens") > 0, expr("CAST(n_hits AS BIGINT) * 1000 div n_tokens"))
           .otherwise(0L))
       .withColumn("keep", col("hits_pm") < BlocklistMaxPm)
-      .localCheckpoint() // the t10 pre-sort rule
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
   }
 
   lazy val oracleBlocklistScrub: String = {
@@ -294,8 +289,7 @@ object TextPrep {
         ((length(col("ct")) - length(replace(col("ct"), lit(Moji)))) / 2)
           .cast("long").as("n_moji"))
       .withColumn("flagged", col("n_repl") > 0 || col("n_moji") > 0)
-      .localCheckpoint() // the t10 pre-sort rule
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
   }
 
   val oracleMojibakeScan: String =

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.ops.CoreOps.sortedOnce
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -182,10 +183,7 @@ object TextStats {
         when(col("n_tokens") >= 20, lit(1.0)).otherwise(lit(0.0)) * lit(0.4)
           + when(col("stopword_ratio").between(0.05, 0.5), lit(1.0)).otherwise(lit(0.0)) * lit(0.3)
           + when(col("mean_token_len").between(3.0, 10.0), lit(1.0)).otherwise(lit(0.0)) * lit(0.3))
-      // checkpoint before the sort (the t10 rule: no shuffle below the
-      // final sort, so sampling would re-run the token folds corpus-wide)
-      .localCheckpoint()
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
   }
 
   /** t03 — token counting: whitespace tokens, word tokens, distinct
@@ -201,8 +199,7 @@ object TextStats {
         size(array_distinct(toks)).as("n_distinct_words"),
         aggregate(transform(toks, t => length(t)), lit(0), (a, x) => a + x).as("alnum_chars"))
       .withColumn("est_bpe_tokens", expr("cast((alnum_chars + 3) div 4 as int)"))
-      .localCheckpoint() // the t10 pre-sort rule
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
   }
 
   /** t04 — document fingerprint: min-hash + xor-fold over the distinct
@@ -219,10 +216,7 @@ object TextStats {
         array_min(col("hs")).as("fp_min"),
         aggregate(col("hs"), lit(0L), (acc, x) => acc.bitwiseXOR(x)).as("fp_xor"),
         size(col("hs")).cast("long").as("n_shingles"))
-      // checkpoint before the sort: the range exchange's sampling pass
-      // would re-run the md5 shingle pass over the whole corpus (t10)
-      .localCheckpoint()
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
 
   /** The (word, doc_id, tf) relation behind t05/t06 — one explode +
     * one hash aggregate, partial/final split keeps the shuffle at one
@@ -572,10 +566,7 @@ object TextStats {
     * bit-identical across engines, shipped unrounded.
     */
   def repetition(spark: SparkSession, dir: String): DataFrame =
-    // checkpoint before the sort: the range exchange's sampling pass
-    // would otherwise re-run the whole O(V·N)-per-row metric fold over
-    // every document a second time (no shuffle below the final sort)
-    repetitionMetrics(Tables.documents(spark, dir)).localCheckpoint().orderBy("doc_id")
+    sortedOnce(repetitionMetrics(Tables.documents(spark, dir)), "doc_id")
 
   /** The t10 metric computation over any (doc_id, text) relation —
     * split out so the short-doc edge (< 3 words → empty trigram list,
@@ -715,8 +706,7 @@ object TextStats {
           + lit(4L) * least(col("n_words"), lit(500))
           + lit(10L) * col("mtl_x10")).cast("long"))
       .withColumn("keep", col("logit_x1000") > 0)
-      .localCheckpoint() // the t10 pre-sort rule
-      .orderBy("doc_id")
+      .transform(sortedOnce(_, "doc_id"))
   }
 
   val GrowthDeciles = 10L

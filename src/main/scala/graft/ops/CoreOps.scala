@@ -50,6 +50,20 @@ object CoreOps {
     */
   def stableAvg(units: Long, n: Long): Double = units.toDouble / GridUnits / n.toDouble
 
+  /** `df` in a global presentation sort on `cols`, its rows computed
+    * once (the t10 pre-sort rule). The sort's range exchange samples
+    * its child in a job of its own to pick the partition bounds, then
+    * runs the child again to shuffle it, so an unguarded map-heavy
+    * child (regex, hash or fold per row) does all its work twice. A
+    * lazy local checkpoint makes the sampling job compute and keep the
+    * rows, the shuffle reads them back, and no job runs while the
+    * query is built; only an exchange below the checkpoint still runs
+    * its map stage then. Not for cheap children: re-scanning pruned
+    * columns can beat writing and reading the checkpoint (q08).
+    */
+  def sortedOnce(df: DataFrame, cols: String*): DataFrame =
+    df.localCheckpoint(eager = false).orderBy(cols.map(col): _*)
+
   /** q01 — pruned scan + disjunctive predicate (S1/P1/P4).
     * Mirrors the reference's source pushdown (`select` 4 cols, OR-of-
     * equality + conjunction where, reference
@@ -66,11 +80,8 @@ object CoreOps {
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
 
   def prunedScan(spark: SparkSession, dir: String): DataFrame =
-    prunedScanRelation(spark, dir)
-      // the t10 pre-sort rule, priced at 100x: 1.49x — the sampling
-      // pass otherwise re-reads and re-filters the whole pruned scan
-      .localCheckpoint()
-      .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
+    sortedOnce(prunedScanRelation(spark, dir),
+      "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
 
   /** q02 — hash group-by + mean over 3 keys (A1: the commune-year dedup
     * aggregate, reference `0_insert_conso_an_ville_in_bq.py:50-52`).
@@ -120,10 +131,10 @@ object CoreOps {
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), lit("hist").as("src"))
     val fcst = li.filter(col("l_returnflag") === "N")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), lit("fcst").as("src"))
-    // NOT checkpointed before the sort (the t10 rule priced both ways,
-    // round 11): materializing the ~45M-row union costs 0.60x at 100x —
-    // re-scanning pruned parquet columns in the sampling pass is cheaper
-    // than writing+reading the row-format checkpoint at this row count.
+    // NOT [[sortedOnce]] (priced both ways, round 11): materializing
+    // the ~45M-row union costs 0.60x at 100x — re-scanning pruned
+    // parquet columns in the sampling pass is cheaper than
+    // writing+reading the row-format checkpoint at this row count.
     hist.unionByName(fcst).orderBy("l_orderkey", "l_linenumber", "src", "l_quantity")
   }
 

@@ -183,8 +183,13 @@ object Staging {
     * timed windows breached caps calibrated on warm references.
     */
   private val buildLog = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+  /** Seconds this thread has logged, so a build can leave out what its
+    * `put`s and the builds nested in it logged already.
+    */
+  private val loggedHere = ThreadLocal.withInitial[Double](() => 0.0)
   private def recordBuild(tag: String, secs: Double): Unit = {
     buildLog.merge(tag, secs, (a, b) => a + b): Unit
+    loggedHere.set(loggedHere.get + secs)
   }
 
   /** Snapshot-and-clear the per-tag index-build seconds accumulated
@@ -225,8 +230,10 @@ object Staging {
     *    build's earlier step or another process) and times the others
     *    into [[drainBuildLog]]. Work shared by several tags goes in
     *    `build` before the `put`s; other builders it calls (the indexes
-    *    this one reads) also go there, so their build time is not
-    *    counted twice.
+    *    this one reads) also go there. The rest of `build`'s wall time,
+    *    less the `put`s and the builds nested in it (which log their
+    *    own tags), is logged under the family's first tag, so every
+    *    second of a build is logged once.
     *  - Lock. Builds of one key are serialized in this JVM by a lock of
     *    that key; a builder that reads another index takes that
     *    index's lock inside its own, in the acyclic order of the
@@ -247,7 +254,10 @@ object Staging {
       buildLocks.computeIfAbsent(locs(family.tags.head), _ => new Object).synchronized {
         if (!family.tags.forall(published)) {
           scratchBase: Unit // reap dead runs' tmp copies first
+          val (t0, logged0) = (System.nanoTime(), loggedHere.get)
           build((tag, write) => if (!published(tag)) publish(tag, locs(tag), write))
+          recordBuild(family.tags.head,
+            math.max(0.0, (System.nanoTime() - t0) / 1e9 - (loggedHere.get - logged0)))
           val missing = family.tags.filterNot(published)
           require(missing.isEmpty, s"staged-index build left ${missing.mkString(", ")} unpublished")
         }

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.ops.{CoreOps, Pricing}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +23,38 @@ class CoreOpsSpec extends AnyFunSuite {
     // sketch pair, whose KMV estimates derive from the portable hash so
     // estimate AND 15%-bound boolean hash-match — checks against DuckDB
     assert(qs.keySet -- SparkEntry.oracleSql.keySet == Set.empty[String])
+  }
+
+  test("sortedOnce builds the plan without a job and computes each row once") {
+    val n = 20000L
+    val sc = spark.sparkContext
+    val evals = sc.longAccumulator("sortedOnce child rows")
+    val counted = udf { (x: Long) => evals.add(1); x }
+    val jobs = new AtomicInteger
+    val fenceTag = "sorted-once-fence"
+    val fence = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.tags", "").contains(fenceTag)))
+          fence.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    val sorted = try {
+      val df = CoreOps.sortedOnce(
+        spark.range(0, n, 1, 8).select(counted(lit(n) - col("id")).as("k")), "k")
+      // a last job: once the listener sees it, it has seen every earlier one
+      sc.addJobTag(fenceTag)
+      try sc.parallelize(Seq(0), 1).foreach(_ => ())
+      finally sc.removeJobTag(fenceTag)
+      assert(fence.await(60, TimeUnit.SECONDS), "the listener bus did not drain")
+      df
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, "building the guarded sort ran a job")
+    assert(evals.value == 0L)
+    val ks = sorted.collect().map(_.getLong(0))
+    assert(ks.toSeq == (1L to n))
+    assert(evals.value == n, "the sort's child was not computed exactly once per row")
   }
 
   test("q49: recursive CTE walks each key to the root in exactly floor(log2(key)) steps") {

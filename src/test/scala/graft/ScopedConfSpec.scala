@@ -71,13 +71,15 @@ class ScopedConfSpec extends AnyFunSuite {
   }
 
   test("conf-scoping queries on threads sharing one session match their serial runs") {
-    // the conf-scoping loops, and readers of staged indexes across the
-    // query families; the threads run on a copy of the fixture with no
-    // staged index, so they also build those indexes at the same time
+    // the conf-scoping loops, readers of staged indexes across the
+    // query families, and two pre-sort-guarded queries whose first
+    // actions compute their checkpoints at the same time; the threads
+    // run on a copy of the fixture with no staged index, so they also
+    // build those indexes at the same time
     val names = Seq("d36_pagerank", "d39_kcore", "d41_lpa_communities",
       "d32_incremental_cc", "q58_aqe_skew_join", "q13_price",
       "t01_lang_id", "t25_langid_eval", "q46_profile", "d08_ann_ivf",
-      "d11_dedup_clusters", "q54_zorder_probe")
+      "d11_dedup_clusters", "q54_zorder_probe", "q01_pruned_scan", "t03_token_stats")
     def digest(name: String, dir: String): String = {
       val rows = SparkEntry.queries(name)(spark, dir).collect().map(_.toString)
       val md = java.security.MessageDigest.getInstance("MD5")

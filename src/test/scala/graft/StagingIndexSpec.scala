@@ -155,6 +155,36 @@ class StagingIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("a build logs its whole wall time once, nested builds under their own tags") {
+    SparkTestBase.withTempDir("graft_buildlog") { root =>
+      val dir = SparkTestBase.fixtureCopy(root)
+      def write(p: String): Unit = {
+        Files.createDirectories(Path.of(p))
+        Files.write(Path.of(p, "data"), Array[Byte](1))
+      }
+      try {
+        Staging.drainBuildLog()
+        val t0 = System.nanoTime()
+        Staging.indexes(dir, "lang_scores") { put =>
+          // work before the first put, and a nested build that reads another index
+          Staging.indexes(dir, "profile") { putProfile =>
+            Thread.sleep(300)
+            putProfile("profile", write)
+          }
+          put("lang_scores", write)
+        }
+        val wall = (System.nanoTime() - t0) / 1e9
+        val log = Staging.drainBuildLog()
+        assert(log.keySet == Set("profile", "lang_scores"))
+        assert(log("profile") >= 0.3, log)
+        assert(log.values.sum <= wall, s"$log over $wall s of wall time")
+      } finally {
+        Staging.drainBuildLog()
+        Staging.clearEraIndexes(dir)
+      }
+    }
+  }
+
   test("the prestage builds every declared index") {
     SparkTestBase.withTempDir("graft_prestage") { root =>
       val dir = SparkTestBase.fixtureCopy(root)
