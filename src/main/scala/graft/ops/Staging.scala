@@ -183,9 +183,7 @@ object Staging {
     * timed windows breached caps calibrated on warm references.
     */
   private val buildLog = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
-  /** Seconds this thread has logged, so a build can leave out what its
-    * `put`s and the builds nested in it logged already.
-    */
+  // seconds this thread has logged: a build leaves out its puts' and nested builds'
   private val loggedHere = ThreadLocal.withInitial[Double](() => 0.0)
   private def recordBuild(tag: String, secs: Double): Unit = {
     buildLog.merge(tag, secs, (a, b) => a + b): Unit
