@@ -181,7 +181,7 @@ object Bench {
       // per-query caps from the committed reference run (BENCH_REF.json,
       // refreshed each round) — parsing + formula live in [[BenchCaps]]
       // (tested). Round-11 measurement-bug fix, disclosed in
-      // OPTIMIZATION_r11.md: the old inline regex required no
+      // bench/OPTIMIZATION_r11.md: the old inline regex required no
       // whitespace after the colon, but BENCH_REF is produced by
       // tools/bench_median.py (python json.dump), which writes
       // `"name": <num>` — so the per-query gate silently parsed ZERO

@@ -3,7 +3,7 @@ package graft
 /** Per-query budget-cap derivation from the committed BENCH_REF
   * record — extracted from Bench so the parsing is testable.
   *
-  * Round-11 measurement-bug fix, disclosed in OPTIMIZATION_r11.md: the
+  * Round-11 measurement-bug fix, disclosed in bench/OPTIMIZATION_r11.md: the
   * inline regex required `"name":<num>` with NO whitespace after the
   * colon, but BENCH_REF.json is produced by tools/bench_median.py
   * (python json.dump), which writes `"name": <num>` — so the

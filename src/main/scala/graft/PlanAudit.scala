@@ -52,10 +52,7 @@ object PlanAudit {
          |pre-sort re-execution) report the materialized leaf — their
          |upstream plan shapes are asserted per stage in their specs
          |(SketchAndLmSpec, CorpusEvalSpec), and their per-stage times
-         |are in the Bench record's `trace` section (`top_stages`). The 15
-         |queries behind the pre-sort guard (`CoreOps.sortedOnce`) show its
-         |lazy checkpoint's `ExistingRDD` leaf under the sort instead of their
-         |own operators.
+         |are in the Bench record's `trace` section (`top_stages`).
          |
          || query | exchanges | joins | pushed filters | codegen spans |
          ||---|---|---|---|---|""".stripMargin

@@ -9,10 +9,9 @@ package graft
   *
   * Plans are the PRE-execution formatted physical plans (AQE initial
   * plan) — the deterministic artifact `.explain("formatted")` prints;
-  * construction alone is enough, queries are not executed (streaming
-  * legs and eager barrier or loop `localCheckpoint`s still drain during
-  * construction by their own design; the lazy pre-sort guard,
-  * [[graft.ops.CoreOps.sortedOnce]], runs nothing).
+  * construction alone is enough, queries are not executed (only
+  * streaming legs and eager barrier or loop `localCheckpoint`s drain
+  * during construction, by their own design).
   *
   * The suffix `executed` dumps the EXECUTED plan instead: each query
   * runs (`toRdd.count` on its own QueryExecution, so that execution is

@@ -655,7 +655,7 @@ object Curation {
     * variant is the production shape; at fixture scale the simple
     * plan wins and is what the oracle replays. The variant's round-11
     * re-pricing (a wash at sf0.1, 1.7× slower at 100×) is in
-    * OPTIMIZATION_r11.md.
+    * bench/OPTIMIZATION_r11.md.
     */
   def exactCharSpansOn(documents: DataFrame, l: Int): DataFrame = {
     val docs = documents

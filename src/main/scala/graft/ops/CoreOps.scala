@@ -3,6 +3,7 @@ package graft.ops
 import graft.tables.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ComputeOnce
 
 /** Core relational operators — the reference's scan/filter/project/agg/
   * union/sort surface (SURVEY.md §2.1, §2.2, §2.4, §2.6, §2.7, §2.8)
@@ -55,14 +56,20 @@ object CoreOps {
     * its child in a job of its own to pick the partition bounds, then
     * runs the child again to shuffle it, so an unguarded map-heavy
     * child (regex, hash or fold per row) does all its work twice. A
-    * lazy local checkpoint makes the sampling job compute and keep the
-    * rows, the shuffle reads them back, and no job runs while the
-    * query is built; only an exchange below the checkpoint still runs
-    * its map stage then. Not for cheap children: re-scanning pruned
-    * columns can beat writing and reading the checkpoint (q08).
+    * [[ComputeOnce]] node under the sort makes the sampling job compute
+    * and keep the rows, and the shuffle reads them back. It is a plan
+    * operator, so no job runs while the query is built, even with
+    * exchanges below it, and the plan shows the child's operators. Not
+    * for cheap children: re-scanning pruned columns can beat writing
+    * and reading the checkpoint (q08).
+    *
+    * Adding the node's planner strategy to `df`'s session (once, on
+    * first use) is the one change this code makes to a session it did
+    * not create; it plans only the nodes this helper inserts, so other
+    * sorts keep their plans.
     */
   def sortedOnce(df: DataFrame, cols: String*): DataFrame =
-    df.localCheckpoint(eager = false).orderBy(cols.map(col): _*)
+    ComputeOnce(df).orderBy(cols.map(col): _*)
 
   /** q01 — pruned scan + disjunctive predicate (S1/P1/P4).
     * Mirrors the reference's source pushdown (`select` 4 cols, OR-of-
@@ -70,17 +77,10 @@ object CoreOps {
     * `0_insert_conso_an_ville_in_bq.py:24-25`). Catalyst pushes both the
     * filter and the projection into the parquet scan.
     */
-  /** q01's pruned-scan relation, pre-sort — split out so PlanSpec can
-    * assert PushedFilters/ReadSchema on the scan, which the declared
-    * query's checkpoint hides behind an ExistingRDD leaf.
-    */
-  private[graft] def prunedScanRelation(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .filter(col("l_returnflag").isin("A", "R") && col("l_linestatus") === "F")
-      .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-
   def prunedScan(spark: SparkSession, dir: String): DataFrame =
-    sortedOnce(prunedScanRelation(spark, dir),
+    sortedOnce(Tables.lineitem(spark, dir)
+      .filter(col("l_returnflag").isin("A", "R") && col("l_linestatus") === "F")
+      .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"),
       "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
 
   /** q02 — hash group-by + mean over 3 keys (A1: the commune-year dedup

@@ -2,7 +2,11 @@ package graft.tables
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession, classic}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -80,11 +84,14 @@ object Tables {
 
   /** The schema Spark infers for the parquet table at `path`, memoized
     * by qualified path while one of the files it was inferred from is
-    * still listed unchanged (see the design note above). A miss infers
-    * it as `spark.read.parquet` does, in one job, but in a child session
-    * with `nanosAsLong`: inferring an INT64 TIMESTAMP(NANOS) column (see
-    * [[events]]) needs it, a scan given the inferred schema does not, so
-    * the caller's session is left as it is.
+    * still listed unchanged (see the design note above). A miss reads
+    * the footer of the file Spark's own inference touches (the first
+    * data file by path, `mergeSchema` off) on the driver, no Spark job,
+    * and converts it as inference does in a child session with
+    * `nanosAsLong`: an INT64 TIMESTAMP(NANOS) column (see [[events]])
+    * needs it, a scan given the schema does not, so the caller's
+    * session is left as it is. A path with no data file infers as
+    * `spark.read.parquet` does, which fails as it does.
     */
   private def schemaOf(spark: SparkSession, path: String): StructType = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -94,11 +101,23 @@ object Tables {
     val live = listed.toSet
     schemaMemo.synchronized(Option(schemaMemo.get(key))).filter(_.files.exists(live)).map(_.schema)
       .getOrElse {
-        val schema = graft.LocalSession.scoped(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
-          .read.parquet(path).schema
+        val child = graft.LocalSession.scoped(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+        val schema = listed.map(_.path).sorted.headOption.map(footerSchema(conf, _, child))
+          .getOrElse(child.read.parquet(path).schema)
         schemaMemo.synchronized(schemaMemo.put(key, SchemaMemo(listed, schema)))
         schema
       }
+  }
+
+  /** The schema Spark's inference derives from `file`'s footer with
+    * `spark`'s conf.
+    */
+  private def footerSchema(conf: Configuration, file: String, spark: SparkSession): StructType = {
+    val p = new Path(file)
+    val in = HadoopInputFile.fromStatus(p.getFileSystem(conf).getFileStatus(p), conf)
+    val footer = new Footer(p, ParquetFooterReader.readFooter(in, ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.asInstanceOf[classic.SparkSession].sessionState.conf))
   }
 
   /** The parquet table at `path`, read with its memoized schema. */

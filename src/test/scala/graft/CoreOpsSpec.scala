@@ -5,8 +5,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.ops.{CoreOps, Pricing}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ComputeOnceStrategy
 import org.scalatest.funsuite.AnyFunSuite
 
 class CoreOpsSpec extends AnyFunSuite {
@@ -28,33 +30,63 @@ class CoreOpsSpec extends AnyFunSuite {
   test("sortedOnce builds the plan without a job and computes each row once") {
     val n = 20000L
     val sc = spark.sparkContext
-    val evals = sc.longAccumulator("sortedOnce child rows")
-    val counted = udf { (x: Long) => evals.add(1); x }
-    val jobs = new AtomicInteger
-    val fenceTag = "sorted-once-fence"
-    val fence = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.tags", "").contains(fenceTag)))
-          fence.countDown()
-        else jobs.incrementAndGet(): Unit
+    // the counting UDF straight over a scan, and above a groupBy
+    // exchange (AQE on), whose reduce side the sort's sampling job and
+    // its shuffle would otherwise both run
+    val aqe = LocalSession.scoped(spark, "spark.sql.adaptive.enabled" -> "true")
+    val inputs = Seq[(String, UserDefinedFunction => DataFrame)](
+      "scan" -> (c => spark.range(0, n, 1, 8).select(c(lit(n) - col("id")).as("k"))),
+      "groupBy" -> (c => aqe.range(0, n, 1, 8).groupBy("id").count()
+        .select(c(lit(n) - col("id")).as("k"))))
+    inputs.foreach { case (input, frame) =>
+      val evals = sc.longAccumulator(s"sortedOnce child rows, $input")
+      val counted = udf { (x: Long) => evals.add(1); x }
+      val jobs = new AtomicInteger
+      val fenceTag = "sorted-once-fence"
+      val fence = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.job.tags", "").contains(fenceTag)))
+            fence.countDown()
+          else jobs.incrementAndGet(): Unit
+      }
+      sc.addSparkListener(listener)
+      val sorted = try {
+        val df = CoreOps.sortedOnce(frame(counted), "k")
+        // a last job: once the listener sees it, it has seen every earlier one
+        sc.addJobTag(fenceTag)
+        try sc.parallelize(Seq(0), 1).foreach(_ => ())
+        finally sc.removeJobTag(fenceTag)
+        assert(fence.await(60, TimeUnit.SECONDS), "the listener bus did not drain")
+        df
+      } finally sc.removeSparkListener(listener)
+      assert(jobs.get == 0, s"$input: building the guarded sort ran ${jobs.get} jobs")
+      assert(evals.value == 0L, input)
+      val ks = sorted.collect().map(_.getLong(0))
+      assert(ks.toSeq == (1L to n), input)
+      assert(evals.value == n, s"$input: the sort's child was not computed exactly once per row")
+      val plan = sorted.queryExecution.executedPlan.toString
+      assert(plan.contains("ComputeOnce") && !plan.contains("ExistingRDD"), s"$input:\n$plan")
     }
-    sc.addSparkListener(listener)
-    val sorted = try {
-      val df = CoreOps.sortedOnce(
-        spark.range(0, n, 1, 8).select(counted(lit(n) - col("id")).as("k")), "k")
-      // a last job: once the listener sees it, it has seen every earlier one
-      sc.addJobTag(fenceTag)
-      try sc.parallelize(Seq(0), 1).foreach(_ => ())
-      finally sc.removeJobTag(fenceTag)
-      assert(fence.await(60, TimeUnit.SECONDS), "the listener bus did not drain")
-      df
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0, "building the guarded sort ran a job")
-    assert(evals.value == 0L)
-    val ks = sorted.collect().map(_.getLong(0))
-    assert(ks.toSeq == (1L to n))
-    assert(evals.value == n, "the sort's child was not computed exactly once per row")
+  }
+
+  test("sortedOnce on a new session's threads adds its strategy once") {
+    val fresh = spark.newSession()
+    val frame = fresh.range(0, 1000, 1, 4).select((lit(1000L) - col("id")).as("k"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val results = try {
+      val start = new CountDownLatch(1)
+      val futures = (1 to 8).map(_ => pool.submit(() => {
+        start.await()
+        CoreOps.sortedOnce(frame, "k").collect().map(_.getLong(0)).toSeq
+      }))
+      start.countDown()
+      futures.map(_.get(120, TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    results.foreach(ks => assert(ks == (1L to 1000L)))
+    val strategies = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental.extraStrategies
+    assert(strategies.count(_ == ComputeOnceStrategy) == 1, strategies)
   }
 
   test("q49: recursive CTE walks each key to the root in exactly floor(log2(key)) steps") {

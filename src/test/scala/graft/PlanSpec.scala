@@ -13,19 +13,13 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, Sf).queryExecution.executedPlan.toString
 
   test("q01: filter and projection are pushed into the parquet scan") {
-    // the declared query checkpoints the scan before its presentation
-    // sort (the t10 pre-sort rule), which hides the scan node behind an
-    // ExistingRDD leaf — assert pushdown on the pre-sort relation the
-    // checkpoint materializes, and the checkpoint itself on the query
-    val p = graft.ops.CoreOps.prunedScanRelation(spark, Sf)
-      .queryExecution.executedPlan.toString
+    val p = planOf("q01_pruned_scan")
     assert(p.contains("PushedFilters: [IsNotNull(l_linestatus), In(l_returnflag"),
       s"missing pushdown in:\n$p")
     assert(p.contains("ReadSchema: struct<l_orderkey:bigint,l_linenumber:int," +
       "l_quantity:double,l_returnflag:string,l_linestatus:string>"),
       s"scan reads more columns than needed:\n$p")
-    val q = planOf("q01_pruned_scan")
-    assert(q.contains("ExistingRDD"), s"q01 lost its pre-sort checkpoint:\n$q")
+    assert(p.contains("ComputeOnce"), s"q01 lost its pre-sort guard:\n$p")
   }
 
   test("q11: dimension joins are broadcast, aggregation is partial+final") {

@@ -60,10 +60,9 @@ class QueryTraceSpec extends AnyFunSuite {
     s.jobs(QueryTrace.Construct) + s.jobs(QueryTrace.Execute)
 
   test("a batch query and a map-only pre-sort query each get their own jobs, stages and tasks") {
-    // a table's first read in the JVM infers its schema in a job of its own
-    graft.tables.Tables.documents(spark, Sf)
-    val (sums, counter) = traced(Seq("q13_price", "d04_simhash"))
-    for (name <- Seq("q13_price", "d04_simhash")) {
+    val names = Seq("q13_price", "d04_simhash", "t16_dup_spans")
+    val (sums, counter) = traced(names)
+    for (name <- names) {
       val s = sums(name)
       assert(s.jobs(QueryTrace.Execute) > 0, name)
       assert(jobs(s) == counter.byDescription(name), name)
@@ -76,8 +75,10 @@ class QueryTraceSpec extends AnyFunSuite {
     }
     // construct + execute jobs are all the window's jobs (but the fence)
     assert(sums.values.map(jobs).sum == counter.all.get - 1)
-    // the pre-sort guard builds d04's plan without running it
-    assert(sums("d04_simhash").jobs(QueryTrace.Construct) == 0)
+    // the pre-sort guard builds the plan without running it, also over
+    // the exchanges below t16's guard
+    for (name <- Seq("d04_simhash", "t16_dup_spans"))
+      assert(sums(name).jobs(QueryTrace.Construct) == 0, name)
   }
 
   test("a streaming leg in a child session gets its trigger count and phase sums") {
