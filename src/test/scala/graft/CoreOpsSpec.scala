@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ComputeOnceStrategy
+import org.apache.spark.sql.graftbridge.{ComputeOnceStrategy, SessionBridge}
 import org.scalatest.funsuite.AnyFunSuite
 
 class CoreOpsSpec extends AnyFunSuite {
@@ -36,7 +36,7 @@ class CoreOpsSpec extends AnyFunSuite {
     val aqe = LocalSession.scoped(spark, "spark.sql.adaptive.enabled" -> "true")
     val inputs = Seq[(String, UserDefinedFunction => DataFrame)](
       "scan" -> (c => spark.range(0, n, 1, 8).select(c(lit(n) - col("id")).as("k"))),
-      "groupBy" -> (c => aqe.range(0, n, 1, 8).groupBy("id").count()
+      "groupBy" -> (c => aqe.range(0, n, 1, 8).groupBy((col("id") % n).as("id")).count()
         .select(c(lit(n) - col("id")).as("k"))))
     inputs.foreach { case (input, frame) =>
       val evals = sc.longAccumulator(s"sortedOnce child rows, $input")
@@ -72,6 +72,11 @@ class CoreOpsSpec extends AnyFunSuite {
 
   test("sortedOnce on a new session's threads adds its strategy once") {
     val fresh = spark.newSession()
+    // a guarded plan on a session without the strategy fails to plan
+    val guarded = SessionBridge.rebind(fresh, CoreOps.sortedOnce(spark.range(3).toDF("k"), "k"))
+    val err = intercept[Throwable](guarded.collect())
+    assert(Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("No plan for ComputeOnce")), err)
     val frame = fresh.range(0, 1000, 1, 4).select((lit(1000L) - col("id")).as("k"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     val results = try {
