@@ -25,8 +25,10 @@ package graft
   * Every timed query runs under a [[QueryTrace]]: the record file
   * carries a `trace` section with each query's construct/execute
   * split, jobs, stages, tasks, executor time, shuffle bytes, spill,
-  * GC, task skew, planning phases, top stages and streaming trigger
-  * phases — where the time went, without a rerun.
+  * GC, task skew, planning phases, top stages, streaming trigger
+  * phases and the facts and digest of the plan it ran — where the
+  * time went, without a rerun — and a `provenance` section (git sha,
+  * cores, JDK and Spark versions).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -42,12 +44,7 @@ object Bench {
 
     // optional subset (comma-separated name prefixes) for scale-stress
     // runs where the full suite would take hours on amplified fixtures
-    val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(pfx) =>
-        val ps = pfx.split(",").map(_.trim).filter(_.nonEmpty)
-        name => ps.exists(name.startsWith)
-      case None => _ => true
-    }
+    val only = SparkEntry.selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val bench = SparkEntry.queries.filter(kv => only(kv._1))
 
     val warmDir = "/root/testdata/sf0.001"
@@ -88,7 +85,7 @@ object Bench {
       val t0 = System.nanoTime()
       // a failing query must surface as err, not masquerade as a fast time
       val err = try { trace.run(name)(fn(spark, sfDir))(run); None }
-                catch { case e: Throwable => Some(e.toString.replaceAll("[\"\\\\\n\r\t]", " ").take(200)) }
+                catch { case e: Throwable => Some(e.toString.take(200)) }
       // timing stops HERE: cache clearing and the GC nudge are
       // inter-query hygiene, not part of the measured query
       val wall = (System.nanoTime() - t0) / 1e9
@@ -105,15 +102,13 @@ object Bench {
       System.gc()
       (name, wall - stageS, stageS, err)
     }
-    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val stageQ = results.collect { case (k, _, s, _) if s > 0.01 => "\"" + k + "\":" + s }
-    val stageQJson = if (stageQ.isEmpty) "" else stageQ.mkString(""","stage_s":{""", ",", "}")
-    val stagedJson = (staged.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v } :+ s""""total_s":$prestageSecs""")
-      .mkString(""","staging":{""", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(e)) => "\"" + k + "\":\"" + e + "\"" }
-    val errJson = if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
+    val qs = QueryTrace.obj(results.map { case (k, v, _, _) => k -> v.toString })
+    val stageQ = results.collect { case (k, _, s, _) if s > 0.01 => k -> s.toString }
+    val stageQJson = if (stageQ.isEmpty) "" else ""","stage_s":""" + QueryTrace.obj(stageQ)
+    val stagedJson = ""","staging":""" + QueryTrace.obj(
+      staged.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString } :+ ("total_s" -> prestageSecs.toString))
+    val errs = results.collect { case (k, _, _, Some(e)) => k -> QueryTrace.str(e) }
+    val errJson = if (errs.isEmpty) "" else ""","errors":""" + QueryTrace.obj(errs)
     val total = results.map(_._2).sum
     val wallTotal = total + results.map(_._3).sum + prestageSecs
     results.foreach { case (k, _, _, e) => e.foreach(msg => System.err.println(s"[bench] $k FAILED: $msg")) }
@@ -140,12 +135,10 @@ object Bench {
     println(s"""{"metric":"total_tail",$shortJson}""")
     // the stdout line is one long JSON record and the driver's tail
     // capture has truncated it mid-line before (BENCH_r03 lost its
-    // total) — persist the same record, with the trace, to a file as
-    // the durable copy. The default path is build output (ignored), so
-    // a run never overwrites committed evidence.
-    trace.flush()
-    val traceJson = trace.summaries.map(t => "\"" + t.name + "\":" + QueryTrace.json(t))
-      .mkString(""","trace":{""", ",", "}")
+    // total) — persist the same record, with the trace and provenance,
+    // to a file as the durable copy. The default path is build output
+    // (ignored), so a run never overwrites committed evidence.
+    val traceJson = s""","provenance":${QueryTrace.provenance(spark)},"trace":${trace.section}"""
     val outFile = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE", "target/BENCH_LOCAL.json"))
     try {

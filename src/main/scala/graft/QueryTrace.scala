@@ -5,10 +5,16 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
+import scala.util.Try
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.{FileSourceScanLike, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -34,6 +40,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * whose own Spark call site names no engine code — else Spark's
   * stage name.
   *
+  * When `exec` returns, the physical plan it ran is read once into
+  * [[Plan]] facts, counted over plan nodes, and a digest of its
+  * normalized tree string: `df`'s own AQE-final plan, or, when `exec`
+  * persisted `df`, the cached relation's plan that built the cache.
+  * `exec` must therefore run `df.queryExecution` itself (as
+  * `toRdd.count` does) or persist `df` and leave it cached.
+  *
   * Listener delivery is asynchronous: call [[flush]] before reading
   * [[summaries]].
   */
@@ -58,8 +71,11 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
     val rec = new Rec(name)
     recs.add(rec)
     val df = phase(rec, Construct)(build)
-    try phase(rec, Execute)(exec(df))
-    finally rec.synchronized {
+    try {
+      phase(rec, Execute)(exec(df))
+      val plan = Plan.of(df)
+      rec.synchronized(rec.plan = Some(plan))
+    } finally rec.synchronized {
       rec.planningMs = df.queryExecution.tracker.phases.map { case (k, v) => k -> v.durationMs }
     }
   }
@@ -93,6 +109,12 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
 
   /** One summary per traced query, in run order. */
   def summaries: Seq[Summary] = recs.asScala.toSeq.map(_.summary)
+
+  /** The trace section of a record: every query's [[QueryTrace.json]] by name. */
+  def section: String = {
+    flush()
+    obj(summaries.map(s => s.name -> QueryTrace.json(s)))
+  }
 
   /** Detach from the listener bus. */
   def close(): Unit = sc.removeSparkListener(this)
@@ -192,6 +214,48 @@ object QueryTrace {
 
   final case class Stream(triggers: Int, p95Ms: Long, maxMs: Long, phaseSumsMs: Map[String, Long])
 
+  /** Facts of the physical plan a query ran, counted over its nodes
+    * through AQE's query stages and subqueries, so each exchange counts
+    * once (a cached relation's own plan is one scan here). `text` is the
+    * tree string with the ids that differ between runs of one plan
+    * normalized: expression, lambda, codegen-stage, plan and query-stage
+    * ids (AQE numbers stages as they finish), JVM object and lambda
+    * class identities, and this JVM's per-run scratch locations;
+    * `digest` is a hash of it.
+    */
+  final case class Plan(shuffles: Int, broadcasts: Int, reused: Int, joins: Seq[String],
+      pushedFilters: Boolean, codegenSpans: Int, digest: String, text: String)
+
+  object Plan extends AdaptiveSparkPlanHelper {
+    private val Ids = Seq("#\\d+" -> "#x", "(lambda \\w+)_\\d+" -> "$1_x", "\\*\\(\\d+\\)" -> "*(x)",
+      "plan_id=\\d+" -> "plan_id=x", "QueryStage \\d+" -> "QueryStage x", "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda",
+      "@[0-9a-f]+\\b" -> "@x", s"_[0-9a-f]{16}_p${ProcessHandle.current().pid()}\\b" -> "_<run>")
+
+    /** The plan `df`'s exec ran: the cached relation's plan when `df`
+      * is persisted, else `df`'s own executed plan.
+      */
+    def of(df: DataFrame): Plan = {
+      val ds = df.asInstanceOf[classic.Dataset[_]]
+      val p = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+        .map(_.cachedRepresentation.cacheBuilder.cachedPlan).getOrElse(ds.queryExecution.executedPlan)
+      val nodes = collectWithSubqueries(p) { case n => n }
+      val text = Ids.foldLeft(p.treeString) { case (t, (re, to)) => t.replaceAll(re, to) }
+      Plan(
+        nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
+        nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
+        nodes.count(_.isInstanceOf[ReusedExchangeExec]),
+        nodes.collect { case j: BaseJoinExec => j.getClass.getSimpleName.stripSuffix("Exec") }.distinct.sorted,
+        nodes.exists {
+          case s: FileSourceScanLike => s.metadata.get("PushedFilters").exists(_ != "[]")
+          case _ => false
+        },
+        nodes.count(_.isInstanceOf[WholeStageCodegenExec]),
+        java.security.MessageDigest.getInstance("SHA-256").digest(text.getBytes("UTF-8"))
+          .take(8).map("%02x".format(_)).mkString,
+        text)
+    }
+  }
+
   /** `totals` sums the task metrics over the query's stages (keys as
     * in the record: `tasks`, `executor_run_s`, `executor_cpu_s`, `gc_s`,
     * `shuffle_read_bytes`, `shuffle_write_bytes`, `spill_bytes`,
@@ -207,7 +271,8 @@ object QueryTrace {
       planningMs: Map[String, Long],
       topStages: Seq[StageRow],
       jobSites: Seq[(String, Int)],
-      stream: Option[Stream])
+      stream: Option[Stream],
+      plan: Option[Plan])
 
   private final class Rec(val name: String) {
     val secs = mutable.Map.empty[String, Double]
@@ -220,6 +285,7 @@ object QueryTrace {
     val streamPhaseMs = mutable.Map.empty[String, Long].withDefaultValue(0L)
     val totals = mutable.Map(TotalKeys.map(_ -> 0.0): _*)
     var planningMs = Map.empty[String, Long]
+    var plan = Option.empty[Plan]
 
     def summary: Summary = synchronized {
       val stream = if (triggerMs.isEmpty) None else {
@@ -227,17 +293,21 @@ object QueryTrace {
         Some(Stream(t.size, t(math.ceil(t.size * 0.95).toInt - 1), t.last, streamPhaseMs.toMap))
       }
       Summary(name, secs.toMap, jobs.toMap, stages.size, totals.toMap, planningMs,
-        stages.sortBy(-_.runS).take(TopN).toSeq, siteJobs.toSeq.sortBy(-_._2).take(TopN), stream)
+        stages.sortBy(-_.runS).take(TopN).toSeq, siteJobs.toSeq.sortBy(-_._2).take(TopN), stream, plan)
     }
   }
 
-  private def str(s: String): String =
-    "\"" + s.replaceAll("[\"\\\\\n\r\t]", " ") + "\""
+  private val Escapes = Map('"' -> "\\\"", '\\' -> "\\\\", '\n' -> "\\n", '\r' -> "\\r", '\t' -> "\\t")
+
+  /** `s` as a JSON string: quote, backslash and every control character escaped. */
+  def str(s: String): String =
+    "\"" + s.flatMap(c => Escapes.getOrElse(c, if (c < ' ') f"\\u${c.toInt}%04x" else c.toString)) + "\""
 
   private def num(v: Double): String =
     if (v.isWhole) v.toLong.toString else (math.rint(v * 1e4) / 1e4).toString
 
-  private def obj(kvs: Iterable[(String, String)]): String =
+  /** A JSON object of already-encoded values. */
+  def obj(kvs: Iterable[(String, String)]): String =
     kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
 
   /** One query's trace as a JSON object. */
@@ -257,5 +327,30 @@ object QueryTrace {
     "triggers" -> t.triggers.toString,
     "trigger_p95_ms" -> t.p95Ms.toString,
     "trigger_max_ms" -> t.maxMs.toString,
-    "phase_sums_ms" -> obj(t.phaseSumsMs.toSeq.sortBy(-_._2).map { case (k, v) => k -> v.toString })))))
+    "phase_sums_ms" -> obj(t.phaseSumsMs.toSeq.sortBy(-_._2).map { case (k, v) => k -> v.toString })))
+  ) ++ s.plan.toSeq.flatMap(p => Seq(
+    "plan" -> obj(Seq(
+      "shuffle_exchanges" -> p.shuffles.toString,
+      "broadcast_exchanges" -> p.broadcasts.toString,
+      "reused_exchanges" -> p.reused.toString,
+      "joins" -> p.joins.map(str).mkString("[", ",", "]"),
+      "pushed_filters" -> p.pushedFilters.toString,
+      "codegen_spans" -> p.codegenSpans.toString)),
+    "plan_digest" -> str(p.digest),
+    "plan_text" -> str(p.text))))
+
+  /** Where a record was taken, in perfbench's provenance field names:
+    * the git commit and whether tracked files differ from it, the
+    * host's cores and the session's, the JDK and the Spark version.
+    */
+  def provenance(spark: SparkSession): String = {
+    def git(args: String*) = Try(Process("git" +: args).!!(ProcessLogger(_ => ())).trim).toOption
+    obj(Seq(
+      "git_sha" -> git("rev-parse", "HEAD").fold("null")(str),
+      "git_dirty" -> git("status", "--porcelain", "--untracked-files=no").fold("null")(_.nonEmpty.toString),
+      "nproc" -> Runtime.getRuntime.availableProcessors.toString,
+      "spark_cores" -> spark.sparkContext.defaultParallelism.toString,
+      "jdk" -> str(s"${System.getProperty("java.vm.name")} ${System.getProperty("java.runtime.version")}"),
+      "spark" -> str(spark.version)))
+  }
 }

@@ -17,6 +17,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Pricing.priceBatch(spark, "/root/testdata/sf0.001")
 
+  /** The query names a comma-separated list of name prefixes selects
+    * (Verify's third argument, Bench's `SPARK_GRAFT_BENCH_ONLY`); no
+    * list selects every name.
+    */
+  def selected(prefixes: Option[String]): String => Boolean = {
+    val ps = prefixes.map(_.split(",").map(_.trim).filter(_.nonEmpty))
+    name => ps.forall(_.exists(name.startsWith))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pruned_scan"   -> (ops.CoreOps.prunedScan(_, _)),

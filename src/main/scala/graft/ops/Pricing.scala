@@ -140,22 +140,6 @@ object Pricing {
         consoFoyer(col("nb_m2"), col("nb_personne"))))
   }
 
-  /** q13 (and the driver's `entry`) — price a batch of requests.
-    *
-    * Requests are derived deterministically from `customer` (persons =
-    * custkey%4+1, m² = 20+custkey%180, region via nation⋈region — the
-    * testdata realization of FIXTURES.md §A.4). The two "warehouse
-    * queries" of the reference become:
-    *  - M: global trailing-30-day mean of events.value (one scalar,
-    *    broadcast to all requests — reference `api.py:118`);
-    *  - α per region: year-over-year ratio of regional yearly order
-    *    totals at the penultimate year, clamped to [1, 1.3] (reference
-    *    `api.py:124`), NULL-ratio → 1.0.
-    *
-    * Scale shape: requests (arbitrarily large) never shuffle — they
-    * broadcast-join the 5-row α dimension and the 1-row M scalar; the
-    * fact-side aggregates shuffle once each on their own keys.
-    */
   /** The M dimension of q13 standalone: global trailing-30-day events
     * mean → modulation, one row. [[priceBatch]] runs this plan;
     * [[PricingService]] folds the bit-equal M from per-file partials.
@@ -196,6 +180,22 @@ object Pricing {
               round(coalesce(clamp(col("ratio"), lo, hi), lit(1.0)), 6).as("alpha"))
   }
 
+  /** q13 (and the driver's `entry`) — price a batch of requests.
+    *
+    * Requests are derived deterministically from `customer` (persons =
+    * custkey%4+1, m² = 20+custkey%180, region via nation⋈region — the
+    * testdata realization of FIXTURES.md §A.4). The two "warehouse
+    * queries" of the reference become:
+    *  - M: global trailing-30-day mean of events.value (one scalar,
+    *    broadcast to all requests — reference `api.py:118`);
+    *  - α per region: year-over-year ratio of regional yearly order
+    *    totals at the penultimate year, clamped to [1, 1.3] (reference
+    *    `api.py:124`), NULL-ratio → 1.0.
+    *
+    * Scale shape: requests (arbitrarily large) never shuffle — they
+    * broadcast-join the 5-row α dimension and the 1-row M scalar; the
+    * fact-side aggregates shuffle once each on their own keys.
+    */
   def priceBatch(spark: SparkSession, dir: String, params: PricingParams = DefaultParams): DataFrame = {
     val cust = Tables.customer(spark, dir)
     val nat  = Tables.nation(spark, dir)

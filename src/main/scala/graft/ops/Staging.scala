@@ -161,15 +161,14 @@ object Staging {
     f.tags.map(t => s"${t}_e${key}_b$buildKey")
   }
 
-  /** Delete every staged index that `dir`'s current data keys (any
-    * build) — the bench's cold-stage mode, which proves the cold
-    * staging path by making the prestage phase actually pay each
-    * build. Per-run scratch and indexes of other data stay.
+  /** Delete this build's staged indexes of `dir`'s current data — the
+    * bench's cold-stage mode, which proves the cold staging path by
+    * making the prestage phase actually pay each build. Other builds'
+    * indexes, per-run scratch and indexes of other data stay; a killed
+    * build's `.tmp_p<pid>` copy is left to the dead-run reaper.
     */
   private[graft] def clearEraIndexes(dir: String): Int = {
-    val current = Families.flatMap(indexNames(_, dir).map(_.stripSuffix(buildKey)))
-    val hits = Option(new java.io.File(IndexRoot).listFiles()).getOrElse(Array.empty)
-      .filter(f => current.exists(f.getName.startsWith))
+    val hits = Families.flatMap(indexNames(_, dir)).map(new java.io.File(IndexRoot, _)).filter(_.exists)
     hits.foreach(deleteTree)
     hits.length
   }

@@ -176,7 +176,7 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame  = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
 
-  // -- reference domain schemas (FIXTURES.md §A), used by golden tests ------
+  // -- reference domain schema (FIXTURES.md §A), used by golden tests -------
 
   /** conso_an_ville — reference `README.md:73`. */
   val consoAnVilleSchema: StructType = StructType(Seq(
@@ -184,30 +184,7 @@ object Tables {
     StructField("code_commune", StringType),
     StructField("conso_moyenne_mwh", DoubleType),
     StructField("annee", IntegerType)))
-
-  /** conso_jour_region — reference `README.md:74`. */
-  val consoJourRegionSchema: StructType = StructType(Seq(
-    StructField("code_insee_region", StringType),
-    StructField("libelle_region", StringType),
-    StructField("date", DateType),
-    StructField("conso_mwh", DoubleType)))
-
-  /** Price request — reference `api.py:107`. */
-  val priceRequestSchema: StructType = StructType(Seq(
-    StructField("libelle_region", StringType),
-    StructField("nom_commune", StringType),
-    StructField("code_commune", StringType),
-    StructField("nb_personne", IntegerType),
-    StructField("nb_m2", IntegerType)))
 }
-
-/** Case classes for typed Dataset paths (§2.9 Aggregator / flatMapGroups). */
-case class ConsoAnVille(nom_commune: String, code_commune: String,
-                        conso_moyenne_mwh: Option[Double], annee: Int)
-case class ConsoJourRegion(code_insee_region: String, libelle_region: String,
-                           date: java.sql.Date, conso_mwh: Double)
-case class PriceRequest(libelle_region: String, nom_commune: String,
-                        code_commune: String, nb_personne: Int, nb_m2: Int)
 
 /** A driver-side memo of values derived from a dataset's `tables`
   * (centroids, codebooks, merges), keyed by the dataset dir and the

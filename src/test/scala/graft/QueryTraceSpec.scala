@@ -107,4 +107,39 @@ class QueryTraceSpec extends AnyFunSuite {
     }
     assert(names.map(n => jobs(sums(n))).sum == counter.all.get - 1)
   }
+
+  /** Trace `runs` (name, exec) in order; the plan each one ran. */
+  private def plans(runs: (String, DataFrame => Unit)*): Seq[QueryTrace.Plan] = {
+    val trace = QueryTrace.register(spark)
+    try {
+      runs.foreach { case (name, ex) => trace.run(name)(SparkEntry.queries(name)(spark, Sf))(ex) }
+      trace.summaries.map(s => s.plan.getOrElse(fail(s"no plan read for ${s.name}")))
+    } finally trace.close()
+  }
+
+  test("the plan a query ran is counted over its nodes, and its digest is stable") {
+    val Seq(a, b, other) = plans("q11_join_revenue" -> exec, "q11_join_revenue" -> exec, "q02_group_mean" -> exec)
+    assert(a.broadcasts >= 1 && a.joins.contains("BroadcastHashJoin") && a.codegenSpans >= 1 && a.pushedFilters, a)
+    // each shuffle once, as its query stage: the tree string prints its
+    // exchange again under the initial plan
+    assert(a.shuffles >= 1 && a.shuffles + a.reused == "ShuffleQueryStage".r.findAllIn(a.text).size, a.text)
+    assert("Exchange (hash|range)partitioning".r.findAllIn(a.text).size == 2 * a.shuffles, a.text)
+    assert(a.text.startsWith("AdaptiveSparkPlan isFinalPlan=true"), a.text)
+    assert(a.digest == b.digest && a.text == b.text)
+    assert(a.digest != other.digest)
+  }
+
+  test("a persisted exec's plan is the cached plan that built the cache") {
+    SparkTestBase.withTempDir("graft_trace") { dir =>
+      val Seq(p) = plans("q11_join_revenue" -> { (df: DataFrame) =>
+        df.persist()
+        df.count()
+        df.coalesce(1).write.parquet(dir.resolve("out").toString)
+      })
+      spark.catalog.clearCache()
+      assert(p.text.startsWith("AdaptiveSparkPlan isFinalPlan=true"), p.text)
+      assert(p.shuffles >= 1 && p.broadcasts >= 1 && p.joins.contains("BroadcastHashJoin"), p)
+      assert(!p.text.contains("InMemoryRelation"), p.text)
+    }
+  }
 }

@@ -155,6 +155,29 @@ class StagingIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("clearing a dataset's indexes leaves another build's indexes of the same data") {
+    SparkTestBase.withTempDir("graft_clear") { root =>
+      Files.copy(Path.of(SparkTestBase.Sf, "lineitem.parquet"), root.resolve("lineitem.parquet"))
+      val dir = root.toString
+      val loc = Path.of(Staging.index(dir, "profile") { p =>
+        Files.createDirectories(Path.of(p))
+        Files.write(Path.of(p, "data"), Array[Byte](1))
+      })
+      val sibling = Path.of(loc.toString.replaceAll("_b[0-9a-f]+$", "_b000000000000"))
+      assert(sibling != loc)
+      Files.createDirectories(sibling)
+      try {
+        assert(Staging.clearEraIndexes(dir) == 1)
+        assert(!Files.exists(loc))
+        assert(Files.exists(sibling), "another build's index was deleted")
+      } finally {
+        Staging.drainBuildLog()
+        Staging.clearEraIndexes(dir)
+        SparkTestBase.deleteTree(sibling)
+      }
+    }
+  }
+
   test("a build logs its whole wall time once, nested builds under their own tags") {
     SparkTestBase.withTempDir("graft_buildlog") { root =>
       val dir = SparkTestBase.fixtureCopy(root)
