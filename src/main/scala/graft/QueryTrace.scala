@@ -220,8 +220,9 @@ object QueryTrace {
     * tree string with the ids that differ between runs of one plan
     * normalized: expression, lambda, codegen-stage, plan and query-stage
     * ids (AQE numbers stages as they finish), JVM object and lambda
-    * class identities, and this JVM's per-run scratch locations;
-    * `digest` is a hash of it.
+    * class identities, and per-run scratch locations
+    * ([[graft.ops.Staging.stagePath]], to the end of the path Spark may
+    * abbreviate); `digest` is a hash of it.
     */
   final case class Plan(shuffles: Int, broadcasts: Int, reused: Int, joins: Seq[String],
       pushedFilters: Boolean, codegenSpans: Int, digest: String, text: String)
@@ -229,7 +230,7 @@ object QueryTrace {
   object Plan extends AdaptiveSparkPlanHelper {
     private val Ids = Seq("#\\d+" -> "#x", "(lambda \\w+)_\\d+" -> "$1_x", "\\*\\(\\d+\\)" -> "*(x)",
       "plan_id=\\d+" -> "plan_id=x", "QueryStage \\d+" -> "QueryStage x", "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda",
-      "@[0-9a-f]+\\b" -> "@x", s"_[0-9a-f]{16}_p${ProcessHandle.current().pid()}\\b" -> "_<run>")
+      "@[0-9a-f]+\\b" -> "@x", "_[0-9a-f]{16}_p\\d+[^,\\s]*" -> "_<run>")
 
     /** The plan `df`'s exec ran: the cached relation's plan when `df`
       * is persisted, else `df`'s own executed plan.
