@@ -65,16 +65,20 @@ final class QueryTrace private (sc: SparkContext) extends SparkListener {
   private val fences = new ConcurrentHashMap[String, CountDownLatch]()
 
   /** Run one query: `build` constructs its DataFrame, `exec` executes
-    * it. Exceptions propagate; the phases that ran stay traced.
+    * it, then the plan it ran is read. Exceptions propagate; the phases
+    * that ran stay traced. Returns the seconds the plan read took, for
+    * a timer around `run` to leave out.
     */
-  def run(name: String)(build: => DataFrame)(exec: DataFrame => Unit): Unit = {
+  def run(name: String)(build: => DataFrame)(exec: DataFrame => Unit): Double = {
     val rec = new Rec(name)
     recs.add(rec)
     val df = phase(rec, Construct)(build)
     try {
       phase(rec, Execute)(exec(df))
+      val t0 = System.nanoTime()
       val plan = Plan.of(df)
       rec.synchronized(rec.plan = Some(plan))
+      (System.nanoTime() - t0) / 1e9
     } finally rec.synchronized {
       rec.planningMs = df.queryExecution.tracker.phases.map { case (k, v) => k -> v.durationMs }
     }
