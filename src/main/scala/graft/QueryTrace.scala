@@ -226,15 +226,17 @@ object QueryTrace {
     * ids (AQE numbers stages as they finish), JVM object and lambda
     * class identities, and per-run scratch locations
     * ([[graft.ops.Staging.stagePath]], to the end of the path Spark may
-    * abbreviate); `digest` is a hash of it.
+    * abbreviate); so is the build key of staged-index locations, so that
+    * two builds that run one plan have one `digest`, a hash of `text`.
     */
   final case class Plan(shuffles: Int, broadcasts: Int, reused: Int, joins: Seq[String],
       pushedFilters: Boolean, codegenSpans: Int, digest: String, text: String)
 
   object Plan extends AdaptiveSparkPlanHelper {
-    private val Ids = Seq("#\\d+" -> "#x", "(lambda \\w+)_\\d+" -> "$1_x", "\\*\\(\\d+\\)" -> "*(x)",
-      "plan_id=\\d+" -> "plan_id=x", "QueryStage \\d+" -> "QueryStage x", "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda",
-      "@[0-9a-f]+\\b" -> "@x", "_[0-9a-f]{16}_p\\d+[^,\\s]*" -> "_<run>")
+    private val Ids = Seq(
+      "#\\d+" -> "#x", "(lambda \\w+)_\\d+" -> "$1_x", "\\*\\(\\d+\\)" -> "*(x)", "plan_id=\\d+" -> "plan_id=x",
+      "QueryStage \\d+" -> "QueryStage x", "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda", "@[0-9a-f]+\\b" -> "@x",
+      "_[0-9a-f]{16}_p\\d+[^,\\s]*" -> "_<run>", "(_e[0-9a-f]{16})_b[0-9a-f]+" -> "$1_b<build>")
 
     /** The plan `df`'s exec ran: the cached relation's plan when `df`
       * is persisted, else `df`'s own executed plan.
