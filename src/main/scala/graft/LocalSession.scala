@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.util.SparkDateTimeUtils
 import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** The one SparkSession factory for the mains and the test suite: a
@@ -33,6 +34,10 @@ object LocalSession {
     confs.foreach { case (k, v) => child.conf.set(k, v) }
     child
   }
+
+  /** `spark`'s session time zone, as Spark resolves it. */
+  def zone(spark: SparkSession): java.time.ZoneId =
+    SparkDateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
 
   /** The one width rule: one partition per `perTask` units of `size`,
     * rounded up, at least `floor` and at most `cap` (the cap wins).

@@ -228,6 +228,10 @@ object QueryTrace {
     * ([[graft.ops.Staging.stagePath]], to the end of the path Spark may
     * abbreviate); so is the build key of staged-index locations, so that
     * two builds that run one plan have one `digest`, a hash of `text`.
+    * A tree string prints a cached relation's whole plan under every
+    * scan of it; `text` keeps the first copy of each distinct block and
+    * cuts every later one to its `InMemoryRelation` line and the line
+    * number of the first.
     */
   final case class Plan(shuffles: Int, broadcasts: Int, reused: Int, joins: Seq[String],
       pushedFilters: Boolean, codegenSpans: Int, digest: String, text: String)
@@ -238,6 +242,43 @@ object QueryTrace {
       "QueryStage \\d+" -> "QueryStage x", "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda", "@[0-9a-f]+\\b" -> "@x",
       "_[0-9a-f]{16}_p\\d+[^,\\s]*" -> "_<run>", "(_e[0-9a-f]{16})_b[0-9a-f]+" -> "$1_b<build>")
 
+    // a tree line's prefix: the ancestors' `:` markers and the indent
+    private val Prefix = """^(?: |:(?!- ))*""".r
+
+    /** `tree` with each repeated cached-relation block, an
+      * `InMemoryRelation` line and the deeper lines under it, cut to
+      * that line and a reference to the line of its first copy.
+      */
+    private def cachedOnce(tree: String): String = {
+      val lines = tree.split("\n", -1)
+      def indent(l: String) = Prefix.findPrefixMatchOf(l).fold(0)(_.end)
+      val out = mutable.ArrayBuffer.empty[String]
+      val first = mutable.Map.empty[String, Int]
+      var i = 0
+      while (i < lines.length) {
+        val l = lines(i)
+        val c = indent(l)
+        if (l.startsWith("InMemoryRelation ", c + 3)) {
+          var end = i + 1
+          while (end < lines.length && indent(lines(end)) > c) end += 1
+          val block = (l +: lines.slice(i + 1, end)).map(_.drop(c)).mkString("\n")
+          first.get(block) match {
+            case Some(at) =>
+              out += s"$l (plan as at line $at)"
+              i = end
+            case None =>
+              first(block) = out.size + 1
+              out += l
+              i += 1
+          }
+        } else {
+          out += l
+          i += 1
+        }
+      }
+      out.mkString("\n")
+    }
+
     /** The plan `df`'s exec ran: the cached relation's plan when `df`
       * is persisted, else `df`'s own executed plan.
       */
@@ -246,7 +287,7 @@ object QueryTrace {
       val p = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
         .map(_.cachedRepresentation.cacheBuilder.cachedPlan).getOrElse(ds.queryExecution.executedPlan)
       val nodes = collectWithSubqueries(p) { case n => n }
-      val text = Ids.foldLeft(p.treeString) { case (t, (re, to)) => t.replaceAll(re, to) }
+      val text = cachedOnce(Ids.foldLeft(p.treeString) { case (t, (re, to)) => t.replaceAll(re, to) })
       Plan(
         nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
         nodes.count(_.isInstanceOf[BroadcastExchangeLike]),

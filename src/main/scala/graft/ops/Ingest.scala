@@ -78,6 +78,11 @@ object Ingest {
     * date partitions present in `batch` — a retry or backfill replaces
     * rather than duplicates. Dynamic overwrite is a writer option, so
     * the caller's session conf is left as it was.
+    *
+    * The write runs `batch`'s plan: a day from
+    * [[graft.streaming.DailyIngest.backfill]] reads only the files that
+    * can hold it and, when they fit one task, is one partition with no
+    * exchange, so the whole load is one job.
     */
   def loadDailyPartitioned(spark: SparkSession, batch: DataFrame, path: String): Unit = {
     batch.write

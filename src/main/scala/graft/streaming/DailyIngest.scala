@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SparkDateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -147,18 +148,38 @@ object DailyIngest {
     * as the stream; pair with Ingest.loadDailyPartitioned so re-running
     * a range replaces those partitions idempotently.
     *
-    * The scan reads only the range: a `ts` bound before the aggregate
-    * covers every row of the kept windows (a kept window starts at or
-    * after `from`'s midnight and ends before `to`'s next midnight plus
-    * 24 hours, in the session zone), and the exact filter on `d` after
-    * it keeps the result unchanged. Spark pushes the bound into the
-    * parquet scan, through `normalizeTs`'s NTZ cast too.
+    * The scan reads only the range, in three steps:
+    *  - A `ts` bound before the aggregate covers every row of the kept
+    *    windows: a kept window starts at or after `from`'s midnight and
+    *    ends before `to`'s next midnight plus 24 hours, in the session
+    *    zone. The exact filter on `d` after it keeps the result
+    *    unchanged. Spark pushes the bound into the parquet scan, through
+    *    `normalizeTs`'s NTZ cast too.
+    *  - Only the data files whose footer `ts` span meets that bound are
+    *    read ([[graft.tables.Tables.eventsTs]]: a driver footer read per
+    *    new file, no job), plus any file whose footer cannot say. A
+    *    daily load thus reads O(new day) files, not the whole history,
+    *    the partition pruning the reference's `where date=...` gets.
+    *  - When the files read fit one task (the width rule at the 4 MB
+    *    per-task target of `StreamEnv`), the scan is one partition.
+    *    Its output is then a single partition, which already satisfies
+    *    the aggregate's and the `orderBy`'s distributions: the plan has
+    *    no exchange, and the whole load is one job. A larger selection
+    *    keeps Spark's split plan.
     */
   def backfill(spark: SparkSession, dir: String,
                from: java.sql.Date, to: java.sql.Date): DataFrame = {
-    val lo = lit(from).cast("timestamp")
-    val hi = date_add(lit(to), 1).cast("timestamp") + expr("INTERVAL 24 HOURS")
-    dailyAgg(graft.tables.Tables.events(spark, dir).filter(col("ts") >= lo && col("ts") < hi))
+    val zone = graft.LocalSession.zone(spark)
+    val lo = from.toLocalDate.atStartOfDay(zone).toInstant
+    val hi = to.toLocalDate.plusDays(1).atStartOfDay(zone).toInstant.plus(java.time.Duration.ofHours(24))
+    val (loUs, hiUs) = (SparkDateTimeUtils.instantToMicros(lo), SparkDateTimeUtils.instantToMicros(hi))
+    val files = graft.tables.Tables.eventsTs(spark, dir)
+      .collect { case (f, span) if span.forall(_.meets(loUs, hiUs)) => f }
+    val scan = graft.tables.Tables.eventsFiles(spark, dir, files.map(_.path))
+    val oneTask = graft.LocalSession.width(files.map(_.length).sum, 4L << 20, 1,
+      spark.sparkContext.defaultParallelism) == 1
+    dailyAgg(graft.tables.Tables.normalizeTs(if (oneTask) scan.coalesce(1) else scan)
+        .filter(col("ts") >= lit(lo) && col("ts") < lit(hi)))
       .filter(col("d").between(lit(from), lit(to)))
       .orderBy("event_type", "d")
   }
@@ -170,14 +191,27 @@ object DailyIngest {
     * `airflow dags backfill -s .. -e ..` re-expressed Kappa-style.
     * The range bound is the only difference from the live pipeline;
     * pairing with `Ingest.loadDailyPartitioned` makes a re-run
-    * replace exactly those partitions. The min-date lookup is one
-    * 1-row driver aggregate (the bounded-driver-state convention).
+    * replace exactly those partitions. The first day is the session
+    * date of the least footer `ts` ([[firstDay]]), no job; only when a
+    * footer cannot give it exactly is it one 1-row driver aggregate
+    * (the bounded-driver-state convention).
     */
   def backfillRange(spark: SparkSession, dir: String): DataFrame = {
-    val ev = graft.tables.Tables.events(spark, dir)
-    val d0 = ev.agg(min(to_date(col("ts"))).as("d0")).head.getDate(0).toLocalDate
+    val d0 = firstDay(spark, dir).getOrElse(graft.tables.Tables.events(spark, dir)
+      .agg(min(to_date(col("ts"))).as("d0")).head().getDate(0).toLocalDate)
     backfill(spark, dir,
       java.sql.Date.valueOf(d0.plusDays(3)), java.sql.Date.valueOf(d0.plusDays(12)))
+  }
+
+  /** The session date of the events' least `ts`, from the footers;
+    * `None` when a file's footer span is missing or not exact, or no
+    * file holds a `ts`.
+    */
+  private def firstDay(spark: SparkSession, dir: String): Option[java.time.LocalDate] = {
+    val spans = graft.tables.Tables.eventsTs(spark, dir).map(_._2)
+    val mins = spans.flatten.filterNot(_.isEmpty).map(_.min)
+    Option.when(spans.forall(_.exists(_.exact)) && mins.nonEmpty)(
+      SparkDateTimeUtils.microsToInstant(mins.min).atZone(graft.LocalSession.zone(spark)).toLocalDate)
   }
 
   val oracleBackfillRange: String =

@@ -1,10 +1,14 @@
 package graft.tables
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession, classic}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -14,6 +18,25 @@ import org.apache.spark.sql.types._
   * length and modification time.
   */
 final case class DataFile(path: String, length: Long, mtime: Long)
+
+/** A span of a data file's `ts` values in µs since the epoch: each
+  * non-null value lies in `[min, max]`, and when `exact` both are
+  * values of the file. `min > max` when the file holds none.
+  */
+final case class TsSpan(min: Long, max: Long, exact: Boolean = true) {
+  def isEmpty: Boolean = min > max
+
+  /** Whether a value of the span can lie in `[lo, hi)`. */
+  def meets(lo: Long, hi: Long): Boolean = max >= lo && min < hi
+
+  def union(lo: Long, hi: Long): TsSpan = TsSpan(math.min(min, lo), math.max(max, hi), exact)
+
+  def shift(by: Long): TsSpan = if (isEmpty) this else TsSpan(min + by, max + by, exact)
+}
+
+object TsSpan {
+  val Empty: TsSpan = TsSpan(Long.MaxValue, Long.MinValue)
+}
 
 /** Loaders for the driver testdata tables (TESTDATA.md / FIXTURES.md
   * §B) and declared schemas for the reference's domain tables
@@ -161,6 +184,80 @@ object Tables {
   /** A reader with the events table's raw schema. */
   private def eventsReader(spark: SparkSession, dir: String): DataFrameReader =
     spark.read.schema(schemaOf(spark, s"$dir/events.parquet"))
+
+  /** Directories whose events footers the `ts` memo keeps; the least recently read goes first. */
+  private val TsMemoDirs = 16
+  private val MicrosPerDay = 86400L * 1000000L
+
+  // qualified events path -> the `ts` span of each file of its latest listing
+  private val tsMemo = new java.util.LinkedHashMap[String, Map[DataFile, Option[TsSpan]]](TsMemoDirs, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Map[DataFile, Option[TsSpan]]]): Boolean =
+      size > TsMemoDirs
+  }
+
+  /** The events data files of `dir` in listing order, each with the span
+    * of the `ts` values [[events]] reads from it, or `None` where its
+    * footer cannot bound them (no statistics, INT96, no `ts` column).
+    * A driver listing and a footer read per file not seen before, no
+    * Spark job: the footer spans are memoized by [[DataFile]] per
+    * directory, and a listing drops the files it no longer holds.
+    *
+    * Values convert as [[normalizeTs]] converts them: NANOS divided by
+    * 1000 as `div` does, MICROS as they are, MILLIS times 1000. A
+    * TIMESTAMP_NTZ read is cast to an instant in the session zone; with
+    * a fixed offset that is exact, otherwise the span widens by a day on
+    * each side (a zone's offset stays within ±18 h) and is not `exact`.
+    */
+  private[graft] def eventsTs(spark: SparkSession, dir: String): Seq[(DataFile, Option[TsSpan])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(s"$dir/events.parquet")
+    val root = p.getFileSystem(conf).makeQualified(p).toString
+    val files = dataFiles(conf, root)
+    val seen = tsMemo.synchronized(Option(tsMemo.get(root))).getOrElse(Map.empty[DataFile, Option[TsSpan]])
+    val spans = files.map(f => f -> seen.getOrElse(f, footerTs(conf, f.path))).toMap
+    tsMemo.synchronized(tsMemo.put(root, spans))
+    val toInstant: TsSpan => TsSpan =
+      if (files.isEmpty || schemaOf(spark, root)("ts").dataType != TimestampNTZType) identity
+      else {
+        val rules = graft.LocalSession.zone(spark).getRules
+        if (rules.isFixedOffset) _.shift(-rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds * 1000000L)
+        else s => if (s.isEmpty) s else TsSpan(s.min - MicrosPerDay, s.max + MicrosPerDay, exact = false)
+      }
+    files.map(f => f -> spans(f).map(toInstant))
+  }
+
+  /** The span of `file`'s INT64 timestamp `ts` from its row groups'
+    * statistics, in µs of its own zone; empty when every row group is
+    * all null in `ts`, `None` when a row group with rows has no usable
+    * statistics or the column is missing or of another type.
+    */
+  private def footerTs(conf: Configuration, file: String): Option[TsSpan] = {
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(new Path(file), conf),
+      ParquetMetadataConverter.NO_FILTER)
+    val unit = meta.getFileMetaData.getSchema.getFields.asScala.find(_.getName == "ts").collect {
+      case t if t.isPrimitive && t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 =>
+        t.getLogicalTypeAnnotation
+    }.collect { case a: TimestampLogicalTypeAnnotation => a.getUnit }
+    val toMicros: Long => Long = unit match {
+      case Some(TimeUnit.NANOS) => _ / 1000
+      case Some(TimeUnit.MILLIS) => _ * 1000
+      case _ => identity
+    }
+    unit.flatMap { _ =>
+      meta.getBlocks.asScala.filter(_.getRowCount > 0).foldLeft(Option(TsSpan.Empty)) { (acc, block) =>
+        acc.flatMap { span =>
+          block.getColumns.asScala.find(_.getPath.toDotString == "ts").flatMap { c =>
+            val s: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+            if (s == null) None
+            else if (s.hasNonNullValue)
+              Some(span.union(toMicros(s.genericGetMin.asInstanceOf[java.lang.Long]),
+                toMicros(s.genericGetMax.asInstanceOf[java.lang.Long])))
+            else Option.when(s.isNumNullsSet && s.getNumNulls == c.getValueCount)(span)
+          }
+        }
+      }
+    }
+  }
 
   /** Canonicalize a raw events relation's `ts` to microsecond
     * TimestampType, dispatching on the physical type the reader saw:

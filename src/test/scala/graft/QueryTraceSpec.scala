@@ -142,4 +142,24 @@ class QueryTraceSpec extends AnyFunSuite {
       assert(!p.text.contains("InMemoryRelation"), p.text)
     }
   }
+
+  test("a cached relation's plan is printed once however often the plan scans it") {
+    val cached = spark.range(0, 1000, 1, 4).selectExpr("id % 7 AS k").groupBy("k").count().cache()
+    try {
+      val df = cached.union(cached.filter("k > 2")).union(cached.filter("k < 5"))
+      exec(df)
+      val p = QueryTrace.Plan.of(df)
+      val lines = p.text.linesIterator.toIndexedSeq
+      // three scans, in the final and in the initial plan: six
+      // relation lines, one with the cached plan under it
+      val refs = lines.flatMap(l => """\(plan as at line (\d+)\)$""".r.findFirstMatchIn(l).map(_.group(1).toInt))
+      assert(lines.count(_.contains("InMemoryRelation")) == 6 && refs.size == 5, p.text)
+      assert(refs.distinct.size == 1 && lines(refs.head - 1).contains("InMemoryRelation"), p.text)
+      assert(lines.count(_.contains("Range (0, 1000")) == 2, p.text) // its final and initial plan
+      // the counts are of plan nodes, where a cached relation is one
+      // scan, not of printed lines
+      assert(p.shuffles == 0 && p.codegenSpans >= 1, p)
+      assert(p == QueryTrace.Plan.of(df))
+    } finally cached.unpersist()
+  }
 }
