@@ -228,6 +228,9 @@ object QueryTrace {
     * ([[graft.ops.Staging.stagePath]], to the end of the path Spark may
     * abbreviate); so is the build key of staged-index locations, so that
     * two builds that run one plan have one `digest`, a hash of `text`.
+    * An array literal longer than [[LongLiteral]] characters (a PQ
+    * codebook prints every value) is cut to its value count and a hash
+    * of its text, so two different literals still digest differently.
     * A tree string prints a cached relation's whole plan under every
     * scan of it; `text` keeps the first copy of each distinct block and
     * cuts every later one to its `InMemoryRelation` line and the line
@@ -241,6 +244,16 @@ object QueryTrace {
       "#\\d+" -> "#x", "(lambda \\w+)_\\d+" -> "$1_x", "\\*\\(\\d+\\)" -> "*(x)", "plan_id=\\d+" -> "plan_id=x",
       "QueryStage \\d+" -> "QueryStage x", "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda", "@[0-9a-f]+\\b" -> "@x",
       "_[0-9a-f]{16}_p\\d+[^,\\s]*" -> "_<run>", "(_e[0-9a-f]{16})_b[0-9a-f]+" -> "$1_b<build>")
+
+    private val LongLiteral = 200
+    private val ArrayLiteral = s"\\[[\\[\\]0-9eE.,+-]{$LongLiteral,}\\]".r
+
+    private def sha256(t: String): Array[Byte] =
+      java.security.MessageDigest.getInstance("SHA-256").digest(t.getBytes("UTF-8"))
+
+    private def shortLiterals(tree: String): String =
+      ArrayLiteral.replaceAllIn(tree, m =>
+        s"[${m.matched.count(_ == ',') + 1} values sha ${sha256(m.matched).take(4).map("%02x".format(_)).mkString}]")
 
     // a tree line's prefix: the ancestors' `:` markers and the indent
     private val Prefix = """^(?: |:(?!- ))*""".r
@@ -287,7 +300,7 @@ object QueryTrace {
       val p = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
         .map(_.cachedRepresentation.cacheBuilder.cachedPlan).getOrElse(ds.queryExecution.executedPlan)
       val nodes = collectWithSubqueries(p) { case n => n }
-      val text = cachedOnce(Ids.foldLeft(p.treeString) { case (t, (re, to)) => t.replaceAll(re, to) })
+      val text = cachedOnce(shortLiterals(Ids.foldLeft(p.treeString) { case (t, (re, to)) => t.replaceAll(re, to) }))
       Plan(
         nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
         nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
@@ -298,8 +311,7 @@ object QueryTrace {
           case _ => false
         },
         nodes.count(_.isInstanceOf[WholeStageCodegenExec]),
-        java.security.MessageDigest.getInstance("SHA-256").digest(text.getBytes("UTF-8"))
-          .take(8).map("%02x".format(_)).mkString,
+        sha256(text).take(8).map("%02x".format(_)).mkString,
         text)
     }
   }

@@ -103,17 +103,12 @@ object Curation {
         .filter(col("df") > MaxNgramDf)
         .select("h")
         .localCheckpoint() // tiny; reused by the dc_train anti-join
-      put("dc_hot", p =>
-        hot.write.mode("overwrite").parquet(p))
-      put("dc_eval", p =>
-        ex.filter(col("split") === "test")
-          .select(col("h"), col("doc_id").as("eval_id"))
-          .write.mode("overwrite").parquet(p))
-      put("dc_train", p =>
+      put("dc_hot", hot)
+      put("dc_eval", ex.filter(col("split") === "test").select(col("h"), col("doc_id").as("eval_id")))
+      put("dc_train",
         ex.filter(col("split") === "train")
           .select(col("h"), col("doc_id").as("train_id"))
-          .join(broadcast(hot), Seq("h"), "left_anti")
-          .write.mode("overwrite").parquet(p))
+          .join(broadcast(hot), Seq("h"), "left_anti"))
       ex.unpersist()
     }
     (staged(0), staged(1), staged(2))

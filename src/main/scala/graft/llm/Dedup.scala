@@ -151,14 +151,13 @@ object Dedup {
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
         .distinct()
       val rdocs = docs.join(repIds, Seq("doc_id"), "left_semi")
-      put("rep_scored", p =>
+      put("rep_scored",
         cand
           .join(rdocs.select(col("doc_id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
           .join(rdocs.select(col("doc_id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
           .select(col("id_a"), col("id_b"),
             graft.expr.VectorFunctions.sortedIntersectCount(col("hs_a"), col("hs_b")).as("inter"),
-            size(col("hs_a")).as("sza"), size(col("hs_b")).as("szb"))
-          .write.mode("overwrite").parquet(p))
+            size(col("hs_a")).as("sza"), size(col("hs_b")).as("szb")))
     }
     Tables.parquet(spark, loc)
   }
@@ -459,12 +458,11 @@ object Dedup {
       // no broadcast hint: the planner broadcasts the checkpointed label
       // relation when it fits and falls back to a doc_id-keyed shuffle
       // join when the near-dup vertex set is large
-      put("cc_labels", p =>
+      put("cc_labels",
         corpus(spark, dir)
           .select(col("doc_id"))
           .join(labels, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label"))
-          .write.mode("overwrite").parquet(p))
+          .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("label")))
       // labels live in parquet now — every cache behind them can go
       (pairs +: caches).foreach(_.unpersist())
     }
@@ -1025,21 +1023,19 @@ object Dedup {
       val sh = existing.repartition(col("doc_id"))
         .select(col("doc_id"), sort_array(TextHash.hashedShingles(col("text"), 0)).as("hs"))
         .persist()
-      put("ci_shingles", p => sh.write.mode("overwrite").parquet(p))
-      put("ci_bands", p => bandsFrom(sh).write.mode("overwrite").parquet(p))
+      put("ci_shingles", sh)
+      put("ci_bands", bandsFrom(sh))
       sh.unpersist()
       // sizing count is parquet-metadata-only; the key scan is 1 pass
       val bloom = existing
         .select(TextHash.phash(col("text"), 0).as("k"))
         .stat.bloomFilter("k", existing.count(), 0.001)
-      put("ci_bloom", { p =>
+      put.files("ci_bloom") { p =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
         val os = new java.io.FileOutputStream(new java.io.File(p, BloomFile))
         try bloom.writeTo(os) finally os.close()
-      })
-      put("ci_exact", p =>
-        existing.groupBy(md5(col("text")).as("h")).agg(min("doc_id").as("dup_of"))
-          .write.mode("overwrite").parquet(p))
+      }
+      put("ci_exact", existing.groupBy(md5(col("text")).as("h")).agg(min("doc_id").as("dup_of")))
     }
 
   /** d23 — INCREMENTAL dedup: classify an incoming batch against an
@@ -1168,7 +1164,7 @@ object Dedup {
       val matches1 = exactIdx.join(broadcast(b1k.select("h").distinct()), Seq("h"))
       val accepted = b1k.join(broadcast(matches1.select("h")), Seq("h"), "left_anti")
         .groupBy("h").agg(min("doc_id").as("dup_of"))
-      put("ci_exact_gen1", p => exactIdx.unionByName(accepted).write.mode("overwrite").parquet(p))
+      put("ci_exact_gen1", exactIdx.unionByName(accepted))
     }
     Tables.parquet(spark, loc)
   }
@@ -1385,16 +1381,14 @@ object Dedup {
   private[graft] def ccIndexPaths(spark: SparkSession, dir: String): Seq[String] =
     graft.ops.Staging.indexes(dir, "cc_sh", "cc_bands") { put =>
       val sh = docShingles(spark, dir).persist()
-      put("cc_bands", p => bandsFrom(sh).write.mode("overwrite").parquet(p))
+      put("cc_bands", bandsFrom(sh))
       // stage the hash arrays SORTED: every downstream exact verify
       // (d03/d25/d32/d37/s13) then runs the native two-pointer
       // [[graft.expr.SortedIntersectCount]] with zero per-row sort —
       // the one O(n log n) pass is paid once per corpus era here.
       // No consumer is order-sensitive (minhash/array_intersect/
       // explode are all set-shaped; asserted by the d02 band oracle).
-      put("cc_sh", p =>
-        sh.select(col("doc_id"), sort_array(col("hs")).as("hs"))
-          .write.mode("overwrite").parquet(p))
+      put("cc_sh", sh.select(col("doc_id"), sort_array(col("hs")).as("hs")))
       sh.unpersist()
     }
 
@@ -1856,10 +1850,10 @@ object Dedup {
   private[graft] def contentFamilies(spark: SparkSession, dir: String): DataFrame =
     // staged like the shingle/band tables — family membership is a
     // corpus-index artifact
-    Tables.parquet(spark, graft.ops.Staging.index(dir, "ap_families") { p =>
+    Tables.parquet(spark, graft.ops.Staging.index(dir, "ap_families") {
       val fam = corpus(spark, dir).select(col("doc_id"), md5(col("text")).as("ck"))
       val reps = fam.groupBy("ck").agg(min("doc_id").as("rep"))
-      fam.join(reps, Seq("ck")).write.mode("overwrite").parquet(p)
+      fam.join(reps, Seq("ck"))
     })
 
   /** Family-contracted near-dup graph for the d36/d38/d39 graph trio
@@ -1905,16 +1899,15 @@ object Dedup {
     * [[contractedPairGraph]]; jaccard is retained for d51's threshold
     * sweep.
     */
-  private def repGraph(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def repGraph(spark: SparkSession, dir: String): DataFrame = {
     val Seq(loc) = graft.ops.Staging.indexes(dir, "rep_graph") { put =>
       // derived from the SHARED staged rep-level verify (one band join
       // + sorted-intersect pass per era serves d03/d25/this graph)
       val rs = repScored(spark, dir)
-      put("rep_graph", p =>
+      put("rep_graph",
         rs.select(col("id_a"), col("id_b"),
             (col("inter").cast("double") / (col("sza") + col("szb") - col("inter"))).as("jaccard"))
-          .filter(col("jaccard") >= JaccardThreshold)
-          .write.mode("overwrite").parquet(p))
+          .filter(col("jaccard") >= JaccardThreshold))
     }
     Tables.parquet(spark, loc)
   }
@@ -2002,13 +1995,12 @@ object Dedup {
       val dfreq = tok.groupBy("h").agg(count(lit(1)).as("df"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy("df", "h")
-      put("ap_prefix", p =>
+      put("ap_prefix",
         tok.join(dfreq, Seq("h"))
           .withColumn("rnk", row_number().over(w))
           // prefix length |d| − ⌈4|d|/5⌉ + 1, integer-exact at t = 4/5
           .where(col("rnk") <= col("sz") - expr("(4 * sz + 4) div 5") + 1)
-          .select(col("doc_id"), col("sz"), col("h"), col("rnk"))
-          .write.mode("overwrite").parquet(p))
+          .select(col("doc_id"), col("sz"), col("h"), col("rnk")))
     }
     Tables.parquet(spark, loc)
   }

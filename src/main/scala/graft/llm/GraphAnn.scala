@@ -179,17 +179,10 @@ object GraphAnn {
       val maxRow = b.agg(max(lvl)).head()
       require(!maxRow.isNullAt(0), s"graphIndex: no embeddings under $dir")
       val maxLevel = maxRow.getInt(0)
-      put("g71_e1", p =>
-        edgesFor(b.filter(pmod(col("lh"), lit(4L)) === 0))
-          .write.mode("overwrite").parquet(p))
-      put("g71_e2", p =>
-        edgesFor(b.filter(pmod(col("lh"), lit(16L)) === 0))
-          .write.mode("overwrite").parquet(p))
-      put("g71_top", p =>
-        b.filter(lvl === maxLevel).select(col("vec_id"), col("embedding"))
-          .distinct().write.mode("overwrite").parquet(p))
-      put("g71_e0", p =>
-        edgesFor(b).write.mode("overwrite").parquet(p))
+      put("g71_e1", edgesFor(b.filter(pmod(col("lh"), lit(4L)) === 0)))
+      put("g71_e2", edgesFor(b.filter(pmod(col("lh"), lit(16L)) === 0)))
+      put("g71_top", b.filter(lvl === maxLevel).select(col("vec_id"), col("embedding")).distinct())
+      put("g71_e0", edgesFor(b))
       b.unpersist()
     }
     val Seq(e0, e1, e2, top) = locs.map(Tables.parquet(spark, _))

@@ -241,11 +241,10 @@ object Similarity {
     * NumQueries·k work, corpus-free.
     */
   private[graft] def ivfIndex(spark: SparkSession, dir: String): DataFrame = {
-    val loc = graft.ops.Staging.index(dir, "ivf_assign")(p =>
+    val loc = graft.ops.Staging.index(dir, "ivf_assign")(
       cellRanked(spark, dir, Seq("embedding"))
         .filter(col("crank") <= NProbe)
-        .select(col("vec_id"), col("embedding"), col("cell"), col("crank"), col("cscore"))
-        .write.mode("overwrite").parquet(p))
+        .select(col("vec_id"), col("embedding"), col("cell"), col("crank"), col("cscore")))
     Tables.parquet(spark, loc)
   }
 

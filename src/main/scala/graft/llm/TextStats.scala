@@ -140,10 +140,8 @@ object TextStats {
     val scoreCols = LangMarkers.map { case (lang, ms) =>
       markerCount(toks, ms).as(s"score_$lang")
     }
-    val loc = graft.ops.Staging.index(dir, "lang_scores")(p =>
-      Tables.documents(spark, dir)
-        .select((col("doc_id") +: col("lang") +: scoreCols): _*)
-        .write.mode("overwrite").parquet(p))
+    val loc = graft.ops.Staging.index(dir, "lang_scores")(
+      Tables.documents(spark, dir).select((col("doc_id") +: col("lang") +: scoreCols): _*))
     Tables.parquet(spark, loc)
   }
 

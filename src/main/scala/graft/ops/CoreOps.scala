@@ -786,7 +786,7 @@ object CoreOps {
     Seq("l_orderkey", "l_partkey", "l_quantity", "l_returnflag", "l_shipdate")
 
   private[graft] def profileIndex(spark: SparkSession, dir: String): DataFrame = {
-    val loc = Staging.index(dir, "profile") { p =>
+    val loc = Staging.index(dir, "profile") {
       // one aggregate per column, unioned — NOT five count_distincts in
       // one agg: multiple exact distinct aggregates plan as an Expand
       // that multiplies every fact row by (n_distinct_aggs + 1) before
@@ -807,7 +807,6 @@ object CoreOps {
           .select(lit(c).as("column"), col("n_rows"), col("n_null"), col("n_distinct"))
       }
       legs.reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(p)
     }
     Tables.parquet(spark, loc)
   }

@@ -11,55 +11,16 @@ import org.apache.spark.sql.SparkSession
   * paid the whole corpus-index build inside its timed window and
   * breached caps calibrated on warm references (BENCH_r06 rc=1).
   *
-  * Each entry forces one index family through its owning builder; the
-  * builders are the same [[Staging.indexes]]-staged functions the
-  * queries call, so a prestaged index is byte-identical to a
-  * query-built one and a second call is a metadata-only cache hit.
+  * It walks [[Staging.Families]] and forces each family through the
+  * builder declared with it, the same [[Staging.indexes]]-staged
+  * function the queries call, so a prestaged index is byte-identical
+  * to a query-built one and a second call is a metadata-only cache hit.
   * Per-tag build seconds land in [[Staging.drainBuildLog]] for the
   * bench's `staging` report. Bench also drains the build log around
-  * every timed query and caps the query's NON-staging seconds; the
-  * list covers every declared tag (spec-checked) so the reported
-  * per-query numbers stay warm.
+  * every timed query and caps the query's NON-staging seconds; with every
+  * declared tag built here, the reported per-query numbers stay warm.
   */
 object Prestage {
-
-  /** (index-family label, builder) — builder forces the publish. */
-  private def builders(spark: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
-    // exact-content families (ap_families): the contraction every
-    // pairwise stage rides
-    "families" -> (() => { graft.llm.Dedup.contentFamilies(spark, dir); () }),
-    // corpus shingle + band pair (cc_sh/cc_bands): d02/d03/d25/d32/s13
-    "cc_index" -> (() => { graft.llm.Dedup.ccIndex(spark, dir); () }),
-    // rep-level verified candidate scores (rep_scored): d03/d25/d35/d37
-    "rep_scored" -> (() => { graft.llm.Dedup.repScored(spark, dir); () }),
-    // thresholded rep edge graph (rep_graph): d36/d38/d39/d41/d51
-    "rep_graph" -> (() => { graft.llm.Dedup.contractedPairGraph(spark, dir); () }),
-    // near-dup cluster labels (cc_labels): d11/d12 and every keep-one consumer
-    "cc_labels" -> (() => { graft.llm.Dedup.clusterLabels(spark, dir); () }),
-    // incremental-dedup corpus index (ci_exact/ci_shingles/ci_bands/ci_bloom)
-    "ci_index" -> (() => { graft.llm.Dedup.corpusIndex(spark, dir); () }),
-    // d30's generation-1 exact index (ci_exact_gen1), derived from ci_exact
-    "ci_gen1" -> (() => { graft.llm.Dedup.gen1Index(spark, dir); () }),
-    // PPJoin prefix posting index (ap_prefix): d43 all-pairs
-    "ap_prefix" -> (() => { graft.llm.Dedup.prefixIndex(spark, dir); () }),
-    // decontamination n-gram posting trio (dc_hot/dc_eval/dc_train): d18/t22/s21
-    "dc_index" -> (() => { graft.llm.Curation.decontamIndex(spark, dir); () }),
-    // per-doc language-marker scores (lang_scores): t01/t25/t37
-    "lang_scores" -> (() => { graft.llm.TextStats.langScoresIndex(spark, dir); () }),
-    // per-column lineitem quality profile (profile): q46 — the exact
-    // distinct counts are the priciest fact pass; once per era
-    "profile" -> (() => { graft.ops.CoreOps.profileIndex(spark, dir); () }),
-    // bucketed gen-2 stream feed (s13_feed): s13 copies it per run
-    "s13_feed" -> (() => { graft.streaming.StreamCluster.stageFeed(spark, dir); () }),
-    // IVF inverted file (ivf_assign): d08/d24/d33/d40/d46/d50/d58/d70,
-    // and g71's build input — must precede g71_graph
-    "ivf_assign" -> (() => { graft.llm.Similarity.ivfIndex(spark, dir); () }),
-    // layered graph-ANN index (g71_e0/e1/e2/top): d71 + the d40 leg
-    "g71_graph" -> (() => { graft.llm.GraphAnn.graphIndex(spark, dir); () }),
-    // z-ordered / date-sorted / stats-indexed orders layouts: q47/q48/q49
-    "zorder" -> (() => { graft.ops.ZOrder.stageZOrdered(spark, dir); () }),
-    "date_sorted" -> (() => { graft.ops.ZOrder.stageDateSorted(spark, dir); () }),
-    "stats_index" -> (() => { graft.ops.ZOrder.statsIndex(spark, dir); () }))
 
   /** Force-build all staged indexes for `dir`; returns per-tag build
     * seconds (empty entries elided — a warm index records nothing).
@@ -69,7 +30,7 @@ object Prestage {
     */
   def run(spark: SparkSession, dir: String): Map[String, Double] = {
     Staging.drainBuildLog(): Unit // discard any earlier-phase builds
-    builders(spark, dir).foreach { case (_, f) => f() }
+    Staging.Families.foreach(_.build(spark, dir))
     Staging.drainBuildLog()
   }
 }

@@ -103,8 +103,8 @@ object PricingService {
 
   // keyed by qualified directory and session time zone (`normalizeTs`
   // and `year()` read the zone); α also by its clamp bounds
-  private val alphaMemo = lru[(String, String, Double, Double), AlphaMemo]
-  private val eventsMemo = lru[(String, String), EventsMemo]
+  private val alphaMemo = lru[(String, java.time.ZoneId, Double, Double), AlphaMemo]
+  private val eventsMemo = lru[(String, java.time.ZoneId), EventsMemo]
 
   private def memoGet[K, V](m: java.util.LinkedHashMap[K, V], k: K): Option[V] =
     m.synchronized(Option(m.get(k)))
@@ -112,20 +112,15 @@ object PricingService {
   private def memoPut[K, V](m: java.util.LinkedHashMap[K, V], k: K, v: V): Unit =
     m.synchronized(m.put(k, v)): Unit
 
-  private def zone(spark: SparkSession): String = spark.conf.get("spark.sql.session.timeZone")
-
   private def qualified(spark: SparkSession, path: String): Path = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
   }
 
-  private def listing(spark: SparkSession, path: String): Seq[DataFile] =
-    Tables.dataFiles(spark.sparkContext.hadoopConfiguration, path)
-
   private def alpha(spark: SparkSession, dir: String, lo: Double, hi: Double): Map[String, Double] = {
     val inputs = Seq("customer", "nation", "region", "orders")
-      .map(t => listing(spark, s"$dir/$t.parquet"))
-    val key = (qualified(spark, dir).toString, zone(spark), lo, hi)
+      .map(t => Tables.dataFiles(spark.sparkContext.hadoopConfiguration, s"$dir/$t.parquet"))
+    val key = (qualified(spark, dir).toString, graft.LocalSession.zone(spark), lo, hi)
     memoGet(alphaMemo, key).filter(_.inputs == inputs).map(_.alpha).getOrElse {
       val alpha = Pricing.regionAlpha(spark, dir, lo, hi).collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -136,9 +131,9 @@ object PricingService {
 
   private def modulation(spark: SparkSession, dir: String): Double = {
     val root = qualified(spark, s"$dir/events.parquet")
-    val files = listing(spark, root.toString)
+    val files = Tables.dataFiles(spark.sparkContext.hadoopConfiguration, root.toString)
     val listed = files.toSet
-    val key = (root.toString, zone(spark))
+    val key = (root.toString, graft.LocalSession.zone(spark))
     val prior = memoGet(eventsMemo, key)
     val seen = prior.map(_.files).getOrElse(Map.empty[DataFile, Partial])
     val scanned = seen.filter { case (f, _) => listed(f) } ++

@@ -107,10 +107,9 @@ object Skew {
     // skewed reduce partition finer split boundaries AND more map-side
     // parallelism at stress scale, while the gate plan is unchanged by
     // construction.
-    val loc = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-    val fs = loc.getFileSystem(ss.sparkContext.hadoopConfiguration)
-    val width = graft.LocalSession.width(fs.getContentSummary(loc).getLength, 4L << 20, 8,
-      ss.sparkContext.defaultParallelism)
+    val bytes = Tables.dataFiles(ss.sparkContext.hadoopConfiguration, s"$dir/lineitem.parquet")
+      .map(_.length).sum
+    val width = graft.LocalSession.width(bytes, 4L << 20, 8, ss.sparkContext.defaultParallelism)
     val li = base.select(hotKey, col("l_extendedprice")).repartition(width)
     // the dim is materialized (localCheckpoint) so the join sees a
     // plain leaf on that side: OptimizeSkewedJoin only rewrites an SMJ

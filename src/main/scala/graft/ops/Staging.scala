@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.llm.{Curation, Dedup, GraphAnn, Similarity, TextStats}
+import graft.streaming.StreamCluster
 import graft.tables.Tables
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -87,32 +89,40 @@ object Staging {
     */
   private val IndexRoot = "/tmp/graft_stage"
 
-  /** Staged-index tags that one builder writes together, and the
-    * dataset tables they derive from, directly or through the indexes
-    * they read.
+  /** Staged-index tags that one builder writes together, the dataset
+    * tables they derive from, directly or through the indexes they
+    * read, and `build`, the call that forces them: the builder the
+    * queries call, so [[Prestage]] stages exactly what a first query
+    * would.
     */
-  private final case class Family(tags: Seq[String], reads: Seq[String])
+  private[ops] final case class Family(tags: Seq[String], reads: Seq[String],
+      build: (SparkSession, String) => Unit)
 
-  private val Families: Seq[Family] = {
+  /** Every staged-index family. [[Prestage]] builds them in this order;
+    * a builder that reads another family's index builds it first
+    * (nested, under that index's own lock and tags), so the order only
+    * decides which family pays for a shared input.
+    */
+  private[ops] val Families: Seq[Family] = {
     val docs = Seq("documents")
     Seq(
-      Family(Seq("ap_families"), docs),
-      Family(Seq("cc_sh", "cc_bands"), docs),
-      Family(Seq("rep_scored"), docs),
-      Family(Seq("rep_graph"), docs),
-      Family(Seq("cc_labels"), docs),
-      Family(Seq("ci_exact", "ci_shingles", "ci_bands", "ci_bloom"), docs),
-      Family(Seq("ci_exact_gen1"), docs),
-      Family(Seq("ap_prefix"), docs),
-      Family(Seq("dc_hot", "dc_eval", "dc_train"), docs),
-      Family(Seq("lang_scores"), docs),
-      Family(Seq("s13_feed"), docs),
-      Family(Seq("ivf_assign"), Seq("embeddings")),
-      Family(Seq("g71_e0", "g71_e1", "g71_e2", "g71_top"), Seq("embeddings")),
-      Family(Seq("orders_zorder"), Seq("orders")),
-      Family(Seq("orders_bydate"), Seq("orders")),
-      Family(Seq("orders_stats_index"), Seq("orders")),
-      Family(Seq("profile"), Seq("lineitem")))
+      Family(Seq("ap_families"), docs, Dedup.contentFamilies(_, _)),
+      Family(Seq("cc_sh", "cc_bands"), docs, Dedup.ccIndexPaths(_, _)),
+      Family(Seq("rep_scored"), docs, Dedup.repScored(_, _)),
+      Family(Seq("rep_graph"), docs, Dedup.repGraph(_, _)),
+      Family(Seq("cc_labels"), docs, Dedup.clusterLabelsPath(_, _)),
+      Family(Seq("ci_exact", "ci_shingles", "ci_bands", "ci_bloom"), docs, Dedup.corpusIndexPaths(_, _)),
+      Family(Seq("ci_exact_gen1"), docs, Dedup.gen1Index(_, _)),
+      Family(Seq("ap_prefix"), docs, Dedup.prefixIndex(_, _)),
+      Family(Seq("dc_hot", "dc_eval", "dc_train"), docs, Curation.decontamIndex(_, _)),
+      Family(Seq("lang_scores"), docs, TextStats.langScoresIndex(_, _)),
+      Family(Seq("s13_feed"), docs, StreamCluster.stageFeed(_, _)),
+      Family(Seq("ivf_assign"), Seq("embeddings"), Similarity.ivfIndex(_, _)),
+      Family(Seq("g71_e0", "g71_e1", "g71_e2", "g71_top"), Seq("embeddings"), GraphAnn.graphIndex(_, _)),
+      Family(Seq("orders_zorder"), Seq("orders"), ZOrder.stageZOrdered(_, _)),
+      Family(Seq("orders_bydate"), Seq("orders"), ZOrder.stageDateSorted(_, _)),
+      Family(Seq("orders_stats_index"), Seq("orders"), ZOrder.statsIndex(_, _)),
+      Family(Seq("profile"), Seq("lineitem"), CoreOps.profileIndex(_, _)))
   }
 
   /** Every declared staged-index tag. */
@@ -203,8 +213,19 @@ object Staging {
     b.result()
   }
 
-  /** Writes one tag of a family: `put(tag, write)` runs `write(tmpDir)`. */
-  private[graft] type Put = (String, String => Unit) => Unit
+  /** Stages the tags of one family's build ([[indexes]]). */
+  private[graft] final class Put private[Staging] (stage: (String, String => Unit) => Unit) {
+
+    /** Stage `df` as `tag`'s index, written as parquet. `df` is built
+      * only when the tag is not yet published.
+      */
+    def apply(tag: String, df: => DataFrame): Unit = stage(tag, df.write.mode("overwrite").parquet(_))
+
+    /** Stage `tag` by `write(dir)`: an index that is not one parquet
+      * frame (a serialized sketch, a partitioned feed).
+      */
+    def files(tag: String)(write: String => Unit): Unit = stage(tag, write)
+  }
 
   private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
@@ -222,20 +243,20 @@ object Staging {
     *    recomputed on every call (there is no memo, so an append inside
     *    a running JVM is seen at once), and the build is [[buildKey]].
     *  - Family. The family counts as present only when every tag is
-    *    published. Otherwise `build` runs and calls `put(tag, write)`
-    *    once per tag; `put` skips a tag already published (by a killed
-    *    build's earlier step or another process) and times the others
-    *    into [[drainBuildLog]]. Work shared by several tags goes in
-    *    `build` before the `put`s; other builders it calls (the indexes
-    *    this one reads) also go there. The rest of `build`'s wall time,
-    *    less the `put`s and the builds nested in it (which log their
-    *    own tags), is logged under the family's first tag, so every
-    *    second of a build is logged once.
+    *    published. Otherwise `build` runs and calls `put(tag, df)` (or
+    *    [[Put.files]]) once per tag; `put` skips a tag already published
+    *    (by a killed build's earlier step or another process), writes
+    *    the others and times each write into [[drainBuildLog]]. Work
+    *    shared by several tags goes in `build` before the `put`s; other
+    *    builders it calls (the indexes this one reads) also go there.
+    *    The rest of `build`'s wall time, less the `put`s and the builds
+    *    nested in it (which log their own tags), is logged under the
+    *    family's first tag, so every second of a build is logged once.
     *  - Lock. Builds of one key are serialized in this JVM by a lock of
     *    that key; a builder that reads another index takes that
     *    index's lock inside its own, in the acyclic order of the
     *    declared dependencies. Reads of a complete family take no lock.
-    *  - Publish. `write` fills a `<location>.tmp_p<pid>` directory that
+    *  - Publish. The write fills a `<location>.tmp_p<pid>` directory that
     *    is then renamed to the location with a no-replace atomic move,
     *    so a location only ever appears complete. The loser of a race
     *    with another process deletes its copy and adopts the winner's,
@@ -252,7 +273,7 @@ object Staging {
         if (!family.tags.forall(published)) {
           scratchBase: Unit // reap dead runs' tmp copies first
           val (t0, logged0) = (System.nanoTime(), loggedHere.get)
-          build((tag, write) => if (!published(tag)) publish(tag, locs(tag), write))
+          build(new Put((tag, write) => if (!published(tag)) publish(tag, locs(tag), write)))
           recordBuild(family.tags.head,
             math.max(0.0, (System.nanoTime() - t0) / 1e9 - (loggedHere.get - logged0)))
           val missing = family.tags.filterNot(published)
@@ -263,8 +284,8 @@ object Staging {
   }
 
   /** [[indexes]] for a one-tag family. */
-  private[graft] def index(dir: String, tag: String)(write: String => Unit): String =
-    indexes(dir, tag)(_(tag, write)).head
+  private[graft] def index(dir: String, tag: String)(df: => DataFrame): String =
+    indexes(dir, tag)(_(tag, df)).head
 
   private def publish(tag: String, loc: String, write: String => Unit): Unit = {
     import java.nio.file.{Files, FileSystemException, Paths, StandardCopyOption}

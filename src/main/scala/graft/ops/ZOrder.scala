@@ -67,7 +67,7 @@ object ZOrder {
     * staged relation.
     */
   private[graft] def stageZOrdered(spark: SparkSession, dir: String): DataFrame =
-    Tables.parquet(spark, Staging.index(dir, "orders_zorder") { p =>
+    Tables.parquet(spark, Staging.index(dir, "orders_zorder") {
       val base = dims(spark, dir)
       val bounds = base.agg(
         min("o_custkey").as("ck_lo"), max("o_custkey").as("ck_hi"),
@@ -79,18 +79,16 @@ object ZOrder {
         .select("o_orderkey", "o_custkey", "order_day", "o_totalprice", "z")
         .repartitionByRange(ZFiles, col("z"))
         .sortWithinPartitions("z")
-        .write.mode("overwrite").parquet(p)
     })
 
   /** Comparison layout for the spec: the SAME rows range-partitioned on
     * the date alone — the single-dimension sort a naive pipeline ships.
     */
   private[graft] def stageDateSorted(spark: SparkSession, dir: String): DataFrame =
-    Tables.parquet(spark, Staging.index(dir, "orders_bydate") { p =>
+    Tables.parquet(spark, Staging.index(dir, "orders_bydate") {
       dims(spark, dir).drop("day_nr")
         .repartitionByRange(ZFiles, col("order_day"))
         .sortWithinPartitions("order_day")
-        .write.mode("overwrite").parquet(p)
     })
 
   /** q54 — a two-dimensional box probe served FROM the z-ordered
@@ -129,13 +127,12 @@ object ZOrder {
   private[graft] def statsIndex(spark: SparkSession, dir: String): DataFrame = {
     val Seq(loc) = Staging.indexes(dir, "orders_stats_index") { put =>
       val z = stageZOrdered(spark, dir)
-      put("orders_stats_index", p =>
+      put("orders_stats_index",
         z.groupBy(input_file_name().as("file"))
           .agg(count(lit(1)).as("n_rows"),
             min("o_totalprice").as("min_price"),
             max("o_totalprice").as("max_price"),
-            sum(CoreOps.gridUnits(col("o_totalprice"))).as("cents"))
-          .write.mode("overwrite").parquet(p))
+            sum(CoreOps.gridUnits(col("o_totalprice"))).as("cents")))
     }
     Tables.parquet(spark, loc)
   }

@@ -57,12 +57,12 @@ object StreamCluster {
     * location.
     */
   private[graft] def stageFeed(spark: SparkSession, dir: String): String =
-    graft.ops.Staging.index(dir, "s13_feed") { p =>
+    graft.ops.Staging.indexes(dir, "s13_feed")(_.files("s13_feed") { p =>
       Dedup.gen2Batch(spark, dir)
         .withColumn("bucket", pmod(col("doc_id"), lit(NumBatches)))
         .repartition(col("bucket"))
         .write.partitionBy("bucket").parquet(p)
-    }
+    }).head
 
   def clusterMaintain(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSession(spark)

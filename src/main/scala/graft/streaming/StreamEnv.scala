@@ -33,20 +33,16 @@ object StreamEnv {
     * commutative or explicitly sorted), so only wall time changes; the
     * oracle gate checks that per SF.
     */
-  private val sizedBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  def sizedParts(spark: SparkSession, dir: String): Int =
+    LocalSession.width(eventsBytes(spark, dir), 4L << 20, 4, spark.sparkContext.defaultParallelism)
 
-  def sizedParts(spark: SparkSession, dir: String): Int = {
-    // memoized per dir: the recursive summary walk repeats per
-    // streamSessionFor call otherwise; a dir without an events table
-    // falls back to the floor instead of throwing from session setup
-    val bytes = sizedBytesCache.computeIfAbsent(dir, d => {
-      val p = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    })
-    LocalSession.width(bytes, 4L << 20, 4, spark.sparkContext.defaultParallelism)
-  }
+  /** The bytes of `<dir>/events.parquet`'s data files
+    * ([[graft.tables.Tables.dataFiles]]), listed on every call, so an
+    * append is seen at once; 0 when there is no events table.
+    */
+  private[graft] def eventsBytes(spark: SparkSession, dir: String): Long =
+    graft.tables.Tables.dataFiles(spark.sparkContext.hadoopConfiguration, s"$dir/events.parquet")
+      .map(_.length).sum
 
   /** Width for a DENSE in-batch repartition (s13's shingle fold, s16's
     * n-gram explode): sized from the micro-batch's ROW count — the

@@ -9,7 +9,7 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession, classic}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Row, SparkSession, classic}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -177,9 +177,13 @@ object Tables {
   private[graft] def eventsRaw(spark: SparkSession, dir: String): DataFrame =
     eventsReader(spark, dir).parquet(s"$dir/events.parquet")
 
-  /** Some of the events table's data files, read with its raw schema. */
+  /** Some of the events table's data files, read with its raw schema;
+    * no file is an empty relation of that schema (no scan, no
+    * `_metadata` column), not a read of no paths.
+    */
   private[graft] def eventsFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame =
-    eventsReader(spark, dir).parquet(files: _*)
+    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schemaOf(spark, s"$dir/events.parquet"))
+    else eventsReader(spark, dir).parquet(files: _*)
 
   /** A reader with the events table's raw schema. */
   private def eventsReader(spark: SparkSession, dir: String): DataFrameReader =

@@ -8,6 +8,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -119,7 +120,9 @@ class DailyLoadSpec extends AnyFunSuite with BeforeAndAfterAll {
         check(spark, dir, "2024-01-30", "2024-01-30", Set("span.parquet"))
         // a range that meets no file: an empty result of the same schema
         check(spark, dir, "2023-12-01", "2023-12-02", Set.empty)
-        assert(DailyIngest.backfill(spark, dir.toString, d("2023-12-01"), d("2023-12-02")).count() == 0)
+        val empty = DailyIngest.backfill(spark, dir.toString, d("2023-12-01"), d("2023-12-02"))
+        assert(empty.count() == 0)
+        assert(!empty.queryExecution.optimizedPlan.exists(_.isInstanceOf[LogicalRelation]), "an empty selection scans")
         // a file written without statistics is read for every range
         write(fixture.take(50).map(r => Row.fromSeq(r.toSeq.updated(0, r.getLong(0) + 1000000L))),
           tsType, scale, dir.resolve("events.parquet/nostats.parquet"), stats = false)

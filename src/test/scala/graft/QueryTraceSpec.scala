@@ -162,4 +162,19 @@ class QueryTraceSpec extends AnyFunSuite {
       assert(p == QueryTrace.Plan.of(df))
     } finally cached.unpersist()
   }
+
+  test("a long array literal prints as its value count and a hash, and two literals digest apart") {
+    import org.apache.spark.sql.functions.{array_contains, col, typedLit}
+    def plan(from: Int): QueryTrace.Plan = {
+      val codebook = typedLit((from until from + 400).map(_.toDouble))
+      val df = spark.range(0, 10, 1, 1).select(array_contains(codebook, col("id").cast("double")).as("hit"))
+      exec(df)
+      QueryTrace.Plan.of(df)
+    }
+    val (a, b) = (plan(0), plan(1))
+    assert(a.text.contains("[400 values sha ") && !a.text.contains("0.0,1.0,2.0"), a.text)
+    assert(a.text.length < 2000, a.text)
+    assert(a.digest != b.digest)
+    assert(plan(0) == a)
+  }
 }

@@ -114,16 +114,15 @@ class StagingIndexSpec extends AnyFunSuite {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
       try {
         val locs = Await.result(Future.sequence((1 to 4).map(_ => Future {
-          Staging.index(dir, "profile") { p =>
+          Staging.index(dir, "profile") {
             calls.incrementAndGet()
             Thread.sleep(200)
-            Files.createDirectories(Path.of(p))
-            Files.write(Path.of(p, "data"), Array[Byte](1))
+            spark.range(1).toDF()
           }
         })), 1.minute)
         assert(calls.get == 1, s"the writer ran ${calls.get} times")
         assert(locs.toSet.size == 1)
-        assert(Files.exists(Path.of(locs.head, "data")))
+        assert(Tables.parquet(spark, locs.head).count() == 1)
       } finally {
         pool.shutdown()
         pool.awaitTermination(1, TimeUnit.MINUTES)
@@ -138,14 +137,14 @@ class StagingIndexSpec extends AnyFunSuite {
       Files.copy(Path.of(SparkTestBase.Sf, "lineitem.parquet"), root.resolve("lineitem.parquet"))
       val dir = root.toString
       try {
-        val loc = Staging.index(dir, "profile") { p =>
+        val Seq(loc) = Staging.indexes(dir, "profile")(_.files("profile") { p =>
           // another process publishes while this one writes its copy
           val winner = Path.of(p.stripSuffix(s".tmp_p$pid"))
           Files.createDirectories(winner)
           Files.write(winner.resolve("data"), "winner".getBytes("UTF-8"))
           Files.createDirectories(Path.of(p))
           Files.write(Path.of(p, "data"), "loser".getBytes("UTF-8"))
-        }
+        })
         assert(new String(Files.readAllBytes(Path.of(loc, "data")), "UTF-8") == "winner")
         assert(!Files.exists(Path.of(s"$loc.tmp_p$pid")))
       } finally {
@@ -159,10 +158,7 @@ class StagingIndexSpec extends AnyFunSuite {
     SparkTestBase.withTempDir("graft_clear") { root =>
       Files.copy(Path.of(SparkTestBase.Sf, "lineitem.parquet"), root.resolve("lineitem.parquet"))
       val dir = root.toString
-      val loc = Path.of(Staging.index(dir, "profile") { p =>
-        Files.createDirectories(Path.of(p))
-        Files.write(Path.of(p, "data"), Array[Byte](1))
-      })
+      val loc = Path.of(Staging.index(dir, "profile")(spark.range(1).toDF()))
       val sibling = Path.of(loc.toString.replaceAll("_b[0-9a-f]+$", "_b000000000000"))
       assert(sibling != loc)
       Files.createDirectories(sibling)
@@ -181,10 +177,6 @@ class StagingIndexSpec extends AnyFunSuite {
   test("a build logs its whole wall time once, nested builds under their own tags") {
     SparkTestBase.withTempDir("graft_buildlog") { root =>
       val dir = SparkTestBase.fixtureCopy(root)
-      def write(p: String): Unit = {
-        Files.createDirectories(Path.of(p))
-        Files.write(Path.of(p, "data"), Array[Byte](1))
-      }
       try {
         Staging.drainBuildLog()
         val t0 = System.nanoTime()
@@ -192,9 +184,9 @@ class StagingIndexSpec extends AnyFunSuite {
           // work before the first put, and a nested build that reads another index
           Staging.indexes(dir, "profile") { putProfile =>
             Thread.sleep(300)
-            putProfile("profile", write)
+            putProfile("profile", spark.range(1).toDF())
           }
-          put("lang_scores", write)
+          put("lang_scores", spark.range(1).toDF())
         }
         val wall = (System.nanoTime() - t0) / 1e9
         val log = Staging.drainBuildLog()
@@ -214,8 +206,8 @@ class StagingIndexSpec extends AnyFunSuite {
       try {
         assert(Prestage.run(spark, dir).keySet == Staging.IndexTags)
         // only whole declared families stage
-        intercept[IllegalArgumentException](Staging.index(dir, "undeclared")(_ => ()))
-        intercept[IllegalArgumentException](Staging.index(dir, "cc_sh")(_ => ()))
+        intercept[IllegalArgumentException](Staging.index(dir, "undeclared")(spark.emptyDataFrame))
+        intercept[IllegalArgumentException](Staging.index(dir, "cc_sh")(spark.emptyDataFrame))
       } finally Staging.clearEraIndexes(dir)
     }
   }

@@ -28,6 +28,22 @@ class StreamClusterSpec extends AnyFunSuite {
     assert(StreamEnv.denseBatchWidth(spark, 1000000L) == cores) // big batch → every core
   }
 
+  test("state width is sized from the events bytes listed at the call, so an append is seen") {
+    import graft.streaming.StreamEnv
+    SparkTestBase.withTempDir("graft_sized") { root =>
+      val dir = SparkTestBase.fixtureCopy(root, Set("events"))
+      def width = LocalSession.width(StreamEnv.eventsBytes(spark, dir), 4L << 20, 4,
+        spark.sparkContext.defaultParallelism)
+      val before = StreamEnv.eventsBytes(spark, dir)
+      val part = root.resolve("events.parquet/part-00000.parquet")
+      assert(before == java.nio.file.Files.size(part))
+      assert(StreamEnv.sizedParts(spark, dir) == width)
+      java.nio.file.Files.copy(part, root.resolve("events.parquet/part-00001.parquet"))
+      assert(StreamEnv.eventsBytes(spark, dir) == 2 * before)
+      assert(StreamEnv.sizedParts(spark, dir) == width)
+    }
+  }
+
   test("label state is versioned per trigger with a per-batch appendix") {
     // the staged layout from the run above (same process + dir)
     val base = graft.ops.Staging.stagePath("stream_cluster", Sf)
