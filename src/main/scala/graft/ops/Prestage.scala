@@ -13,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   *
   * It walks [[Staging.Families]] and forces each family through the
   * builder declared with it, the same [[Staging.indexes]]-staged
-  * function the queries call, so a prestaged index is byte-identical
-  * to a query-built one and a second call is a metadata-only cache hit.
+  * function the queries call, so a prestaged index holds the same rows
+  * as a query-built one and a second call is a metadata-only cache hit.
+  * The files of the `repartitionByRange` layouts `orders_zorder` and
+  * `orders_bydate` differ, as their bounds follow a sample seeded by the
+  * RDD id (and so do `orders_stats_index`'s per-`orders_zorder`-file rows).
   * Per-tag build seconds land in [[Staging.drainBuildLog]] for the
   * bench's `staging` report. Bench also drains the build log around
   * every timed query and caps the query's NON-staging seconds; with every

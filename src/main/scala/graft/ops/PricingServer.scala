@@ -23,7 +23,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   - 200 `{"price":N}` on success (`api.py:128`),
   *   - 400 `{"error":"Missing fields."}` for an incomplete body
   *     (`api.py:107-109`),
-  *   - 500 `{"error":…}` for a malformed body (`api.py:130-132`).
+  *   - 500 `{"error":…}` for a malformed body (`api.py:130-132`),
+  *     including an `nb_personne` or `nb_m2` that is not a JSON integer.
   * Unknown paths get Flask's 404.
   *
   * Serving shape: the heavy lifting (two distributed aggregates over
@@ -84,8 +85,11 @@ final class PricingServer(svc: PricingService, poolSize: Int = 8) {
         node.has("nb_personne") && node.has("nb_m2")
       if (!ok) reply(ex, 400, """{"error":"Missing fields."}""")
       else {
-        val req = PriceRequest(node.get("libelle_region").asText(),
-          node.get("nb_personne").asInt(), node.get("nb_m2").asInt())
+        def int(field: String): Int = node.get(field) match {
+          case v if v.isIntegralNumber && v.canConvertToInt => v.intValue
+          case v => throw new IllegalArgumentException(s"$field is not an integer: $v")
+        }
+        val req = PriceRequest(node.get("libelle_region").asText(), int("nb_personne"), int("nb_m2"))
         reply(ex, 200, s"""{"price":${svc.price(req)}}""")
       }
     } catch {

@@ -1,8 +1,9 @@
 package graft.ops
 
 import java.net.URI
+import java.time.ZoneId
 
-import graft.tables.{DataFile, Tables}
+import graft.tables.{DataFile, FileMemo, Tables, TablesMemo}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -47,26 +48,20 @@ final class PricingService private[ops] (
 object PricingService {
 
   /** Collect α and M into a serving handle, reusing what earlier builds
-    * computed from the same files. Results equal the full-scan
+    * computed from the same files (a Spark `cache()` would keep
+    * answering after the files change). Results equal the full-scan
     * [[Pricing.regionAlpha]] and [[Pricing.modulationScalar]] on the
     * data in `dir` at call time.
     *
-    *  - α is reused while the data-file listings of customer, nation,
-    *    region and orders and the clamp bounds are unchanged; checking
-    *    that is a `FileSystem` listing, no Spark job. A daily events
-    *    append never changes α.
+    *  - α is a [[TablesMemo]] value of customer, nation, region and
+    *    orders; a daily events append never changes it.
     *  - M is folded in plain Scala from per-file partials of events
-    *    (count and exact grid-unit sum of `value`, min and max `ts`).
-    *    A build scans only files it has not seen (one job, no shuffle)
-    *    and re-reads, filtered, any file that straddles the window
-    *    start `max(ts) − 30 days` (one more job, when the start moved
-    *    or a new file straddles it). A daily append therefore costs one
-    *    or two small jobs however long the history is; a rebuild with
-    *    no file changed runs none.
-    *
-    * Files are known by qualified path, length and modification time
-    * ([[Tables.dataFiles]]), the identity Spark's own file index uses;
-    * a Spark `cache()` would keep answering after the files change.
+    *    (count and exact grid-unit sum of `value`, min and max `ts`) in
+    *    a [[FileMemo]], and from filtered partials of the files that
+    *    straddle the window start `max(ts) − 30 days` in another, keyed
+    *    also by that start. A daily append therefore costs one or two
+    *    small jobs however long the history is; a rebuild with no file
+    *    changed runs none.
     */
   def build(spark: SparkSession, dir: String,
             params: PricingParams = Pricing.DefaultParams): PricingService = {
@@ -87,67 +82,28 @@ object PricingService {
   }
   private val NoRows = Partial(0L, 0L, Long.MaxValue, Long.MinValue)
 
-  private final case class AlphaMemo(inputs: Seq[Seq[DataFile]], alpha: Map[String, Double])
+  // keyed also by the session zone (`normalizeTs` and `year()` read it)
+  private val alphaMemo = new TablesMemo[Map[String, Double]](MemoDirs, "customer", "nation", "region", "orders")
+  private val partials = new FileMemo[(String, ZoneId), Partial](MemoDirs)
+  private val straddling = new FileMemo[(String, ZoneId, Long), Partial](MemoDirs)
 
-  /** One events directory: the partial of every file in its latest
-    * listing, and the filtered partials of the files that straddled the
-    * latest window start.
-    */
-  private final case class EventsMemo(files: Map[DataFile, Partial],
-                                      windowStart: Long, straddling: Map[DataFile, Partial])
-
-  private def lru[K, V]: java.util.LinkedHashMap[K, V] =
-    new java.util.LinkedHashMap[K, V](MemoDirs, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > MemoDirs
-    }
-
-  // keyed by qualified directory and session time zone (`normalizeTs`
-  // and `year()` read the zone); α also by its clamp bounds
-  private val alphaMemo = lru[(String, java.time.ZoneId, Double, Double), AlphaMemo]
-  private val eventsMemo = lru[(String, java.time.ZoneId), EventsMemo]
-
-  private def memoGet[K, V](m: java.util.LinkedHashMap[K, V], k: K): Option[V] =
-    m.synchronized(Option(m.get(k)))
-
-  private def memoPut[K, V](m: java.util.LinkedHashMap[K, V], k: K, v: V): Unit =
-    m.synchronized(m.put(k, v)): Unit
-
-  private def qualified(spark: SparkSession, path: String): Path = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
-  }
-
-  private def alpha(spark: SparkSession, dir: String, lo: Double, hi: Double): Map[String, Double] = {
-    val inputs = Seq("customer", "nation", "region", "orders")
-      .map(t => Tables.dataFiles(spark.sparkContext.hadoopConfiguration, s"$dir/$t.parquet"))
-    val key = (qualified(spark, dir).toString, graft.LocalSession.zone(spark), lo, hi)
-    memoGet(alphaMemo, key).filter(_.inputs == inputs).map(_.alpha).getOrElse {
-      val alpha = Pricing.regionAlpha(spark, dir, lo, hi).collect()
-        .map(r => r.getString(0) -> r.getDouble(1)).toMap
-      memoPut(alphaMemo, key, AlphaMemo(inputs, alpha))
-      alpha
-    }
-  }
+  private def alpha(spark: SparkSession, dir: String, lo: Double, hi: Double): Map[String, Double] =
+    alphaMemo(spark, dir, (graft.LocalSession.zone(spark), lo, hi))(
+      Pricing.regionAlpha(spark, dir, lo, hi).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
 
   private def modulation(spark: SparkSession, dir: String): Double = {
-    val root = qualified(spark, s"$dir/events.parquet")
-    val files = Tables.dataFiles(spark.sparkContext.hadoopConfiguration, root.toString)
-    val listed = files.toSet
-    val key = (root.toString, graft.LocalSession.zone(spark))
-    val prior = memoGet(eventsMemo, key)
-    val seen = prior.map(_.files).getOrElse(Map.empty[DataFile, Partial])
-    val scanned = seen.filter { case (f, _) => listed(f) } ++
-      partialsOf(spark, dir, files.filterNot(seen.contains), None)
+    val p = new Path(s"$dir/events.parquet")
+    val root = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    val files = Tables.dataFiles(spark.sparkContext.hadoopConfiguration, root)
+    val zone = graft.LocalSession.zone(spark)
+    val scanned = partials((root, zone), files)(partialsOf(spark, dir, _, None))
     val maxTs = scanned.values.foldLeft(NoRows)(_ + _).maxTs
     if (maxTs == Long.MinValue) throw new IllegalStateException(s"no events with a ts under $root")
     val start = maxTs - Pricing.WindowDays * MicrosPerDay
     val straddlers = files.filter(f => scanned(f).minTs < start && scanned(f).maxTs >= start)
-    val kept = prior.filter(_.windowStart == start).map(_.straddling).getOrElse(Map.empty[DataFile, Partial])
-      .filter { case (f, _) => straddlers.contains(f) }
-    val straddling = kept ++ partialsOf(spark, dir, straddlers.filterNot(kept.contains), Some(start))
-    memoPut(eventsMemo, key, EventsMemo(scanned, start, straddling))
+    val filtered = straddling((root, zone, start), straddlers)(partialsOf(spark, dir, _, Some(start)))
     val window = files.map { f =>
-      straddling.getOrElse(f, if (scanned(f).minTs >= start) scanned(f) else NoRows)
+      filtered.getOrElse(f, if (scanned(f).minTs >= start) scanned(f) else NoRows)
     }.foldLeft(NoRows)(_ + _)
     if (window.n == 0) throw new IllegalStateException(s"no event values in the window under $root")
     Pricing.modulation(CoreOps.stableAvg(window.units, window.n))
@@ -159,31 +115,29 @@ object PricingService {
     * may be split across tasks). Files without such rows get [[NoRows]].
     */
   private def partialsOf(spark: SparkSession, dir: String, files: Seq[DataFile],
-                         from: Option[Long]): Map[DataFile, Partial] =
-    if (files.isEmpty) Map.empty
-    else {
-      import spark.implicits._
-      val raw = Tables.eventsFiles(spark, dir, files.map(_.path))
-        .select(col("ts"), col("value"), col("_metadata.file_path").as("file"))
-      val keep = from.fold(col("ts").isNotNull)(s => col("ts") >= timestamp_micros(lit(s)))
-      val perTask = Tables.normalizeTs(raw).filter(keep)
-        .select(col("file"), col("value").isNotNull,
-          coalesce(CoreOps.gridUnits(col("value")), lit(0L)), unix_micros(col("ts")))
-        .as[(String, Boolean, Long, Long)]
-        .mapPartitions { rows =>
-          val acc = scala.collection.mutable.HashMap.empty[String, Partial]
-          rows.foreach { case (file, hasValue, units, ts) =>
-            acc(file) = acc.getOrElse(file, NoRows) + Partial(if (hasValue) 1L else 0L, units, ts, ts)
-          }
-          acc.iterator.map { case (file, p) => (file, p.n, p.units, p.minTs, p.maxTs) }
+                         from: Option[Long]): Map[DataFile, Partial] = {
+    import spark.implicits._
+    val raw = Tables.eventsFiles(spark, dir, files.map(_.path))
+      .select(col("ts"), col("value"), col("_metadata.file_path").as("file"))
+    val keep = from.fold(col("ts").isNotNull)(s => col("ts") >= timestamp_micros(lit(s)))
+    val perTask = Tables.normalizeTs(raw).filter(keep)
+      .select(col("file"), col("value").isNotNull,
+        coalesce(CoreOps.gridUnits(col("value")), lit(0L)), unix_micros(col("ts")))
+      .as[(String, Boolean, Long, Long)]
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[String, Partial]
+        rows.foreach { case (file, hasValue, units, ts) =>
+          acc(file) = acc.getOrElse(file, NoRows) + Partial(if (hasValue) 1L else 0L, units, ts, ts)
         }
-        .collect()
-      val byPath = files.map(f => f.path -> f).toMap
-      val got = perTask.groupMapReduce(t => new Path(new URI(t._1)).toString)(t =>
-        Partial(t._2, t._3, t._4, t._5))(_ + _)
-      got.keys.find(p => !byPath.contains(p)).foreach { p =>
-        throw new IllegalStateException(s"scan returned a file outside its listing: $p")
+        acc.iterator.map { case (file, p) => (file, p.n, p.units, p.minTs, p.maxTs) }
       }
-      files.map(f => f -> got.getOrElse(f.path, NoRows)).toMap
+      .collect()
+    val byPath = files.map(f => f.path -> f).toMap
+    val got = perTask.groupMapReduce(t => new Path(new URI(t._1)).toString)(t =>
+      Partial(t._2, t._3, t._4, t._5))(_ + _)
+    got.keys.find(p => !byPath.contains(p)).foreach { p =>
+      throw new IllegalStateException(s"scan returned a file outside its listing: $p")
     }
+    files.map(f => f -> got.getOrElse(f.path, NoRows)).toMap
+  }
 }

@@ -260,7 +260,9 @@ object Staging {
     *    is then renamed to the location with a no-replace atomic move,
     *    so a location only ever appears complete. The loser of a race
     *    with another process deletes its copy and adopts the winner's,
-    *    which is byte-identical. A killed build's tmp directory is
+    *    which holds the same rows (the files differ only for the
+    *    `repartitionByRange` layouts `orders_zorder` and
+    *    `orders_bydate`, see [[Prestage]]). A killed build's tmp directory is
     *    removed by the dead-run reaper in [[scratchBase]].
     */
   private[graft] def indexes(dir: String, tags: String*)(build: Put => Unit): Seq[String] = {

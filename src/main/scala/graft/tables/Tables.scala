@@ -45,16 +45,12 @@ object TsSpan {
   * Design stance (SURVEY.md §1.2): every query reads through one
   * audited path, so column pruning and pushdown can be asserted in one
   * place. For Parquet the footer schema is authoritative, and it is
-  * read once per table: [[parquet]] memoizes each table's inferred
-  * schema by qualified path and hands it to the reader, which then
-  * skips the footer job that schema inference runs. An entry is valid
-  * while at least one data file it was inferred from is still listed
-  * with the same length and mtime ([[dataFiles]], a driver listing, no
-  * Spark job). An append keeps it, as Spark's own inference reads one
-  * file and assumes the others agree; a rewrite, replacement or
-  * deletion infers again. The reference's CSV extracts, which carry no
-  * footer, get declared schemas below (reference
-  * `0_insert_conso_an_ville_in_bq.py:43-47`).
+  * read once per table: [[parquet]] hands the reader the table's
+  * memoized schema ([[schemaOf]], in an [[Lru]]), which then skips the
+  * footer job that schema inference runs. The events footers' `ts`
+  * spans are memoized per file ([[eventsTs]], a [[FileMemo]]). The
+  * reference's CSV extracts, which carry no footer, get declared
+  * schemas below (reference `0_insert_conso_an_ville_in_bq.py:43-47`).
   */
 object Tables {
 
@@ -101,13 +97,14 @@ object Tables {
 
   private final case class SchemaMemo(files: Seq[DataFile], schema: StructType)
 
-  private val schemaMemo = new java.util.LinkedHashMap[String, SchemaMemo](MemoTables, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, SchemaMemo]): Boolean = size > MemoTables
-  }
+  private val schemaMemo = new Lru[String, SchemaMemo](MemoTables)
 
   /** The schema Spark infers for the parquet table at `path`, memoized
-    * by qualified path while one of the files it was inferred from is
-    * still listed unchanged (see the design note above). A miss reads
+    * by qualified path while at least one data file it was inferred
+    * from is still listed with the same length and mtime ([[dataFiles]],
+    * a driver listing, no Spark job). An append keeps it, as Spark's own
+    * inference reads one file and assumes the others agree; a rewrite,
+    * replacement or deletion infers again. A miss reads
     * the footer of the file Spark's own inference touches (the first
     * data file by path, `mergeSchema` off) on the driver, no Spark job,
     * and converts it as inference does in a child session with
@@ -122,12 +119,12 @@ object Tables {
     val key = p.getFileSystem(conf).makeQualified(p).toString
     val listed = dataFiles(conf, key)
     val live = listed.toSet
-    schemaMemo.synchronized(Option(schemaMemo.get(key))).filter(_.files.exists(live)).map(_.schema)
+    schemaMemo.get(key).filter(_.files.exists(live)).map(_.schema)
       .getOrElse {
         val child = graft.LocalSession.scoped(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
         val schema = listed.map(_.path).sorted.headOption.map(footerSchema(conf, _, child))
           .getOrElse(child.read.parquet(path).schema)
-        schemaMemo.synchronized(schemaMemo.put(key, SchemaMemo(listed, schema)))
+        schemaMemo.put(key, SchemaMemo(listed, schema))
         schema
       }
   }
@@ -193,18 +190,14 @@ object Tables {
   private val TsMemoDirs = 16
   private val MicrosPerDay = 86400L * 1000000L
 
-  // qualified events path -> the `ts` span of each file of its latest listing
-  private val tsMemo = new java.util.LinkedHashMap[String, Map[DataFile, Option[TsSpan]]](TsMemoDirs, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, Map[DataFile, Option[TsSpan]]]): Boolean =
-      size > TsMemoDirs
-  }
+  // keyed by the qualified events path
+  private val tsMemo = new FileMemo[String, Option[TsSpan]](TsMemoDirs)
 
   /** The events data files of `dir` in listing order, each with the span
     * of the `ts` values [[events]] reads from it, or `None` where its
     * footer cannot bound them (no statistics, INT96, no `ts` column).
-    * A driver listing and a footer read per file not seen before, no
-    * Spark job: the footer spans are memoized by [[DataFile]] per
-    * directory, and a listing drops the files it no longer holds.
+    * A driver listing and a footer read per file the [[FileMemo]] does
+    * not hold, no Spark job.
     *
     * Values convert as [[normalizeTs]] converts them: NANOS divided by
     * 1000 as `div` does, MICROS as they are, MILLIS times 1000. A
@@ -217,9 +210,7 @@ object Tables {
     val p = new Path(s"$dir/events.parquet")
     val root = p.getFileSystem(conf).makeQualified(p).toString
     val files = dataFiles(conf, root)
-    val seen = tsMemo.synchronized(Option(tsMemo.get(root))).getOrElse(Map.empty[DataFile, Option[TsSpan]])
-    val spans = files.map(f => f -> seen.getOrElse(f, footerTs(conf, f.path))).toMap
-    tsMemo.synchronized(tsMemo.put(root, spans))
+    val spans = tsMemo(root, files)(_.map(f => f -> footerTs(conf, f.path)).toMap)
     val toInstant: TsSpan => TsSpan =
       if (files.isEmpty || schemaOf(spark, root)("ts").dataType != TimestampNTZType) identity
       else {
@@ -285,32 +276,4 @@ object Tables {
     StructField("code_commune", StringType),
     StructField("conso_moyenne_mwh", DoubleType),
     StructField("annee", IntegerType)))
-}
-
-/** A driver-side memo of values derived from a dataset's `tables`
-  * (centroids, codebooks, merges), keyed by the dataset dir and the
-  * [[Tables.listingKey]] of those tables: an append to one of them
-  * computes the value afresh, as a new JVM would. Holds the `cap` most
-  * recently used entries.
-  */
-final class TablesMemo[V <: AnyRef](cap: Int, tables: String*) {
-  private val entries = new java.util.LinkedHashMap[(String, String), V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[(String, String), V]): Boolean = size > cap
-  }
-
-  /** The value for `dir`'s current data; `compute` runs on a miss. */
-  def apply(spark: SparkSession, dir: String)(compute: => V): V = {
-    val key = (dir, Tables.listingKey(spark.sparkContext.hadoopConfiguration, dir, tables))
-    entries.synchronized(Option(entries.get(key))).getOrElse {
-      val v = compute
-      entries.synchronized(entries.put(key, v))
-      v
-    }
-  }
-
-  /** The dataset dirs with an entry. */
-  def dirs: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    entries.synchronized(entries.keySet.asScala.map(_._1).toSet)
-  }
 }

@@ -45,7 +45,7 @@ class DomainApiSpec extends AnyFunSuite {
       ("84", "ARA", ts("2024-01-15 00:15:00"), 100.1),
       ("84", "ARA", ts("2024-01-15 12:30:00"), 100.4), // mean 100.25 → bround 100
       ("11", "IDF", ts("2024-01-15 03:00:00"), 200.75),
-      ("11", "IDF", ts("2024-01-15 04:00:00"), 200.75)) // mean 200.75 → bround 201 (wait: .75 rounds to 1? HALF_EVEN on .75 → 201? .75 → nearest int is 201 (no tie))
+      ("11", "IDF", ts("2024-01-15 04:00:00"), 200.75)) // mean 200.75 → bround 201 (no tie)
       .toDF("code_insee_region", "libelle_region", "date_heure", "consommation")
     val out = Ingest.consoJourRegion(raw).collect()
       .map(r => r.getString(0) -> r.getDouble(3)).toMap

@@ -29,14 +29,17 @@ class ForecastSpec extends AnyFunSuite {
 
   test("degenerate group (zero x-variance) yields null prediction") {
     import spark.implicits._
-    val one = Seq(("solo", 10L, 5.0), ("solo", 10L, 7.0)).toDF("event_type", "x", "y")
-    // closed-form guard: sxx == 0 → null slope
-    val fit = one.groupBy("event_type")
-      .agg(avg("x").as("xbar"), avg("y").as("ybar"))
-      .join(one, "event_type")
-      .groupBy("event_type")
-      .agg(sum((col("x") - col("xbar")) * (col("x") - col("xbar"))).as("sxx"))
-      .select(when(col("sxx") > 0, lit(1)).as("ok")).head()
-    assert(fit.isNullAt(0))
+    SparkTestBase.withTempDir("forecast") { root =>
+      // "solo" has rows on one day only: sxx = 0, so no slope
+      Seq(("solo", "2024-03-01 08:00:00", 5.0), ("solo", "2024-03-01 17:00:00", 7.0),
+          ("trend", "2024-03-01 12:00:00", 1.0), ("trend", "2024-03-02 12:00:00", 2.0),
+          ("trend", "2024-03-03 12:00:00", 4.0))
+        .toDF("event_type", "ts", "value").withColumn("ts", to_timestamp(col("ts")))
+        .write.parquet(root.resolve("events.parquet").toString)
+      val preds = Forecast.closedForm(spark, root.toString).collect()
+        .groupBy(_.getString(0)).map { case (t, rows) => t -> rows.map(r => Option(r.get(3))).toSeq }
+      assert(preds("solo").size == 3 && preds("solo").forall(_.isEmpty), preds)
+      assert(preds("trend").size == 3 && preds("trend").forall(_.isDefined), preds)
+    }
   }
 }

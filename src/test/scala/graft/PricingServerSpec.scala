@@ -104,6 +104,14 @@ class PricingServerSpec extends AnyFunSuite {
       assert(malformed.statusCode() == 500, s"got ${malformed.statusCode()}")
       assert(malformed.body().startsWith("""{"error":"""),
         s"expected an error, got ${malformed.body()}")
+      // a count that is not a JSON integer is malformed, not read as 0, 1 or truncated
+      Seq(""""two"""", "null", "true", "2.5").foreach { v =>
+        Seq(s""""nb_personne":$v,"nb_m2":50""", s""""nb_personne":2,"nb_m2":$v""").foreach { counts =>
+          val bad = get(client, srv.port, s"""{"libelle_region":"EUROPE",$counts}""")
+          assert(bad.statusCode() == 500, s"$counts: got ${bad.statusCode()} ${bad.body()}")
+          assert(bad.body().startsWith("""{"error":"""), s"$counts: expected an error, got ${bad.body()}")
+        }
+      }
       val lost = get(client, srv.port, "{}", path = "/nope")
       assert(lost.statusCode() == 404, s"got ${lost.statusCode()}")
       // the server survives bad requests: a good one still works
