@@ -58,8 +58,8 @@ object PricingService {
     *  - M is folded in plain Scala from per-file partials of events
     *    (count and exact grid-unit sum of `value`, min and max `ts`) in
     *    a [[FileMemo]], and from filtered partials of the files that
-    *    straddle the window start `max(ts) − 30 days` in another, keyed
-    *    also by that start. A daily append therefore costs one or two
+    *    straddle the window start `max(ts) − 30 days` in another, held
+    *    for that start (its basis). A daily append therefore costs one or two
     *    small jobs however long the history is; a rebuild with no file
     *    changed runs none.
     */
@@ -85,15 +85,15 @@ object PricingService {
   // keyed also by the session zone (`normalizeTs` and `year()` read it)
   private val alphaMemo = new TablesMemo[Map[String, Double]](MemoDirs, "customer", "nation", "region", "orders")
   private val partials = new FileMemo[(String, ZoneId), Partial](MemoDirs)
-  private val straddling = new FileMemo[(String, ZoneId, Long), Partial](MemoDirs)
+  private val straddling = new FileMemo[(String, ZoneId), Partial](MemoDirs)
 
   private def alpha(spark: SparkSession, dir: String, lo: Double, hi: Double): Map[String, Double] =
-    alphaMemo(spark, dir, (graft.LocalSession.zone(spark), lo, hi))(
+    alphaMemo(spark, Tables.qualified(spark.sparkContext.hadoopConfiguration, dir),
+      (graft.LocalSession.zone(spark), lo, hi))(
       Pricing.regionAlpha(spark, dir, lo, hi).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
 
   private def modulation(spark: SparkSession, dir: String): Double = {
-    val p = new Path(s"$dir/events.parquet")
-    val root = p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    val root = Tables.qualified(spark.sparkContext.hadoopConfiguration, s"$dir/events.parquet")
     val files = Tables.dataFiles(spark.sparkContext.hadoopConfiguration, root)
     val zone = graft.LocalSession.zone(spark)
     val scanned = partials((root, zone), files)(partialsOf(spark, dir, _, None))
@@ -101,7 +101,7 @@ object PricingService {
     if (maxTs == Long.MinValue) throw new IllegalStateException(s"no events with a ts under $root")
     val start = maxTs - Pricing.WindowDays * MicrosPerDay
     val straddlers = files.filter(f => scanned(f).minTs < start && scanned(f).maxTs >= start)
-    val filtered = straddling((root, zone, start), straddlers)(partialsOf(spark, dir, _, Some(start)))
+    val filtered = straddling((root, zone), straddlers, start)(partialsOf(spark, dir, _, Some(start)))
     val window = files.map { f =>
       filtered.getOrElse(f, if (scanned(f).minTs >= start) scanned(f) else NoRows)
     }.foldLeft(NoRows)(_ + _)

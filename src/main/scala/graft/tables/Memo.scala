@@ -23,41 +23,48 @@ private[graft] final class Lru[K, V](cap: Int) {
 
 /** Values derived per [[DataFile]] (a footer span, a scan's partial),
   * one listing per key, for the `cap` most recently used keys. A call
-  * keeps the value of each listed file the key's entry holds, computes
-  * the other listed files in one batch, and leaves the entry holding
-  * exactly the listing: a file gone from it is dropped, and a file
-  * rewritten in place (another length or mtime) is a new file.
+  * keeps the value of each listed file the key's entry holds for the
+  * same `basis` (whatever else the values depend on, such as a window
+  * start), computes the other listed files in one batch, and leaves the
+  * entry holding exactly the listing for that `basis`: a file gone from
+  * it is dropped, and a file rewritten in place (another length or
+  * mtime) is a new file.
   */
 private[graft] final class FileMemo[K, V](cap: Int) {
-  private val entries = new Lru[K, Map[DataFile, V]](cap)
+  private val entries = new Lru[K, (Any, Map[DataFile, V])](cap)
 
   /** The value of each of `files`; `compute` gets the files the entry
     * does not hold, if any, and returns a value for each.
     */
-  def apply(key: K, files: Seq[DataFile])(compute: Seq[DataFile] => Map[DataFile, V]): Map[DataFile, V] = {
-    val held = entries.get(key).getOrElse(Map.empty[DataFile, V])
+  def apply(key: K, files: Seq[DataFile], basis: Any = ())(
+      compute: Seq[DataFile] => Map[DataFile, V]): Map[DataFile, V] = {
+    val held = entries.get(key).collect { case (`basis`, vs) => vs }.getOrElse(Map.empty[DataFile, V])
     val missing = files.filterNot(held.contains)
     val got = if (missing.isEmpty) Map.empty[DataFile, V] else compute(missing)
     val values = files.map(f => f -> held.getOrElse(f, got(f))).toMap
-    entries.put(key, values)
+    entries.put(key, (basis, values))
     values
   }
 }
 
 /** A driver-side memo of values derived from a dataset's `tables`
-  * (centroids, codebooks, merges, the pricing α), keyed by the dataset
-  * dir, the [[Tables.listingKey]] of those tables and a `variant` for
-  * whatever else the value depends on: an append to one of the tables
-  * computes the value afresh, as a new JVM would. Holds the `cap` most
-  * recently used entries.
+  * (centroids, codebooks, merges, the pricing α), one per dataset dir
+  * and `variant` (whatever else the value depends on), for the `cap`
+  * most recently used of them. An entry holds the value of one
+  * [[Tables.listingKey]] of those tables: an append to one of them
+  * computes the value afresh, as a new JVM would, and replaces it.
   */
 final class TablesMemo[V <: AnyRef](cap: Int, tables: String*) {
-  private val entries = new Lru[(String, String, Any), V](cap)
+  private val entries = new Lru[(String, Any), (String, V)](cap)
 
   /** The value for `dir`'s current data; `compute` runs on a miss. */
   def apply(spark: SparkSession, dir: String, variant: Any = ())(compute: => V): V = {
-    val key = (dir, Tables.listingKey(spark.sparkContext.hadoopConfiguration, dir, tables), variant)
-    entries.get(key).getOrElse { val v = compute; entries.put(key, v); v }
+    val listing = Tables.listingKey(spark.sparkContext.hadoopConfiguration, dir, tables)
+    entries.get((dir, variant)).collect { case (`listing`, v) => v }.getOrElse {
+      val v = compute
+      entries.put((dir, variant), (listing, v))
+      v
+    }
   }
 
   /** The dataset dirs with an entry. */

@@ -61,6 +61,12 @@ object Tables {
     * `path` does not exist. Two equal listings mean the same data, so
     * a driver can tell whether a table changed without a Spark job.
     */
+  /** `path` qualified with its file system's scheme and authority. */
+  def qualified(conf: Configuration, path: String): String = {
+    val p = new Path(path)
+    p.getFileSystem(conf).makeQualified(p).toString
+  }
+
   def dataFiles(conf: Configuration, path: String): Seq[DataFile] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -115,8 +121,7 @@ object Tables {
     */
   private def schemaOf(spark: SparkSession, path: String): StructType = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val key = p.getFileSystem(conf).makeQualified(p).toString
+    val key = qualified(conf, path)
     val listed = dataFiles(conf, key)
     val live = listed.toSet
     schemaMemo.get(key).filter(_.files.exists(live)).map(_.schema)
@@ -207,8 +212,7 @@ object Tables {
     */
   private[graft] def eventsTs(spark: SparkSession, dir: String): Seq[(DataFile, Option[TsSpan])] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(s"$dir/events.parquet")
-    val root = p.getFileSystem(conf).makeQualified(p).toString
+    val root = qualified(conf, s"$dir/events.parquet")
     val files = dataFiles(conf, root)
     val spans = tsMemo(root, files)(_.map(f => f -> footerTs(conf, f.path)).toMap)
     val toInstant: TsSpan => TsSpan =

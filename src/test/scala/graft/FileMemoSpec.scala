@@ -14,13 +14,14 @@ class FileMemoSpec extends AnyFunSuite {
   private val c = DataFile("file:/t/c.parquet", 30L, 300L)
 
   /** A memo whose values are the files' lengths, and the batches it computed. */
-  private def memo(cap: Int = 4) = {
+  private final class Counted(cap: Int) {
     val batches = scala.collection.mutable.Buffer.empty[Seq[DataFile]]
-    val m = new FileMemo[String, Long](cap)
-    def call(key: String, files: Seq[DataFile]): Map[DataFile, Long] =
-      m(key, files) { missing => batches += missing; missing.map(f => f -> f.length).toMap }
-    (call _, batches)
+    private val m = new FileMemo[String, Long](cap)
+    def apply(key: String, files: Seq[DataFile], basis: Int = 0): Map[DataFile, Long] =
+      m(key, files, basis) { missing => batches += missing; missing.map(f => f -> f.length).toMap }
   }
+
+  private def memo(cap: Int = 4) = { val c = new Counted(cap); (c, c.batches) }
 
   test("after one appended file, compute receives only that file") {
     val (call, batches) = memo()
@@ -59,5 +60,17 @@ class FileMemoSpec extends AnyFunSuite {
     call("x", Seq(a))
     call("y", Seq(b))
     assert(batches == Seq(Seq(a), Seq(b), Seq(c), Seq(b)))
+  }
+
+  test("another basis recomputes the listing and keeps one entry per key") {
+    val (call, batches) = memo(cap = 2)
+    call("x", Seq(a, b), 1)
+    call("y", Seq(c), 1)
+    call("x", Seq(a, b), 2)
+    call("x", Seq(a), 3)
+    assert(batches == Seq(Seq(a, b), Seq(c), Seq(a, b), Seq(a)))
+    call("y", Seq(c), 1)
+    call("x", Seq(a), 3)
+    assert(batches.size == 4, "a moved basis replaces its key's entry and evicts no other key")
   }
 }
