@@ -59,9 +59,9 @@ object PricingService {
     *    (count and exact grid-unit sum of `value`, min and max `ts`) in
     *    a [[FileMemo]], and from filtered partials of the files that
     *    straddle the window start `max(ts) − 30 days` in another, held
-    *    for that start (its basis). A daily append therefore costs one or two
-    *    small jobs however long the history is; a rebuild with no file
-    *    changed runs none.
+    *    for that start. A daily append therefore costs one or two small
+    *    jobs however long the history is; a rebuild with no file changed
+    *    runs none.
     */
   def build(spark: SparkSession, dir: String,
             params: PricingParams = Pricing.DefaultParams): PricingService = {

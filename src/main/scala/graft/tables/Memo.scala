@@ -24,11 +24,10 @@ private[graft] final class Lru[K, V](cap: Int) {
 /** Values derived per [[DataFile]] (a footer span, a scan's partial),
   * one listing per key, for the `cap` most recently used keys. A call
   * keeps the value of each listed file the key's entry holds for the
-  * same `basis` (whatever else the values depend on, such as a window
-  * start), computes the other listed files in one batch, and leaves the
-  * entry holding exactly the listing for that `basis`: a file gone from
-  * it is dropped, and a file rewritten in place (another length or
-  * mtime) is a new file.
+  * same `basis` (what else the values depend on, e.g. a window start),
+  * computes the other listed files in one batch, and leaves the entry
+  * holding exactly the listing: a file gone from it is dropped, and a
+  * file rewritten in place (another length or mtime) is a new file.
   */
 private[graft] final class FileMemo[K, V](cap: Int) {
   private val entries = new Lru[K, (Any, Map[DataFile, V])](cap)
@@ -49,10 +48,10 @@ private[graft] final class FileMemo[K, V](cap: Int) {
 
 /** A driver-side memo of values derived from a dataset's `tables`
   * (centroids, codebooks, merges, the pricing α), one per dataset dir
-  * and `variant` (whatever else the value depends on), for the `cap`
-  * most recently used of them. An entry holds the value of one
-  * [[Tables.listingKey]] of those tables: an append to one of them
-  * computes the value afresh, as a new JVM would, and replaces it.
+  * and `variant` (whatever else the value depends on) for the `cap`
+  * most recently used, each held for one [[Tables.listingKey]] of those
+  * tables: an append to one of them computes the value afresh, as a
+  * new JVM would.
   */
 final class TablesMemo[V <: AnyRef](cap: Int, tables: String*) {
   private val entries = new Lru[(String, Any), (String, V)](cap)
@@ -60,11 +59,8 @@ final class TablesMemo[V <: AnyRef](cap: Int, tables: String*) {
   /** The value for `dir`'s current data; `compute` runs on a miss. */
   def apply(spark: SparkSession, dir: String, variant: Any = ())(compute: => V): V = {
     val listing = Tables.listingKey(spark.sparkContext.hadoopConfiguration, dir, tables)
-    entries.get((dir, variant)).collect { case (`listing`, v) => v }.getOrElse {
-      val v = compute
-      entries.put((dir, variant), (listing, v))
-      v
-    }
+    entries.get((dir, variant)).collect { case (`listing`, v) => v }
+      .getOrElse { val v = compute; entries.put((dir, variant), (listing, v)); v }
   }
 
   /** The dataset dirs with an entry. */

@@ -54,6 +54,10 @@ object TsSpan {
   */
 object Tables {
 
+  /** `path` qualified with its file system's scheme and authority. */
+  def qualified(conf: Configuration, path: String): String =
+    new Path(path).getFileSystem(conf).makeQualified(new Path(path)).toString
+
   /** The data files under `path` in the order Spark lists them: the
     * path itself if it is a file, else every leaf below it whose name
     * Spark's file index does not skip (a `_` or `.` prefix, except
@@ -61,12 +65,6 @@ object Tables {
     * `path` does not exist. Two equal listings mean the same data, so
     * a driver can tell whether a table changed without a Spark job.
     */
-  /** `path` qualified with its file system's scheme and authority. */
-  def qualified(conf: Configuration, path: String): String = {
-    val p = new Path(path)
-    p.getFileSystem(conf).makeQualified(p).toString
-  }
-
   def dataFiles(conf: Configuration, path: String): Seq[DataFile] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
