@@ -384,8 +384,8 @@ object SparkEntry {
         |  FROM ctr GROUP BY 1),
         |coefs AS (
         |  SELECT event_type, xmax,
-        |         round(CASE WHEN sxx > 0 THEN sxy / sxx END, 6) AS slope,
-        |         round(ybar - round(CASE WHEN sxx > 0 THEN sxy / sxx END, 6) * xbar, 6) AS intercept
+        |         round(CASE WHEN sxx > 0 THEN sxy / sxx ELSE 0::DOUBLE END, 6) AS slope,
+        |         round(ybar - round(CASE WHEN sxx > 0 THEN sxy / sxx ELSE 0::DOUBLE END, 6) * xbar, 6) AS intercept
         |  FROM fit)
         |SELECT event_type, k, CAST(xmax + k AS INT) AS forecast_day,
         |       intercept + slope * (xmax + k) AS pred

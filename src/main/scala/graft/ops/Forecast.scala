@@ -28,8 +28,11 @@ object Forecast {
     * per-group mean before the product sums (catastrophic-cancellation
     * guard, SURVEY.md §7.5); slope/intercept are rounded to 6 decimals
     * so the downstream arithmetic is bit-deterministic vs the oracle.
-    * Zero-variance groups yield NULL slope (the reference's
-    * NaN-on-degenerate contract, `0_insert_conso_an_ville_in_bq.py:67-69`).
+    * A zero-variance group (one observed day, sxx = 0) gets slope 0, a
+    * flat forecast at its mean: the reference's sklearn fit on one x
+    * does the same (SURVEY.md §2.9, `0_insert_conso_an_ville_in_bq.py:61-69`),
+    * as does [[Ingest]]'s `consoAnVille` fit. The other two variants
+    * below follow the same rule.
     *
     * Plan shape: one shuffle on event_type; the window and the final
     * aggregate reuse the same partitioning (no second exchange).
@@ -50,7 +53,8 @@ object Forecast {
         max("ybar").as("ybar"),
         sum((col("x") - col("xbar")) * (col("y") - col("ybar"))).as("sxy"),
         sum((col("x") - col("xbar")) * (col("x") - col("xbar"))).as("sxx"))
-      .withColumn("slope", round(when(col("sxx") > 0, col("sxy") / col("sxx")), 6))
+      .withColumn("slope",
+        round(when(col("sxx") > 0, col("sxy") / col("sxx")).otherwise(lit(0.0)), 6))
       .withColumn("intercept", round(col("ybar") - col("slope") * col("xbar"), 6))
     fit
       .select(col("event_type"), col("xmax"), col("slope"), col("intercept"),
@@ -83,9 +87,10 @@ object Forecast {
       OlsBuf(a.n + b.n, a.sx + b.sx, a.sy + b.sy, a.sxy + b.sxy, a.sxx + b.sxx)
     def finish(b: OlsBuf): OlsFit = {
       val den = b.n * b.sxx - b.sx * b.sx
-      if (b.n == 0 || den == 0.0) OlsFit(None, None)
+      if (b.n == 0) OlsFit(None, None)
       else {
-        val slope = (b.n * b.sxy - b.sx * b.sy) / den
+        // zero x-variance: slope 0, the closed form's rule
+        val slope = if (den == 0.0) 0.0 else (b.n * b.sxy - b.sx * b.sy) / den
         // un-shift: intercept in original x coordinates
         val intercept = (b.sy - slope * b.sx) / b.n - slope * xShift
         OlsFit(Some(slope), Some(intercept))
@@ -112,7 +117,7 @@ object Forecast {
 
   // -- variant 3: flatMapGroups (literal groupby.apply analog) --------------
 
-  case class ForecastRow(event_type: String, k: Int, forecast_day: Long, pred: Option[Double])
+  case class ForecastRow(event_type: String, k: Int, forecast_day: Long, pred: Double)
 
   /** Per-group imperative fit + 3 forecast rows out — the direct
     * `groupby(...).apply(estimate_year)` analog (reference
@@ -134,11 +139,10 @@ object Forecast {
       val sxx = pts.map(p => (p._1 - xbar) * (p._1 - xbar)).sum
       val sxy = pts.map(p => (p._1 - xbar) * (p._2 - ybar)).sum
       val xmax = pts.map(_._1).max.toLong
-      val fit: Option[(Double, Double)] =
-        if (sxx > 0) { val s = sxy / sxx; Some((s, ybar - s * xbar)) } else None
-      (1 to 3).map { k =>
-        ForecastRow(key, k, xmax + k, fit.map { case (s, i) => i + s * (xmax + k) })
-      }.iterator
+      // zero x-variance: slope 0, the closed form's rule
+      val slope = if (sxx > 0) sxy / sxx else 0.0
+      val intercept = ybar - slope * xbar
+      (1 to 3).map(k => ForecastRow(key, k, xmax + k, intercept + slope * (xmax + k))).iterator
     }
   }
 }

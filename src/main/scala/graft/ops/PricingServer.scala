@@ -41,14 +41,14 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * floor, not the pricing arithmetic, sets `/price` latency.
   *
   * Concurrency: the JDK's `HttpServer` dispatches each exchange onto a
-  * fixed thread pool. [[PricingService.price]] is pure (immutable Map
-  * + arithmetic) and the shared `ObjectMapper` is thread-safe once
-  * configured, so requests need no synchronization.
+  * fixed pool of 8 threads (`PoolSize`). [[PricingService.price]] is
+  * pure (immutable Map + arithmetic) and the shared `ObjectMapper` is
+  * thread-safe once configured, so requests need no synchronization.
   */
-final class PricingServer(svc: PricingService, poolSize: Int = 8) {
-  import PricingServer.Json
+final class PricingServer(svc: PricingService) {
+  import PricingServer.{Json, PoolSize}
 
-  private val pool: ExecutorService = Executors.newFixedThreadPool(poolSize)
+  private val pool: ExecutorService = Executors.newFixedThreadPool(PoolSize)
   // loopback-only bind on an ephemeral port: this is a test/serving
   // fixture, never an externally reachable listener
   private val server = HttpServer.create(
@@ -107,5 +107,7 @@ final class PricingServer(svc: PricingService, poolSize: Int = 8) {
 }
 
 object PricingServer {
+  /** Handler threads per server. */
+  private val PoolSize = 8
   private val Json = new ObjectMapper()
 }

@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.SparkDateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Structured-Streaming re-expression of the reference's daily Airflow
   * DAG (SURVEY.md §2.10): extract → 1-day tumbling-window mean → append,
@@ -47,15 +45,8 @@ object DailyIngest {
     // the path works as both layouts: a single events.parquet FILE
     // (driver testdata) or a directory of part files (Amplify output)
     val raw = StreamEnv.eventsStream(ss, dir)
-    val name = s"stream_daily_${System.nanoTime()}"
-    val q = dailyAgg(raw).writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy("event_type", "d")
+    StreamEnv.drainToMemory(dailyAgg(raw).writeStream.outputMode("append"), "stream_daily")
+      .orderBy("event_type", "d")
   }
 
   /** s01's oracle: daily means over watermark-CLOSED windows only (a
@@ -86,20 +77,14 @@ object DailyIngest {
     */
   def streamAppendSink(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSessionFor(spark, dir)
-    val base = graft.ops.Staging.stagePath("stream_sink", dir)
-    // fresh demo run: clear sink + checkpoint (a production run would
+    // fresh demo run: an empty sink + checkpoint (a production run would
     // KEEP both — the checkpoint is what makes the next run incremental)
-    val fs = org.apache.hadoop.fs.FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val base = StreamEnv.legDir(ss, "stream_sink", dir)
     val raw = StreamEnv.eventsStream(ss, dir)
-    val q = dailyAgg(raw).writeStream
+    StreamEnv.drain(dailyAgg(raw).writeStream
       .format("parquet")
       .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode("append"), base)
     ss.read.parquet(s"$base/out").orderBy("event_type", "d")
   }
 

@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   * legacy coalesce(1) order was scan-split order; every feed consumer
   * is order-independent within a micro-batch — per-row verdicts or
   * commutative folds — which the oracle gate checks per SF).
+  *
+  * `base` is the leg's scratch dir ([[StreamEnv.legDir]]), empty when
+  * the feed is staged.
   */
 object FeedStage {
 
@@ -28,7 +31,6 @@ object FeedStage {
             nSlices: Int, sortCols: Seq[Column],
             name: Int => String = k => s"batch$k.parquet"): String = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true)
     df.withColumn("__slice", slice.cast("int"))
       .repartition(col("__slice"))
       .sortWithinPartitions(col("__slice") +: sortCols: _*)

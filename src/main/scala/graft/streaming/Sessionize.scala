@@ -66,8 +66,7 @@ object Sessionize {
   def streamSessions(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSessionFor(spark, dir)
     val raw = StreamEnv.eventsStream(ss, dir)
-    val name = s"stream_sessions_${System.nanoTime()}"
-    val q = raw
+    StreamEnv.drainToMemory(raw
       .withWatermark("ts", "1 day")
       .groupBy(session_window(col("ts"), s"$GapHours hours").as("w"), col("user_id"))
       .agg(min(col("ts")).as("session_start"),
@@ -76,13 +75,8 @@ object Sessionize {
            round(sum("value"), 2).as("total_value"))
       .select("user_id", "session_start", "last_ts", "n_events", "total_value")
       .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy("user_id", "session_start")
+      .outputMode("append"), "stream_sessions")
+      .orderBy("user_id", "session_start")
   }
 
   /** s14's oracle: the s02 islands rewrite restricted to watermark-

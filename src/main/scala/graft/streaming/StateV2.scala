@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Arbitrary stateful streaming on the CURRENT state API
   * (`transformWithState`, Spark 4): typed per-key state variables
@@ -79,15 +79,8 @@ object StateV2 {
       .as[Ev]
     val snaps = stream.groupByKey(_.event_type)
       .transformWithState(new RunningStats, TimeMode.None(), OutputMode.Append())
-    val name = s"stream_tws_${System.nanoTime()}"
-    val q = snaps.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy("event_type", "week")
+    StreamEnv.drainToMemory(snaps.writeStream.outputMode("append"), "stream_tws")
+      .orderBy("event_type", "week")
   }
 
   /** The running series recomputed relationally — what the stateful

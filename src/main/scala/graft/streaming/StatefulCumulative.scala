@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.tables.Tables
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Arbitrary stateful streaming (SURVEY.md §2.10 extension): the custom
   * per-key state that `session_window`/windowed aggs can't express,
@@ -47,10 +46,10 @@ object StatefulCumulative {
     * (transformWithState).
     */
   private[streaming] def stageWeekly(spark: SparkSession, dir: String, tag: String): String = {
-    val base = graft.ops.Staging.stagePath(s"stream_$tag", dir)
     val ev = Tables.events(spark, dir).select("event_type", "ts", "value")
-    FeedStage.stage(spark, base, ev, expr("(day(ts) - 1) div 7"), 5,
-      Seq(col("ts"), col("event_type"), col("value")), name = w => s"week$w.parquet")
+    FeedStage.stage(spark, StreamEnv.legDir(spark, s"stream_$tag", dir), ev,
+      expr("(day(ts) - 1) div 7"), 5, Seq(col("ts"), col("event_type"), col("value")),
+      name = w => s"week$w.parquet")
   }
 
   /** s05 — run the staged weekly stream to completion; one cumulative
@@ -93,15 +92,8 @@ object StatefulCumulative {
           Iterator(Cum(key, week, n1, c1 / 100.0))
       }
 
-    val name = s"stream_state_${System.nanoTime()}"
-    val q = cum.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy("event_type", "week")
+    StreamEnv.drainToMemory(cum.writeStream.outputMode("append"), "stream_state")
+      .orderBy("event_type", "week")
   }
 
   /** The cumulative series, recomputed relationally: weekly group

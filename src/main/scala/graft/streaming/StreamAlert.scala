@@ -5,7 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s23 — streaming FAILURE ALERTING (SURVEY §2 D6): the reference's
@@ -54,9 +54,8 @@ object StreamAlert {
 
   def failureAlert(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSession(spark)
-    val base = graft.ops.Staging.stagePath("stream_alert", dir)
+    val base = StreamEnv.legDir(ss, "stream_alert", dir)
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true)
     val marker = new Path(s"$base/warehouse_up")
 
     // batch fixtures: documents split by doc_id % NumBatches, mtime-ordered
@@ -85,7 +84,7 @@ object StreamAlert {
     def runIngest(): Unit = {
       val latch = new CountDownLatch(1)
       currentLatch = latch
-      val q = ss.readStream.schema(docSchema)
+      val writer = ss.readStream.schema(docSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$base/in")
         .writeStream
@@ -100,10 +99,7 @@ object StreamAlert {
             .write.mode("overwrite").parquet(s"$base/out/batch_$id")
           ()
         }
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
+      try StreamEnv.drain(writer, base)
       catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
       require(latch.await(60, TimeUnit.SECONDS),
         "listener never delivered the termination event")

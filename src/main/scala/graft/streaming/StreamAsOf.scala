@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.tables.Tables
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** s20 — STREAMING as-of enrichment (q28 as a Kappa pipeline; the
   * Flink "temporal table join" shape): clicks and purchases arrive
@@ -49,13 +48,12 @@ object StreamAsOf {
     * week order (the s05 `stageWeekly` convention).
     */
   private def stageFeed(spark: SparkSession, dir: String): String = {
-    val base = graft.ops.Staging.stagePath("stream_asof", dir)
     val ev = Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts"), unix_micros(col("ts")).as("ts_us"), col("value"))
-    FeedStage.stage(spark, base, ev, expr("(day(ts) - 1) div 7"), 5,
-      Seq(col("event_id")), name = w => s"week$w.parquet")
+    FeedStage.stage(spark, StreamEnv.legDir(spark, "stream_asof", dir), ev,
+      expr("(day(ts) - 1) div 7"), 5, Seq(col("event_id")), name = w => s"week$w.parquet")
   }
 
   def asOfEnrich(spark: SparkSession, dir: String): DataFrame = {
@@ -98,15 +96,7 @@ object StreamAsOf {
           out.result().iterator
       }
 
-    val name = s"stream_asof_${System.nanoTime()}"
-    val q = enriched.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name)
+    StreamEnv.drainToMemory(enriched.writeStream.outputMode("append"), "stream_asof")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"),
         col("ref_event_id"), col("ref_value"), col("staleness_us"))
       .orderBy("event_id")

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s27 — STREAMING per-source token-budget accounting: as documents
@@ -43,8 +41,7 @@ object StreamBudget {
   def budgetIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.llm.TextStats
     val ss = StreamEnv.streamSession(spark)
-    val base = graft.ops.Staging.stagePath("stream_budget", dir)
-    val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
+    val base = StreamEnv.legDir(ss, "stream_budget", dir)
     val docs = graft.tables.Tables.documents(spark, dir)
       .select("doc_id", "source", "text")
     FeedStage.stage(spark, base, docs,
@@ -52,7 +49,7 @@ object StreamBudget {
 
     def statePath(id: Long) = s"$base/state_$id"
 
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -71,11 +68,7 @@ object StreamBudget {
         merged.write.mode("overwrite").parquet(statePath(id))
         toks.write.mode("overwrite").parquet(s"$base/log/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
 
     // totals from the FOLDED STATE (the monoid gate), cutoff/kept from
     // the compact appended log — a window in doc_id order per source

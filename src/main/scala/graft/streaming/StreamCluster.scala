@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.SessionBridge
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s13 — STREAMING near-dup cluster maintenance: d32's incremental
@@ -70,9 +69,8 @@ object StreamCluster {
     val seedPath = Dedup.clusterLabelsPath(spark, dir)
     val Seq(ccShPath, ccBandsPath) = Dedup.ccIndexPaths(spark, dir)
 
-    val base = graft.ops.Staging.stagePath("stream_cluster", dir)
+    val base = StreamEnv.legDir(ss, "stream_cluster", dir)
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true)
 
     // the gen-2 feed is era/build-deterministic: stage its NumBatches
     // bucket files ONCE per (data era, build) like every other index,
@@ -133,17 +131,13 @@ object StreamCluster {
         .write.mode("overwrite").parquet(s"$base/app/batch_$id")
     }
 
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         foldBatch(fold, SessionBridge.rebind(fold, batch), id)
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
     ss.read.parquet(s"$base/labels/v${NumBatches - 1}")
       .select(col("doc_id"), col("label"),
         when(col("doc_id") >= Dedup.G2CopyIdOffset, lit("batch"))

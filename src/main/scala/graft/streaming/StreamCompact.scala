@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType,
   StructField, StructType, TimestampType}
 
@@ -84,9 +83,8 @@ object StreamCompact {
 
   def compactedIngest(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSessionFor(spark, dir)
-    val base = graft.ops.Staging.stagePath("stream_compact", dir)
+    val base = StreamEnv.legDir(ss, "stream_compact", dir)
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true)
 
     // feed files: one per event_id residue class -> one per trigger.
     // FeedStage (the shared one-pass stager) instead of an inline copy
@@ -101,7 +99,7 @@ object StreamCompact {
       pmod(col("event_id"), lit(NumBatches)), NumBatches, Seq(col("event_id")))
 
     // phase 1: micro-batch ingest, one file per (batch, day)
-    val q = ss.readStream.schema(feedSchema)
+    StreamEnv.drain(ss.readStream.schema(feedSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -126,11 +124,7 @@ object StreamCompact {
           bfs.rename(st.getPath, dest): Unit
         }
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
 
     def listByDay(root: String): Seq[(java.sql.Date, Long)] =
       Option(fs.globStatus(new Path(s"$root/day=*/[a-z]*")))

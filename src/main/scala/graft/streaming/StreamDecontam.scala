@@ -1,10 +1,8 @@
 package graft.streaming
 
 import graft.tables.Tables
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s16 — STREAMING benchmark decontamination: d18's scan run as the
@@ -55,10 +53,9 @@ object StreamDecontam {
     // the shared era-staged posting index (built by whichever of
     // d18/s16 touches this era first)
     val (hotPath, evalPath, _) = Curation.decontamIndex(spark, dir)
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
     // ---- the train feed as NumBatches ordered files (s12 convention) ----
-    val base = graft.ops.Staging.stagePath("stream_decontam", dir)
+    val base = StreamEnv.legDir(ss, "stream_decontam", dir)
     val feed = Dedup.corpus(spark, dir)
       .filter(Sampling.splitCol(col("doc_id")) === "train")
     val feedIn = FeedStage.stage(spark, base, feed,
@@ -69,7 +66,7 @@ object StreamDecontam {
       ss.read.schema(docSchema).parquet(feedIn).count() / NumBatches)
 
     val verdictsDir = s"$base/verdicts"
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -96,11 +93,7 @@ object StreamDecontam {
           .agg(count(lit(1)).as("n_shared"))
           .write.mode("overwrite").parquet(s"$verdictsDir/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
     ss.read.parquet(s"$verdictsDir/batch_*").orderBy("train_id", "eval_id")
   }
 

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Exactly-once hygiene for the incremental pipeline (SURVEY.md §2.10
   * D4): the reference's WRITE_APPEND + task retry can double-load a
@@ -24,8 +22,7 @@ object StreamDedup {
     val ss = StreamEnv.streamSessionFor(spark, dir)
     val once = StreamEnv.eventsStream(ss, dir)
     val doubled = once.union(once) // the duplicated delivery
-    val name = s"stream_dedup_${System.nanoTime()}"
-    val q = doubled
+    StreamEnv.drainToMemory(doubled
       // dropDuplicatesWithinWatermark, NOT dropDuplicates("event_id"):
       // plain key-only dedup never evicts state (the event-time column
       // must be part of the keys for watermark eviction), so a long-
@@ -39,12 +36,8 @@ object StreamDedup {
       .agg(count(lit(1)).as("n"))
       .select(col("event_type"), to_date(col("w.start")).as("d"), col("n"))
       .writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy("event_type", "d")
+      .outputMode("append"), "stream_dedup")
+      .orderBy("event_type", "d")
   }
 
   /** Batch twin: one delivery's counts over watermark-closed windows —

@@ -1,10 +1,8 @@
 package graft.streaming
 
 import graft.tables.Tables
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** s21 — STREAMING distribution-drift monitor (the in-flight
   * data-quality check every continuous ingest runs — the Deequ/TFX
@@ -54,12 +52,10 @@ object StreamDrift {
     val refDf = spark.createDataFrame(refRows.toSeq).toDF("bucket", "c")
       .withColumn("ref_ppm", expr(s"c * $Ppm div $refTotal"))
 
-    val base = graft.ops.Staging.stagePath("stream_drift_out", dir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true)
+    val base = StreamEnv.legDir(ss, "stream_drift_out", dir)
     val reportsDir = s"$base/reports"
 
-    val q = ss.readStream
+    StreamEnv.drain(ss.readStream
       .schema(ev.select("event_type", "ts", "value").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(in)
@@ -81,11 +77,7 @@ object StreamDrift {
           .withColumn("delta_ppm", abs(col("batch_ppm") - col("ref_ppm")))
           .write.mode("overwrite").parquet(s"$reportsDir/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
 
     val rep = ss.read.parquet(s"$reportsDir/batch_*")
     val w = org.apache.spark.sql.expressions.Window.partitionBy("week")

@@ -1,17 +1,63 @@
 package graft.streaming
 
 import graft.LocalSession
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** Per-query session derivation for the streaming legs.
+/** Per-query session derivation and the one leg runner for the
+  * streaming legs.
   *
   * Streaming queries here want a handful of shuffle partitions (each
   * stateful partition carries a state store — at fixture scale 32
   * stores are pure overhead) and the nanos-as-long parquet read for
   * the raw `events` schema. Both are scoped to the one query by a child
   * session ([[graft.LocalSession.scoped]]).
+  *
+  * Every leg runs its query to completion the same way: [[legDir]]
+  * gives it an empty scratch dir, and [[drain]] (a checkpointed sink
+  * under that dir) or [[drainToMemory]] (a memory sink) starts the
+  * query under `Trigger.AvailableNow` and waits for it to end. The leg
+  * itself only builds the query and configures its sink.
   */
 object StreamEnv {
+
+  /** The leg's scratch dir for `(tag, dir)`: [[graft.ops.Staging.stagePath]]
+    * on the scratch base, emptied on each call, so a leg's run starts
+    * from no feed, sink or checkpoint of an earlier run in this process.
+    */
+  def legDir(spark: SparkSession, tag: String, dir: String): String = {
+    val base = graft.ops.Staging.stagePath(tag, dir)
+    val p = new Path(base)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    base
+  }
+
+  /** Run the configured `writer` to completion with its checkpoint at
+    * `<base>/ckpt`: drain the input available now, then stop. The
+    * checkpoint is never cleared here, so a second drain over the same
+    * `base` resumes from the first; a query failure is rethrown.
+    */
+  def drain(writer: DataStreamWriter[_], base: String): Unit =
+    writer.option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Run the configured `writer` to completion into a memory sink
+    * named `<tag>_<n>`, unique in this JVM, and return its table. No
+    * checkpoint is set.
+    */
+  def drainToMemory(writer: DataStreamWriter[_], tag: String): DataFrame = {
+    val name = s"${tag}_${sinkSeq.incrementAndGet()}"
+    val q = writer.format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q.sparkSession.table(name)
+  }
 
   def streamSession(spark: SparkSession): SparkSession = session(spark, 4)
 

@@ -1,10 +1,8 @@
 package graft.streaming
 
 import graft.tables.Tables
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s12 — STREAMING Bloom-gated dedup ingest: d29's at-scale batch
@@ -49,14 +47,13 @@ object StreamIngest {
     // stage the feed as NumBatches files with mod-times in batch order
     // (the stageWeekly convention: maxFilesPerTrigger=1 → one file per
     // micro-batch)
-    val base = graft.ops.Staging.stagePath("stream_ingest", dir)
-    val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
+    val base = StreamEnv.legDir(ss, "stream_ingest", dir)
     val incoming = Dedup.incomingBatch(spark, dir)
     FeedStage.stage(spark, base, incoming,
       pmod(col("doc_id"), lit(NumBatches)), NumBatches, Seq(col("doc_id")))
 
     val verdictsDir = s"$base/verdicts"
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -77,11 +74,7 @@ object StreamIngest {
             col("dup_of"))
           .write.mode("overwrite").parquet(s"$verdictsDir/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
     ss.read.parquet(s"$verdictsDir/batch_*").orderBy("doc_id")
   }
 

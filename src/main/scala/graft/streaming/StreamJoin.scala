@@ -3,8 +3,6 @@ package graft.streaming
 import graft.tables.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** s06 — stream-stream interval join: each purchase matched to the
   * same user's clicks in the preceding hour, both sides unbounded
@@ -42,17 +40,10 @@ object StreamJoin {
       col("user_id") === col("c_user_id") &&
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
         col("click_ts") <= col("purchase_ts"))
-    val name = s"stream_join_${System.nanoTime()}"
-    val q = joined
+    StreamEnv.drainToMemory(joined
       .select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy("purchase_id", "click_id")
+      .writeStream.outputMode("append"), "stream_join")
+      .orderBy("purchase_id", "click_id")
   }
 
   /** s08 — stream-stream LEFT OUTER interval join: same match window
@@ -86,17 +77,10 @@ object StreamJoin {
         col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1 HOUR") &&
         col("click_ts") <= col("purchase_ts"),
       "leftOuter")
-    val name = s"stream_ljoin_${System.nanoTime()}"
-    val q = joined
+    StreamEnv.drainToMemory(joined
       .select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy(col("purchase_id"), col("click_id").asc_nulls_first)
+      .writeStream.outputMode("append"), "stream_ljoin")
+      .orderBy(col("purchase_id"), col("click_id").asc_nulls_first)
   }
 
   val oraclePurchaseClickLeftJoin: String =
@@ -152,15 +136,8 @@ object StreamJoin {
            count(lit(1)).as("n"))
       .select(col("c_mktsegment").as("segment"), to_date(col("w.start")).as("d"),
               col("mean_value"), col("n"))
-    val name = s"stream_static_${System.nanoTime()}"
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name).orderBy("segment", "d")
+    StreamEnv.drainToMemory(agg.writeStream.outputMode("append"), "stream_static")
+      .orderBy("segment", "d")
   }
 
   /** Batch twin + the append-mode watermark tail model (windows closed

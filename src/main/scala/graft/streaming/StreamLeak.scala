@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 
 /** s26 — STREAMING eval-set protection: the continuous twin of d61's
@@ -50,7 +49,7 @@ object StreamLeak {
     import graft.expr.VectorFunctions.cosineSimilarity
     import graft.llm.{Sampling, Similarity}
     val ss = StreamEnv.streamSession(spark)
-    val base = graft.ops.Staging.stagePath("stream_leak", dir)
+    val base = StreamEnv.legDir(ss, "stream_leak", dir)
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
     val emb = graft.tables.Tables.embeddings(spark, dir)
       .withColumn("split", Sampling.splitCol(col("vec_id")))
@@ -80,7 +79,7 @@ object StreamLeak {
         / Similarity.LeakBroadcastMaxRows).toInt.max(1)
 
     val alertDir = s"$base/alerts"
-    val q = ss.readStream.schema(vecSchema)
+    StreamEnv.drain(ss.readStream.schema(vecSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -101,11 +100,7 @@ object StreamLeak {
           .filter(col("score") >= Similarity.LeakTau)
           .write.mode("overwrite").parquet(s"$alertDir/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
 
     // a batch with no leaks still writes its (possibly part-less) dir;
     // an explicit schema makes empty dirs readable, and the zero-dir

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s22 — STREAMING quality router: the multi-sink fan-out every
@@ -52,14 +51,14 @@ object StreamRouter {
 
   def qualityRoute(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSession(spark)
-    val base = graft.ops.Staging.stagePath("stream_router", dir)
+    val base = StreamEnv.legDir(ss, "stream_router", dir)
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
     val feed = graft.tables.Tables.documents(spark, dir)
       .select("doc_id", "text", "lang")
     FeedStage.stage(spark, base, feed,
       pmod(col("doc_id"), lit(NumBatches)), NumBatches, Seq(col("doc_id")))
 
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -74,11 +73,7 @@ object StreamRouter {
         scored.where(col("reason") =!= "ok")
           .write.mode("overwrite").parquet(s"$base/quarantine/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
     // a sink no batch ever routed to has no part files at all (Spark
     // skips empty-partition writes), so a bare glob re-read would fail
     // schema inference — read each sink with the sink's declared schema

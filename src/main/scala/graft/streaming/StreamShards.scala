@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s18 — STREAMING token-budgeted output sharding: d44's corpus export
@@ -38,10 +37,8 @@ object StreamShards {
   def tokenShardIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.llm.Sampling
     val ss = StreamEnv.streamSession(spark)
-    val base = graft.ops.Staging.stagePath("stream_shards", dir)
+    val base = StreamEnv.legDir(ss, "stream_shards", dir)
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(base), true)
-    fs.mkdirs(new Path(s"$base/in"))
 
     // stage the feed as contiguous doc_id-range files with mod-times in
     // range order: maxFilesPerTrigger=1 then replays the global doc_id
@@ -69,7 +66,7 @@ object StreamShards {
       try out.write(total.toString.getBytes("UTF-8")) finally out.close()
     }
 
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -81,11 +78,7 @@ object StreamShards {
         val total = out.agg(max("cum_tokens")).head()
         writeCarry(id, if (total.isNullAt(0)) carry else total.getLong(0))
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
     ss.read.parquet(s"$outDir/batch_*").orderBy("doc_id")
   }
 

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s19 — STREAMING count-min heavy-hitter maintenance: d22's sketch
@@ -40,8 +38,7 @@ object StreamSketch {
   def cmsIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.llm.{Sketch, TextStats}
     val ss = StreamEnv.streamSession(spark)
-    val base = graft.ops.Staging.stagePath("stream_sketch", dir)
-    val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
+    val base = StreamEnv.legDir(ss, "stream_sketch", dir)
     val docs = graft.tables.Tables.documents(spark, dir).select("doc_id", "text")
     FeedStage.stage(spark, base, docs,
       pmod(col("doc_id"), lit(NumBatches.toLong)), NumBatches, Seq(col("doc_id")))
@@ -49,7 +46,7 @@ object StreamSketch {
     def gridPath(id: Long) = s"$base/grid_$id"
     def wcPath(id: Long)   = s"$base/wc_$id"
 
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -75,11 +72,7 @@ object StreamSketch {
             .groupBy("d", "b").agg(sum("cell").as("cell"))
         grid.write.mode("overwrite").parquet(gridPath(id))
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
 
     // the d22 report off the FOLDED states: top-k by exact count,
     // estimates probed from the streamed grid

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** s11 — streaming UPSERT via `foreachBatch`: the canonical production
@@ -41,12 +40,12 @@ object StreamUpsert {
     * `ts`, normalized here), then read the final state table. The
     * source is a parameter so the spec can drive the SAME data as N
     * single-file micro-batches and assert the table converges
-    * regardless of split.
+    * regardless of split. `stateBase` is an empty leg dir
+    * ([[StreamEnv.legDir]]).
     */
   private[graft] def upsertFrom(ss: SparkSession, rawStream: DataFrame,
                                 stateBase: String): DataFrame = {
     val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(stateBase), true)
     val statePath = s"$stateBase/state"
     val nextPath = s"$stateBase/state_next"
 
@@ -55,7 +54,7 @@ object StreamUpsert {
       else ss.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
 
     val raw = graft.tables.Tables.normalizeTs(rawStream)
-    val q = raw.writeStream
+    StreamEnv.drain(raw.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val delta = batch
           .select(col("event_type"), to_date(col("ts")).as("d"),
@@ -71,11 +70,7 @@ object StreamUpsert {
         require(fs.rename(new Path(nextPath), new Path(statePath)),
           s"state swap failed for $statePath")
         ()
-      }
-      .option("checkpointLocation", s"$stateBase/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, stateBase)
     readState()
       .select(col("event_type"), col("d"), col("n").as("n_rows"), col("sum_cents"),
         (col("sum_cents").cast("double") / lit(100.0) / col("n")).as("mean_value"))
@@ -85,7 +80,7 @@ object StreamUpsert {
   def dailyUpsert(spark: SparkSession, dir: String): DataFrame = {
     val ss = StreamEnv.streamSessionFor(spark, dir)
     upsertFrom(ss, StreamEnv.eventsStream(ss, dir),
-      graft.ops.Staging.stagePath("stream_upsert", dir))
+      StreamEnv.legDir(ss, "stream_upsert", dir))
   }
 
   /** The oracle is the plain batch aggregate — the upsert loop must

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 /** s15 — STREAMING vector-index ingest: the billion-vector IVF
@@ -55,14 +53,13 @@ object StreamVecIngest {
     // cache is the same one d08/d24 assign against
     val centroids = graft.llm.Similarity.lloydCentroids(spark, dir)
 
-    val base = graft.ops.Staging.stagePath("stream_vec", dir)
-    val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
+    val base = StreamEnv.legDir(ss, "stream_vec", dir)
     val emb = graft.tables.Tables.embeddings(spark, dir).select("vec_id", "embedding")
     FeedStage.stage(spark, base, emb,
       pmod(col("vec_id"), lit(NumBatches)), NumBatches, Seq(col("vec_id")))
 
     val idxDir = s"$base/index"
-    val q = ss.readStream.schema(vecSchema)
+    StreamEnv.drain(ss.readStream.schema(vecSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -81,11 +78,7 @@ object StreamVecIngest {
               .cast("long").as("q"))
           .write.mode("overwrite").parquet(s"$idxDir/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
     ss.read.parquet(s"$idxDir/batch_*")
       .groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"),

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** s25 — STREAMING vocabulary-growth maintenance: t20's new-word curve
@@ -37,15 +35,14 @@ object StreamVocab {
   def vocabIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.llm.TextStats
     val ss = StreamEnv.streamSession(spark)
-    val base = graft.ops.Staging.stagePath("stream_vocab", dir)
-    val fs = FileSystem.get(ss.sparkContext.hadoopConfiguration)
+    val base = StreamEnv.legDir(ss, "stream_vocab", dir)
     val docs = graft.tables.Tables.documents(spark, dir).select("doc_id", "text")
     FeedStage.stage(spark, base, docs,
       pmod(col("doc_id"), lit(NumBatches.toLong)), NumBatches, Seq(col("doc_id")))
 
     def fvPath(id: Long) = s"$base/fv_$id"
 
-    val q = ss.readStream.schema(docSchema)
+    StreamEnv.drain(ss.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$base/in")
       .writeStream
@@ -63,11 +60,7 @@ object StreamVocab {
         fv.write.mode("overwrite").parquet(fvPath(id))
         batch.select("doc_id").write.mode("overwrite").parquet(s"$base/ids/batch_$id")
         ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, base)
 
     // the t20 report off the folded state: decile bounds from the
     // appended id column, new-word counts from the vocabulary state

@@ -24,6 +24,36 @@ class StreamDedupSpec extends AnyFunSuite {
   }
   import SparkTestBase.{spark, Sf}
 
+  test("StreamEnv.legDir: one dir per (tag, dataset), emptied by each call") {
+    import graft.streaming.StreamEnv
+    import java.nio.file.{Files, Path}
+    val base = StreamEnv.legDir(spark, "leg_spec", Sf)
+    try {
+      Files.createDirectories(Path.of(base, "ckpt"))
+      Files.writeString(Path.of(base, "ckpt", "0"), "a previous run")
+      assert(StreamEnv.legDir(spark, "leg_spec", Sf) == base)
+      assert(!Files.exists(Path.of(base, "ckpt", "0")), "a second call must empty the leg dir")
+      assert(StreamEnv.legDir(spark, "leg_spec", s"$Sf/other") != base)
+    } finally SparkTestBase.deleteTree(Path.of(base))
+  }
+
+  test("StreamEnv.drainToMemory: two runs give equal rows under two sink names") {
+    import graft.streaming.StreamEnv
+    SparkTestBase.withTempDir("drain") { root =>
+      val ss = StreamEnv.streamSession(spark)
+      val in = root.resolve("in").toString
+      ss.range(0, 50).selectExpr("id", "id % 7 AS k").write.parquet(in)
+      def sinks() = ss.catalog.listTables().collect().map(_.name).filter(_.startsWith("drain_spec_")).toSet
+      val before = sinks()
+      def run() = StreamEnv.drainToMemory(
+        ss.readStream.schema("id BIGINT, k BIGINT").parquet(in).writeStream, "drain_spec")
+        .orderBy("id").collect().toSeq
+      val (a, b) = (run(), run())
+      assert(a.size == 50 && a == b)
+      assert((sinks() -- before).size == 2, "each drain needs its own sink name")
+    }
+  }
+
   test("duplicated delivery is collapsed to exactly-once counts") {
     import org.apache.spark.sql.functions.{col, date_sub, lit, max, to_date}
     val deduped = graft.streaming.StreamDedup.dedupedDailyCounts(spark, Sf)

@@ -31,16 +31,13 @@ class StreamUpsertSpec extends AnyFunSuite {
   test("s11: a 6-way micro-batch split converges to the same state table") {
     val ss = StreamEnv.streamSession(spark)
     // stage the same events as 6 part files, one file per micro-batch
-    val staged = graft.ops.Staging.stagePath("upsert_split_src", Sf)
-    val fs = org.apache.hadoop.fs.FileSystem.get(ss.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
+    val staged = StreamEnv.legDir(ss, "upsert_split_src", Sf)
     val physSchema = StreamEnv.eventsPhysicalSchema(ss, Sf)
     ss.read.schema(physSchema).parquet(s"$Sf/events.parquet")
       .repartition(6).write.parquet(staged)
     val src = ss.readStream.schema(physSchema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val got = StreamUpsert.upsertFrom(ss, src,
-        graft.ops.Staging.stagePath("upsert_split_state", Sf))
+    val got = StreamUpsert.upsertFrom(ss, src, StreamEnv.legDir(ss, "upsert_split_state", Sf))
       .collect().toSeq
     assert(got == batchTruth(),
       "N-batch merge must be bit-equal to the single-batch result")
