@@ -48,7 +48,7 @@ object StreamEnv {
 
   /** Run the configured `writer` to completion into a memory sink
     * named `<tag>_<n>`, unique in this JVM, and return its table. No
-    * checkpoint is set.
+    * checkpoint is set, so Spark keeps one in a temporary dir.
     */
   def drainToMemory(writer: DataStreamWriter[_], tag: String): DataFrame = {
     val name = s"${tag}_${sinkSeq.incrementAndGet()}"
@@ -141,8 +141,8 @@ object StreamEnv {
     * files (any `df.write.parquet` output, e.g. the Amplify stress
     * fixture — streamed directly).
     */
-  def eventsStream(ss: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+  def eventsStream(ss: SparkSession, dir: String): DataFrame = {
+    val p = new Path(s"$dir/events.parquet")
     val fs = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
     val reader = ss.readStream.schema(eventsPhysicalSchema(ss, dir))
     val raw =
